@@ -362,7 +362,7 @@ def make_json_flatten_udf(barrier: bool = True):
     @F.pandas_udf(T.MapType(T.StringType(), T.StringType()))
     def json_flatten_map(texts: pd.Series) -> pd.Series:
         out = pd.Series([{}] * len(texts), index=texts.index, dtype=object)
-        mask = texts.str.slice(0, 3).str.contains("{", regex=False).fillna(False)
+        mask = texts.str.slice(0, 3).str.contains("{", regex=False, na=False)
         if mask.any():
             out[mask] = texts[mask].map(json_flatten)
         return out

@@ -1,14 +1,16 @@
 """Stateful correlation: after / threshold / xbits — batch (event-time) form.
 
-The reference keeps per-(rule, track-key) counters in mmap'd shared
-arrays updated in arrival order (reference src/threshold.c:54-234,
-src/after.c:51-229, src/xbit-mmap.c).  Here the same state machines run
-distributed: hits shuffle ONCE on a colocation key (sid, track-key),
+The state machines themselves live once, in :mod:`sagan_spark.pipeline.
+machines` (after/threshold counters, the xbit/flexbit bit store, chain
+verdict gating), shared with the streaming engine.  This module builds
+the Spark plans that feed them: hits shuffle ONCE on a colocation key,
 each shuffle partition is sorted in canonical event-time order
 ``(ts, event_key)``, and a single ``mapInPandas`` pass replays every
-key's subsequence with a per-key state dict carried across Arrow
+key's subsequence through the core with state carried across Arrow
 batches.  Canonical ordering makes the result deterministic under any
-partitioning/parallelism (SURVEY §7.5).
+partitioning/parallelism (SURVEY §7.5).  The reference keeps the same
+counters in mmap'd shared arrays updated in arrival order
+(src/threshold.c:54-234, src/after.c:51-229, src/xbit-mmap.c).
 
 Why mapInPandas and not groupBy().applyInPandas: the track key is
 usually a source IP, so a corpus has ~as many groups as distinct IPs.
@@ -18,31 +20,18 @@ groups).  One sorted pass per shuffle partition does the same replay
 with zero per-group overhead, and it is exactly how the reference
 consumes its arrival-ordered stream.
 
-Exact semantics replicated:
-
-- threshold type **limit**: window anchored at FIRST event (utime never
-  slides, threshold.c:132-135); count resets when an event arrives more
-  than T seconds after the anchor (threshold.c:141-146); suppress once
-  count exceeds N (threshold.c:148-150).
-- threshold type **suppress**: utime slides on EVERY event
-  (threshold.c:126-130) so suppression persists while the inter-event
-  gap stays <= T.
-- **after**: suppress UNTIL count exceeds N within T of the anchor;
-  once exceeded, the anchor slides with each alerting event
-  (after.c:125-144).  Evaluated BEFORE threshold; a suppressed-by-after
-  event never updates threshold state (engine.c:1377-1389).
-- **xbits**: set/unset happen only for events that survived
-  after+threshold (engine.c:1415-1427); isset/isnotset conditions are
-  part of routing (checked before after/threshold) honoring expiry
-  (xbit-mmap.c:181-264).  Within one event, rules are replayed in
-  ruleset position order and a rule's condition check precedes its own
-  set (engine.c:999-1024 vs 1415-1427).
+Ordering rules the plans encode: after/threshold run per (sid,
+track-key); xbit set/unset happen only for events that survived
+after+threshold (engine.c:1415-1427) while isset/isnotset conditions
+are part of routing, checked before after/threshold; within one event,
+rules replay in ruleset position order and a rule's condition check
+precedes its own set (engine.c:999-1024 vs 1415-1427).
 
 Scale note: the shuffle parallelizes across (sid, track-key); rules
-carrying BOTH after and threshold colocate per sid (the two state
-machines share the event subsequence, engine.c:1377-1389) — the same
-serialization the reference imposes via its shared arrays.  Hot keys
-cost one partition's sort, not a driver loop.
+carrying BOTH after and threshold on different track keys colocate per
+sid (the two machines share the event subsequence, engine.c:1377-1389)
+— the same serialization the reference imposes via its shared arrays.
+Hot keys cost one partition's sort, not a driver loop.
 """
 
 from __future__ import annotations
@@ -52,8 +41,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from sagan_spark.pipeline.machines import CorrMachines, XbitWalk
 from sagan_spark.rules.ir import RuleIR
 
 FLAG_FIELDS = ["suppressed_after", "suppressed_threshold"]
@@ -90,60 +79,20 @@ def _corr_spec_map(rules: list[RuleIR]) -> dict[int, dict]:
     return out
 
 
+def corr_window_secs(specs: dict[int, dict]) -> int:
+    """Longest after/threshold window in ``specs`` (0 when empty): a key
+    silent for longer gap-resets, so its counters equal fresh state."""
+    return max(
+        (
+            max(v["after"][1] if v["after"] else 0, v["threshold"][2] if v["threshold"] else 0)
+            for v in specs.values()
+        ),
+        default=0,
+    )
+
+
 def _shuffle_partitions(df: DataFrame) -> int:
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-
-
-def advance_corr_machines(
-    spec: dict, a_state: dict, t_state: dict, sid, t: int, a_key, t_key
-) -> tuple[bool, bool]:
-    """Advance the after/threshold state machines for ONE event of
-    ``sid`` at epoch-second ``t`` and return (suppressed_after,
-    suppressed_threshold) — the exact reference semantics
-    (after.c:51-229, threshold.c:54-234; after gates threshold updates,
-    engine.c:1377-1389).  Shared by the apply_after_threshold replay and
-    the chain walk (a chain rule's counters run inside the walk because
-    its verdict-gated set is suppressed by the same machine instance
-    that gates the alert, engine.c:1402-1427)."""
-    suppressed = False
-    sup_thr = False
-    after_spec = spec["after"]
-    if after_spec is not None:
-        a_count, a_secs = after_spec
-        k = (sid, a_key)
-        st = a_state.get(k)
-        if st is None:
-            a_state[k] = [1, t]
-            suppressed = True  # after.c:78 default true until count > N
-        else:
-            st[0] += 1
-            oldtime = t - st[1]
-            flag = True
-            if oldtime > a_secs:  # gap reset (after.c:132-137)
-                st[0], st[1] = 1, t
-                flag = True
-            if a_count < st[0]:  # exceeded: alert + slide (after.c:140-144)
-                st[1] = t
-                flag = False
-            suppressed = flag
-
-    thr_spec = spec["threshold"]
-    if thr_spec is not None and not suppressed:  # engine.c:1386 gate
-        ttype, t_count, t_secs = thr_spec
-        k = (sid, t_key)
-        st = t_state.get(k)
-        if st is None:
-            t_state[k] = [1, t]
-        else:
-            st[0] += 1
-            oldtime = t - st[1]
-            if ttype == "suppress":  # utime slides (threshold.c:126-130)
-                st[1] = t
-            if oldtime > t_secs:  # window reset (threshold.c:141-146)
-                st[0], st[1] = 1, t
-            if t_count < st[0]:  # (threshold.c:148-150)
-                sup_thr = True
-    return suppressed, sup_thr
 
 
 def corr_group_key(specs: dict[int, dict]) -> F.Column:
@@ -169,6 +118,47 @@ def corr_group_key(specs: dict[int, dict]) -> F.Column:
         )
         .otherwise(F.col("track_threshold"))
     )
+
+
+_REPLAY_SCHEMA = (
+    "event_key string, sid long, suppressed_after boolean, suppressed_threshold boolean"
+)
+
+
+def _make_replay(specs: dict[int, dict]):
+    """``mapInPandas`` body: replay one sorted shuffle partition through
+    the core's machines, keyed (sid, track-key) like the reference's
+    (hash, sid) slots (threshold.c:111-113, after.c:108-110), with state
+    carried across Arrow batches.  Emits only the suppressed
+    (event_key, sid) pairs."""
+
+    def replay(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        machines = CorrMachines()
+        for pdf in batches:
+            out: list[tuple] = []
+            for sid, t, key, a_key, t_key in zip(
+                pdf["sid"].to_numpy(),
+                pdf["ts_epoch"].to_numpy(),
+                pdf["event_key"].to_numpy(),
+                pdf["track_after"].to_numpy(),
+                pdf["track_threshold"].to_numpy(),
+            ):
+                spec = specs.get(sid)
+                if spec is None:
+                    continue
+                sup_a, sup_t = machines.step(spec, int(t), (sid, a_key), (sid, t_key))
+                if sup_a or sup_t:
+                    out.append((key, sid, sup_a, sup_t))
+            yield pd.DataFrame(
+                {
+                    "event_key": [r[0] for r in out],
+                    "sid": pd.array([r[1] for r in out], dtype="int64"),
+                    "suppressed_after": pd.array([r[2] for r in out], dtype="boolean"),
+                    "suppressed_threshold": pd.array([r[3] for r in out], dtype="boolean"),
+                }
+            )
+
+    return replay
 
 
 def apply_after_threshold(
@@ -224,55 +214,6 @@ def apply_after_threshold(
         )
     )
 
-    out_struct = T.StructType(
-        [
-            T.StructField("event_key", T.StringType()),
-            T.StructField("sid", T.LongType()),
-            T.StructField("suppressed_after", T.BooleanType()),
-            T.StructField("suppressed_threshold", T.BooleanType()),
-        ]
-    )
-
-    def replay(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # state survives across Arrow batches of one shuffle partition;
-        # keys are dicts keyed (sid, track-key) like the reference's
-        # (hash, sid) slots (threshold.c:111-113, after.c:108-110)
-        a_state: dict = {}
-        t_state: dict = {}
-        for pdf in batches:
-            n = len(pdf)
-            sids = pdf["sid"].to_numpy()
-            ts = pdf["ts_epoch"].to_numpy()
-            keys = pdf["event_key"].to_numpy()
-            a_keys = pdf["track_after"].to_numpy()
-            t_keys = pdf["track_threshold"].to_numpy()
-            out_key: list = []
-            out_sid: list = []
-            out_a: list = []
-            out_t: list = []
-            for i in range(n):
-                sid = sids[i]
-                spec = specs.get(sid)
-                if spec is None:
-                    continue
-                suppressed, sup_thr = advance_corr_machines(
-                    spec, a_state, t_state, sid, int(ts[i]), a_keys[i], t_keys[i]
-                )
-                if suppressed or sup_thr:
-                    out_key.append(keys[i])
-                    out_sid.append(sid)
-                    out_a.append(suppressed)
-                    out_t.append(sup_thr)
-
-            yield pd.DataFrame(
-                {
-                    "event_key": out_key,
-                    "sid": pd.array(out_sid, dtype="int64"),
-                    "suppressed_after": pd.array(out_a, dtype="boolean"),
-                    "suppressed_threshold": pd.array(out_t, dtype="boolean"),
-                }
-            )
-
     n_parts = _shuffle_partitions(narrow)
     if isolate_hot:
         # north_rule skew handling: a hot (sid, track-key) cannot be
@@ -287,7 +228,7 @@ def apply_after_threshold(
     suppressed = (
         shuffled
         .sortWithinPartitions("ts", "event_key")
-        .mapInPandas(replay, schema=out_struct)
+        .mapInPandas(_make_replay(specs), schema=_REPLAY_SCHEMA)
     )
     if materialize_suppressed:
         # the result fans out downstream (xbit branches): pin the tiny
@@ -351,24 +292,19 @@ def flex_check_key(shape: str) -> F.Column:
     return _FLEX_SHAPES[shape][1]()
 
 
-# flexbit direction predicate: does a STORED tuple (src, dst, user) match
-# the probing/unsetting EVENT per the given shape (reference condition
-# dispatch src/flexbit-mmap.c:106-258; unset dispatch :973-1100)
-def _flex_tuple_match(shape: str, stored: tuple, esrc, edst, euser) -> bool:
-    ssrc, sdst, suser = stored
-    if shape == "none":
-        return True
-    if shape == "both":
-        return ssrc == esrc and sdst == edst
-    if shape == "by_src":
-        return ssrc == esrc
-    if shape == "by_dst":
-        return sdst == edst
-    if shape == "reverse":
-        return ssrc == edst and sdst == esrc
-    if shape == "username":
-        return suser == euser
-    return False
+def is_flexbit(track: str) -> bool:
+    return track == "flex_auto" or flex_shape(track) is not None
+
+
+def setter_variants(x, shapes_by_bit: dict[str, set]) -> list[tuple[str, F.Column]]:
+    """(bit name, key expression) copies a keyed set/unset writes: one per
+    condition-probed shape for a flexbit without its own shape (namespaced
+    "name#shape"), else the single keyed form."""
+    if not is_flexbit(x.track):
+        return [(x.name, xbit_key_expr(x.track))]
+    own = flex_shape(x.track)
+    shapes = [own] if own else sorted(shapes_by_bit.get(x.name, ()))
+    return [(f"{x.name}#{s}", flex_set_key(s)) for s in shapes]
 
 
 def chain_components(rules: list[RuleIR]) -> tuple[list[RuleIR], dict[str, str]]:
@@ -379,7 +315,7 @@ def chain_components(rules: list[RuleIR]) -> tuple[list[RuleIR], dict[str, str]]
     component walk — reference engine.c:999-1024 condition vs
     :1415-1427 set, flexbit store src/flexbit-mmap.c:106-258).  A chain
     rule carrying after/threshold runs its counters INSIDE the walk
-    (advance_corr_machines): the reference advances After2/Threshold2
+    (machines.XbitWalk): the reference advances After2/Threshold2
     only for condition-passing events (engine.c:1370-1389) and the same
     machine verdict gates both the alert and the set
     (engine.c:1402-1427)."""
@@ -405,6 +341,79 @@ def chain_components(rules: list[RuleIR]) -> tuple[list[RuleIR], dict[str, str]]
     return chain_rules, {b: find(b) for b in parent}
 
 
+def xbit_layout(rules: list[RuleIR]) -> tuple[dict[str, set], set[str]]:
+    """How each bit is stored, shared by the batch walk and the streaming
+    staged store: ``(shapes_by_bit, funnel_bits)``.
+
+    ``shapes_by_bit``: flexbit name -> the direction shapes its
+    conditions probe; a set writes one keyed copy per (bit, shape).
+    ``funnel_bits``: flexbits replayed over the flat tuple store in one
+    ordered pass per bit instead — those carrying an UNSET (it clears
+    matching tuples across ALL shapes, flexbit-mmap.c:973-1100) and every
+    flexbit a chain rule touches (its verdict-gated sets and the checks
+    observing them replay together)."""
+    chain_rules, _ = chain_components(rules)
+    chain_sids = {r.sid for r in chain_rules}
+    shapes_by_bit: dict[str, set] = {}
+    funnel_bits: set[str] = set()
+    for r in rules:
+        for x in r.xbits:
+            s = flex_shape(x.track)
+            if x.action in ("isset", "isnotset") and s is not None:
+                shapes_by_bit.setdefault(x.name, set()).add(s)
+            if is_flexbit(x.track) and (x.action == "unset" or r.sid in chain_sids):
+                funnel_bits.add(x.name)
+    return shapes_by_bit, funnel_bits
+
+
+_XBIT_WALK_COLS = (
+    "kind", "bit_name", "bit_key", "ts_d", "expire", "shape",
+    "e_src", "e_dst", "e_user", "hit_id", "want_set",
+)
+
+
+def _make_xbit_walk(chain_corr_specs: dict[int, dict]):
+    """``mapInPandas`` body: one ordered pass of set/unset/check events
+    through the core's :class:`~sagan_spark.pipeline.machines.XbitWalk`,
+    state carried across Arrow batches.  Emits (hit_id, ok) per check
+    and, for chain rules carrying after/threshold, one (hit_id,
+    suppressed_after, suppressed_threshold) flag row per hit."""
+    has_chain_corr = bool(chain_corr_specs)
+
+    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        w = XbitWalk(chain_corr_specs)
+        for pdf in batches:
+            out: list[tuple] = []
+            corr = (
+                [pdf[c].to_numpy() for c in ("csid", "a_key", "t_key")]
+                if has_chain_corr
+                else [[None] * len(pdf)] * 3
+            )
+            cols = [pdf[c].to_numpy() for c in _XBIT_WALK_COLS]
+            for (
+                kind, name, key, ts_d, expire, shape, esrc, edst, euser,
+                hit_id, want_set, sid, a_key, t_key,
+            ) in zip(*cols, *corr):
+                active, flags = w.step(
+                    kind, name, key, ts_d, expire, shape, (esrc, edst, euser),
+                    hit_id, want_set, sid, a_key, t_key,
+                )
+                if flags is not None:
+                    out.append((hit_id, None, flags[0], flags[1]))
+                if kind in ("check", "fcheck"):
+                    out.append((hit_id, active == bool(want_set), None, None))
+            frame = {
+                "hit_id": [r[0] for r in out],
+                "ok": pd.array([r[1] for r in out], dtype="boolean"),
+            }
+            if has_chain_corr:
+                frame["suppressed_after"] = pd.array([r[2] for r in out], dtype="boolean")
+                frame["suppressed_threshold"] = pd.array([r[3] for r in out], dtype="boolean")
+            yield pd.DataFrame(frame)
+
+    return walk
+
+
 def apply_xbits(
     hits: DataFrame,
     rules: list[RuleIR],
@@ -416,21 +425,15 @@ def apply_xbits(
     ``survived``: alerts (post after/threshold) of setter rules — the only
     events allowed to set/unset bits (reference engine.c:1415-1427).
 
-    Returns hits with an ``xbit_ok`` boolean.  Exact event-time replay per
-    (bit name, key): set/unset/check events sorted on
-    (ts, event_key, rule position, check-before-set); a check sees a bit
-    as set iff the latest set before it is not unset and not expired
-    (reference src/xbit-mmap.c:181-264).
+    Returns hits with an ``xbit_ok`` boolean.  Exact event-time replay
+    (machines.XbitWalk): set/unset/check events sorted on
+    (ts, event_key, rule position, check-before-set).
 
     Flexbit bits WITHOUT unsets distribute per (bit, condition-shape
-    copy, key).  A flexbit UNSET clears every stored tuple matching its
-    direction predicate — including tuples another shape's copy would
-    probe (reference src/flexbit-mmap.c:973-1100 scans the whole store)
-    — so bits carrying unsets take the FUNNEL path: all their events
-    colocate per bit name and the walk replays the reference's
-    flat-tuple-store scan exactly.  The reference serializes *all*
-    flexbit ops behind one file lock; a per-bit funnel is still strictly
-    more parallel.
+    copy, key); bits in ``xbit_layout``'s funnel set colocate per bit
+    name and replay the reference's flat-tuple-store scan exactly.  The
+    reference serializes *all* flexbit ops behind one file lock; a
+    per-bit funnel is still strictly more parallel.
     """
     cond_rules = [r for r in rules if any(x.action in ("isset", "isnotset") for x in r.xbits)]
     if not cond_rules:
@@ -439,93 +442,77 @@ def apply_xbits(
     set_rules = [r for r in rules if any(x.action in ("set", "unset") for x in r.xbits)]
 
     # CHAIN rules: check one bit AND set/unset another (stage-2
-    # escalation; reference evaluates the condition at engine.c:999-1024
-    # and applies the set at :1415-1427 only for fully-matched rules).
-    # Their set events are GATED on their own check verdict, so every
-    # bit a chain rule touches — and transitively every bit sharing a
-    # chain rule with those — funnels into ONE walk partition per
-    # connected component (the reference serializes the whole store;
-    # one component per task is still strictly more parallel).
+    # escalation).  Their set events are GATED on their own check
+    # verdict, so every bit a chain rule touches — and transitively every
+    # bit sharing a chain rule with those — funnels into ONE walk
+    # partition per connected component (the reference serializes the
+    # whole store; one component per task is still strictly more
+    # parallel).
     chain_rules, chain_members = chain_components(rules)
     chain_sids = {r.sid for r in chain_rules}
 
-    # chain rules carrying after/threshold: their counters advance
-    # inside the walk, on condition-PASSING events only, and the same
-    # machine verdict gates the alert AND the set (reference
-    # engine.c:1370-1389 counters inside routing, :1402-1427 gated set).
-    # Their set events carry (csid, a_key, t_key) so the walk can key
-    # the machines; the three columns exist only when such a rule is
-    # present — the common no-chain-corr plan is unchanged.
+    # chain rules carrying after/threshold: their counters advance inside
+    # the walk, on condition-PASSING events only, and the same machine
+    # verdict gates the alert AND the set (engine.c:1370-1389,
+    # :1402-1427).  Their set events carry (csid, a_key, t_key); the
+    # three columns exist only when such a rule is present — the common
+    # no-chain-corr plan is unchanged.
     chain_corr_specs = _corr_spec_map(chain_rules)
     has_chain_corr = bool(chain_corr_specs)
-
-    def _corr_cols_null():
-        if not has_chain_corr:
-            return []
-        return [
-            F.lit(None).cast("long").alias("csid"),
-            _null_s.alias("a_key"),
-            _null_s.alias("t_key"),
-        ]
-
-    def _corr_cols_for(r: RuleIR):
-        if not has_chain_corr or r.sid not in chain_corr_specs:
-            return _corr_cols_null()
-        return [
-            F.lit(r.sid).alias("csid"),
-            F.col("track_after").alias("a_key"),
-            F.col("track_threshold").alias("t_key"),
-        ]
-
-    # flexbit SETs record (src, dst, username); which key shapes the
-    # store needs is decided by the CONDITIONS that probe the bit — one
-    # keyed copy per (bit, shape), namespaced "name#shape"
-    shapes_by_bit: dict[str, set] = {}
-    for r in cond_rules:
-        for x in r.xbits:
-            s = flex_shape(x.track)
-            if x.action in ("isset", "isnotset") and s is not None:
-                shapes_by_bit.setdefault(x.name, set()).add(s)
-
-    # flexbit names with at least one unset -> exact funnel path
-    funnel_bits = {
-        x.name
-        for r in set_rules
-        for x in r.xbits
-        if x.action == "unset"
-        and (x.track == "flex_auto" or flex_shape(x.track) is not None)
-    }
-    # every flexbit a CHAIN rule touches funnels too: its verdict-gated
-    # set and the checks that observe it must replay in one ordered
-    # pass over the flat tuple store (and ALL access to the bit must
-    # use the same storage form)
-    funnel_bits |= {
-        x.name
-        for r in chain_rules
-        for x in r.xbits
-        if x.track == "flex_auto" or flex_shape(x.track) is not None
-    }
-
+    shapes_by_bit, funnel_bits = xbit_layout(rules)
     _null_s = F.lit(None).cast("string")
-
-    def _tuple_cols():
-        return [
-            F.col("src_ip").alias("e_src"),
-            F.col("dst_ip").alias("e_dst"),
-            F.coalesce(F.col("username"), F.lit("")).alias("e_user"),
-        ]
-
-    def _no_tuple_cols():
-        return [
-            _null_s.alias("e_src"),
-            _null_s.alias("e_dst"),
-            _null_s.alias("e_user"),
-        ]
-
-    # build set/unset event stream from surviving setter alerts
-    spark_events = []
     src = survived if survived is not None else hits
 
+    def event(df: DataFrame, r: RuleIR, x, bit_name: str, key, kind: str,
+              shape: str = "", flex: bool = False) -> DataFrame:
+        """One walk event row per hit of ``r`` for its xbit ``x``."""
+        check = x.action in ("isset", "isnotset")
+        # checks and chain sets are keyed by hit id (verdict + gating)
+        keyed = check or r.sid in chain_sids
+        if not has_chain_corr:
+            corr = []
+        elif not check and r.sid in chain_corr_specs:
+            corr = [
+                F.lit(r.sid).alias("csid"),
+                F.col("track_after").alias("a_key"),
+                F.col("track_threshold").alias("t_key"),
+            ]
+        else:
+            corr = [
+                F.lit(None).cast("long").alias("csid"),
+                _null_s.alias("a_key"),
+                _null_s.alias("t_key"),
+            ]
+        if flex:
+            tup = [
+                F.col("src_ip").alias("e_src"),
+                F.col("dst_ip").alias("e_dst"),
+                F.coalesce(F.col("username"), F.lit("")).alias("e_user"),
+            ]
+        else:
+            tup = [_null_s.alias("e_src"), _null_s.alias("e_dst"), _null_s.alias("e_user")]
+        return df.filter(F.col("sid") == r.sid).select(
+            F.lit(bit_name).alias("bit_name"),
+            key.alias("bit_key"),
+            ts_seconds_d(F.col("ts")).alias("ts_d"),
+            F.col("event_key"),
+            # within one event: rule order, a rule's own check precedes
+            # its set (engine.c:999-1024 vs 1415-1427)
+            F.lit(r.position * 2 + (0 if check else 1)).alias("seq"),
+            F.lit(kind).alias("kind"),
+            F.lit(0 if check else x.expire).alias("expire"),
+            (
+                F.concat_ws("#", F.col("event_key"), F.col("sid").cast("string"))
+                if keyed
+                else _null_s
+            ).alias("hit_id"),
+            F.lit(x.action == "isset").alias("want_set"),
+            F.lit(shape).alias("shape"),
+            *tup,
+            *corr,
+        )
+
+    spark_events = []
     # chain rules: set/unset events come from their CANDIDATE hits (the
     # walk gates them on the rule's own check verdict, recorded earlier
     # in the same ordered pass — seq 2p checks before 2p+1 sets)
@@ -533,158 +520,51 @@ def apply_xbits(
         for x in r.xbits:
             if x.action not in ("set", "unset"):
                 continue
-            is_flex = x.track == "flex_auto" or flex_shape(x.track) is not None
-            if is_flex:
-                # verdict-gated FLEXBIT set/unset: tuple-carrying event
-                # into the component funnel's flat store
-                ev = (
-                    hits.filter(F.col("sid") == r.sid)
-                    .select(
-                        F.lit(x.name).alias("bit_name"),
-                        F.lit("").alias("bit_key"),
-                        ts_seconds_d(F.col("ts")).alias("ts_d"),
-                        F.col("event_key"),
-                        F.lit(r.position * 2 + 1).alias("seq"),
-                        F.lit("cf" + x.action).alias("kind"),
-                        F.lit(x.expire).alias("expire"),
-                        F.concat_ws(
-                            "#", F.col("event_key"), F.col("sid").cast("string")
-                        ).alias("hit_id"),
-                        F.lit(False).alias("want_set"),
-                        F.lit(flex_shape(x.track) or "").alias("shape"),
-                        *_tuple_cols(),
-                        *_corr_cols_for(r),
-                    )
+            if is_flexbit(x.track):
+                spark_events.append(
+                    event(hits, r, x, x.name, F.lit(""), "cf" + x.action,
+                          flex_shape(x.track) or "", flex=True)
                 )
-                spark_events.append(ev)
-                continue
-            ev = (
-                hits.filter(F.col("sid") == r.sid)
-                .select(
-                    F.lit(x.name).alias("bit_name"),
-                    xbit_key_expr(x.track).alias("bit_key"),
-                    ts_seconds_d(F.col("ts")).alias("ts_d"),
-                    F.col("event_key"),
-                    F.lit(r.position * 2 + 1).alias("seq"),
-                    F.lit("c" + x.action).alias("kind"),
-                    F.lit(x.expire).alias("expire"),
-                    F.concat_ws(
-                        "#", F.col("event_key"), F.col("sid").cast("string")
-                    ).alias("hit_id"),
-                    F.lit(False).alias("want_set"),
-                    F.lit("").alias("shape"),
-                    *_no_tuple_cols(),
-                    *_corr_cols_for(r),
+            else:
+                spark_events.append(
+                    event(hits, r, x, x.name, xbit_key_expr(x.track), "c" + x.action)
                 )
-            )
-            spark_events.append(ev)
 
+    # setter rules: set/unset events from surviving alerts
     for r in set_rules:
         if r.sid in chain_sids:
             continue  # staged above, gated on the rule's own condition
         for x in r.xbits:
             if x.action not in ("set", "unset"):
                 continue
-            is_flex = x.track == "flex_auto" or flex_shape(x.track) is not None
-            if is_flex and x.name in funnel_bits:
+            if is_flexbit(x.track) and x.name in funnel_bits:
                 # funnel: one tuple-carrying event, colocated per bit name
-                kind = "fset" if x.action == "set" else "funset"
-                shape = flex_shape(x.track) or ""
-                ev = (
-                    src.filter(F.col("sid") == r.sid)
-                    .select(
-                        F.lit(x.name).alias("bit_name"),
-                        F.lit("").alias("bit_key"),
-                        ts_seconds_d(F.col("ts")).alias("ts_d"),
-                        F.col("event_key"),
-                        F.lit(r.position * 2 + 1).alias("seq"),
-                        F.lit(kind).alias("kind"),
-                        F.lit(x.expire).alias("expire"),
-                        _null_s.alias("hit_id"),
-                        F.lit(False).alias("want_set"),
-                        F.lit(shape).alias("shape"),
-                        *_tuple_cols(),
-                        *_corr_cols_null(),
-                    )
+                spark_events.append(
+                    event(src, r, x, x.name, F.lit(""), "f" + x.action,
+                          flex_shape(x.track) or "", flex=True)
                 )
-                spark_events.append(ev)
                 continue
-            if is_flex:
-                own = flex_shape(x.track)
-                shapes = [own] if own else sorted(shapes_by_bit.get(x.name, ()))
-                variants = [(f"{x.name}#{s}", flex_set_key(s)) for s in shapes]
-            else:
-                variants = [(x.name, xbit_key_expr(x.track))]
-            for bit_name, key in variants:
-                ev = (
-                    src.filter(F.col("sid") == r.sid)
-                    .select(
-                        F.lit(bit_name).alias("bit_name"),
-                        key.alias("bit_key"),
-                        ts_seconds_d(F.col("ts")).alias("ts_d"),
-                        F.col("event_key"),
-                        # within one event: rule order, a rule's own check
-                        # precedes its set (engine.c:999-1024 vs 1415-1427)
-                        F.lit(r.position * 2 + 1).alias("seq"),
-                        F.lit(x.action).alias("kind"),
-                        F.lit(x.expire).alias("expire"),
-                        _null_s.alias("hit_id"),
-                        F.lit(False).alias("want_set"),
-                        F.lit("").alias("shape"),
-                        *_no_tuple_cols(),
-                        *_corr_cols_null(),
-                    )
-                )
-                spark_events.append(ev)
+            for bit_name, key in setter_variants(x, shapes_by_bit):
+                spark_events.append(event(src, r, x, bit_name, key, x.action))
 
-    # explode condition entries of candidate hits
+    # condition entries of candidate hits
     for r in cond_rules:
         for x in r.xbits:
             if x.action not in ("isset", "isnotset"):
                 continue
             s = flex_shape(x.track)
             if s is not None and x.name in funnel_bits:
-                ev = (
-                    hits.filter(F.col("sid") == r.sid)
-                    .select(
-                        F.lit(x.name).alias("bit_name"),
-                        F.lit("").alias("bit_key"),
-                        ts_seconds_d(F.col("ts")).alias("ts_d"),
-                        F.col("event_key"),
-                        F.lit(r.position * 2).alias("seq"),
-                        F.lit("fcheck").alias("kind"),
-                        F.lit(0).alias("expire"),
-                        F.concat_ws("#", F.col("event_key"), F.col("sid").cast("string")).alias("hit_id"),
-                        F.lit(x.action == "isset").alias("want_set"),
-                        F.lit(s).alias("shape"),
-                        *_tuple_cols(),
-                        *_corr_cols_null(),
-                    )
+                spark_events.append(
+                    event(hits, r, x, x.name, F.lit(""), "fcheck", s, flex=True)
                 )
-                spark_events.append(ev)
-                continue
-            if s is not None:
-                bit_name, key = f"{x.name}#{s}", flex_check_key(s)
+            elif s is not None:
+                spark_events.append(
+                    event(hits, r, x, f"{x.name}#{s}", flex_check_key(s), "check")
+                )
             else:
-                bit_name, key = x.name, xbit_key_expr(x.track)
-            ev = (
-                hits.filter(F.col("sid") == r.sid)
-                .select(
-                    F.lit(bit_name).alias("bit_name"),
-                    key.alias("bit_key"),
-                    ts_seconds_d(F.col("ts")).alias("ts_d"),
-                    F.col("event_key"),
-                    F.lit(r.position * 2).alias("seq"),
-                    F.lit("check").alias("kind"),
-                    F.lit(0).alias("expire"),
-                    F.concat_ws("#", F.col("event_key"), F.col("sid").cast("string")).alias("hit_id"),
-                    F.lit(x.action == "isset").alias("want_set"),
-                    F.lit("").alias("shape"),
-                    *_no_tuple_cols(),
-                    *_corr_cols_null(),
+                spark_events.append(
+                    event(hits, r, x, x.name, xbit_key_expr(x.track), "check")
                 )
-            )
-            spark_events.append(ev)
 
     if not spark_events:
         return hits.withColumn("xbit_ok", F.lit(True))
@@ -693,162 +573,9 @@ def apply_xbits(
     for e in spark_events[1:]:
         events = events.unionByName(e)
 
-    out_fields = [
-        T.StructField("hit_id", T.StringType()),
-        T.StructField("ok", T.BooleanType()),
-    ]
+    out_schema = "hit_id string, ok boolean"
     if has_chain_corr:
-        out_fields += [
-            T.StructField("suppressed_after", T.BooleanType()),
-            T.StructField("suppressed_threshold", T.BooleanType()),
-        ]
-    out_struct = T.StructType(out_fields)
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # (bit_name, bit_key) -> (set_ts, expire); carried across batches
-        state: dict = {}
-        # funnel bits: bit_name -> {(src, dst, user): (set_ts, expire)} —
-        # the reference's flat tuple store (src/flexbit-mmap.c)
-        fstate: dict = {}
-        # chain gating: hit_id -> AND of that rule's check verdicts so
-        # far (its cset/cunset events sort after all its checks)
-        ver: dict = {}
-        # chain after/threshold machines (advance_corr_machines) — keyed
-        # (sid, track-key); corr_flags caches one verdict per hit so a
-        # multi-set rule advances its counters exactly once per event
-        a_state: dict = {}
-        t_state: dict = {}
-        corr_flags: dict = {}
-        for pdf in batches:
-            out_ids: list[str] = []
-            out_ok: list[bool | None] = []
-            out_sa: list[bool | None] = []
-            out_st: list[bool | None] = []
-            if has_chain_corr:
-                csids = pdf["csid"].to_numpy()
-                a_keys = pdf["a_key"].to_numpy()
-                t_keys = pdf["t_key"].to_numpy()
-            it = zip(
-                range(len(pdf)),
-                pdf["bit_name"].to_numpy(),
-                pdf["bit_key"].to_numpy(),
-                pdf["ts_d"].to_numpy(),
-                pdf["kind"].to_numpy(),
-                pdf["expire"].to_numpy(),
-                pdf["hit_id"].to_numpy(),
-                pdf["want_set"].to_numpy(),
-                pdf["shape"].to_numpy(),
-                pdf["e_src"].to_numpy(),
-                pdf["e_dst"].to_numpy(),
-                pdf["e_user"].to_numpy(),
-            )
-
-            def _corr_gate(i, hit_id, ts_d) -> bool:
-                """after/threshold gate for a chain set event whose
-                condition verdict held: advance the machines once per
-                hit (first set event), emit the flag row, and allow the
-                set only when neither machine suppresses
-                (engine.c:1402-1427)."""
-                if not has_chain_corr:
-                    return True
-                cs = csids[i]
-                if cs is None or pd.isna(cs):
-                    return True
-                fl = corr_flags.get(hit_id)
-                if fl is None:
-                    spec = chain_corr_specs.get(int(cs))
-                    if spec is None:
-                        return True
-                    fl = advance_corr_machines(
-                        spec,
-                        a_state,
-                        t_state,
-                        int(cs),
-                        int(ts_d),
-                        a_keys[i],
-                        t_keys[i],
-                    )
-                    corr_flags[hit_id] = fl
-                    out_ids.append(hit_id)
-                    out_ok.append(None)
-                    out_sa.append(fl[0])
-                    out_st.append(fl[1])
-                return not (fl[0] or fl[1])
-
-            for i, name, key, ts_d, kind, expire, hit_id, want_set, shape, esrc, edst, euser in it:
-                if kind == "set":
-                    state[(name, key)] = (ts_d, expire)
-                elif kind == "unset":
-                    state.pop((name, key), None)
-                elif kind == "cset":
-                    if ver.get(hit_id, False) and _corr_gate(i, hit_id, ts_d):
-                        state[(name, key)] = (ts_d, expire)
-                elif kind == "cunset":
-                    if ver.get(hit_id, False) and _corr_gate(i, hit_id, ts_d):
-                        state.pop((name, key), None)
-                elif kind == "check":
-                    st = state.get((name, key))
-                    active = st is not None and (
-                        st[1] == 0 or (ts_d - st[0]) < st[1]
-                    )
-                    ok = bool(active) == bool(want_set)
-                    ver[hit_id] = ver.get(hit_id, True) and ok
-                    out_ids.append(hit_id)
-                    out_ok.append(ok)
-                    out_sa.append(None)
-                    out_st.append(None)
-                elif kind == "fset":
-                    fstate.setdefault(name, {})[(esrc, edst, euser)] = (ts_d, expire)
-                elif kind == "funset":
-                    store = fstate.get(name)
-                    if store:
-                        dead = [
-                            tup
-                            for tup in store
-                            if _flex_tuple_match(shape, tup, esrc, edst, euser)
-                        ]
-                        for tup in dead:
-                            del store[tup]
-                elif kind == "cfset":
-                    # flexbit chain set: fires only when the rule's own
-                    # condition verdict held (engine.c:1415-1427) AND
-                    # its after/threshold machines allowed the event
-                    if ver.get(hit_id, False) and _corr_gate(i, hit_id, ts_d):
-                        fstate.setdefault(name, {})[(esrc, edst, euser)] = (
-                            ts_d,
-                            expire,
-                        )
-                elif kind == "cfunset":
-                    if ver.get(hit_id, False) and _corr_gate(i, hit_id, ts_d):
-                        store = fstate.get(name)
-                        if store:
-                            dead = [
-                                tup
-                                for tup in store
-                                if _flex_tuple_match(shape, tup, esrc, edst, euser)
-                            ]
-                            for tup in dead:
-                                del store[tup]
-                else:  # fcheck
-                    store = fstate.get(name, {})
-                    active = any(
-                        (exp == 0 or (ts_d - set_ts) < exp)
-                        and _flex_tuple_match(shape, tup, esrc, edst, euser)
-                        for tup, (set_ts, exp) in store.items()
-                    )
-                    ok = bool(active) == bool(want_set)
-                    # chain gating: a rule's own flexbit check verdict
-                    # gates its set later in the same ordered pass
-                    ver[hit_id] = ver.get(hit_id, True) and ok
-                    out_ids.append(hit_id)
-                    out_ok.append(ok)
-                    out_sa.append(None)
-                    out_st.append(None)
-            out = {"hit_id": out_ids, "ok": pd.array(out_ok, dtype="boolean")}
-            if has_chain_corr:
-                out["suppressed_after"] = pd.array(out_sa, dtype="boolean")
-                out["suppressed_threshold"] = pd.array(out_st, dtype="boolean")
-            yield pd.DataFrame(out)
+        out_schema += ", suppressed_after boolean, suppressed_threshold boolean"
 
     if chain_members:
         # all events of a chain component colocate (the gated set and
@@ -870,7 +597,7 @@ def apply_xbits(
         )
     verdicts = (
         shuffled.sortWithinPartitions("ts_d", "event_key", "seq")
-        .mapInPandas(walk, schema=out_struct)
+        .mapInPandas(_make_xbit_walk(chain_corr_specs), schema=out_schema)
     )
     # all condition entries of a hit must hold (xbit-mmap.c:181-264);
     # with one condition per rule (the common case) each hit_id is unique

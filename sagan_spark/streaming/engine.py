@@ -3,8 +3,7 @@
 The reference is a pure streaming engine — FIFO input, worker pool,
 mmap'd correlation state that survives restarts because it is a file
 (reference src/input-plugins/fifo.c:62, src/sagan-defs.h:185-208,
-src/ipc.c).  The Spark form (north_rule: "Structured Streaming stateful
-counters keyed by (rule_sid, track field) with event-time watermarks"):
+src/ipc.c).  The Spark form:
 
 - source: ``readStream`` over the pages table directory (Iceberg/parquet);
 - stateless match: the exact same compiled plan as batch
@@ -16,26 +15,26 @@ counters keyed by (rule_sid, track field) with event-time watermarks"):
   reset (after.c:132-137, threshold.c:141-146) makes a stale counter
   indistinguishable from a fresh one;
 - sinks: ``foreachBatch`` fan-out to the same per-sink tables as batch,
-  with the streaming checkpoint providing exactly-once resume — the
-  north_rule's "resumes from Iceberg snapshot + checkpoint".
+  with the streaming checkpoint providing exactly-once resume.
 
-xbit/flexbit **conditions** (cross-rule bits) run as a chained
-two-query pipeline (``run_pipeline_with_xbits``): stage A routes
-stateless+stateful rules and stages set/unset events into a
-time-bucketed store; stage B replays condition rules against the staged
-store with last-write-wins precedence.  Plain-xbit unset, flexbit
-direction shapes, AND flexbit unset are all supported — bits carrying a
-flexbit unset stage full-tuple events and stage B replays the
-reference's flat-store scan per bit (the same funnel model as batch
-correlate.apply_xbits).  after/threshold ON an xbit-condition rule also
-runs in stage B: the counters advance only on condition-PASSING rows
-(reference order engine.c:999-1024 vs 1373-1389) via a per-(sid,
-track-key) replay whose state is seeded from the previous micro-batch's
-snapshot (``corr_state_b``, idempotent batch-id partitions, retry reads
-the prior batch's snapshot).  Chained xbits (one rule checks bit A and
-sets bit B) run per component inside each micro-batch via the same
-verdict-gated walk as batch, with fired sets persisted to the staged
-store for later batches.  No batch-only rule combinations remain.
+Every state machine here — after/threshold counters, the xbit/flexbit
+bit store, chain verdict gating — is the one core in
+:mod:`sagan_spark.pipeline.machines` that batch runs too; the functions
+below only translate row formats and carry its state across
+micro-batches (GroupState JSON, snapshot stores, staged set stores).
+
+xbit/flexbit **conditions** run as a chained two-query pipeline
+(``run_pipeline_with_xbits``): stage A routes stateless+stateful rules
+and stages set/unset events into a time-bucketed store; stage B replays
+condition rules against it.  Plain keyed bits resolve by a last-write-
+wins range join; funnel flexbits (``correlate.xbit_layout``) and chained
+bits (one rule checks bit A and sets bit B) replay through the core's
+walk per bit / per component, fired chain sets persisting to the staged
+store.  after/threshold ON a condition rule also runs in stage B, on
+condition-PASSING rows only (engine.c:999-1024 vs 1373-1389), with state
+seeded from the previous micro-batch's snapshot (idempotent batch-id
+partitions; a retry reads the prior batch's snapshot).  No batch-only
+rule combinations remain.
 """
 
 from __future__ import annotations
@@ -49,7 +48,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from sagan_spark.pipeline.correlate import (
+    _corr_spec_map,
+    chain_components,
+    corr_group_key,
+    corr_window_secs,
+    flex_check_key,
+    flex_shape,
+    is_flexbit,
+    setter_variants,
+    ts_seconds_d,
+    ts_seconds_l,
+    xbit_key_expr,
+    xbit_layout,
+)
 from sagan_spark.pipeline.engine import EVENT_COLS, SaganSparkEngine
+from sagan_spark.pipeline.machines import GATED, BitStore, CorrMachines, XbitWalk
 from sagan_spark.rules.compiler import EngineConfig
 from sagan_spark.rules.ir import RuleIR
 
@@ -248,200 +262,74 @@ _CHAIN_WALK_SCHEMA = (
 
 
 def _make_chain_walk(chain_corr_specs: dict[int, dict], max_corr_secs: int):
-    """Stage-B component walk for chained xbits: ordered replay of
-    staged sets + this batch's checks and verdict-gated chain
-    set/unsets (mirror of the batch apply_xbits walk).  Plain xbits use
-    (name, key) state; flexbits use the reference's flat tuple store
-    (src/flexbit-mmap.c) — 'f*' kinds carry (shape, e_src, e_dst,
-    e_user).  'v' rows carry the raw bit-state for the flag columns
-    (`ok` = bit active, the isnotset negation happens in the verdict
-    expression); gated sets that actually fired come back as
-    'fired_set'/'fired_unset'/'fired_fset'/'fired_funset' rows for the
-    staged store.
+    """Stage-B component walk for chained xbits: staged sets plus this
+    batch's checks and verdict-gated chain set/unsets, replayed in order
+    through the core's ``XbitWalk`` (pipeline/machines.py) — the walk
+    batch ``correlate.apply_xbits`` runs.  'f*' kinds carry (shape,
+    e_src, e_dst, e_user).  Output rows by ``kind``:
+
+    - 'v': one condition entry's raw bit state (`ok` = bit active; the
+      isnotset negation happens in the verdict expression);
+    - 'fired_set' / 'fired_unset' / 'fired_fset' / 'fired_funset': gated
+      sets that fired, for the staged store;
+    - 'cflags': a chain hit's after/threshold flags;
+    - 'cstate': the machines' surviving snapshot (machine in bit_name,
+      key in bit_key, count in seq, utime in expire), fed back next
+      micro-batch as 'cseed' rows that sort before every event.
 
     ``chain_corr_specs``: after/threshold specs of CHAIN rules — their
-    counters run inside the walk on condition-passing events only, and
-    the machine verdict gates both the set and the alert
-    (engine.c:1370-1427).  Machine state is seeded from the previous
-    micro-batch's snapshot ('cseed' rows, sorted first) and the
-    surviving state comes back as 'cstate' rows (machine in bit_name,
-    key in bit_key, count in seq, utime in expire); per-hit flags come
-    back as 'cflags' rows.  Keys silent longer than ``max_corr_secs``
-    gap-reset to fresh state and are dropped from the snapshot (the
-    same survive-or-evict rule as _make_seeded_replay)."""
-    from sagan_spark.pipeline.correlate import (
-        _flex_tuple_match,
-        advance_corr_machines,
-    )
+    counters run on condition-passing events only and gate both the set
+    and the alert (engine.c:1370-1427); ``max_corr_secs`` is the
+    snapshot's eviction horizon."""
 
     def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict = {}
-        fstate: dict = {}
-        ver: dict = {}
-        a_state: dict = {}
-        t_state: dict = {}
-        corr_flags: dict = {}
-        # per-machine-key latest event time: eviction must use each
-        # key's OWN timeline — a partition-global max would let one
-        # key's far-future event evict another key's still-live
-        # machine, losing alerts a batch replay produces
-        key_max: dict = {}
-
-        def _funset(name, shape, esrc, edst, euser) -> None:
-            store = fstate.get(name)
-            if store:
-                dead = [
-                    t for t in store if _flex_tuple_match(shape, t, esrc, edst, euser)
-                ]
-                for t in dead:
-                    del store[t]
-
+        w = XbitWalk(chain_corr_specs)
         for pdf in batches:
             out: list[tuple] = []
-            has_keys = "a_key" in pdf.columns
-            it = zip(
+            for (
+                kind, name, key, ts_d, ek, seq, expire, sid, entry, want_set,
+                ver_id, shape, esrc, edst, euser, a_key, t_key,
+            ) in zip(
                 pdf["kind"], pdf["bit_name"], pdf["bit_key"], pdf["ts_d"],
                 pdf["event_key"], pdf["seq"], pdf["expire"], pdf["sid"],
                 pdf["entry"], pdf["want_set"], pdf["ver_id"],
                 pdf["shape"], pdf["e_src"], pdf["e_dst"], pdf["e_user"],
-                pdf["a_key"] if has_keys else pdf["kind"],
-                pdf["t_key"] if has_keys else pdf["kind"],
-            )
-
-            def _corr_gate(sid, ver_id, ts_d, a_key, t_key) -> bool:
-                """after/threshold gate for a chain set whose condition
-                verdict held: advance the machines once per hit, emit
-                the 'cflags' row, allow the set only when neither
-                machine suppresses (engine.c:1402-1427)."""
-                if not chain_corr_specs or sid is None or pd.isna(sid):
-                    return True
-                spec = chain_corr_specs.get(int(sid))
-                if spec is None:
-                    return True
-                fl = corr_flags.get(ver_id)
-                if fl is None:
-                    t = int(ts_d)
-                    if spec["after"] is not None:
-                        ka = ("a", int(sid), a_key)
-                        if key_max.get(ka, t) <= t:
-                            key_max[ka] = t
-                    if spec["threshold"] is not None:
-                        kt = ("t", int(sid), t_key)
-                        if key_max.get(kt, t) <= t:
-                            key_max[kt] = t
-                    fl = advance_corr_machines(
-                        spec, a_state, t_state, int(sid), t, a_key, t_key
-                    )
-                    corr_flags[ver_id] = fl
+                pdf["a_key"], pdf["t_key"],
+            ):
+                if kind == "cseed":
+                    # shape carries the machine id, seq the count, expire
+                    # the utime
+                    w.machines.seed(shape, (int(sid), key), seq, expire)
+                    continue
+                result, flags = w.step(
+                    kind, name, key, ts_d, expire, shape, (esrc, edst, euser),
+                    ver_id, want_set, sid, a_key, t_key,
+                )
+                if flags is not None:
                     out.append(
                         ("cflags", ver_id.rsplit("#", 1)[0], int(sid), -1,
                          None, "", "", ts_d, 0, 0, "", "", "", "",
-                         fl[0], fl[1])
+                         flags[0], flags[1])
                     )
-                return not (fl[0] or fl[1])
-
-            for (
-                kind, name, key, ts_d, ek, seq, expire, sid, entry, want_set,
-                ver_id, shape, esrc, edst, euser, a_key, t_key,
-            ) in it:
-                if kind == "set":
-                    state[(name, key)] = (ts_d, expire)
-                elif kind == "unset":
-                    state.pop((name, key), None)
-                elif kind == "fset":
-                    fstate.setdefault(name, {})[(esrc, edst, euser)] = (ts_d, expire)
-                elif kind == "funset":
-                    _funset(name, shape, esrc, edst, euser)
-                elif kind == "cseed":
-                    # previous micro-batch's machine snapshot: shape
-                    # carries the machine id, seq the count, expire the
-                    # utime (ts_d sorts these before every event)
-                    mstate = a_state if shape == "a" else t_state
-                    mstate[(int(sid), key)] = [int(seq), int(expire)]
-                elif kind == "cset":
-                    if ver.get(ver_id, False) and _corr_gate(
-                        sid, ver_id, ts_d, a_key, t_key
-                    ):
-                        state[(name, key)] = (ts_d, expire)
-                        out.append(
-                            ("fired_set", ek, None, -1, False, name, key,
-                             ts_d, seq, expire, "", "", "", "", None, None)
-                        )
-                elif kind == "cunset":
-                    if ver.get(ver_id, False) and _corr_gate(
-                        sid, ver_id, ts_d, a_key, t_key
-                    ):
-                        state.pop((name, key), None)
-                        out.append(
-                            ("fired_unset", ek, None, -1, False, name, key,
-                             ts_d, seq, expire, "", "", "", "", None, None)
-                        )
-                elif kind == "cfset":
-                    if ver.get(ver_id, False) and _corr_gate(
-                        sid, ver_id, ts_d, a_key, t_key
-                    ):
-                        fstate.setdefault(name, {})[(esrc, edst, euser)] = (
-                            ts_d,
-                            expire,
-                        )
-                        out.append(
-                            ("fired_fset", ek, None, -1, False, name, key,
-                             ts_d, seq, expire, shape, esrc, edst, euser,
-                             None, None)
-                        )
-                elif kind == "cfunset":
-                    if ver.get(ver_id, False) and _corr_gate(
-                        sid, ver_id, ts_d, a_key, t_key
-                    ):
-                        _funset(name, shape, esrc, edst, euser)
-                        out.append(
-                            ("fired_funset", ek, None, -1, False, name, key,
-                             ts_d, seq, expire, shape, esrc, edst, euser,
-                             None, None)
-                        )
-                elif kind == "fcheck":
-                    store = fstate.get(name, {})
-                    active = any(
-                        (exp == 0 or (ts_d - set_ts) < exp)
-                        and _flex_tuple_match(shape, t, esrc, edst, euser)
-                        for t, (set_ts, exp) in store.items()
-                    )
-                    cond_ok = bool(active) == bool(want_set)
-                    ver[ver_id] = ver.get(ver_id, True) and cond_ok
+                if kind in ("check", "fcheck"):
                     out.append(
-                        ("v", ek, int(sid), int(entry), bool(active), name, key,
+                        ("v", ek, int(sid), int(entry), result, name, key,
                          ts_d, seq, expire, "", "", "", "", None, None)
                     )
-                else:  # check
-                    st = state.get((name, key))
-                    active = st is not None and (st[1] == 0 or (ts_d - st[0]) < st[1])
-                    cond_ok = bool(active) == bool(want_set)
-                    ver[ver_id] = ver.get(ver_id, True) and cond_ok
+                elif result:
+                    # plain chain sets carry blank tuple columns
                     out.append(
-                        ("v", ek, int(sid), int(entry), bool(active), name, key,
-                         ts_d, seq, expire, "", "", "", "", None, None)
+                        ("fired_" + GATED[kind], ek, None, -1, False, name, key,
+                         ts_d, seq, expire, shape, esrc, edst, euser, None, None)
                     )
             yield pd.DataFrame(out, columns=_CHAIN_WALK_COLS)
 
         if chain_corr_specs:
-            # surviving machine state -> 'cstate' snapshot rows
-            # (survive-or-evict per KEY timeline: a machine whose own
-            # key's latest event is already a full window past utime
-            # would gap-reset on any future event, so dropping it is
-            # replay-equivalent; keys with no events this batch keep
-            # their seeded state — same rule as _make_seeded_replay's
-            # per-group cutoff)
-            rows = []
-            for machine, mstate in (("a", a_state), ("t", t_state)):
-                for (sid, mkey), (cnt, utime) in mstate.items():
-                    kmax = key_max.get((machine, sid, mkey))
-                    if kmax is not None and utime < kmax - max_corr_secs:
-                        continue
-                    rows.append(
-                        ("cstate", "", int(sid), -1, None, machine,
-                         mkey, 0.0, int(cnt), int(utime), "", "", "", "",
-                         None, None)
-                    )
+            rows = [
+                ("cstate", "", int(sid), -1, None, machine, mkey, 0.0,
+                 int(cnt), int(utime), "", "", "", "", None, None)
+                for machine, (sid, mkey), cnt, utime in w.machines.snapshot(max_corr_secs)
+            ]
             if rows:
                 yield pd.DataFrame(rows, columns=_CHAIN_WALK_COLS)
 
@@ -494,80 +382,33 @@ def _read_prev_corr_state(spark: SparkSession, path: str, batch_id: int):
 
 
 def _make_seeded_replay(specs: dict[int, dict], max_secs: int):
-    """Per-(sid, corr_group) after/threshold replay with state seeded
-    from the previous micro-batch's snapshot — the same machines as
-    correlate.apply_after_threshold (threshold.c:54-234, after.c:51-229),
-    running on xbit-condition-PASSING rows only (engine.c:1373-1389).
-    Emits one flag row per event plus the group's surviving state rows
-    (keys silent past max_secs gap-reset to fresh state and are
-    dropped)."""
+    """Per-(sid, corr_group) after/threshold replay through the core's
+    ``CorrMachines`` (pipeline/machines.py), keyed by the bare track key
+    and seeded from the previous micro-batch's snapshot ('s' rows).  Runs
+    on xbit-condition-PASSING rows only (engine.c:1373-1389).  Emits one
+    'e' flag row per event plus the group's surviving 's' state rows
+    (``CorrMachines.snapshot``: eviction against each key's own latest
+    event, ``max_secs`` horizon)."""
 
     def replay(pdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(pdf["sid"].iloc[0])
         grp = pdf["corr_group"].iloc[0]
         spec = specs.get(sid)
+        machines = CorrMachines()
         st = pdf[pdf["kind"] == "s"]
-        a_state = {
-            r.mkey: [int(r.cnt), int(r.utime)]
-            for r in st[st["machine"] == "a"].itertuples()
-        }
-        t_state = {
-            r.mkey: [int(r.cnt), int(r.utime)]
-            for r in st[st["machine"] == "t"].itertuples()
-        }
-        ev = pdf[pdf["kind"] == "e"].sort_values(
-            ["ts_us", "event_key"], kind="mergesort"
-        )
-        out_ek, out_a, out_t = [], [], []
-        max_t = 0
-        for r in ev.itertuples():
-            t = int(r.ts_epoch)
-            max_t = max(max_t, t)
-            suppressed = False
-            if spec and spec["after"] is not None:
-                a_count, a_secs = spec["after"]
-                s = a_state.get(r.track_after)
-                if s is None:
-                    a_state[r.track_after] = [1, t]
-                    suppressed = True
-                else:
-                    s[0] += 1
-                    oldtime = t - s[1]
-                    flag = True
-                    if oldtime > a_secs:
-                        s[0], s[1] = 1, t
-                    if a_count < s[0]:
-                        s[1] = t
-                        flag = False
-                    suppressed = flag
-            sup_thr = False
-            if spec and spec["threshold"] is not None and not suppressed:
-                ttype, t_count, t_secs = spec["threshold"]
-                s = t_state.get(r.track_threshold)
-                if s is None:
-                    t_state[r.track_threshold] = [1, t]
-                else:
-                    s[0] += 1
-                    oldtime = t - s[1]
-                    if ttype == "suppress":
-                        s[1] = t
-                    if oldtime > t_secs:
-                        s[0], s[1] = 1, t
-                    if t_count < s[0]:
-                        sup_thr = True
-            out_ek.append(r.event_key)
-            out_a.append(suppressed)
-            out_t.append(sup_thr)
-        rows = [
-            ("e", sid, grp, ek, sa, stp, "", "", 0, 0)
-            for ek, sa, stp in zip(out_ek, out_a, out_t)
+        for machine, key, cnt, utime in zip(st["machine"], st["mkey"], st["cnt"], st["utime"]):
+            machines.seed(machine, key, cnt, utime)
+        ev = pdf[pdf["kind"] == "e"].sort_values(["ts_us", "event_key"], kind="mergesort")
+        rows = []
+        for ek, t, ak, tk in zip(
+            ev["event_key"], ev["ts_epoch"], ev["track_after"], ev["track_threshold"]
+        ):
+            sup_a, sup_t = machines.step(spec, int(t), ak, tk) if spec else (False, False)
+            rows.append(("e", sid, grp, ek, sup_a, sup_t, "", "", 0, 0))
+        rows += [
+            ("s", sid, grp, "", None, None, machine, key, cnt, utime)
+            for machine, key, cnt, utime in machines.snapshot(max_secs)
         ]
-        # survive-or-evict: a key silent past max_secs replays as fresh
-        cutoff = max_t - max_secs
-        for machine, state in (("a", a_state), ("t", t_state)):
-            for k, (cnt, utime) in state.items():
-                if utime >= cutoff:
-                    rows.append(("s", sid, grp, "", None, None, machine, k, cnt, utime))
         return pd.DataFrame(
             rows,
             columns=[
@@ -577,6 +418,71 @@ def _make_seeded_replay(specs: dict[int, dict], max_secs: int):
         )
 
     return replay
+
+
+def _make_group_replay(specs: dict[int, dict], max_secs: int, out_cols: list[str]):
+    """``applyInPandasWithState`` body for stage-A after/threshold: one
+    (sid, corr_group) group's micro-batch replayed in canonical order
+    through the core's ``CorrMachines``, keyed by the bare track key.
+    The GroupState holds the snapshot as JSON ``{key: [count, utime]}``
+    per machine and times out ``max_secs`` after the group's latest
+    event: past that a silent key's counters equal fresh state."""
+
+    def replay(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        spec = specs.get(int(key[0]))
+        machines = CorrMachines()
+        if state.exists:
+            for machine, blob in zip("at", state.get):
+                for k, (cnt, utime) in json.loads(blob).items():
+                    machines.seed(machine, k, cnt, utime)
+        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
+            ["ts", "event_key"], kind="mergesort"
+        )
+        ts_epoch = (pdf["ts"].astype("int64") // 1_000_000_000).to_numpy()
+        flags = [
+            machines.step(spec, int(t), ak, tk) if spec else (False, False)
+            for t, ak, tk in zip(
+                ts_epoch, pdf["track_after"].to_numpy(), pdf["track_threshold"].to_numpy()
+            )
+        ]
+        pdf["suppressed_after"] = [f[0] for f in flags]
+        pdf["suppressed_threshold"] = [f[1] for f in flags]
+        snap: dict = {"a": {}, "t": {}}
+        for machine, k, cnt, utime in machines.snapshot(max_secs):
+            snap[machine][k] = [cnt, utime]
+        state.update((json.dumps(snap["a"]), json.dumps(snap["t"])))
+        state.setTimeoutTimestamp((int(ts_epoch.max(initial=0)) + max_secs + 1) * 1000)
+        yield pdf[out_cols]
+
+    return replay
+
+
+def _make_funnel_walk(col_name: str):
+    """``mapInPandas`` body for one non-chain funnel flexbit: its staged
+    fset/funset events and this batch's fchecks replayed in order over
+    the core's flat tuple store (``BitStore``); emits (event_key,
+    ``col_name`` = bit active) per check."""
+
+    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bits = BitStore()
+        for pdf in batches:
+            ids, active_out = [], []
+            for kind, shape, ts_d, expire, esrc, edst, euser, hit_id in zip(
+                pdf["kind"], pdf["shape"], pdf["ts_d"], pdf["expire"],
+                pdf["e_src"], pdf["e_dst"], pdf["e_user"], pdf["hit_id"],
+            ):
+                active = bits.apply(kind, "", "", ts_d, expire, shape, (esrc, edst, euser))
+                if kind == "fcheck":
+                    ids.append(hit_id)
+                    active_out.append(active)
+            yield pd.DataFrame({"event_key": ids, col_name: active_out})
+
+    return walk
 
 
 class StreamingSaganEngine:
@@ -606,8 +512,6 @@ class StreamingSaganEngine:
         # component walk, gated sets persisting to the staged store —
         # chain_components() validates the supported surface
         if enable_xbits:
-            from sagan_spark.pipeline.correlate import chain_components
-
             chain_components(rules)
         self.engine = SaganSparkEngine(rules, config)
         self.rules = rules
@@ -619,8 +523,6 @@ class StreamingSaganEngine:
     # -- stateful correlation --------------------------------------------------
 
     def _corr_specs(self) -> dict[int, dict]:
-        from sagan_spark.pipeline.correlate import _corr_spec_map
-
         # stage A machines: condition rules' after/threshold runs AFTER
         # the xbit gate in stage B (engine.c:999-1024 vs 1373-1389)
         return _corr_spec_map(
@@ -658,8 +560,6 @@ class StreamingSaganEngine:
         # both-after+threshold rules group per shared track key when the
         # two machines key identically (see correlate.corr_group_key —
         # only a mixed-track both-rule needs the per-sid funnel)
-        from sagan_spark.pipeline.correlate import corr_group_key
-
         corr = corr.withWatermark("ts", self.watermark).withColumn(
             "corr_group", corr_group_key(specs)
         )
@@ -673,85 +573,8 @@ class StreamingSaganEngine:
             ]
         )
         out_cols = [f.name for f in out_struct.fields]
-        # TTL beyond which a silent key's counters equal fresh state
-        max_secs = max(
-            max(v["after"][1] if v["after"] else 0, v["threshold"][2] if v["threshold"] else 0)
-            for v in specs.values()
-        )
-        specs_local = specs  # close over plain dict (picklable)
-
-        def replay(
-            key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-        ) -> Iterator[pd.DataFrame]:
-            if state.hasTimedOut:
-                state.remove()
-                return
-            sid = int(key[0])
-            spec = specs_local.get(sid)
-            a_state: dict = {}
-            t_state: dict = {}
-            if state.exists:
-                a_json, t_json = state.get
-                a_state = {k: v for k, v in json.loads(a_json).items()}
-                t_state = {k: v for k, v in json.loads(t_json).items()}
-
-            pdf = pd.concat(list(pdfs), ignore_index=True)
-            # canonical replay order inside the micro-batch
-            pdf = pdf.sort_values(["ts", "event_key"], kind="mergesort")
-            n = len(pdf)
-            ts_epoch = (pdf["ts"].astype("int64") // 1_000_000_000).to_numpy()
-            a_keys = pdf["track_after"].to_numpy()
-            t_keys = pdf["track_threshold"].to_numpy()
-            sup_after = [False] * n
-            sup_thresh = [False] * n
-            max_t = 0
-            for i in range(n):
-                t = int(ts_epoch[i])
-                max_t = max(max_t, t)
-                suppressed = False
-                if spec and spec["after"] is not None:
-                    a_count, a_secs = spec["after"]
-                    st = a_state.get(a_keys[i])
-                    if st is None:
-                        a_state[a_keys[i]] = [1, t]
-                        suppressed = True
-                    else:
-                        st[0] += 1
-                        oldtime = t - st[1]
-                        flag = True
-                        if oldtime > a_secs:
-                            st[0], st[1] = 1, t
-                        if a_count < st[0]:
-                            st[1] = t
-                            flag = False
-                        suppressed = flag
-                    sup_after[i] = suppressed
-                if spec and spec["threshold"] is not None and not suppressed:
-                    ttype, t_count, t_secs = spec["threshold"]
-                    st = t_state.get(t_keys[i])
-                    if st is None:
-                        t_state[t_keys[i]] = [1, t]
-                    else:
-                        st[0] += 1
-                        oldtime = t - st[1]
-                        if ttype == "suppress":
-                            st[1] = t
-                        if oldtime > t_secs:
-                            st[0], st[1] = 1, t
-                        if t_count < st[0]:
-                            sup_thresh[i] = True
-
-            pdf = pdf.copy()
-            pdf["suppressed_after"] = sup_after
-            pdf["suppressed_threshold"] = sup_thresh
-            state.update((json.dumps(a_state), json.dumps(t_state)))
-            # silent-key eviction: past this instant the counters are
-            # indistinguishable from fresh state (gap reset)
-            state.setTimeoutTimestamp((max_t + max_secs + 1) * 1000)
-            yield pdf[out_cols]
-
         replayed = corr.groupBy("sid", "corr_group").applyInPandasWithState(
-            replay,
+            _make_group_replay(specs, corr_window_secs(specs), out_cols),
             outputStructType=out_struct,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
@@ -784,39 +607,6 @@ class StreamingSaganEngine:
         than (min live check ts - max expire) physically prune."""
         return max(3600, self._max_expire())
 
-    def _cond_shapes_by_bit(self) -> dict[str, set]:
-        from sagan_spark.pipeline.correlate import flex_shape
-
-        out: dict[str, set] = {}
-        for r in self.rules:
-            if r.sid not in self.cond_sids:
-                continue
-            for x in r.xbits:
-                s = flex_shape(x.track)
-                if x.action in ("isset", "isnotset") and s is not None:
-                    out.setdefault(x.name, set()).add(s)
-        return out
-
-    def _funnel_bits(self) -> set[str]:
-        """Flexbit names carrying an UNSET — the reference clears
-        matching tuples across ALL shapes (flexbit-mmap.c:973-1100) —
-        plus every flexbit a CHAIN rule touches (its verdict-gated sets
-        and the checks that observe them replay in one component walk).
-        These bits stage full-tuple events and stage B replays the
-        flat-store walk (same funnel model as batch
-        correlate.apply_xbits)."""
-        from sagan_spark.pipeline.correlate import chain_components, flex_shape
-
-        chain_rules, _ = chain_components(self.rules)
-        chain_sids = {r.sid for r in chain_rules}
-        return {
-            x.name
-            for r in self.rules
-            for x in r.xbits
-            if (x.track == "flex_auto" or flex_shape(x.track) is not None)
-            and (x.action == "unset" or r.sid in chain_sids)
-        }
-
     def start_sink_query(
         self,
         frame: DataFrame,
@@ -832,12 +622,6 @@ class StreamingSaganEngine:
         OVERWRITE, so a batch replayed after a mid-write failure
         rewrites its own partition instead of appending duplicates
         (foreachBatch alone is only at-least-once)."""
-        from sagan_spark.pipeline.correlate import (
-            flex_set_key,
-            flex_shape,
-            ts_seconds_d,
-            xbit_key_expr,
-        )
         from sagan_spark.pipeline.route import (
             SINK_BUILDERS,
             apply_sink_suppression,
@@ -849,13 +633,12 @@ class StreamingSaganEngine:
         rules = self.rules
         sink_names = sinks or list(SINK_BUILDERS)
         suppress = sink_suppressions(rules)
-        shapes_by_bit = self._cond_shapes_by_bit()
         bucket_secs = self._bucket_secs()
         # setter rules' surviving alerts also stage their set/unset events
         # for the chained xbit query (engine.c:1415-1427: sets happen only
-        # after after/threshold survival).  Flexbit sets stage one keyed
-        # copy per condition-probed shape (batch walk's variant model).
-        funnel_bits = self._funnel_bits()
+        # after after/threshold survival), in the batch walk's storage
+        # forms (correlate.xbit_layout)
+        shapes_by_bit, funnel_bits = xbit_layout(rules)
         # (sid, xbit, pos, bit_name, key_expr, funnel?)
         setters = []
         for r in rules:
@@ -864,18 +647,11 @@ class StreamingSaganEngine:
             for x in r.xbits:
                 if x.action not in ("set", "unset"):
                     continue
-                is_flex = x.track == "flex_auto" or flex_shape(x.track) is not None
-                if is_flex and x.name in funnel_bits:
+                if is_flexbit(x.track) and x.name in funnel_bits:
                     # funnel: one full-tuple event, no per-shape copies
                     setters.append((r.sid, x, r.position, x.name, F.lit(""), True))
                     continue
-                if is_flex:
-                    own = flex_shape(x.track)
-                    shapes = [own] if own else sorted(shapes_by_bit.get(x.name, ()))
-                    variants = [(f"{x.name}#{s}", flex_set_key(s)) for s in shapes]
-                else:
-                    variants = [(x.name, xbit_key_expr(x.track))]
-                for bit_name, key in variants:
+                for bit_name, key in setter_variants(x, shapes_by_bit):
                     setters.append((r.sid, x, r.position, bit_name, key, False))
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -974,17 +750,6 @@ class StreamingSaganEngine:
         verdict is the LATEST staged set/unset before it in replay
         order: live set => bit set (mirrors the batch walk's
         last-write-wins state)."""
-        from sagan_spark.pipeline.correlate import (
-            _corr_spec_map,
-            _flex_tuple_match,
-            chain_components,
-            corr_group_key,
-            flex_check_key,
-            flex_shape,
-            ts_seconds_d,
-            ts_seconds_l,
-            xbit_key_expr,
-        )
         from sagan_spark.pipeline.route import (
             SINK_BUILDERS,
             apply_sink_suppression,
@@ -999,7 +764,7 @@ class StreamingSaganEngine:
         suppress = sink_suppressions(rules)
         bucket_secs = self._bucket_secs()
         max_expire = self._max_expire()
-        funnel_bits = self._funnel_bits()
+        _, funnel_bits = xbit_layout(rules)
         # chained xbits (a condition AND a set/unset on one rule): their
         # member bits walk per component inside the micro-batch, gated
         # sets that fired persist to the staged store for later batches
@@ -1016,16 +781,7 @@ class StreamingSaganEngine:
         # gating both set and alert — engine.c:1370-1427), state seeded
         # across micro-batches from a snapshot store
         chain_corr_specs = _corr_spec_map(chain_rules_b)
-        max_corr_secs = max(
-            (
-                max(
-                    v["after"][1] if v["after"] else 0,
-                    v["threshold"][2] if v["threshold"] else 0,
-                )
-                for v in chain_corr_specs.values()
-            ),
-            default=0,
-        )
+        max_corr_secs = corr_window_secs(chain_corr_specs)
         # route a rule's machine seeds to its component's walk partition
         chain_route_bit = {
             r.sid: r.xbits[0].name
@@ -1107,41 +863,10 @@ class StreamingSaganEngine:
                     )
                     events = staged.unionByName(checks).repartition(1)
 
-                    # _col bound at definition: the walk executes lazily
-                    # at write time, after col_name has moved on
-                    def funnel_walk(batches, _col=col_name):
-                        store: dict = {}
-                        for pdf in batches:
-                            ids, active_out = [], []
-                            it = zip(
-                                pdf["kind"], pdf["shape"], pdf["ts_d"],
-                                pdf["expire"], pdf["e_src"], pdf["e_dst"],
-                                pdf["e_user"], pdf["hit_id"],
-                            )
-                            for kind, shp, ts_d, expire, es, ed, eu, hid in it:
-                                if kind == "fset":
-                                    store[(es, ed, eu)] = (ts_d, expire)
-                                elif kind == "funset":
-                                    dead = [
-                                        t for t in store
-                                        if _flex_tuple_match(shp, t, es, ed, eu)
-                                    ]
-                                    for t in dead:
-                                        del store[t]
-                                else:
-                                    active = any(
-                                        (exp == 0 or (ts_d - st) < exp)
-                                        and _flex_tuple_match(shp, t, es, ed, eu)
-                                        for t, (st, exp) in store.items()
-                                    )
-                                    ids.append(hid)
-                                    active_out.append(bool(active))
-                            yield pd.DataFrame({"event_key": ids, _col: active_out})
-
                     verdicts = (
                         events.sortWithinPartitions("ts_d", "event_key", "seq")
                         .mapInPandas(
-                            funnel_walk,
+                            _make_funnel_walk(col_name),
                             schema=f"event_key string, {col_name} boolean",
                         )
                     )
@@ -1224,79 +949,46 @@ class StreamingSaganEngine:
                         F.coalesce(F.col("username"), F.lit("")).alias("e_user"),
                     ]
 
-                parts = []
-                for i, sid, x, pos, col_name in member_entries:
-                    s = flex_shape(x.track)
-                    parts.append(
-                        batch_df.filter(F.col("sid") == sid).select(
-                            F.lit("fcheck" if s is not None else "check").alias(
-                                "kind"
-                            ),
-                            F.lit(x.name).alias("bit_name"),
-                            (
-                                F.lit("") if s is not None else xbit_key_expr(x.track)
-                            ).alias("bit_key"),
-                            ts_seconds_d(F.col("ts")).alias("ts_d"),
-                            F.col("event_key"),
-                            F.lit(pos * 2).cast("long").alias("seq"),
-                            F.lit(0).cast("long").alias("expire"),
-                            F.col("sid"),
-                            F.lit(i).cast("int").alias("entry"),
-                            F.lit(x.action == "isset").alias("want_set"),
-                            F.concat_ws(
-                                "#", F.col("event_key"), F.col("sid").cast("string")
-                            ).alias("ver_id"),
-                            *(
-                                _event_tuple(s)
-                                if s is not None
-                                else _blank_tuple
-                            ),
-                            _null_str.alias("a_key"),
-                            _null_str.alias("t_key"),
-                        )
+                def _hit_events(sid, x, pos, entry, a_key, t_key):
+                    check = x.action in ("isset", "isnotset")
+                    flex = is_flexbit(x.track)
+                    if check:
+                        kind = "fcheck" if flex else "check"
+                    else:
+                        kind = ("cf" if flex else "c") + x.action
+                    return batch_df.filter(F.col("sid") == sid).select(
+                        F.lit(kind).alias("kind"),
+                        F.lit(x.name).alias("bit_name"),
+                        (F.lit("") if flex else xbit_key_expr(x.track)).alias("bit_key"),
+                        ts_seconds_d(F.col("ts")).alias("ts_d"),
+                        F.col("event_key"),
+                        F.lit(pos * 2 + (0 if check else 1)).cast("long").alias("seq"),
+                        F.lit(0 if check else x.expire).cast("long").alias("expire"),
+                        F.col("sid"),
+                        F.lit(entry).cast("int").alias("entry"),
+                        F.lit(x.action == "isset").alias("want_set"),
+                        F.concat_ws(
+                            "#", F.col("event_key"), F.col("sid").cast("string")
+                        ).alias("ver_id"),
+                        *(_event_tuple(flex_shape(x.track) or "") if flex else _blank_tuple),
+                        a_key.alias("a_key"),
+                        t_key.alias("t_key"),
                     )
-                for sid, x, pos in chain_set_specs:
-                    is_flex = (
-                        x.track == "flex_auto" or flex_shape(x.track) is not None
+
+                parts = [
+                    _hit_events(sid, x, pos, i, _null_str, _null_str)
+                    for i, sid, x, pos, _ in member_entries
+                ] + [
+                    _hit_events(
+                        sid, x, pos, -1,
+                        *(
+                            (F.col("track_after"), F.col("track_threshold"))
+                            if sid in chain_corr_specs
+                            else (_null_str, _null_str)
+                        ),
                     )
-                    parts.append(
-                        batch_df.filter(F.col("sid") == sid).select(
-                            F.lit(
-                                ("cf" if is_flex else "c") + x.action
-                            ).alias("kind"),
-                            F.lit(x.name).alias("bit_name"),
-                            (
-                                F.lit("")
-                                if is_flex
-                                else xbit_key_expr(x.track)
-                            ).alias("bit_key"),
-                            ts_seconds_d(F.col("ts")).alias("ts_d"),
-                            F.col("event_key"),
-                            F.lit(pos * 2 + 1).cast("long").alias("seq"),
-                            F.lit(x.expire).cast("long").alias("expire"),
-                            F.col("sid"),
-                            F.lit(-1).cast("int").alias("entry"),
-                            F.lit(False).alias("want_set"),
-                            F.concat_ws(
-                                "#", F.col("event_key"), F.col("sid").cast("string")
-                            ).alias("ver_id"),
-                            *(
-                                _event_tuple(flex_shape(x.track) or "")
-                                if is_flex
-                                else _blank_tuple
-                            ),
-                            (
-                                F.col("track_after")
-                                if sid in chain_corr_specs
-                                else _null_str
-                            ).alias("a_key"),
-                            (
-                                F.col("track_threshold")
-                                if sid in chain_corr_specs
-                                else _null_str
-                            ).alias("t_key"),
-                        )
-                    )
+                    for sid, x, pos in chain_set_specs
+                ]
                 ev = parts[0]
                 for p in parts[1:]:
                     ev = ev.unionByName(p)
@@ -1514,17 +1206,10 @@ class StreamingSaganEngine:
                             "utime",
                         )
                     )
-                max_secs_b = max(
-                    max(
-                        v["after"][1] if v["after"] else 0,
-                        v["threshold"][2] if v["threshold"] else 0,
-                    )
-                    for v in corr_specs_b.values()
-                )
                 replayed = (
                     narrow.groupBy("sid", "corr_group")
                     .applyInPandas(
-                        _make_seeded_replay(corr_specs_b, max_secs_b),
+                        _make_seeded_replay(corr_specs_b, corr_window_secs(corr_specs_b)),
                         schema=_CORR_B_OUT_SCHEMA,
                     )
                     .persist()

@@ -43,6 +43,18 @@ from sagan_spark.ops.rollup import (
     fine_rollup,
     merge_fine,
 )
+from sagan_spark.streaming.engine import _read_store_or_none
+
+
+def _read_ledger(spark: SparkSession, ledger_dir: str, empty_schema: str) -> DataFrame:
+    """Every batch partition of a ledger, or an empty frame of the
+    partial's schema when no micro-batch has written yet (so a serving
+    read before the first batch returns an empty result, not an
+    error)."""
+    ledger = _read_store_or_none(spark, ledger_dir)
+    if ledger is None:
+        return spark.createDataFrame([], empty_schema)
+    return ledger.drop("batch_id")
 
 
 def _write_ledger_partition(partial: DataFrame, batch_id: int,
@@ -84,9 +96,11 @@ def rollup_from_ledger(spark: SparkSession, ledger_dir: str,
     batch partitions (exact) and cascade — bit-identical to
     time_rollup over the union of all ingested events."""
     res = check_resolutions(resolutions)
-    fine = merge_fine(
-        spark.read.parquet(ledger_dir).drop("batch_id")
-    )
+    fine = merge_fine(_read_ledger(
+        spark, ledger_dir,
+        "key string, _sg_fb long, n_events long, sum_milli long,"
+        " min_milli long, max_milli long",
+    ))
     return cascade(fine, res)
 
 
@@ -142,7 +156,9 @@ def actives_from_ledger(spark: SparkSession, ledger_dir: str,
     the union of all ingested events."""
     if window_days < 1:
         raise ValueError(f"window_days must be >= 1, got {window_days}")
-    dk = spark.read.parquet(ledger_dir).select("_sg_day", "_sg_k").distinct()
+    dk = _read_ledger(spark, ledger_dir, "_sg_day long, _sg_k long").select(
+        "_sg_day", "_sg_k"
+    ).distinct()
     return actives_from_daykeys(dk, window_days)
 
 
@@ -198,7 +214,10 @@ def quantiles_from_ledger(spark: SparkSession, ledger_dir: str,
     from sagan_spark.ops.quantiles import merge_value_hist, quantiles_from_hist
 
     hist = merge_value_hist(
-        spark.read.parquet(ledger_dir).drop("batch_id"), key_col, value_col
+        _read_ledger(
+            spark, ledger_dir, f"{key_col} string, {value_col} double, _sg_c long"
+        ),
+        key_col, value_col,
     )
     return quantiles_from_hist(hist, quantiles_ppm, key_col, value_col)
 

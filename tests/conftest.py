@@ -4,6 +4,12 @@ import sys
 from pathlib import Path
 
 import pytest
+from hypothesis import settings
+
+# fixed examples on every run: a failure reproduces, and the suite's
+# runtime does not drift with the draw
+settings.register_profile("repo", derandomize=True, deadline=None)
+settings.load_profile("repo")
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))

@@ -95,3 +95,21 @@ def test_parse_flags():
     assert r.json_meta_contents[0].key == ".k"
     assert r.json_meta_contents[0].nocase
     assert r.json_meta_contents[0].literals == ["v a", "v b"]
+
+
+def test_json_flatten_udf_body_raises_no_future_warning():
+    """The '{'-detection gate runs on every Arrow batch; a pandas
+    FutureWarning there (object-dtype fillna downcasting) would fire per
+    batch and silently change behaviour in a later pandas."""
+    import warnings
+
+    import pandas as pd
+
+    from sagan_spark.functions.udfs import make_json_flatten_udf
+
+    texts = pd.Series(['{"a": {"b": 1}}', "plain", None], dtype=object)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = make_json_flatten_udf(barrier=False).func(texts)
+    assert out[0][".a.b"] == "1"
+    assert list(out[1:]) == [{}, {}]

@@ -129,3 +129,22 @@ def test_quantiles_ledger_matches_batch(spark, tmp_path):
     assert _sorted_rows(got) == _sorted_rows(want)
     merge_quantiles_batch(half2, 1, ledger)  # replay: idempotent
     assert _sorted_rows(quantiles_from_ledger(spark, ledger)) == _sorted_rows(want)
+
+
+def test_ledgers_read_before_first_batch_are_empty(spark, tmp_path):
+    """A serving read before the first micro-batch has written returns
+    an empty frame with the batch op's schema instead of raising."""
+    from sagan_spark.ops.quantiles import quantile_rollup
+    from sagan_spark.streaming.rollup import quantiles_from_ledger
+
+    ev = _events(spark, _rows(10))
+    missing = str(tmp_path / "no_ledger_yet")
+    for got, want in [
+        (rollup_from_ledger(spark, missing, (60, 3600)), time_rollup(ev, (60, 3600))),
+        (actives_from_ledger(spark, missing, 7), active_users(ev, 7)),
+        (quantiles_from_ledger(spark, missing), quantile_rollup(ev)),
+    ]:
+        assert got.collect() == []
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ]
