@@ -84,10 +84,6 @@ def _v4_int(tok: str) -> int | None:
     return v
 
 
-def _valid_v4(tok: str) -> bool:
-    return _v4_int(tok) is not None
-
-
 def _valid_v6(tok: str) -> bool:
     try:
         ipaddress.IPv6Address(tok)

@@ -377,21 +377,3 @@ def make_json_flatten_udf(barrier: bool = True):
 
 json_flatten_udf = make_json_flatten_udf(barrier=True)
 json_flatten_udf_stream = make_json_flatten_udf(barrier=False)
-
-
-def make_python_regex_udf(pattern: str, flags_str: str):
-    """Fallback matcher for PCRE patterns Java regex can't express:
-    batch-compiled Python re over Arrow batches
-    (engine analog of reference src/pcre-s.c:39-68)."""
-    import re as _re
-
-    fl = 0
-    for ch in flags_str:
-        fl |= {"i": _re.I, "s": _re.S, "m": _re.M, "x": _re.X}.get(ch, 0)
-    compiled = _re.compile(pattern, fl)
-
-    @F.pandas_udf(T.BooleanType())
-    def regex_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda s: bool(compiled.search(s)) if s is not None else False)
-
-    return regex_udf

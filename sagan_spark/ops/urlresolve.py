@@ -33,8 +33,11 @@ from Common-Crawl-style pages (BASELINE.json input_hint) where
 
 Preconditions: ``base`` must be an absolute hierarchical URL
 (``scheme://authority…``, the pages-table ``url`` contract).  A NULL
-or authority-less base yields the href unchanged-after-defrag (the
-href may itself be absolute); callers filter non-http(s) results.
+base yields NULL.  Against an authority-less base an absolute href
+still passes through defragged, but any other href resolves to a
+``://``-prefixed, non-http(s) string (``mailto:me`` + ``x`` ->
+``mailto:///x``), not to the href unchanged; callers keep only
+``^https?://`` results, which drops it.
 """
 
 from __future__ import annotations

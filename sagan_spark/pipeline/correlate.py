@@ -37,12 +37,13 @@ Hot keys cost one partition's sort, not a driver loop.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sagan_spark.pipeline.machines import CorrMachines, XbitWalk
+from sagan_spark.pipeline.machines import GATED, CorrMachines, XbitWalk
 from sagan_spark.rules.ir import RuleIR
 
 FLAG_FIELDS = ["suppressed_after", "suppressed_threshold"]
@@ -366,52 +367,276 @@ def xbit_layout(rules: list[RuleIR]) -> tuple[dict[str, set], set[str]]:
     return shapes_by_bit, funnel_bits
 
 
+#: The one walk event layout.  Every bit operation is one row: batch hits,
+#: stage A's staged set store and stage B's fired chain sets all hold it.
+#: ``hit_id`` keys checks and verdict-gated chain ops; (csid, a_key,
+#: t_key) name a chain rule's after/threshold machines on its gated ops.
+#: A ``cseed`` row restores one machine: csid the rule, shape the machine
+#: ("a"/"t"), bit_key its track key, seq the count, expire the anchor.
 _XBIT_WALK_COLS = (
-    "kind", "bit_name", "bit_key", "ts_d", "expire", "shape",
-    "e_src", "e_dst", "e_user", "hit_id", "want_set",
+    "kind", "bit_name", "bit_key", "ts_d", "event_key", "seq", "expire",
+    "shape", "e_src", "e_dst", "e_user", "hit_id", "want_set",
+    "csid", "a_key", "t_key",
 )
+_XBIT_OUT_COLS = (*_XBIT_WALK_COLS, "ok", "suppressed_after", "suppressed_threshold")
+_XBIT_OUT_SCHEMA = (
+    "kind string, bit_name string, bit_key string, ts_d double,"
+    " event_key string, seq long, expire long, shape string, e_src string,"
+    " e_dst string, e_user string, hit_id string, want_set boolean,"
+    " csid long, a_key string, t_key string,"
+    " ok boolean, suppressed_after boolean, suppressed_threshold boolean"
+)
+_XBIT_OUT_DTYPES = {
+    "ts_d": "float64", "seq": "Int64", "expire": "Int64", "csid": "Int64",
+    "want_set": "boolean", "ok": "boolean",
+    "suppressed_after": "boolean", "suppressed_threshold": "boolean",
+}
+_FLEX_KINDS = {"fset", "funset", "fcheck", "cfset", "cfunset"}
+
+
+def _out_row(**cols) -> tuple:
+    return tuple(cols.get(c) for c in _XBIT_OUT_COLS)
+
+
+def _walk_frame(rows: list[tuple]) -> pd.DataFrame:
+    return pd.DataFrame(rows, columns=_XBIT_OUT_COLS).astype(_XBIT_OUT_DTYPES)
 
 
 def _make_xbit_walk(chain_corr_specs: dict[int, dict]):
-    """``mapInPandas`` body: one ordered pass of set/unset/check events
-    through the core's :class:`~sagan_spark.pipeline.machines.XbitWalk`,
-    state carried across Arrow batches.  Emits (hit_id, ok) per check
-    and, for chain rules carrying after/threshold, one (hit_id,
-    suppressed_after, suppressed_threshold) flag row per hit."""
-    has_chain_corr = bool(chain_corr_specs)
+    """``mapInPandas`` body: one ordered pass of walk events through the
+    core's :class:`~sagan_spark.pipeline.machines.XbitWalk`, state
+    carried across Arrow batches.  ``cseed`` rows seed the chain
+    machines.  Output rows by ``kind``:
+
+    - ``verdict``: one check's verdict (``ok``) for its ``hit_id``;
+    - ``cflags``: a chain hit's after/threshold flags;
+    - ``set``/``unset``/``fset``/``funset``: a gated chain op that fired,
+      as the ungated walk event a later micro-batch replays;
+    - ``cstate``: the chain machines' surviving snapshot at the end of
+      the partition: ``cseed`` rows but for the kind, sorted before
+      every event.
+
+    Batch reads the first two kinds; stage B persists the others."""
+    horizon = corr_window_secs(chain_corr_specs)
 
     def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         w = XbitWalk(chain_corr_specs)
         for pdf in batches:
             out: list[tuple] = []
-            corr = (
-                [pdf[c].to_numpy() for c in ("csid", "a_key", "t_key")]
-                if has_chain_corr
-                else [[None] * len(pdf)] * 3
-            )
-            cols = [pdf[c].to_numpy() for c in _XBIT_WALK_COLS]
             for (
-                kind, name, key, ts_d, expire, shape, esrc, edst, euser,
+                kind, name, key, ts_d, ek, seq, expire, shape, esrc, edst, euser,
                 hit_id, want_set, sid, a_key, t_key,
-            ) in zip(*cols, *corr):
-                active, flags = w.step(
+            ) in zip(*(pdf[c].to_numpy() for c in _XBIT_WALK_COLS)):
+                if kind == "cseed":
+                    w.machines.seed(shape, (int(sid), key), seq, expire)
+                    continue
+                result, flags = w.step(
                     kind, name, key, ts_d, expire, shape, (esrc, edst, euser),
                     hit_id, want_set, sid, a_key, t_key,
                 )
                 if flags is not None:
-                    out.append((hit_id, None, flags[0], flags[1]))
+                    out.append(_out_row(
+                        kind="cflags", hit_id=hit_id,
+                        suppressed_after=flags[0], suppressed_threshold=flags[1],
+                    ))
                 if kind in ("check", "fcheck"):
-                    out.append((hit_id, active == bool(want_set), None, None))
-            frame = {
-                "hit_id": [r[0] for r in out],
-                "ok": pd.array([r[1] for r in out], dtype="boolean"),
-            }
-            if has_chain_corr:
-                frame["suppressed_after"] = pd.array([r[2] for r in out], dtype="boolean")
-                frame["suppressed_threshold"] = pd.array([r[3] for r in out], dtype="boolean")
-            yield pd.DataFrame(frame)
+                    out.append(_out_row(
+                        kind="verdict", hit_id=hit_id, ok=result == bool(want_set)
+                    ))
+                elif result:
+                    out.append(_out_row(
+                        kind=GATED[kind], bit_name=name, bit_key=key, ts_d=ts_d,
+                        event_key=ek, seq=seq, expire=expire, shape=shape,
+                        e_src=esrc, e_dst=edst, e_user=euser,
+                    ))
+            yield _walk_frame(out)
+        yield _walk_frame([
+            _out_row(kind="cstate", ts_d=float("-inf"), event_key="", csid=sid,
+                     shape=machine, bit_key=mkey, seq=cnt, expire=utime)
+            for machine, (sid, mkey), cnt, utime in w.machines.snapshot(horizon)
+        ])
 
     return walk
+
+
+def _hit_id() -> F.Column:
+    return F.concat_ws("#", F.col("event_key"), F.col("sid").cast("string"))
+
+
+def _walk_event(df: DataFrame, r: RuleIR, x, bit_name: str, key: F.Column,
+                kind: str, shape: str = "") -> DataFrame:
+    """One walk event row per hit of ``r`` in ``df`` for its xbit ``x``."""
+    null_s = F.lit(None).cast("string")
+    check = x.action in ("isset", "isnotset")
+    if kind in _FLEX_KINDS:
+        tup = [F.col("src_ip"), F.col("dst_ip"), F.coalesce(F.col("username"), F.lit(""))]
+    else:
+        tup = [null_s] * 3
+    if kind in GATED and (r.after or r.threshold):
+        corr = [F.lit(r.sid), F.col("track_after"), F.col("track_threshold")]
+    else:
+        corr = [F.lit(None), null_s, null_s]
+    return df.filter(F.col("sid") == r.sid).select(
+        F.lit(kind).alias("kind"),
+        F.lit(bit_name).alias("bit_name"),
+        key.alias("bit_key"),
+        ts_seconds_d(F.col("ts")).alias("ts_d"),
+        F.col("event_key"),
+        # within one event: rule order, a rule's own check precedes its
+        # set (engine.c:999-1024 vs 1415-1427)
+        F.lit(r.position * 2 + (0 if check else 1)).cast("long").alias("seq"),
+        F.lit(0 if check else x.expire).cast("long").alias("expire"),
+        F.lit(shape).alias("shape"),
+        *[c.alias(n) for c, n in zip(tup, ("e_src", "e_dst", "e_user"))],
+        # checks and chain ops are keyed by hit id (verdict + gating)
+        (_hit_id() if check or kind in GATED else null_s).alias("hit_id"),
+        F.lit(x.action == "isset").alias("want_set"),
+        corr[0].cast("long").alias("csid"),
+        corr[1].alias("a_key"),
+        corr[2].alias("t_key"),
+    )
+
+
+def _union(frames: list[DataFrame]) -> DataFrame | None:
+    return reduce(DataFrame.unionByName, frames) if frames else None
+
+
+def setter_events(df: DataFrame, rules: list[RuleIR]) -> DataFrame | None:
+    """Walk events of the ungated bit writes: every set/unset of a rule
+    without conditions, taken from ``df`` (its surviving alerts — only
+    those set bits, engine.c:1415-1427), in ``xbit_layout``'s storage
+    forms.  None when no such rule exists."""
+    chain_rules, _ = chain_components(rules)
+    chain_sids = {r.sid for r in chain_rules}
+    shapes_by_bit, funnel_bits = xbit_layout(rules)
+    events = []
+    for r in rules:
+        if r.sid in chain_sids:
+            continue  # gated on the rule's own condition: hit_events
+        for x in r.xbits:
+            if x.action not in ("set", "unset"):
+                continue
+            if is_flexbit(x.track) and x.name in funnel_bits:
+                # funnel: one tuple-carrying event, colocated per bit name
+                events.append(
+                    _walk_event(df, r, x, x.name, F.lit(""), "f" + x.action,
+                                flex_shape(x.track) or "")
+                )
+                continue
+            for bit_name, key in setter_variants(x, shapes_by_bit):
+                events.append(_walk_event(df, r, x, bit_name, key, x.action))
+    return _union(events)
+
+
+def hit_events(hits: DataFrame, rules: list[RuleIR]) -> DataFrame | None:
+    """Walk events of condition-rule candidate hits: one check per
+    condition entry, and the chain rules' set/unset ops, which the walk
+    gates on the rule's own checks (seq 2p checks before 2p+1 sets).
+    None when no rule carries a condition."""
+    chain_rules, _ = chain_components(rules)
+    _, funnel_bits = xbit_layout(rules)
+    events = []
+    for r in chain_rules:
+        for x in r.xbits:
+            if x.action not in ("set", "unset"):
+                continue
+            if is_flexbit(x.track):
+                events.append(
+                    _walk_event(hits, r, x, x.name, F.lit(""), "cf" + x.action,
+                                flex_shape(x.track) or "")
+                )
+            else:
+                events.append(
+                    _walk_event(hits, r, x, x.name, xbit_key_expr(x.track), "c" + x.action)
+                )
+    for r in rules:
+        for x in r.xbits:
+            if x.action not in ("isset", "isnotset"):
+                continue
+            s = flex_shape(x.track)
+            if s is not None and x.name in funnel_bits:
+                events.append(_walk_event(hits, r, x, x.name, F.lit(""), "fcheck", s))
+            elif s is not None:
+                events.append(
+                    _walk_event(hits, r, x, f"{x.name}#{s}", flex_check_key(s), "check")
+                )
+            else:
+                events.append(
+                    _walk_event(hits, r, x, x.name, xbit_key_expr(x.track), "check")
+                )
+    return _union(events)
+
+
+def resolve_xbits(
+    hits: DataFrame, events: DataFrame, rules: list[RuleIR]
+) -> tuple[DataFrame, DataFrame]:
+    """The verdict step: replay ``events`` through the walk and join each
+    hit's verdict onto ``hits``.  Returns ``(hits + xbit_ok, walk
+    output)``; ``hits`` gains ``chain_sup_after``/``chain_sup_thr`` when a
+    chain rule carries after/threshold.
+
+    Events shuffle ONCE: every bit of a chain component colocates (the
+    gated set and the checks observing it replay in one ordered pass —
+    the reference serializes the whole store, one component per task is
+    still strictly more parallel), other bits spread per (bit, key);
+    funnel flexbits carry an empty key, so they colocate per bit name."""
+    cond_rules = [r for r in rules if any(x.action in ("isset", "isnotset") for x in r.xbits)]
+    chain_rules, chain_members = chain_components(rules)
+    chain_corr_specs = _corr_spec_map(chain_rules)
+    if chain_members:
+        comp_expr = F.lit(None).cast("string")
+        for bit, comp in chain_members.items():
+            comp_expr = F.when(F.col("bit_name") == bit, F.lit(f"\x00{comp}")).otherwise(
+                comp_expr
+            )
+        part_key = F.coalesce(
+            comp_expr, F.concat_ws("\x01", F.col("bit_name"), F.col("bit_key"))
+        )
+        events = events.withColumn("part_key", part_key)
+        shuffled = events.repartition(_shuffle_partitions(events), "part_key")
+    else:
+        shuffled = events.repartition(_shuffle_partitions(events), "bit_name", "bit_key")
+    walk_out = shuffled.sortWithinPartitions("ts_d", "event_key", "seq").mapInPandas(
+        _make_xbit_walk(chain_corr_specs), schema=_XBIT_OUT_SCHEMA
+    )
+    verdicts = walk_out.filter(F.col("kind").isin("verdict", "cflags"))
+    # all condition entries of a hit must hold (xbit-mmap.c:181-264);
+    # with one condition per rule (the common case) each hit_id is unique
+    # and the aggregate collapses to a rename
+    multi_cond = any(
+        sum(1 for x in r.xbits if x.action in ("isset", "isnotset")) > 1 for r in cond_rules
+    )
+    if chain_corr_specs:
+        # a chain-corr hit carries a flag row besides its check rows:
+        # min(ok) skips the flag row's null; max(flag) skips the check
+        # rows' nulls
+        agg = verdicts.groupBy("hit_id").agg(
+            F.min("ok").alias("xbit_ok"),
+            F.coalesce(F.max("suppressed_after"), F.lit(False)).alias("chain_sup_after"),
+            F.coalesce(F.max("suppressed_threshold"), F.lit(False)).alias("chain_sup_thr"),
+        )
+    elif multi_cond:
+        agg = verdicts.groupBy("hit_id").agg(F.min("ok").alias("xbit_ok"))
+    else:
+        agg = verdicts.select("hit_id", F.col("ok").alias("xbit_ok"))
+
+    cond_sids = [r.sid for r in cond_rules]
+    # verdict set scales with the alert volume — regular (shuffle) join,
+    # not broadcast; AQE picks broadcast when it is actually small
+    joined = hits.withColumn("hit_id", _hit_id()).join(agg, "hit_id", "left").withColumn(
+        "xbit_ok",
+        F.when(~F.col("sid").isin(cond_sids), F.lit(True)).otherwise(
+            F.coalesce(F.col("xbit_ok"), F.lit(False))
+        ),
+    )
+    if chain_corr_specs:
+        # chain-corr sids' alert gating comes from the walk's machines:
+        # one machine instance gates both the alert and the set
+        # (engine.c:1402-1427)
+        joined = joined.withColumn(
+            "chain_sup_after", F.coalesce(F.col("chain_sup_after"), F.lit(False))
+        ).withColumn("chain_sup_thr", F.coalesce(F.col("chain_sup_thr"), F.lit(False)))
+    return joined.drop("hit_id"), walk_out
 
 
 def apply_xbits(
@@ -425,224 +650,15 @@ def apply_xbits(
     ``survived``: alerts (post after/threshold) of setter rules — the only
     events allowed to set/unset bits (reference engine.c:1415-1427).
 
-    Returns hits with an ``xbit_ok`` boolean.  Exact event-time replay
-    (machines.XbitWalk): set/unset/check events sorted on
-    (ts, event_key, rule position, check-before-set).
-
-    Flexbit bits WITHOUT unsets distribute per (bit, condition-shape
-    copy, key); bits in ``xbit_layout``'s funnel set colocate per bit
-    name and replay the reference's flat-tuple-store scan exactly.  The
-    reference serializes *all* flexbit ops behind one file lock; a
-    per-bit funnel is still strictly more parallel.
+    Returns hits with an ``xbit_ok`` boolean (plus the chain flags, see
+    :func:`resolve_xbits`).  Exact event-time replay (machines.XbitWalk):
+    set/unset/check events sorted on (ts, event_key, rule position,
+    check-before-set).
     """
-    cond_rules = [r for r in rules if any(x.action in ("isset", "isnotset") for x in r.xbits)]
-    if not cond_rules:
+    events = hit_events(hits, rules)
+    if events is None:
         return hits.withColumn("xbit_ok", F.lit(True))
-
-    set_rules = [r for r in rules if any(x.action in ("set", "unset") for x in r.xbits)]
-
-    # CHAIN rules: check one bit AND set/unset another (stage-2
-    # escalation).  Their set events are GATED on their own check
-    # verdict, so every bit a chain rule touches — and transitively every
-    # bit sharing a chain rule with those — funnels into ONE walk
-    # partition per connected component (the reference serializes the
-    # whole store; one component per task is still strictly more
-    # parallel).
-    chain_rules, chain_members = chain_components(rules)
-    chain_sids = {r.sid for r in chain_rules}
-
-    # chain rules carrying after/threshold: their counters advance inside
-    # the walk, on condition-PASSING events only, and the same machine
-    # verdict gates the alert AND the set (engine.c:1370-1389,
-    # :1402-1427).  Their set events carry (csid, a_key, t_key); the
-    # three columns exist only when such a rule is present — the common
-    # no-chain-corr plan is unchanged.
-    chain_corr_specs = _corr_spec_map(chain_rules)
-    has_chain_corr = bool(chain_corr_specs)
-    shapes_by_bit, funnel_bits = xbit_layout(rules)
-    _null_s = F.lit(None).cast("string")
-    src = survived if survived is not None else hits
-
-    def event(df: DataFrame, r: RuleIR, x, bit_name: str, key, kind: str,
-              shape: str = "", flex: bool = False) -> DataFrame:
-        """One walk event row per hit of ``r`` for its xbit ``x``."""
-        check = x.action in ("isset", "isnotset")
-        # checks and chain sets are keyed by hit id (verdict + gating)
-        keyed = check or r.sid in chain_sids
-        if not has_chain_corr:
-            corr = []
-        elif not check and r.sid in chain_corr_specs:
-            corr = [
-                F.lit(r.sid).alias("csid"),
-                F.col("track_after").alias("a_key"),
-                F.col("track_threshold").alias("t_key"),
-            ]
-        else:
-            corr = [
-                F.lit(None).cast("long").alias("csid"),
-                _null_s.alias("a_key"),
-                _null_s.alias("t_key"),
-            ]
-        if flex:
-            tup = [
-                F.col("src_ip").alias("e_src"),
-                F.col("dst_ip").alias("e_dst"),
-                F.coalesce(F.col("username"), F.lit("")).alias("e_user"),
-            ]
-        else:
-            tup = [_null_s.alias("e_src"), _null_s.alias("e_dst"), _null_s.alias("e_user")]
-        return df.filter(F.col("sid") == r.sid).select(
-            F.lit(bit_name).alias("bit_name"),
-            key.alias("bit_key"),
-            ts_seconds_d(F.col("ts")).alias("ts_d"),
-            F.col("event_key"),
-            # within one event: rule order, a rule's own check precedes
-            # its set (engine.c:999-1024 vs 1415-1427)
-            F.lit(r.position * 2 + (0 if check else 1)).alias("seq"),
-            F.lit(kind).alias("kind"),
-            F.lit(0 if check else x.expire).alias("expire"),
-            (
-                F.concat_ws("#", F.col("event_key"), F.col("sid").cast("string"))
-                if keyed
-                else _null_s
-            ).alias("hit_id"),
-            F.lit(x.action == "isset").alias("want_set"),
-            F.lit(shape).alias("shape"),
-            *tup,
-            *corr,
-        )
-
-    spark_events = []
-    # chain rules: set/unset events come from their CANDIDATE hits (the
-    # walk gates them on the rule's own check verdict, recorded earlier
-    # in the same ordered pass — seq 2p checks before 2p+1 sets)
-    for r in chain_rules:
-        for x in r.xbits:
-            if x.action not in ("set", "unset"):
-                continue
-            if is_flexbit(x.track):
-                spark_events.append(
-                    event(hits, r, x, x.name, F.lit(""), "cf" + x.action,
-                          flex_shape(x.track) or "", flex=True)
-                )
-            else:
-                spark_events.append(
-                    event(hits, r, x, x.name, xbit_key_expr(x.track), "c" + x.action)
-                )
-
-    # setter rules: set/unset events from surviving alerts
-    for r in set_rules:
-        if r.sid in chain_sids:
-            continue  # staged above, gated on the rule's own condition
-        for x in r.xbits:
-            if x.action not in ("set", "unset"):
-                continue
-            if is_flexbit(x.track) and x.name in funnel_bits:
-                # funnel: one tuple-carrying event, colocated per bit name
-                spark_events.append(
-                    event(src, r, x, x.name, F.lit(""), "f" + x.action,
-                          flex_shape(x.track) or "", flex=True)
-                )
-                continue
-            for bit_name, key in setter_variants(x, shapes_by_bit):
-                spark_events.append(event(src, r, x, bit_name, key, x.action))
-
-    # condition entries of candidate hits
-    for r in cond_rules:
-        for x in r.xbits:
-            if x.action not in ("isset", "isnotset"):
-                continue
-            s = flex_shape(x.track)
-            if s is not None and x.name in funnel_bits:
-                spark_events.append(
-                    event(hits, r, x, x.name, F.lit(""), "fcheck", s, flex=True)
-                )
-            elif s is not None:
-                spark_events.append(
-                    event(hits, r, x, f"{x.name}#{s}", flex_check_key(s), "check")
-                )
-            else:
-                spark_events.append(
-                    event(hits, r, x, x.name, xbit_key_expr(x.track), "check")
-                )
-
-    if not spark_events:
-        return hits.withColumn("xbit_ok", F.lit(True))
-
-    events = spark_events[0]
-    for e in spark_events[1:]:
-        events = events.unionByName(e)
-
-    out_schema = "hit_id string, ok boolean"
-    if has_chain_corr:
-        out_schema += ", suppressed_after boolean, suppressed_threshold boolean"
-
-    if chain_members:
-        # all events of a chain component colocate (the gated set and
-        # the checks that observe it live in one ordered pass); other
-        # bits keep the per-(bit, key) spread
-        comp_expr = F.lit(None).cast("string")
-        for bit, comp in chain_members.items():
-            comp_expr = F.when(F.col("bit_name") == bit, F.lit(f"\x00{comp}")).otherwise(
-                comp_expr
-            )
-        part_key = F.coalesce(
-            comp_expr, F.concat_ws("\x01", F.col("bit_name"), F.col("bit_key"))
-        )
-        events = events.withColumn("part_key", part_key)
-        shuffled = events.repartition(_shuffle_partitions(events), "part_key")
-    else:
-        shuffled = events.repartition(
-            _shuffle_partitions(events), "bit_name", "bit_key"
-        )
-    verdicts = (
-        shuffled.sortWithinPartitions("ts_d", "event_key", "seq")
-        .mapInPandas(_make_xbit_walk(chain_corr_specs), schema=out_schema)
-    )
-    # all condition entries of a hit must hold (xbit-mmap.c:181-264);
-    # with one condition per rule (the common case) each hit_id is unique
-    # and the aggregate collapses to a rename
-    multi_cond = any(
-        sum(1 for x in r.xbits if x.action in ("isset", "isnotset")) > 1 for r in cond_rules
-    )
-    if has_chain_corr:
-        # a chain-corr hit carries a flag row besides its check rows:
-        # min(ok) skips the flag row's null; max(flag) skips the check
-        # rows' nulls
-        agg = verdicts.groupBy("hit_id").agg(
-            F.min("ok").alias("xbit_ok"),
-            F.coalesce(F.max("suppressed_after"), F.lit(False)).alias(
-                "chain_sup_after"
-            ),
-            F.coalesce(F.max("suppressed_threshold"), F.lit(False)).alias(
-                "chain_sup_thr"
-            ),
-        )
-    elif multi_cond:
-        agg = verdicts.groupBy("hit_id").agg(F.min("ok").alias("xbit_ok"))
-    else:
-        agg = verdicts.withColumnRenamed("ok", "xbit_ok")
-
-    hits_with_id = hits.withColumn(
-        "hit_id", F.concat_ws("#", F.col("event_key"), F.col("sid").cast("string"))
-    )
-    cond_sids = [r.sid for r in cond_rules]
-    # verdict set scales with the alert volume — regular (shuffle) join,
-    # not broadcast; AQE picks broadcast when it is actually small
-    joined = hits_with_id.join(agg, "hit_id", "left").withColumn(
-        "xbit_ok",
-        F.when(~F.col("sid").isin(cond_sids), F.lit(True)).otherwise(
-            F.coalesce(F.col("xbit_ok"), F.lit(False))
-        ),
-    )
-    if has_chain_corr:
-        # chain-corr sids' alert gating comes from the walk's machines;
-        # the engine reads these instead of re-running
-        # apply_after_threshold for them (one machine instance gates
-        # both the alert and the set, engine.c:1402-1427)
-        joined = joined.withColumn(
-            "chain_sup_after", F.coalesce(F.col("chain_sup_after"), F.lit(False))
-        ).withColumn(
-            "chain_sup_thr", F.coalesce(F.col("chain_sup_thr"), F.lit(False))
-        )
-    return joined.drop("hit_id")
+    sets = setter_events(survived if survived is not None else hits, rules)
+    if sets is not None:
+        events = events.unionByName(sets)
+    return resolve_xbits(hits, events, rules)[0]

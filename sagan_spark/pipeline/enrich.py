@@ -193,16 +193,6 @@ def proto_probe_col(col: Column, keyword_to_proto: dict[str, int]) -> Column:
     return expr
 
 
-def proto_map_col(message: Column, program: Column,
-                  keyword_to_proto: dict[str, int]) -> Column:
-    """J5: first protocol-map keyword found in message else program
-    (reference src/parsers/proto.c:51-107); F.when chain — codegen'd."""
-    expr = proto_probe_col(message, keyword_to_proto)
-    return F.when(expr != 0, expr).otherwise(
-        proto_probe_col(program, keyword_to_proto)
-    )
-
-
 # ---------------------------------------------------------------------------
 # broadcast-join strategy (large build side)
 # ---------------------------------------------------------------------------
@@ -217,13 +207,3 @@ def tag_by_range_join(events: DataFrame, hi: str, lo: str,
         & ((F.col(hi) < ranges.hi_hi) | ((F.col(hi) == ranges.hi_hi) & (F.col(lo) <= ranges.hi_lo)))
     )
     return events.join(F.broadcast(ranges), cond, how)
-
-
-def geoip_country_col(events: DataFrame, hi: str, lo: str,
-                      geo: DataFrame) -> DataFrame:
-    """J4/F12: attach src country via broadcast range join (mmdb analog);
-    geo: (lo_hi, lo_lo, hi_hi, hi_lo, label=country_code)."""
-    out = tag_by_range_join(events, hi, lo, geo, "left")
-    return out.withColumnRenamed("label", "country_code").drop(
-        "lo_hi", "lo_lo", "hi_hi", "hi_lo"
-    )

@@ -24,17 +24,17 @@ below only translate row formats and carry its state across
 micro-batches (GroupState JSON, snapshot stores, staged set stores).
 
 xbit/flexbit **conditions** run as a chained two-query pipeline
-(``run_pipeline_with_xbits``): stage A routes stateless+stateful rules
-and stages set/unset events into a time-bucketed store; stage B replays
-condition rules against it.  Plain keyed bits resolve by a last-write-
-wins range join; funnel flexbits (``correlate.xbit_layout``) and chained
-bits (one rule checks bit A and sets bit B) replay through the core's
-walk per bit / per component, fired chain sets persisting to the staged
-store.  after/threshold ON a condition rule also runs in stage B, on
-condition-PASSING rows only (engine.c:999-1024 vs 1373-1389), with state
-seeded from the previous micro-batch's snapshot (idempotent batch-id
-partitions; a retry reads the prior batch's snapshot).  No batch-only
-rule combinations remain.
+(``run_pipeline_with_xbits``).  Stage A routes stateless+stateful rules
+and stages its setters' set/unset walk events (``correlate.setter_events``)
+into a time-bucketed store.  Stage B resolves every condition rule through
+the batch walk (``correlate.resolve_xbits``): each micro-batch replays its
+checks and chain ops together with the staged events and the chain
+machines' seeds in one ordered pass, and stages the chain sets that fired
+for later micro-batches.  after/threshold ON a non-chain condition rule
+also runs in stage B, on condition-PASSING rows only (engine.c:999-1024 vs
+1373-1389), with state seeded from the previous micro-batch's snapshot
+(idempotent batch-id partitions; a retry reads the prior batch's
+snapshot).  No batch-only rule combinations remain.
 """
 
 from __future__ import annotations
@@ -49,21 +49,19 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from sagan_spark.pipeline.correlate import (
+    _XBIT_WALK_COLS,
     _corr_spec_map,
     chain_components,
     corr_group_key,
     corr_window_secs,
-    flex_check_key,
-    flex_shape,
-    is_flexbit,
-    setter_variants,
+    hit_events,
+    resolve_xbits,
+    setter_events,
     ts_seconds_d,
     ts_seconds_l,
-    xbit_key_expr,
-    xbit_layout,
 )
 from sagan_spark.pipeline.engine import EVENT_COLS, SaganSparkEngine
-from sagan_spark.pipeline.machines import GATED, BitStore, CorrMachines, XbitWalk
+from sagan_spark.pipeline.machines import GATED, CorrMachines
 from sagan_spark.rules.compiler import EngineConfig
 from sagan_spark.rules.ir import RuleIR
 
@@ -244,96 +242,23 @@ def _sweep_dead_buckets(
     return removed
 
 
-_CHAIN_WALK_COLS = [
-    "kind", "event_key", "sid", "entry", "ok",
-    "bit_name", "bit_key", "ts_d", "seq", "expire",
-    "shape", "e_src", "e_dst", "e_user",
-    "suppressed_after", "suppressed_threshold",
-]
-
-_CHAIN_WALK_SCHEMA = (
-    "kind string, event_key string, sid long, entry int,"
-    " ok boolean, bit_name string, bit_key string,"
-    " ts_d double, seq long, expire long,"
-    " shape string, e_src string, e_dst string,"
-    " e_user string, suppressed_after boolean,"
-    " suppressed_threshold boolean"
-)
-
-
-def _make_chain_walk(chain_corr_specs: dict[int, dict], max_corr_secs: int):
-    """Stage-B component walk for chained xbits: staged sets plus this
-    batch's checks and verdict-gated chain set/unsets, replayed in order
-    through the core's ``XbitWalk`` (pipeline/machines.py) — the walk
-    batch ``correlate.apply_xbits`` runs.  'f*' kinds carry (shape,
-    e_src, e_dst, e_user).  Output rows by ``kind``:
-
-    - 'v': one condition entry's raw bit state (`ok` = bit active; the
-      isnotset negation happens in the verdict expression);
-    - 'fired_set' / 'fired_unset' / 'fired_fset' / 'fired_funset': gated
-      sets that fired, for the staged store;
-    - 'cflags': a chain hit's after/threshold flags;
-    - 'cstate': the machines' surviving snapshot (machine in bit_name,
-      key in bit_key, count in seq, utime in expire), fed back next
-      micro-batch as 'cseed' rows that sort before every event.
-
-    ``chain_corr_specs``: after/threshold specs of CHAIN rules — their
-    counters run on condition-passing events only and gate both the set
-    and the alert (engine.c:1370-1427); ``max_corr_secs`` is the
-    snapshot's eviction horizon."""
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = XbitWalk(chain_corr_specs)
-        for pdf in batches:
-            out: list[tuple] = []
-            for (
-                kind, name, key, ts_d, ek, seq, expire, sid, entry, want_set,
-                ver_id, shape, esrc, edst, euser, a_key, t_key,
-            ) in zip(
-                pdf["kind"], pdf["bit_name"], pdf["bit_key"], pdf["ts_d"],
-                pdf["event_key"], pdf["seq"], pdf["expire"], pdf["sid"],
-                pdf["entry"], pdf["want_set"], pdf["ver_id"],
-                pdf["shape"], pdf["e_src"], pdf["e_dst"], pdf["e_user"],
-                pdf["a_key"], pdf["t_key"],
-            ):
-                if kind == "cseed":
-                    # shape carries the machine id, seq the count, expire
-                    # the utime
-                    w.machines.seed(shape, (int(sid), key), seq, expire)
-                    continue
-                result, flags = w.step(
-                    kind, name, key, ts_d, expire, shape, (esrc, edst, euser),
-                    ver_id, want_set, sid, a_key, t_key,
-                )
-                if flags is not None:
-                    out.append(
-                        ("cflags", ver_id.rsplit("#", 1)[0], int(sid), -1,
-                         None, "", "", ts_d, 0, 0, "", "", "", "",
-                         flags[0], flags[1])
-                    )
-                if kind in ("check", "fcheck"):
-                    out.append(
-                        ("v", ek, int(sid), int(entry), result, name, key,
-                         ts_d, seq, expire, "", "", "", "", None, None)
-                    )
-                elif result:
-                    # plain chain sets carry blank tuple columns
-                    out.append(
-                        ("fired_" + GATED[kind], ek, None, -1, False, name, key,
-                         ts_d, seq, expire, shape, esrc, edst, euser, None, None)
-                    )
-            yield pd.DataFrame(out, columns=_CHAIN_WALK_COLS)
-
-        if chain_corr_specs:
-            rows = [
-                ("cstate", "", int(sid), -1, None, machine, mkey, 0.0,
-                 int(cnt), int(utime), "", "", "", "", None, None)
-                for machine, (sid, mkey), cnt, utime in w.machines.snapshot(max_corr_secs)
-            ]
-            if rows:
-                yield pd.DataFrame(rows, columns=_CHAIN_WALK_COLS)
-
-    return walk
+def _stage_sets(
+    events: DataFrame, path: str, batch_id: int, bucket_secs: int, writer_id: str
+) -> None:
+    """Write ungated walk events to the staged set store, one partition
+    per time bucket of their set time.  A permanent op (expire 0) lands in
+    bucket -1, which the sweep never deletes — the reference keeps it
+    until the IPC store wraps too (src/ipc.c:78-200)."""
+    bucket = F.when(F.col("expire") == 0, F.lit(-1)).otherwise(
+        F.floor(F.col("ts_d") / F.lit(bucket_secs))
+    )
+    _idempotent_write(
+        events.withColumn("set_bucket", bucket.cast("long")),
+        path,
+        batch_id,
+        extra_partition="set_bucket",
+        writer_id=writer_id,
+    )
 
 
 _CORR_B_OUT_SCHEMA = (
@@ -376,9 +301,7 @@ def _read_prev_corr_state(spark: SparkSession, path: str, batch_id: int):
     mx = df.agg(F.max("_bnum")).first()[0]
     if mx is None:
         return None
-    return df.filter(F.col("_bnum") == mx).select(
-        "sid", "corr_group", "machine", "mkey", "cnt", "utime"
-    )
+    return df.filter(F.col("_bnum") == mx).drop("batch_id", "_bnum")
 
 
 def _make_seeded_replay(specs: dict[int, dict], max_secs: int):
@@ -462,29 +385,6 @@ def _make_group_replay(specs: dict[int, dict], max_secs: int, out_cols: list[str
     return replay
 
 
-def _make_funnel_walk(col_name: str):
-    """``mapInPandas`` body for one non-chain funnel flexbit: its staged
-    fset/funset events and this batch's fchecks replayed in order over
-    the core's flat tuple store (``BitStore``); emits (event_key,
-    ``col_name`` = bit active) per check."""
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bits = BitStore()
-        for pdf in batches:
-            ids, active_out = [], []
-            for kind, shape, ts_d, expire, esrc, edst, euser, hit_id in zip(
-                pdf["kind"], pdf["shape"], pdf["ts_d"], pdf["expire"],
-                pdf["e_src"], pdf["e_dst"], pdf["e_user"], pdf["hit_id"],
-            ):
-                active = bits.apply(kind, "", "", ts_d, expire, shape, (esrc, edst, euser))
-                if kind == "fcheck":
-                    ids.append(hit_id)
-                    active_out.append(active)
-            yield pd.DataFrame({"event_key": ids, col_name: active_out})
-
-    return walk
-
-
 class StreamingSaganEngine:
     """Streaming wrapper around the batch-compiled ruleset."""
 
@@ -501,18 +401,9 @@ class StreamingSaganEngine:
         if self.cond_sids and not enable_xbits:
             raise NotImplementedError(
                 f"sids {self.cond_sids}: xbit conditions need the chained "
-                "pipeline — use start_pipeline_with_xbits (or batch "
+                "pipeline — use run_pipeline_with_xbits (or batch "
                 "SaganSparkEngine.run)"
             )
-        # after/threshold ON a condition rule runs in stage B, seeded
-        # across micro-batches from a snapshotted state store (the
-        # reference order: condition gate first, then the counters —
-        # engine.c:999-1024 vs 1373-1389)
-        # chained xbits (condition + set on one rule) run in stage B's
-        # component walk, gated sets persisting to the staged store —
-        # chain_components() validates the supported surface
-        if enable_xbits:
-            chain_components(rules)
         self.engine = SaganSparkEngine(rules, config)
         self.rules = rules
         # fail on a malformed watermark HERE, not mid-stream at the
@@ -634,25 +525,6 @@ class StreamingSaganEngine:
         sink_names = sinks or list(SINK_BUILDERS)
         suppress = sink_suppressions(rules)
         bucket_secs = self._bucket_secs()
-        # setter rules' surviving alerts also stage their set/unset events
-        # for the chained xbit query (engine.c:1415-1427: sets happen only
-        # after after/threshold survival), in the batch walk's storage
-        # forms (correlate.xbit_layout)
-        shapes_by_bit, funnel_bits = xbit_layout(rules)
-        # (sid, xbit, pos, bit_name, key_expr, funnel?)
-        setters = []
-        for r in rules:
-            if r.sid in self.cond_sids:
-                continue
-            for x in r.xbits:
-                if x.action not in ("set", "unset"):
-                    continue
-                if is_flexbit(x.track) and x.name in funnel_bits:
-                    # funnel: one full-tuple event, no per-shape copies
-                    setters.append((r.sid, x, r.position, x.name, F.lit(""), True))
-                    continue
-                for bit_name, key in setter_variants(x, shapes_by_bit):
-                    setters.append((r.sid, x, r.position, bit_name, key, False))
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
             spark = batch_df.sparkSession
@@ -668,43 +540,12 @@ class StreamingSaganEngine:
                         batch_id,
                         writer_id="a",
                     )
-                all_sets = None
-                for sid, x, pos, bit_name, key, funnel in setters:
-                    set_ts = ts_seconds_d(F.col("ts"))
-                    bucket = (
-                        F.floor(set_ts / F.lit(bucket_secs)).cast("long")
-                        if x.expire
-                        else F.lit(-1).cast("long")  # permanent: never pruned
-                    )
-                    kind = ("f" + x.action) if funnel else x.action
-                    shape = (flex_shape(x.track) or "") if funnel else ""
-                    sets = assembled.filter(F.col("sid") == sid).select(
-                        F.lit(bit_name).alias("bit_name"),
-                        key.alias("bit_key"),
-                        set_ts.alias("set_ts"),
-                        F.col("event_key").alias("set_event_key"),
-                        F.lit(pos * 2 + 1).alias("set_seq"),
-                        F.lit(x.expire).alias("expire"),
-                        F.lit(kind).alias("kind"),
-                        F.lit(shape).alias("shape"),
-                        (F.col("src_ip") if funnel else F.lit("")).alias("e_src"),
-                        (F.col("dst_ip") if funnel else F.lit("")).alias("e_dst"),
-                        (
-                            F.coalesce(F.col("username"), F.lit(""))
-                            if funnel
-                            else F.lit("")
-                        ).alias("e_user"),
-                        bucket.alias("set_bucket"),
-                    )
-                    all_sets = sets if all_sets is None else all_sets.unionByName(sets)
-                if all_sets is not None:
-                    _idempotent_write(
-                        all_sets,
-                        f"{base_path}/xbit_sets",
-                        batch_id,
-                        extra_partition="set_bucket",
-                        writer_id="a",
-                    )
+                # setter rules' surviving alerts stage their set/unset
+                # walk events for the chained xbit query (engine.c:
+                # 1415-1427: sets happen only after after/threshold)
+                sets = setter_events(assembled, rules)
+                if sets is not None:
+                    _stage_sets(sets, f"{base_path}/xbit_sets", batch_id, bucket_secs, "a")
             finally:
                 assembled.unpersist()
 
@@ -728,14 +569,23 @@ class StreamingSaganEngine:
     ):
         """Stage B of the chained pipeline: route xbit-CONDITION rules.
 
-        Condition-candidate hits stream from the source; the staged set
-        events (written by stage A's sink query) are re-read per
-        micro-batch as the static side of a range join: a bit is set for
-        a check at (ts, event_key, seq) iff some staged set sits strictly
-        earlier in the batch replay order and inside its expire window —
-        exactly the batch walk's semantics for set-only bits
-        (correlate.apply_xbits; constant per-(rule,xbit) expire makes
-        any-set-in-window == latest-set-active).
+        Every micro-batch runs the batch walk (``correlate.resolve_xbits``)
+        over one event frame:
+
+        - this batch's checks and chain set/unsets
+          (``correlate.hit_events``);
+        - the staged set store: stage A's setter events and earlier
+          micro-batches' fired chain ops, all walk events, minus this
+          batch's own ``c_<batch_id>`` partition (a replayed batch
+          re-derives it);
+        - ``cseed`` rows restoring the chain rules' after/threshold
+          machines from the previous micro-batch's ``chain_corr_state``
+          snapshot.
+
+        The walk's fired chain ops and its ``cstate`` snapshot persist for
+        the next micro-batch.  after/threshold on a non-chain condition
+        rule then runs on condition-PASSING rows only (engine.c:999-1024
+        vs 1373-1389), seeded from ``corr_state_b``.
 
         Cross-query propagation is drain-ordered: with availableNow run
         stage A to completion first (sets staged), then stage B — exact
@@ -746,10 +596,7 @@ class StreamingSaganEngine:
         micro-batch reads only buckets still visible to its earliest
         check (partition pruning) and sweeps dead buckets afterwards, so
         the store stays bounded by (max expire window + bucket width) of
-        live data instead of growing with stream lifetime.  A check's
-        verdict is the LATEST staged set/unset before it in replay
-        order: live set => bit set (mirrors the batch walk's
-        last-write-wins state)."""
+        live data instead of growing with stream lifetime."""
         from sagan_spark.pipeline.route import (
             SINK_BUILDERS,
             apply_sink_suppression,
@@ -764,485 +611,166 @@ class StreamingSaganEngine:
         suppress = sink_suppressions(rules)
         bucket_secs = self._bucket_secs()
         max_expire = self._max_expire()
-        _, funnel_bits = xbit_layout(rules)
-        # chained xbits (a condition AND a set/unset on one rule): their
-        # member bits walk per component inside the micro-batch, gated
-        # sets that fired persist to the staged store for later batches
-        chain_rules_b, chain_bit_comp = chain_components(rules)
-        chain_set_specs = [
-            (r.sid, x, r.position)
-            for r in chain_rules_b
-            for x in r.xbits
-            if x.action in ("set", "unset")
-        ]
-        member_bits = set(chain_bit_comp)
-        # chain rules carrying after/threshold: counters run INSIDE the
-        # walk (condition-passing events only, one machine instance
-        # gating both set and alert — engine.c:1370-1427), state seeded
-        # across micro-batches from a snapshot store
-        chain_corr_specs = _corr_spec_map(chain_rules_b)
-        max_corr_secs = corr_window_secs(chain_corr_specs)
-        # route a rule's machine seeds to its component's walk partition
-        chain_route_bit = {
-            r.sid: r.xbits[0].name
-            for r in chain_rules_b
-            if r.sid in chain_corr_specs
-        }
+        sets_path = f"{base_path}/xbit_sets"
+        chain_state_path = f"{base_path}/chain_corr_state"
+        chain_rules, _ = chain_components(rules)
+        chain_corr_specs = _corr_spec_map(chain_rules)
+        # chain rules' machines ran inside the walk; the seeded replay
+        # below serves the other condition rules
+        corr_specs_b = _corr_spec_map(
+            [r for r in cond_rules if r.sid not in chain_corr_specs]
+        )
+        seed_bit = F.lit(None).cast("string")
+        for r in chain_rules:
+            seed_bit = F.when(F.col("csid") == r.sid, F.lit(r.xbits[0].name)).otherwise(
+                seed_bit
+            )
 
         hits = self.engine.match_hits(frame, passthrough=EVENT_COLS).filter(
             F.col("sid").isin(self.cond_sids)
         )
-        # one (condition, hit) row per xbit condition on the rule
-        cond_specs = [
-            (r.sid, x, r.position)
-            for r in cond_rules
-            for x in r.xbits
-            if x.action in ("isset", "isnotset")
-        ]
+
+        def seeded_corr(
+            spark: SparkSession, routed: DataFrame, batch_id: int, persisted: list
+        ) -> DataFrame:
+            """after/threshold ON non-chain condition rules: counters
+            advance only on condition-PASSING rows (engine.c:1373-1389),
+            replayed per (sid, track-key) with state seeded from the
+            previous micro-batch's snapshot (idempotent batch-id
+            partitions — a replayed batch N re-reads N-1's snapshot)."""
+            corr_sids_b = list(corr_specs_b)
+            # rows arrive with False placeholder flags (set before
+            # writeStream) — drop them so the replay's verdicts are the
+            # only columns with these names after the join
+            corr_rows = routed.filter(F.col("sid").isin(corr_sids_b)).drop(
+                "suppressed_after", "suppressed_threshold"
+            )
+            plain_rows = routed.filter(~F.col("sid").isin(corr_sids_b))
+            state_path = f"{base_path}/corr_state_b"
+            narrow = corr_rows.select(
+                F.lit("e").alias("kind"),
+                F.col("sid"),
+                corr_group_key(corr_specs_b).alias("corr_group"),
+                "event_key",
+                ts_seconds_l(F.col("ts")).alias("ts_epoch"),
+                F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+                "track_after",
+                "track_threshold",
+                F.lit("").alias("machine"),
+                F.lit("").alias("mkey"),
+                F.lit(0).cast("long").alias("cnt"),
+                F.lit(0).cast("long").alias("utime"),
+            )
+            prev = _read_prev_corr_state(spark, state_path, batch_id)
+            if prev is not None:
+                narrow = narrow.unionByName(
+                    prev.select(
+                        F.lit("s").alias("kind"),
+                        "sid",
+                        "corr_group",
+                        F.lit("").alias("event_key"),
+                        F.lit(0).cast("long").alias("ts_epoch"),
+                        F.lit(0).cast("long").alias("ts_us"),
+                        F.lit("").alias("track_after"),
+                        F.lit("").alias("track_threshold"),
+                        "machine",
+                        "mkey",
+                        "cnt",
+                        "utime",
+                    )
+                )
+            replayed = (
+                narrow.groupBy("sid", "corr_group")
+                .applyInPandas(
+                    _make_seeded_replay(corr_specs_b, corr_window_secs(corr_specs_b)),
+                    schema=_CORR_B_OUT_SCHEMA,
+                )
+                .persist()
+            )
+            persisted.append(replayed)
+            _idempotent_write(
+                replayed.filter(F.col("kind") == "s").select(
+                    "sid", "corr_group", "machine", "mkey", "cnt", "utime"
+                ),
+                state_path,
+                batch_id,
+                writer_id="s",
+            )
+            _prune_old_corr_snapshots(spark, state_path, batch_id)
+            flags = replayed.filter(F.col("kind") == "e").select(
+                "sid",
+                "event_key",
+                "suppressed_after",
+                "suppressed_threshold",
+            )
+            survivors = (
+                corr_rows.join(flags, ["sid", "event_key"])
+                .filter(~F.col("suppressed_after") & ~F.col("suppressed_threshold"))
+                .select(*plain_rows.columns)
+            )
+            return plain_rows.unionByName(survivors)
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
             spark = batch_df.sparkSession
-            batch_df = batch_df.persist()
-            min_chk = batch_df.agg(F.min(ts_seconds_d(F.col("ts")))).first()[0]
-            sets_path = f"{base_path}/xbit_sets"
-            sets = _read_store_or_none(spark, sets_path)  # None: nothing staged yet
-            if sets is not None and min_chk is not None:
-                # partition-prune buckets no check in this batch can see
-                live_from = int((min_chk - max_expire) // bucket_secs)
-                sets = sets.filter(
-                    (F.col("set_bucket") < 0) | (F.col("set_bucket") >= live_from)
-                )
-            flag_cols = []
-            member_entries = []
-            for i, (sid, x, pos) in enumerate(cond_specs):
-                col_name = f"_set{i}"
-                if x.name in member_bits:
-                    # chain-component bit (plain OR flexbit): the
-                    # per-condition join cannot see same-batch
-                    # verdict-gated sets — walk instead (even with an
-                    # empty store: an isnotset-gated chain can fire
-                    # with no prior sets at all)
-                    member_entries.append((i, sid, x, pos, col_name))
-                    continue
-                if sets is None:
-                    batch_df = batch_df.withColumn(col_name, F.lit(False))
-                    flag_cols.append((sid, x.action, col_name))
-                    continue
-                shape = flex_shape(x.track)
-                if shape is not None and x.name in funnel_bits:
-                    # funnel bit: replay the flat-tuple-store walk over
-                    # (staged fset/funset events + this batch's checks),
-                    # one ordered pass per bit — exactly the batch
-                    # apply_xbits funnel path
-                    staged = sets.filter(
-                        (F.col("bit_name") == x.name)
-                        & F.col("kind").isin("fset", "funset")
-                    ).select(
-                        "kind",
-                        "shape",
-                        F.col("set_ts").alias("ts_d"),
-                        F.col("set_event_key").alias("event_key"),
-                        F.col("set_seq").alias("seq"),
-                        "expire",
-                        "e_src",
-                        "e_dst",
-                        "e_user",
-                        F.lit(None).cast("string").alias("hit_id"),
-                    )
-                    checks = batch_df.filter(F.col("sid") == sid).select(
-                        F.lit("fcheck").alias("kind"),
-                        F.lit(shape).alias("shape"),
-                        ts_seconds_d(F.col("ts")).alias("ts_d"),
-                        F.col("event_key"),
-                        F.lit(pos * 2).cast("int").alias("seq"),
-                        F.lit(0).alias("expire"),
-                        F.col("src_ip").alias("e_src"),
-                        F.col("dst_ip").alias("e_dst"),
-                        F.coalesce(F.col("username"), F.lit("")).alias("e_user"),
-                        F.col("event_key").alias("hit_id"),
-                    )
-                    events = staged.unionByName(checks).repartition(1)
-
-                    verdicts = (
-                        events.sortWithinPartitions("ts_d", "event_key", "seq")
-                        .mapInPandas(
-                            _make_funnel_walk(col_name),
-                            schema=f"event_key string, {col_name} boolean",
-                        )
-                    )
-                    batch_df = batch_df.join(
-                        verdicts.filter(F.col(col_name)), "event_key", "left"
-                    ).withColumn(col_name, F.coalesce(F.col(col_name), F.lit(False)))
-                    flag_cols.append((sid, x.action, col_name))
-                    continue
-                if shape is not None:
-                    bit_name, key = f"{x.name}#{shape}", flex_check_key(shape)
-                else:
-                    bit_name, key = x.name, xbit_key_expr(x.track)
-                s = sets.filter(F.col("bit_name") == bit_name)
-                probe = batch_df.filter(F.col("sid") == sid).select(
-                    F.col("event_key").alias("chk_event_key"),
-                    key.alias("bit_key"),
-                    ts_seconds_d(F.col("ts")).alias("chk_ts"),
-                    F.lit(pos * 2).alias("chk_seq"),
-                )
-                # strict replay-order precedence (ts, event_key, seq)
-                before = (
-                    (F.col("set_ts") < F.col("chk_ts"))
-                    | (
-                        (F.col("set_ts") == F.col("chk_ts"))
-                        & (
-                            (F.col("set_event_key") < F.col("chk_event_key"))
-                            | (
-                                (F.col("set_event_key") == F.col("chk_event_key"))
-                                & (F.col("set_seq") < F.col("chk_seq"))
-                            )
-                        )
-                    )
-                )
-                # last-write-wins: the LATEST staged set/unset before the
-                # check decides (the batch walk's state[k] overwrite)
-                last = (
-                    probe.join(F.broadcast(s), ["bit_key"])
-                    .filter(before)
-                    .groupBy("chk_event_key")
-                    .agg(
-                        F.max_by(
-                            F.struct("kind", "set_ts", "expire"),
-                            F.struct("set_ts", "set_event_key", "set_seq"),
-                        ).alias("last"),
-                        F.max("chk_ts").alias("chk_ts"),
-                    )
-                )
-                hit_keys = (
-                    last.filter(
-                        (F.col("last.kind") == "set")
-                        & (
-                            (F.col("last.expire") == 0)
-                            | (F.col("chk_ts") - F.col("last.set_ts") < F.col("last.expire"))
-                        )
-                    )
-                    .select(F.col("chk_event_key").alias("event_key"))
-                    .withColumn(col_name, F.lit(True))
-                )
-                batch_df = batch_df.join(hit_keys, "event_key", "left").withColumn(
-                    col_name, F.coalesce(F.col(col_name), F.lit(False))
-                )
-                flag_cols.append((sid, x.action, col_name))
-
-            walk_out = None
-            if member_entries:
-                _null_l = F.lit(None).cast("long")
-                _null_str = F.lit(None).cast("string")
-                _blank_tuple = [
-                    F.lit("").alias("shape"),
-                    F.lit("").alias("e_src"),
-                    F.lit("").alias("e_dst"),
-                    F.lit("").alias("e_user"),
-                ]
-
-                def _event_tuple(shape: str):
-                    return [
-                        F.lit(shape).alias("shape"),
-                        F.col("src_ip").alias("e_src"),
-                        F.col("dst_ip").alias("e_dst"),
-                        F.coalesce(F.col("username"), F.lit("")).alias("e_user"),
-                    ]
-
-                def _hit_events(sid, x, pos, entry, a_key, t_key):
-                    check = x.action in ("isset", "isnotset")
-                    flex = is_flexbit(x.track)
-                    if check:
-                        kind = "fcheck" if flex else "check"
-                    else:
-                        kind = ("cf" if flex else "c") + x.action
-                    return batch_df.filter(F.col("sid") == sid).select(
-                        F.lit(kind).alias("kind"),
-                        F.lit(x.name).alias("bit_name"),
-                        (F.lit("") if flex else xbit_key_expr(x.track)).alias("bit_key"),
-                        ts_seconds_d(F.col("ts")).alias("ts_d"),
-                        F.col("event_key"),
-                        F.lit(pos * 2 + (0 if check else 1)).cast("long").alias("seq"),
-                        F.lit(0 if check else x.expire).cast("long").alias("expire"),
-                        F.col("sid"),
-                        F.lit(entry).cast("int").alias("entry"),
-                        F.lit(x.action == "isset").alias("want_set"),
-                        F.concat_ws(
-                            "#", F.col("event_key"), F.col("sid").cast("string")
-                        ).alias("ver_id"),
-                        *(_event_tuple(flex_shape(x.track) or "") if flex else _blank_tuple),
-                        a_key.alias("a_key"),
-                        t_key.alias("t_key"),
-                    )
-
-                parts = [
-                    _hit_events(sid, x, pos, i, _null_str, _null_str)
-                    for i, sid, x, pos, _ in member_entries
-                ] + [
-                    _hit_events(
-                        sid, x, pos, -1,
-                        *(
-                            (F.col("track_after"), F.col("track_threshold"))
-                            if sid in chain_corr_specs
-                            else (_null_str, _null_str)
-                        ),
-                    )
-                    for sid, x, pos in chain_set_specs
-                ]
-                ev = parts[0]
-                for p in parts[1:]:
-                    ev = ev.unionByName(p)
+            cached = batch_df.persist()
+            persisted = [cached]
+            try:
+                min_chk = cached.agg(F.min(ts_seconds_d(F.col("ts")))).first()[0]
+                events = hit_events(cached, rules)
+                sets = _read_store_or_none(spark, sets_path)  # None: nothing staged yet
                 if sets is not None:
-                    # staged member-bit sets: stage A's + PRIOR batches'
-                    # fired chain sets (this batch's own stale c_ retry
-                    # partition excluded — the walk re-derives them)
-                    staged = (
-                        sets.filter(
-                            F.col("bit_name").isin(list(member_bits))
-                            & F.col("kind").isin("set", "unset", "fset", "funset")
-                            & (F.col("batch_id") != f"c_{batch_id}")
-                        ).select(
-                            F.col("kind"),
-                            F.col("bit_name"),
-                            F.col("bit_key"),
-                            F.col("set_ts").alias("ts_d"),
-                            F.col("set_event_key").alias("event_key"),
-                            F.col("set_seq").cast("long").alias("seq"),
-                            F.col("expire").cast("long").alias("expire"),
-                            _null_l.alias("sid"),
-                            F.lit(-1).cast("int").alias("entry"),
-                            F.lit(False).alias("want_set"),
-                            F.lit("").alias("ver_id"),
-                            F.col("shape"),
-                            F.col("e_src"),
-                            F.col("e_dst"),
-                            F.col("e_user"),
-                            _null_str.alias("a_key"),
-                            _null_str.alias("t_key"),
+                    sets = sets.filter(F.col("batch_id") != f"c_{batch_id}")
+                    if min_chk is not None:
+                        # partition-prune buckets no check in this batch can see
+                        live_from = int((min_chk - max_expire) // bucket_secs)
+                        sets = sets.filter(
+                            (F.col("set_bucket") < 0) | (F.col("set_bucket") >= live_from)
                         )
-                    )
-                    ev = ev.unionByName(staged)
-                chain_state_path = f"{base_path}/chain_corr_state"
+                    events = events.unionByName(sets.select(*_XBIT_WALK_COLS))
                 if chain_corr_specs:
-                    # seed the walk's machines from the previous
-                    # micro-batch's snapshot, routed to the owning
-                    # rule's component partition via its first bit
-                    prev_cs = _read_prev_corr_state(
-                        spark, chain_state_path, batch_id
-                    )
-                    if prev_cs is not None:
-                        route_expr = F.lit(None).cast("string")
-                        for csid, rbit in chain_route_bit.items():
-                            route_expr = F.when(
-                                F.col("sid") == csid, F.lit(rbit)
-                            ).otherwise(route_expr)
-                        seeds = (
-                            prev_cs.filter(
-                                F.col("sid").isin(list(chain_corr_specs))
-                            ).select(
-                                F.lit("cseed").alias("kind"),
-                                route_expr.alias("bit_name"),
-                                F.col("mkey").alias("bit_key"),
-                                F.lit(float("-1e18")).alias("ts_d"),
-                                F.lit("").alias("event_key"),
-                                F.col("cnt").cast("long").alias("seq"),
-                                F.col("utime").cast("long").alias("expire"),
-                                F.col("sid"),
-                                F.lit(-1).cast("int").alias("entry"),
-                                F.lit(False).alias("want_set"),
-                                F.lit("").alias("ver_id"),
-                                F.col("machine").alias("shape"),
-                                F.lit("").alias("e_src"),
-                                F.lit("").alias("e_dst"),
-                                F.lit("").alias("e_user"),
-                                _null_str.alias("a_key"),
-                                _null_str.alias("t_key"),
+                    prev = _read_prev_corr_state(spark, chain_state_path, batch_id)
+                    if prev is not None:
+                        # named after a bit of the owning rule, a seed
+                        # replays in its component's walk partition
+                        events = events.unionByName(
+                            prev.withColumn("kind", F.lit("cseed")).withColumn(
+                                "bit_name", seed_bit
                             )
                         )
-                        ev = ev.unionByName(seeds)
-                comp_expr = F.lit("")
-                for bit, comp in chain_bit_comp.items():
-                    comp_expr = F.when(
-                        F.col("bit_name") == bit, F.lit(comp)
-                    ).otherwise(comp_expr)
-                n_comps = max(1, len(set(chain_bit_comp.values())))
-                walk_out = (
-                    ev.withColumn("comp", comp_expr)
-                    .repartition(n_comps, "comp")
-                    .sortWithinPartitions("ts_d", "event_key", "seq")
-                    .mapInPandas(
-                        _make_chain_walk(chain_corr_specs, max_corr_secs),
-                        schema=_CHAIN_WALK_SCHEMA,
+                flagged, walk_out = resolve_xbits(cached, events, rules)
+                walk_out = walk_out.persist()
+                persisted.append(walk_out)
+                if chain_rules:
+                    fired = walk_out.filter(F.col("kind").isin(*set(GATED.values())))
+                    _stage_sets(
+                        fired.select(*_XBIT_WALK_COLS), sets_path, batch_id, bucket_secs, "c"
                     )
-                    .persist()
-                )
-                for i, sid, x, pos, col_name in member_entries:
-                    flags = walk_out.filter(
-                        (F.col("kind") == "v") & (F.col("entry") == i)
-                    ).select("event_key", F.col("ok").alias(col_name))
-                    batch_df = batch_df.join(flags, "event_key", "left").withColumn(
-                        col_name, F.coalesce(F.col(col_name), F.lit(False))
-                    )
-                    flag_cols.append((sid, x.action, col_name))
-                fired = walk_out.filter(
-                    F.col("kind").isin(
-                        "fired_set", "fired_unset", "fired_fset", "fired_funset"
-                    )
-                )
-                fired_rows = fired.select(
-                    "bit_name",
-                    "bit_key",
-                    F.col("ts_d").alias("set_ts"),
-                    F.col("event_key").alias("set_event_key"),
-                    F.col("seq").cast("int").alias("set_seq"),
-                    F.col("expire").cast("int").alias("expire"),
-                    # fired_set -> set, fired_fset -> fset, ...
-                    F.regexp_replace(F.col("kind"), "^fired_", "").alias("kind"),
-                    F.col("shape"),
-                    F.col("e_src"),
-                    F.col("e_dst"),
-                    F.col("e_user"),
-                    F.when(F.col("expire") == 0, F.lit(-1))
-                    .otherwise(F.floor(F.col("ts_d") / F.lit(bucket_secs)))
-                    .cast("long")
-                    .alias("set_bucket"),
-                )
-                _idempotent_write(
-                    fired_rows,
-                    sets_path,
-                    batch_id,
-                    extra_partition="set_bucket",
-                    writer_id="c",
-                )
                 if chain_corr_specs:
-                    # persist the walk's machine snapshot for the next
-                    # micro-batch (idempotent: a replayed batch N
-                    # re-reads N-1's snapshot and rewrites its own)
+                    # idempotent: a replayed batch N re-reads N-1's
+                    # snapshot and rewrites its own
                     _idempotent_write(
-                        walk_out.filter(F.col("kind") == "cstate").select(
-                            "sid",
-                            F.lit("").alias("corr_group"),
-                            F.col("bit_name").alias("machine"),
-                            F.col("bit_key").alias("mkey"),
-                            F.col("seq").alias("cnt"),
-                            F.col("expire").alias("utime"),
-                        ),
+                        walk_out.filter(F.col("kind") == "cstate").select(*_XBIT_WALK_COLS),
                         chain_state_path,
                         batch_id,
                         writer_id="s",
                     )
                     _prune_old_corr_snapshots(spark, chain_state_path, batch_id)
-
-            verdict = F.lit(True)
-            for sid, action, col_name in flag_cols:
-                ok = F.col(col_name) if action == "isset" else ~F.col(col_name)
-                verdict = verdict & F.when(F.col("sid") == sid, ok).otherwise(F.lit(True))
-
-            routed = batch_df.filter(verdict).drop(*[c for _, _, c in flag_cols])
-            if walk_out is not None and chain_corr_specs:
-                # chain rules' after/threshold verdicts come from the
-                # walk's machines: drop suppressed hits from the alert
-                # path (their gated sets never fired either —
-                # engine.c:1402-1427)
-                chain_sup = (
-                    walk_out.filter(
-                        (F.col("kind") == "cflags")
-                        & (
-                            F.col("suppressed_after")
-                            | F.col("suppressed_threshold")
-                        )
-                    ).select("sid", "event_key")
-                )
-                routed = routed.join(chain_sup, ["sid", "event_key"], "left_anti")
-
-            # after/threshold ON condition rules: counters advance only
-            # on condition-PASSING rows (engine.c:1373-1389), replayed
-            # per (sid, track-key) with state seeded from the previous
-            # micro-batch's snapshot (idempotent batch-id partitions —
-            # a replayed batch N re-reads N-1's snapshot).  Chain rules'
-            # machines already ran inside the walk — excluded here.
-            corr_specs_b = _corr_spec_map(
-                [r for r in cond_rules if r.sid not in chain_corr_specs]
-            )
-            if corr_specs_b:
-                corr_sids_b = list(corr_specs_b)
-                # rows arrive with False placeholder flags (set before
-                # writeStream) — drop them so the replay's verdicts are
-                # the only columns with these names after the join
-                corr_rows = routed.filter(F.col("sid").isin(corr_sids_b)).drop(
-                    "suppressed_after", "suppressed_threshold"
-                )
-                plain_rows = routed.filter(~F.col("sid").isin(corr_sids_b))
-                state_path = f"{base_path}/corr_state_b"
-                narrow = corr_rows.select(
-                    F.lit("e").alias("kind"),
-                    F.col("sid"),
-                    corr_group_key(corr_specs_b).alias("corr_group"),
-                    "event_key",
-                    ts_seconds_l(F.col("ts")).alias("ts_epoch"),
-                    F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-                    "track_after",
-                    "track_threshold",
-                    F.lit("").alias("machine"),
-                    F.lit("").alias("mkey"),
-                    F.lit(0).cast("long").alias("cnt"),
-                    F.lit(0).cast("long").alias("utime"),
-                )
-                prev = _read_prev_corr_state(spark, state_path, batch_id)
-                if prev is not None:
-                    narrow = narrow.unionByName(
-                        prev.select(
-                            F.lit("s").alias("kind"),
-                            "sid",
-                            "corr_group",
-                            F.lit("").alias("event_key"),
-                            F.lit(0).cast("long").alias("ts_epoch"),
-                            F.lit(0).cast("long").alias("ts_us"),
-                            F.lit("").alias("track_after"),
-                            F.lit("").alias("track_threshold"),
-                            "machine",
-                            "mkey",
-                            "cnt",
-                            "utime",
-                        )
+                    # a suppressed chain hit neither alerts nor sets
+                    # (engine.c:1402-1427)
+                    flagged = flagged.filter(
+                        ~F.col("chain_sup_after") & ~F.col("chain_sup_thr")
                     )
-                replayed = (
-                    narrow.groupBy("sid", "corr_group")
-                    .applyInPandas(
-                        _make_seeded_replay(corr_specs_b, corr_window_secs(corr_specs_b)),
-                        schema=_CORR_B_OUT_SCHEMA,
-                    )
-                    .persist()
+                routed = flagged.filter(F.col("xbit_ok")).drop(
+                    "xbit_ok", "chain_sup_after", "chain_sup_thr"
                 )
-                _idempotent_write(
-                    replayed.filter(F.col("kind") == "s").select(
-                        "sid", "corr_group", "machine", "mkey", "cnt", "utime"
-                    ),
-                    state_path,
-                    batch_id,
-                    writer_id="s",
-                )
-                _prune_old_corr_snapshots(spark, state_path, batch_id)
-                flags = replayed.filter(F.col("kind") == "e").select(
-                    "sid",
-                    "event_key",
-                    "suppressed_after",
-                    "suppressed_threshold",
-                )
-                survivors = (
-                    corr_rows.join(flags, ["sid", "event_key"])
-                    .filter(
-                        ~F.col("suppressed_after") & ~F.col("suppressed_threshold")
-                    )
-                    .select(*plain_rows.columns)
-                )
-                routed = plain_rows.unionByName(survivors)
 
-            meta = rule_metadata_df(spark, rules)
-            assembled = assemble_alerts(
-                routed, meta, xbit_condition_sids=self.cond_sids
-            ).persist()
-            try:
+                if corr_specs_b:
+                    routed = seeded_corr(spark, routed, batch_id, persisted)
+                meta = rule_metadata_df(spark, rules)
+                assembled = assemble_alerts(
+                    routed, meta, xbit_condition_sids=self.cond_sids
+                ).persist()
+                persisted.append(assembled)
                 for sink in sink_names:
                     _idempotent_write(
                         SINK_BUILDERS[sink](
@@ -1253,12 +781,8 @@ class StreamingSaganEngine:
                         writer_id="b",
                     )
             finally:
-                assembled.unpersist()
-                batch_df.unpersist()
-                if corr_specs_b:
-                    replayed.unpersist()
-                if walk_out is not None:
-                    walk_out.unpersist()
+                for df in persisted:
+                    df.unpersist()
             if min_chk is not None and max_expire > 0:
                 # sweep against a watermark-lagged floor, not this
                 # batch's own min: stage B applies no watermark to its

@@ -1,7 +1,7 @@
 """The correlation core (pipeline/machines.py) and its Spark adapters,
 driven on plain pandas frames without Spark: a regression for per-key
-eviction in the seeded streaming replay, and a property test that every
-batch and streaming adapter returns the same flags over random event
+eviction in the seeded streaming replay, and property tests that the
+batch and streaming replays return the same flags over random event
 sequences cut at random micro-batch boundaries."""
 
 from __future__ import annotations
@@ -11,18 +11,15 @@ from hypothesis import given
 from hypothesis import strategies as st
 
 from sagan_spark.pipeline.correlate import (
+    _XBIT_WALK_COLS,
     _corr_spec_map,
     _make_replay,
     _make_xbit_walk,
     corr_window_secs,
 )
+from sagan_spark.pipeline.machines import GATED
 from sagan_spark.rules.ir import AfterSpec, RuleIR, ThresholdSpec
-from sagan_spark.streaming.engine import (
-    _make_chain_walk,
-    _make_funnel_walk,
-    _make_group_replay,
-    _make_seeded_replay,
-)
+from sagan_spark.streaming.engine import _make_group_replay, _make_seeded_replay
 from tests.oracle import Oracle
 
 _SEEDED_COLS = [
@@ -242,11 +239,12 @@ _ORDER = lambda r: (r[3], r[4], r[5])  # noqa: E731  (ts_d, event_key, seq)
 def test_xbit_walk_adapters_agree(events, expire, chain_after, data):
     """Set/unset/check events for plain bits, a funnel flexbit and a chain
     component (one chain rule carrying after/threshold), in event-time
-    order: the one-pass batch walk and the streaming walks — the chain
-    walk with its fired sets and machine snapshot carried across random
-    cuts, the funnel walk over the staged store — return the same check
-    verdicts and chain flags.  Stage A has drained before stage B (the
-    drain-ordered pipeline), so every stage-A set is staged."""
+    order, through the one walk body: a single batch pass and stage B's
+    micro-batches — each replaying the staged stage-A events, the chain
+    sets fired in earlier cuts and ``cseed`` rows from the previous cut's
+    ``cstate`` snapshot — return the same check verdicts and chain flags.
+    Stage A has drained before stage B (the drain-ordered pipeline), so
+    every stage-A set is staged."""
     specs = {
         30: {
             "after": chain_after,
@@ -259,7 +257,7 @@ def test_xbit_walk_adapters_agree(events, expire, chain_after, data):
         (ts, f"e{i:03d}", sid, src, dst, user)
         for i, (sid, ts, src, dst, user) in enumerate(events)
     )
-    batch_rows, chain_rows, staged, funnel_checks, want_set = [], [], [], [], {}
+    stage_a, stage_b, want = [], [], set()
     for ts, ek, sid, src, dst, user in hits:
         pos, ops = _XRULES[sid]
         hit_id = f"{ek}#{sid}"
@@ -269,87 +267,49 @@ def test_xbit_walk_adapters_agree(events, expire, chain_after, data):
             kind = ("f" if flex else "") + ("check" if check else action)
             if sid in _CHAIN and not check:
                 kind = "c" + kind
-            bit_key = "" if flex else {"src": src, "dst": dst}[key]
-            seq = pos * 2 + (0 if check else 1)
-            exp = 0 if check or action == "unset" else expire
-            tup = (src, dst, user) if flex else ("", "", "")
             corr = (30, src, dst) if sid == 30 and not check else (None, None, None)
-            batch_rows.append((
-                kind, bit, bit_key, float(ts), ek, seq, exp, shape,
-                *(tup if flex else (None, None, None)),
+            row = (
+                kind, bit, "" if flex else {"src": src, "dst": dst}[key], float(ts), ek,
+                pos * 2 + (0 if check else 1), 0 if check or action == "unset" else expire,
+                shape, *((src, dst, user) if flex else (None, None, None)),
                 hit_id if check or sid in _CHAIN else None, action == "isset", *corr,
-            ))
+            )
+            (stage_a if sid in _STAGE_A else stage_b).append(row)
             if check:
-                want_set[(ek, sid)] = action == "isset"
-            if bit == "f":
-                row = (kind, shape, float(ts), ek, seq, exp, *tup, ek if check else None)
-                (funnel_checks if check else staged).append((sid, row))
-            elif sid in _STAGE_A:
-                staged.append((sid, (kind, bit, bit_key, float(ts), ek, seq, exp,
-                                     None, -1, False, "", shape, *tup, None, None)))
-            else:
-                chain_rows.append((kind, bit, bit_key, float(ts), ek, seq, exp,
-                                   sid, sid if check else -1, action == "isset",
-                                   hit_id, shape, *tup, *corr[1:]))
+                want.add((ek, sid))
 
-    # batch: one pass over every bit, split across arbitrary Arrow batches
-    cols = [
-        "kind", "bit_name", "bit_key", "ts_d", "event_key", "seq", "expire", "shape",
-        "e_src", "e_dst", "e_user", "hit_id", "want_set", "csid", "a_key", "t_key",
-    ]
-    frame = pd.DataFrame(sorted(batch_rows, key=_ORDER), columns=cols)
+    def replay(rows, verdicts, flags):
+        """One walk pass over ``rows``, split across arbitrary Arrow
+        batches; returns the other output rows as walk event tuples."""
+        frame = pd.DataFrame(sorted(rows, key=_ORDER), columns=_XBIT_WALK_COLS)
+        rest = []
+        for out in _make_xbit_walk(specs)(iter(_cut(frame, data))):
+            out = out.astype(object).where(out.notna(), None)
+            for r in out.itertuples(index=False):
+                ek, sid = (r.hit_id or "#").split("#")
+                if r.kind == "verdict":
+                    verdicts[(ek, int(sid))] = r.ok
+                elif r.kind == "cflags":
+                    flags[(ek, int(sid))] = (r.suppressed_after, r.suppressed_threshold)
+                else:
+                    rest.append(tuple(getattr(r, c) for c in _XBIT_WALK_COLS))
+        return rest
+
+    # batch: one pass over every bit
     verdicts, flags = {}, {}
-    for out in _make_xbit_walk(specs)(iter(_cut(frame, data))):
-        for hit_id, ok, sa, sth in out.itertuples(index=False):
-            ek, sid = hit_id.split("#")
-            if pd.isna(ok):
-                flags[(ek, int(sid))] = (bool(sa), bool(sth))
-            else:
-                verdicts[(ek, int(sid))] = bool(ok)
-    assert set(verdicts) == set(want_set)
+    replay(stage_a + stage_b, verdicts, flags)
+    assert set(verdicts) == want
 
     # streaming: micro-batches cut in event-time order
-    chain_cols = [
-        "kind", "bit_name", "bit_key", "ts_d", "event_key", "seq", "expire", "sid",
-        "entry", "want_set", "ver_id", "shape", "e_src", "e_dst", "e_user", "a_key", "t_key",
-    ]
-    funnel_cols = ["kind", "shape", "ts_d", "event_key", "seq", "expire",
-                   "e_src", "e_dst", "e_user", "hit_id"]
-    chain_walk = _make_chain_walk(specs, corr_window_secs(specs))
-    staged_chain = [r for sid, r in staged if sid in (10, 11)]
-    staged_funnel = [r for sid, r in staged if sid in (20, 21)]
-    fired, seeds = [], []
     s_verdicts, s_flags = {}, {}
+    fired, seeds = [], []
     for cut in _cut(hits, data):
         keys = {ek for _, ek, *_ in cut}
-        rows = staged_chain + fired + seeds + [r for r in chain_rows if r[4] in keys]
-        walk_in = pd.DataFrame(sorted(rows, key=_ORDER), columns=chain_cols)
-        outs = list(chain_walk(iter([walk_in])))
-        for r in (r for out in outs for r in out.itertuples()):
-            if r.kind == "v":
-                key = (r.event_key, int(r.sid))
-                s_verdicts[key] = r.ok == want_set[key]
-            elif r.kind == "cflags":
-                s_flags[(r.event_key, int(r.sid))] = (
-                    bool(r.suppressed_after), bool(r.suppressed_threshold)
-                )
-            elif r.kind.startswith("fired_"):
-                fired.append((r.kind[len("fired_"):], r.bit_name, r.bit_key, r.ts_d, r.event_key,
-                              r.seq, r.expire, None, -1, False, "", r.shape, r.e_src,
-                              r.e_dst, r.e_user, None, None))
-        seeds = [
-            ("cseed", "", r.bit_key, -1e18, "", r.seq, r.expire, r.sid, -1, False, "",
-             r.bit_name, "", "", "", None, None)
-            for out in outs
-            for r in out[out["kind"] == "cstate"].itertuples()
-        ]
-        for sid in (22, 23):
-            checks = [r for s, r in funnel_checks if s == sid and r[3] in keys]
-            walk_in = pd.DataFrame(
-                sorted(staged_funnel + checks, key=lambda r: (r[2], r[3], r[4])), columns=funnel_cols
-            )
-            for out in _make_funnel_walk("active")(iter([walk_in])):
-                for ek, active in out.itertuples(index=False):
-                    s_verdicts[(ek, sid)] = active == want_set[(ek, sid)]
+        rest = replay(
+            stage_a + fired + seeds + [r for r in stage_b if r[4] in keys],
+            s_verdicts, s_flags,
+        )
+        fired += [r for r in rest if r[0] in GATED.values()]
+        seeds = [("cseed", *r[1:]) for r in rest if r[0] == "cstate"]
     assert s_verdicts == verdicts
     assert s_flags == flags

@@ -9,6 +9,7 @@ reference src/sagan-defs.h:185-208)."""
 
 from __future__ import annotations
 
+import re
 import shutil
 
 import pandas as pd
@@ -23,7 +24,6 @@ from sagan_spark.streaming import StreamingSaganEngine, pages_stream_frame
 
 @pytest.fixture(scope="module")
 def stream_rules(fixture_rules):
-    # xbit conditions are batch-only in v1
     return [
         r
         for r in fixture_rules
@@ -104,8 +104,11 @@ def test_xbit_condition_rules_rejected(fixture_rules):
         r for r in fixture_rules if any(x.action in ("isset", "isnotset") for x in r.xbits)
     ]
     assert has_cond, "fixture ruleset should carry an xbit condition rule"
-    with pytest.raises(NotImplementedError):
+    with pytest.raises(NotImplementedError) as err:
         StreamingSaganEngine(fixture_rules)
+    # the message names a method that exists
+    named = re.search(r"use (\w+)", str(err.value)).group(1)
+    assert hasattr(StreamingSaganEngine, named), named
 
 
 def test_chained_xbit_pipeline_equals_batch(spark, fixture_rules, tmp_path):
@@ -274,6 +277,40 @@ alert any any any -> any any (msg:"check"; content:"checkme"; parse_src_ip: 1; x
     assert live == [], f"dead bucket dirs not swept: {live}"
 
 
+def test_chained_pipeline_releases_its_cache(spark, tmp_path):
+    """Every micro-batch of both stages unpersists what it cached: the
+    persistent-RDD count is back at its starting value after a run."""
+    from sagan_spark.rules.parser import parse_rules
+
+    rules = parse_rules("""\
+alert any any any -> any any (msg:"set"; content:"setme"; parse_src_ip: 1; xbits: set, name b3, track ip_src, expire 1h; sid:9510001;)
+alert any any any -> any any (msg:"check"; content:"checkme"; parse_src_ip: 1; xbits: isset, name b3, track ip_src; sid:9510002;)
+""")
+    input_dir = tmp_path / "leak_in"
+    input_dir.mkdir()
+    pq.write_table(
+        _mini_pages(
+            [
+                ("u://l/1", "2026-01-01 00:00:01", "setme from 10.0.0.1 ok"),
+                ("u://l/2", "2026-01-01 00:00:10", "checkme from 10.0.0.1 hit"),
+            ]
+        ),
+        str(input_dir / "c1.parquet"),
+    )
+    seng = StreamingSaganEngine(rules, watermark="0 seconds", enable_xbits=True)
+
+    def frame_factory():
+        return SaganSparkEngine.frame_from_pages(pages_stream_frame(spark, str(input_dir)))
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    seng.run_pipeline_with_xbits(
+        frame_factory, str(tmp_path / "leak_sinks"), str(tmp_path / "leak_ckpt"),
+        sinks=["alerts_eve"],
+    )
+    assert persistent().size() == before
+
+
 FLEX_UNSET_STREAM_RULES = """\
 alert any any any -> any any (msg:"reboot"; content:"reboot"; parse_src_ip: 1; parse_dst_ip: 2; flexbits: set, win_reboot, 3600; sid:9450001;)
 alert any any any -> any any (msg:"clear"; content:"allclear"; parse_src_ip: 1; parse_dst_ip: 2; flexbits: unset, reverse, win_reboot; sid:9450002;)
@@ -403,10 +440,34 @@ alert any any any -> any any (msg:"chk chain aft"; content:"probe"; parse_src_ip
 """
 
 
-@pytest.mark.parametrize("seed", [11, 23, 47])
-def test_streaming_random_parity_with_cond_correlation(spark, tmp_path, seed):
+# flexbits: by_src/reverse checks of a bit without unsets (per
+# (bit#shape, key) partitions) and a funnel bit cleared by an unset (one
+# flat-tuple-store partition per bit name)
+RANDOM_PARITY_FLEX_RULES = """\
+alert any any any -> any any (msg:"boot"; content:"reboot"; parse_src_ip: 1; parse_dst_ip: 2; flexbits: set, fboot, 300; sid:9700001;)
+alert any any any -> any any (msg:"av src"; content:"avoff"; parse_src_ip: 1; parse_dst_ip: 2; flexbits: isset, by_src, fboot; sid:9700002;)
+alert any any any -> any any (msg:"av rev"; content:"avoff"; parse_src_ip: 1; parse_dst_ip: 2; flexbits: isset, reverse, fboot; threshold: type limit, track by_src, count 2, seconds 60; sid:9700003;)
+alert any any any -> any any (msg:"login"; content:"login"; parse_src_ip: 1; parse_dst_ip: 2; flexbits: set, fsess, 120; sid:9700004;)
+alert any any any -> any any (msg:"logout"; content:"logout"; parse_src_ip: 1; parse_dst_ip: 2; flexbits: unset, by_src, fsess; sid:9700005;)
+alert any any any -> any any (msg:"act"; content:"probe"; parse_src_ip: 1; parse_dst_ip: 2; flexbits: isset, both, fsess; sid:9700006;)
+alert any any any -> any any (msg:"idle"; content:"probe"; parse_src_ip: 1; parse_dst_ip: 2; flexbits: isnotset, by_dst, fsess; after: track by_src, count 1, seconds 60; sid:9700007;)
+"""
+
+_RANDOM_PARITY = {
+    "xbits": (RANDOM_PARITY_RULES, ["setme", "clearme", "checkme", "checkme", "probe"]),
+    "flexbits": (RANDOM_PARITY_FLEX_RULES, ["reboot", "avoff", "login", "logout", "probe"]),
+}
+
+
+@pytest.mark.parametrize(
+    "ruleset,seed",
+    [pytest.param("xbits", s, id=str(s)) for s in (11, 23, 47)]
+    + [pytest.param("flexbits", s, id=f"flexbits-{s}") for s in (11, 23, 47)],
+)
+def test_streaming_random_parity_with_cond_correlation(spark, tmp_path, ruleset, seed):
     import random
 
+    rules_text, verbs = _RANDOM_PARITY[ruleset]
     rng = random.Random(seed)
     t = 0
     rows = []
@@ -418,14 +479,16 @@ def test_streaming_random_parity_with_cond_correlation(spark, tmp_path, seed):
         # the targeted test in test_xbit_chains.py)
         t += rng.randint(700, 900) if rng.random() < 0.1 else rng.randint(1, 12)
         ip = rng.choice(["10.0.0.1", "10.0.0.2", "10.0.0.3"])
-        verb = rng.choice(["setme", "clearme", "checkme", "checkme", "probe"])
+        verb = rng.choice(verbs)
+        if ruleset == "flexbits":
+            ip = f"{ip} to {rng.choice(['10.0.0.1', '10.0.0.2', '10.0.0.3'])}"
         ts = pd.Timestamp("2026-01-01") + pd.Timedelta(seconds=t)
         rows.append((f"u://rp{seed}/{i}", str(ts), f"{verb} from {ip} x"))
     table = _mini_pages(rows)
 
     from sagan_spark.rules.parser import parse_rules
 
-    rules = parse_rules(RANDOM_PARITY_RULES)
+    rules = parse_rules(rules_text)
     input_dir = tmp_path / "rp_in"
     input_dir.mkdir()
     out = str(tmp_path / "rp_sinks")
@@ -460,7 +523,7 @@ def test_streaming_random_parity_with_cond_correlation(spark, tmp_path, seed):
     )
     got = {(r.url, r.alert_signature_id) for r in got_df.itertuples()}
     assert got == want, (
-        f"seed={seed} split={split} "
+        f"{ruleset} seed={seed} split={split} "
         f"missing={sorted(want-got)} extra={sorted(got-want)}"
     )
 
