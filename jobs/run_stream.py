@@ -11,8 +11,11 @@
 (tests/test_spark_submit.py runs this, from a directory where the
 repo is not importable — imports resolve from the shipped zip.)
 
-readStream -> stateless match -> applyInPandasWithState correlation ->
-foreachBatch fan-out.  Restarting with the same --checkpoint resumes
+readStream -> stateless match -> foreachBatch: after/threshold through
+the batch replay seeded from the previous micro-batch's snapshot store
+under --output, then the sink fan-out.  --watermark is the allowed event
+lateness: state older than it (plus the rule's window) leaves the
+snapshot.  Restarting with the same --checkpoint and --output resumes
 state and sink offsets exactly-once (the reference's
 mmap-survives-restart property, reference src/sagan-defs.h:185-208).
 Default trigger is availableNow (drain-and-stop); --continuous keeps

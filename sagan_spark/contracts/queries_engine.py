@@ -1015,10 +1015,11 @@ def q_a11_stats_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_streaming_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1-A3 streaming form: applyInPandasWithState counters with
-    checkpointed availableNow drain (rows-only gate — Structured
-    Streaming state is outside DuckDB's vocabulary; batch==streaming
-    equality is pinned in tests/test_streaming.py)."""
+    """A1-A3 streaming form: the batch after/threshold replay per
+    micro-batch, seeded from the snapshot store, with checkpointed
+    availableNow drain (rows-only gate — Structured Streaming state is
+    outside DuckDB's vocabulary; batch==streaming equality is pinned in
+    tests/test_streaming.py)."""
     import shutil
     import tempfile
 
@@ -1061,7 +1062,7 @@ def q_streaming_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_streaming_threshold_engine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """threshold: type suppress through the REAL streaming path
-    (applyInPandasWithState counters, checkpointed availableNow drain)
+    (seeded per-micro-batch replay, checkpointed availableNow drain)
     over the DETERMINISTIC events table — so unlike
     q_streaming_threshold's generated corpus, a DuckDB recursive-CTE
     oracle can replay the reference suppress machine

@@ -80,16 +80,12 @@ def _corr_spec_map(rules: list[RuleIR]) -> dict[int, dict]:
     return out
 
 
-def corr_window_secs(specs: dict[int, dict]) -> int:
-    """Longest after/threshold window in ``specs`` (0 when empty): a key
-    silent for longer gap-resets, so its counters equal fresh state."""
-    return max(
-        (
-            max(v["after"][1] if v["after"] else 0, v["threshold"][2] if v["threshold"] else 0)
-            for v in specs.values()
-        ),
-        default=0,
-    )
+def _mixed_track_sids(specs: dict[int, dict]) -> set[int]:
+    """Rules carrying both after and threshold on different track keys."""
+    return {
+        s for s, v in specs.items()
+        if v["after"] and v["threshold"] and v["after_track"] != v["thr_track"]
+    }
 
 
 def _shuffle_partitions(df: DataFrame) -> int:
@@ -107,9 +103,7 @@ def corr_group_key(specs: dict[int, dict]) -> F.Column:
     string (threshold.c:111, after.c:108).  Only a mixed-track
     both-rule needs the per-sid funnel."""
     both_sids = [s for s, v in specs.items() if v["after"] and v["threshold"]]
-    both_mixed = [
-        s for s in both_sids if specs[s]["after_track"] != specs[s]["thr_track"]
-    ]
+    both_mixed = sorted(_mixed_track_sids(specs))
     after_only = [s for s, v in specs.items() if v["after"] and not v["threshold"]]
     return (
         F.when(F.col("sid").isin(both_mixed), F.lit(""))
@@ -121,43 +115,64 @@ def corr_group_key(specs: dict[int, dict]) -> F.Column:
     )
 
 
-_REPLAY_SCHEMA = (
-    "event_key string, sid long, suppressed_after boolean, suppressed_threshold boolean"
+#: the snapshot store layout: one row per surviving machine key — the
+#: ``corr_state_*`` stores hold it and seed rows carry it
+CORR_STATE_COLS = ("sid", "corr_group", "machine", "mkey", "cnt", "utime")
+_REPLAY_IN_COLS = (
+    "kind", "sid", "event_key", "ts_epoch", "track_after", "track_threshold",
+    "machine", "mkey", "cnt", "utime",
 )
+_REPLAY_OUT_COLS = (
+    "kind", "event_key", "suppressed_after", "suppressed_threshold", *CORR_STATE_COLS,
+)
+_REPLAY_SCHEMA = (
+    "kind string, event_key string, suppressed_after boolean,"
+    " suppressed_threshold boolean, sid long, corr_group string,"
+    " machine string, mkey string, cnt long, utime long"
+)
+_REPLAY_DTYPES = {
+    "sid": "int64", "suppressed_after": "boolean", "suppressed_threshold": "boolean",
+    "cnt": "Int64", "utime": "Int64",
+}
 
 
-def _make_replay(specs: dict[int, dict]):
+def _replay_frame(rows: list[tuple]) -> pd.DataFrame:
+    return pd.DataFrame(rows, columns=_REPLAY_OUT_COLS).astype(_REPLAY_DTYPES)
+
+
+def _make_replay(specs: dict[int, dict], floor: float = float("-inf")):
     """``mapInPandas`` body: replay one sorted shuffle partition through
-    the core's machines, keyed (sid, track-key) like the reference's
-    (hash, sid) slots (threshold.c:111-113, after.c:108-110), with state
-    carried across Arrow batches.  Emits only the suppressed
-    (event_key, sid) pairs."""
+    the core's :class:`~sagan_spark.pipeline.machines.CorrMachines`, with
+    state carried across Arrow batches.
+
+    Input rows by ``kind``: ``e`` is one hit (sid, event_key, ts_epoch,
+    track_after, track_threshold); ``s`` restores one machine key
+    (:data:`CORR_STATE_COLS`) and sorts before every event of its (sid,
+    corr_group).  Output rows: ``e`` for each suppressed (event_key, sid)
+    and, at the end of the partition, the machines' surviving snapshot
+    (``CorrMachines.snapshot(floor)``) as ``s`` rows in the seed layout."""
+    mixed = _mixed_track_sids(specs)
 
     def replay(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        machines = CorrMachines()
+        machines = CorrMachines(specs)
         for pdf in batches:
             out: list[tuple] = []
-            for sid, t, key, a_key, t_key in zip(
-                pdf["sid"].to_numpy(),
-                pdf["ts_epoch"].to_numpy(),
-                pdf["event_key"].to_numpy(),
-                pdf["track_after"].to_numpy(),
-                pdf["track_threshold"].to_numpy(),
+            for kind, sid, key, t, a_key, t_key, machine, mkey, cnt, utime in zip(
+                *(pdf[c].to_numpy() for c in _REPLAY_IN_COLS)
             ):
-                spec = specs.get(sid)
-                if spec is None:
+                if kind == "s":
+                    machines.seed(machine, sid, mkey, cnt, utime)
                     continue
-                sup_a, sup_t = machines.step(spec, int(t), (sid, a_key), (sid, t_key))
+                sup_a, sup_t = machines.step(sid, int(t), a_key, t_key)
                 if sup_a or sup_t:
-                    out.append((key, sid, sup_a, sup_t))
-            yield pd.DataFrame(
-                {
-                    "event_key": [r[0] for r in out],
-                    "sid": pd.array([r[1] for r in out], dtype="int64"),
-                    "suppressed_after": pd.array([r[2] for r in out], dtype="boolean"),
-                    "suppressed_threshold": pd.array([r[3] for r in out], dtype="boolean"),
-                }
-            )
+                    out.append(("e", key, sup_a, sup_t, sid, None, None, None, None, None))
+            yield _replay_frame(out)
+        yield _replay_frame([
+            # a key's corr_group, as corr_group_key derives it: the
+            # per-sid funnel for a mixed-track rule, else the key itself
+            ("s", None, None, None, sid, "" if sid in mixed else mkey, machine, mkey, cnt, utime)
+            for machine, sid, mkey, cnt, utime in machines.snapshot(floor)
+        ])
 
     return replay
 
@@ -168,17 +183,20 @@ def apply_after_threshold(
     exclude_sids: list[int] | None = None,
     materialize_suppressed: bool = False,
     isolate_hot: bool = False,
-) -> DataFrame:
+    seed: DataFrame | None = None,
+    floor: float = float("-inf"),
+) -> tuple[DataFrame, DataFrame | None]:
     """Add suppressed_after / suppressed_threshold booleans to the hits DF.
 
     hits must carry: sid, event_key, ts (timestamp), track_after,
     track_threshold.
 
     Physical shape (the narrow-boundary pattern): only the 5 columns the
-    state machine reads cross the shuffle and the Arrow boundary; the
-    replay emits ONLY suppressed (event_key, sid) pairs — typically a
-    small fraction — which join back onto the full hit rows (AQE
-    broadcasts the suppressed side when small).  The wide hit columns
+    state machine reads (and the seed columns, null on hit rows) cross
+    the shuffle and the Arrow boundary; the replay emits ONLY suppressed
+    (event_key, sid) pairs — typically a small fraction — which join
+    back onto the full hit rows (AQE broadcasts the suppressed side when
+    small), besides its snapshot.  The wide hit columns
     never enter Python.  NOTE: `hits` is consumed twice (narrow branch +
     join left side) — the caller persists it.
 
@@ -186,14 +204,21 @@ def apply_after_threshold(
     condition rules — their after/threshold runs after the condition
     gate, reference engine.c:999-1024 vs 1373-1389); their rows pass
     through with false flags.
-    """
+
+    ``seed``: an earlier pass's snapshot rows (:data:`CORR_STATE_COLS`)
+    that this pass continues — a streaming micro-batch passes the
+    previous micro-batch's; ``floor``: the oldest event time a later pass
+    may still replay (``CorrMachines.snapshot``).
+
+    Returns ``(hits + flags, replay output)``; the output's ``s`` rows
+    are this pass's snapshot (None when no rule correlates)."""
     specs = _corr_spec_map(rules)
     for s in exclude_sids or []:
         specs.pop(s, None)
     if not specs:
         return hits.withColumn("suppressed_after", F.lit(False)).withColumn(
             "suppressed_threshold", F.lit(False)
-        )
+        ), None
 
     corr_sids = list(specs)
 
@@ -202,9 +227,11 @@ def apply_after_threshold(
     # hot both-rule made the whole correlation stage single-threaded)
     group_key = corr_group_key(specs)
 
+    null_s, null_l = F.lit(None).cast("string"), F.lit(None).cast("long")
     narrow = (
         hits.filter(F.col("sid").isin(corr_sids))
         .select(
+            F.lit("e").alias("kind"),
             "sid",
             "event_key",
             "ts",
@@ -212,8 +239,19 @@ def apply_after_threshold(
             "track_threshold",
             group_key.alias("corr_group"),
             ts_seconds_l(F.col("ts")).alias("ts_epoch"),
+            null_s.alias("machine"),
+            null_s.alias("mkey"),
+            null_l.alias("cnt"),
+            null_l.alias("utime"),
         )
     )
+    if seed is not None:
+        # a seed's null ts sorts it before every event (ascending sorts
+        # put nulls first)
+        narrow = narrow.unionByName(
+            seed.select(*CORR_STATE_COLS).withColumn("kind", F.lit("s")),
+            allowMissingColumns=True,
+        )
 
     n_parts = _shuffle_partitions(narrow)
     if isolate_hot:
@@ -226,10 +264,13 @@ def apply_after_threshold(
         shuffled = isolate_hot_keys(narrow, ["sid", "corr_group"], n_parts, hot)
     else:
         shuffled = narrow.repartition(n_parts, "sid", "corr_group")
-    suppressed = (
+    replayed = (
         shuffled
         .sortWithinPartitions("ts", "event_key")
-        .mapInPandas(_make_replay(specs), schema=_REPLAY_SCHEMA)
+        .mapInPandas(_make_replay(specs, floor), schema=_REPLAY_SCHEMA)
+    )
+    suppressed = replayed.filter(F.col("kind") == "e").select(
+        "event_key", "sid", "suppressed_after", "suppressed_threshold"
     )
     if materialize_suppressed:
         # the result fans out downstream (xbit branches): pin the tiny
@@ -243,7 +284,7 @@ def apply_after_threshold(
         "suppressed_after", F.coalesce(F.col("suppressed_after"), F.lit(False))
     ).withColumn(
         "suppressed_threshold", F.coalesce(F.col("suppressed_threshold"), F.lit(False))
-    )
+    ), replayed
 
 
 # ---------------------------------------------------------------------------
@@ -402,7 +443,7 @@ def _walk_frame(rows: list[tuple]) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=_XBIT_OUT_COLS).astype(_XBIT_OUT_DTYPES)
 
 
-def _make_xbit_walk(chain_corr_specs: dict[int, dict]):
+def _make_xbit_walk(chain_corr_specs: dict[int, dict], floor: float = float("-inf")):
     """``mapInPandas`` body: one ordered pass of walk events through the
     core's :class:`~sagan_spark.pipeline.machines.XbitWalk`, state
     carried across Arrow batches.  ``cseed`` rows seed the chain
@@ -412,12 +453,11 @@ def _make_xbit_walk(chain_corr_specs: dict[int, dict]):
     - ``cflags``: a chain hit's after/threshold flags;
     - ``set``/``unset``/``fset``/``funset``: a gated chain op that fired,
       as the ungated walk event a later micro-batch replays;
-    - ``cstate``: the chain machines' surviving snapshot at the end of
-      the partition: ``cseed`` rows but for the kind, sorted before
-      every event.
+    - ``cstate``: the chain machines' surviving snapshot
+      (``CorrMachines.snapshot(floor)``) at the end of the partition:
+      ``cseed`` rows but for the kind, sorted before every event.
 
     Batch reads the first two kinds; stage B persists the others."""
-    horizon = corr_window_secs(chain_corr_specs)
 
     def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         w = XbitWalk(chain_corr_specs)
@@ -428,7 +468,7 @@ def _make_xbit_walk(chain_corr_specs: dict[int, dict]):
                 hit_id, want_set, sid, a_key, t_key,
             ) in zip(*(pdf[c].to_numpy() for c in _XBIT_WALK_COLS)):
                 if kind == "cseed":
-                    w.machines.seed(shape, (int(sid), key), seq, expire)
+                    w.machines.seed(shape, sid, key, seq, expire)
                     continue
                 result, flags = w.step(
                     kind, name, key, ts_d, expire, shape, (esrc, edst, euser),
@@ -453,7 +493,7 @@ def _make_xbit_walk(chain_corr_specs: dict[int, dict]):
         yield _walk_frame([
             _out_row(kind="cstate", ts_d=float("-inf"), event_key="", csid=sid,
                      shape=machine, bit_key=mkey, seq=cnt, expire=utime)
-            for machine, (sid, mkey), cnt, utime in w.machines.snapshot(horizon)
+            for machine, sid, mkey, cnt, utime in w.machines.snapshot(floor)
         ])
 
     return walk
@@ -568,12 +608,13 @@ def hit_events(hits: DataFrame, rules: list[RuleIR]) -> DataFrame | None:
 
 
 def resolve_xbits(
-    hits: DataFrame, events: DataFrame, rules: list[RuleIR]
+    hits: DataFrame, events: DataFrame, rules: list[RuleIR], floor: float = float("-inf")
 ) -> tuple[DataFrame, DataFrame]:
     """The verdict step: replay ``events`` through the walk and join each
     hit's verdict onto ``hits``.  Returns ``(hits + xbit_ok, walk
     output)``; ``hits`` gains ``chain_sup_after``/``chain_sup_thr`` when a
-    chain rule carries after/threshold.
+    chain rule carries after/threshold.  ``floor`` bounds the walk's
+    ``cstate`` snapshot (``CorrMachines.snapshot``).
 
     Events shuffle ONCE: every bit of a chain component colocates (the
     gated set and the checks observing it replay in one ordered pass —
@@ -597,7 +638,7 @@ def resolve_xbits(
     else:
         shuffled = events.repartition(_shuffle_partitions(events), "bit_name", "bit_key")
     walk_out = shuffled.sortWithinPartitions("ts_d", "event_key", "seq").mapInPandas(
-        _make_xbit_walk(chain_corr_specs), schema=_XBIT_OUT_SCHEMA
+        _make_xbit_walk(chain_corr_specs, floor), schema=_XBIT_OUT_SCHEMA
     )
     verdicts = walk_out.filter(F.col("kind").isin("verdict", "cflags"))
     # all condition entries of a hit must hold (xbit-mmap.c:181-264);

@@ -392,7 +392,7 @@ class SaganSparkEngine:
             hits = hits.persist()
             hits.count()
 
-        flagged = apply_after_threshold(
+        flagged, _ = apply_after_threshold(
             hits, self.rules, exclude_sids=cond_sids,
             materialize_suppressed=bool(cond_sids),
             isolate_hot=self.config.hot_key_isolation,
@@ -424,7 +424,7 @@ class SaganSparkEngine:
         # they are excluded here and their flags read from the walk
         chain_rules, _ = chain_components(self.rules)
         chain_corr_sids = [r.sid for r in chain_rules if r.after or r.threshold]
-        stage_b_ok = apply_after_threshold(
+        stage_b_ok, _ = apply_after_threshold(
             stage_b_ok,
             [r for r in self.rules if r.sid in cond_sids],
             exclude_sids=chain_corr_sids,

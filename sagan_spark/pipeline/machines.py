@@ -5,8 +5,7 @@ replay.
 Pure Python, no Spark: the Spark functions in ``pipeline/correlate.py``
 and ``streaming/engine.py`` only translate their row formats into calls
 here, so each semantic exists once and the same calls run inside a
-``mapInPandas`` partition walk, an ``applyInPandas(WithState)`` group or a
-unit test on plain pandas frames.
+``mapInPandas`` partition walk or a unit test on plain pandas frames.
 
 Reference semantics (through SURVEY §2):
 
@@ -35,29 +34,42 @@ _NEVER = float("-inf")
 
 
 class CorrMachines:
-    """After/threshold counters for any number of rules.
+    """After/threshold counters for the rules in ``specs`` (sid -> spec,
+    ``correlate._corr_spec_map``).
 
-    State maps a caller-chosen key to ``[count, utime, latest]``: batch
-    replays key by ``(sid, track-key)``, a streaming group state (already
-    one sid) by the bare track key.  ``latest`` is the key's own latest
-    event time in this pass and drives eviction; seeded state has none."""
+    State maps ``(sid, track-key)`` — the reference's (hash, sid) slots
+    (threshold.c:111-113, after.c:108-110) — to ``[count, utime,
+    latest]``, where ``latest`` is the key's own latest event time in this
+    pass; seeded state has none."""
 
-    __slots__ = ("after", "thr")
+    __slots__ = ("specs", "after", "thr", "windows")
 
-    def __init__(self) -> None:
+    def __init__(self, specs: dict) -> None:
+        self.specs = specs
         self.after: dict = {}
         self.thr: dict = {}
+        # how long past its anchor a key's state still matters: its
+        # window, or forever with count 0, where a gap reset alerts
+        # differently from a fresh key (after.c:78 vs :140-144,
+        # threshold.c:148-150)
+        self.windows: dict = {}
+        for sid, spec in specs.items():
+            for machine, limit in (("a", spec["after"]), ("t", spec["threshold"])):
+                if limit is not None:
+                    *_, count, secs = limit
+                    self.windows[(machine, sid)] = secs if count > 0 else float("inf")
 
-    def step(self, spec: dict, t: int, a_key, t_key) -> tuple[bool, bool]:
-        """Advance the machines of rule ``spec`` for one event at
+    def step(self, sid: int, t: int, a_key, t_key) -> tuple[bool, bool]:
+        """Advance the machines of rule ``sid`` for one event at
         epoch-second ``t``; returns (suppressed_after,
         suppressed_threshold)."""
+        spec = self.specs[sid]
         suppressed = False
         if spec["after"] is not None:
             a_count, a_secs = spec["after"]
-            st = self.after.get(a_key)
+            st = self.after.get((sid, a_key))
             if st is None:
-                self.after[a_key] = [1, t, t]
+                self.after[(sid, a_key)] = [1, t, t]
                 suppressed = True  # after.c:78 default true until count > N
             else:
                 st[0] += 1
@@ -74,9 +86,9 @@ class CorrMachines:
         sup_thr = False
         if spec["threshold"] is not None and not suppressed:  # engine.c:1386
             ttype, t_count, t_secs = spec["threshold"]
-            st = self.thr.get(t_key)
+            st = self.thr.get((sid, t_key))
             if st is None:
-                self.thr[t_key] = [1, t, t]
+                self.thr[(sid, t_key)] = [1, t, t]
             else:
                 st[0] += 1
                 if t > st[2]:
@@ -89,23 +101,29 @@ class CorrMachines:
                 sup_thr = t_count < st[0]  # (threshold.c:148-150)
         return suppressed, sup_thr
 
-    def seed(self, machine: str, key, count: int, utime: int) -> None:
-        """Restore one snapshot row (``machine`` is "a" or "t")."""
-        state = self.after if machine == "a" else self.thr
-        state[key] = [int(count), int(utime), _NEVER]
+    def seed(self, machine: str, sid: int, key, count: int, utime: int) -> None:
+        """Restore one snapshot row (``machine`` is "a" or "t"); a row of
+        a rule no longer in ``specs`` is dropped."""
+        if sid in self.specs:
+            state = self.after if machine == "a" else self.thr
+            state[(int(sid), key)] = [int(count), int(utime), _NEVER]
 
-    def snapshot(self, horizon: int):
-        """Yield ``(machine, key, count, utime)`` for every surviving key.
+    def snapshot(self, floor: float = _NEVER):
+        """Yield ``(machine, sid, key, count, utime)`` for every surviving
+        key: one whose anchor is at most its window before
+        ``max(latest, floor)``.
 
-        A key whose anchor is more than ``horizon`` seconds before its OWN
-        latest event would gap-reset on any later event, so dropping it
-        is replay-equivalent.  Keys with no event in this pass keep their
-        seeded state: measuring against another key's (or the group's)
-        latest event would evict a live machine."""
+        ``floor`` is the oldest event time a later pass may still replay
+        (-inf for a one-shot pass; a streaming micro-batch derives it
+        from its watermark).  Any event at or after it finds a dropped
+        key's anchor more than a window old and gap-resets, so dropping
+        is replay-equivalent.  Each key measures against its OWN latest
+        event: another key's (or the group's) would evict a live
+        machine."""
         for machine, state in (("a", self.after), ("t", self.thr)):
-            for key, (count, utime, latest) in state.items():
-                if utime >= latest - horizon:
-                    yield machine, key, count, utime
+            for (sid, key), (count, utime, latest) in state.items():
+                if utime >= max(latest, floor) - self.windows[(machine, sid)]:
+                    yield machine, sid, key, count, utime
 
 
 def _flex_tuple_match(shape: str, stored: tuple, event: tuple) -> bool:
@@ -179,14 +197,13 @@ class XbitWalk:
     with chain verdict gating.
 
     ``chain_specs`` maps a chain rule's sid to its after/threshold spec;
-    its machines are keyed ``(sid, track-key)`` in :attr:`machines`."""
+    :attr:`machines` runs them."""
 
-    __slots__ = ("bits", "machines", "chain_specs", "ver", "flags")
+    __slots__ = ("bits", "machines", "ver", "flags")
 
     def __init__(self, chain_specs: dict | None = None) -> None:
         self.bits = BitStore()
-        self.machines = CorrMachines()
-        self.chain_specs = chain_specs or {}
+        self.machines = CorrMachines(chain_specs or {})
         self.ver: dict = {}  # hit id -> AND of its check verdicts so far
         self.flags: dict = {}  # hit id -> its machines' (after, threshold)
 
@@ -211,13 +228,11 @@ class XbitWalk:
         if not self.ver.get(hit_id, False):
             return False, None
         new_flags = None
-        spec = self.chain_specs.get(sid)  # sid None/NaN: not a chain-corr rule
-        if spec is not None:
+        if sid in self.machines.specs:  # sid None/NaN: not a chain-corr rule
             fl = self.flags.get(hit_id)
             if fl is None:
-                s = int(sid)
                 fl = new_flags = self.flags[hit_id] = self.machines.step(
-                    spec, int(ts), (s, a_key), (s, t_key)
+                    int(sid), int(ts), a_key, t_key
                 )
             if fl[0] or fl[1]:
                 return False, new_flags

@@ -1,8 +1,9 @@
-"""The correlation core (pipeline/machines.py) and its Spark adapters,
-driven on plain pandas frames without Spark: a regression for per-key
-eviction in the seeded streaming replay, and property tests that the
-batch and streaming replays return the same flags over random event
-sequences cut at random micro-batch boundaries."""
+"""The correlation core (pipeline/machines.py) and the ``mapInPandas``
+bodies over it, driven on plain pandas frames without Spark: regressions
+for per-key eviction and the eviction floor of the seeded replay, and
+property tests that each body run as one pass and run per random
+micro-batch cut, carrying its state across the cuts, returns the same
+flags."""
 
 from __future__ import annotations
 
@@ -11,35 +12,36 @@ from hypothesis import given
 from hypothesis import strategies as st
 
 from sagan_spark.pipeline.correlate import (
+    _REPLAY_IN_COLS,
     _XBIT_WALK_COLS,
     _corr_spec_map,
     _make_replay,
     _make_xbit_walk,
-    corr_window_secs,
 )
 from sagan_spark.pipeline.machines import GATED
 from sagan_spark.rules.ir import AfterSpec, RuleIR, ThresholdSpec
-from sagan_spark.streaming.engine import _make_group_replay, _make_seeded_replay
 from tests.oracle import Oracle
 
-_SEEDED_COLS = [
-    "kind", "sid", "corr_group", "event_key", "ts_epoch", "ts_us",
-    "track_after", "track_threshold", "machine", "mkey", "cnt", "utime",
-]
 
-
-def _seeded_input(sid, group, events, snapshot):
-    """'e' rows for ``events`` [(event_key, ts, a_key, t_key)] plus the
-    previous micro-batch's 's' snapshot rows for one (sid, corr_group)."""
+def _replay(specs, events, snapshot=None, floor=float("-inf"), cut=None):
+    """One ``_make_replay`` pass: the previous pass's ``snapshot`` rows as
+    seeds, then ``events`` [(sid, event_key, ts, a_key, t_key)] in the
+    given order, split into Arrow batches by ``cut``.  Returns
+    ({event_key: (suppressed_after, suppressed_threshold)} of the
+    suppressed events, this pass's snapshot rows)."""
     rows = [
-        ("e", sid, group, ek, ts, ts * 1_000_000, ak, tk, "", "", 0, 0)
-        for ek, ts, ak, tk in events
+        ("s", r.sid, None, None, None, None, r.machine, r.mkey, r.cnt, r.utime)
+        for r in (snapshot if snapshot is not None else pd.DataFrame()).itertuples()
     ]
-    rows += [
-        ("s", sid, group, "", 0, 0, "", "", r.machine, r.mkey, r.cnt, r.utime)
-        for r in snapshot.itertuples()
-    ]
-    return pd.DataFrame(rows, columns=_SEEDED_COLS)
+    rows += [("e", sid, ek, ts, ak, tk, None, None, None, None) for sid, ek, ts, ak, tk in events]
+    frame = pd.DataFrame(rows, columns=_REPLAY_IN_COLS)
+    out = pd.concat(list(_make_replay(specs, floor)(iter(cut(frame) if cut else [frame]))))
+    sup = out[out["kind"] == "e"]
+    flags = {
+        ek: (bool(a), bool(t))
+        for ek, a, t in zip(sup["event_key"], sup["suppressed_after"], sup["suppressed_threshold"])
+    }
+    return flags, out[out["kind"] == "s"]
 
 
 def test_seeded_replay_evicts_per_key_not_per_group():
@@ -53,42 +55,37 @@ def test_seeded_replay_evicts_per_key_not_per_group():
         "after_track": ("by_src",),
         "thr_track": ("by_dst",),
     }
-    replay = _make_seeded_replay({7: spec}, 60)
-    out1 = replay(_seeded_input(
-        7, "", [("a1", 100, "a", "x"), ("b1", 1000, "b", "x")], pd.DataFrame()
-    ))
-    snap = out1[out1["kind"] == "s"]
-    out2 = replay(_seeded_input(7, "", [("a2", 130, "a", "x")], snap))
-    flags = out2[out2["kind"] == "e"].set_index("event_key")
-    assert not flags.loc["a2", "suppressed_after"]
-    assert not flags.loc["a2", "suppressed_threshold"]
+    _, snap = _replay({7: spec}, [(7, "a1", 100, "a", "x"), (7, "b1", 1000, "b", "x")])
+    flags, _ = _replay({7: spec}, [(7, "a2", 130, "a", "x")], snap)
+    sup_a, sup_t = flags.get("a2", (False, False))
+    assert not sup_a
+    assert not sup_t
+
+
+def test_snapshot_floor_bounds_the_state():
+    """A key whose anchor is more than its window before the floor leaves
+    the snapshot; one at ``utime >= floor - window`` stays, and so does a
+    count-0 key (a gap reset alerts differently from a fresh key).  An
+    event at the floor then flags as in one pass."""
+    specs = _corr_spec_map([
+        RuleIR(sid=1, threshold=ThresholdSpec("limit", ["by_src"], 1, 60)),
+        RuleIR(sid=2, after=AfterSpec(["by_src"], 0, 60)),
+    ])
+    first = [(1, "a1", 100, "", "a"), (1, "c1", 105, "", "c"), (1, "b1", 200, "", "b"),
+             (2, "z1", 100, "z", "")]
+    floor = 165  # no later event is older
+    _, snap = _replay(specs, first, floor=floor)
+    assert set(zip(snap["sid"], snap["mkey"])) == {(1, "b"), (1, "c"), (2, "z")}
+    later = [(1, "a2", 165, "", "a"), (1, "c2", 165, "", "c"), (2, "z2", 400, "z", "")]
+    seeded, _ = _replay(specs, later, snap, floor=floor)
+    one_pass, _ = _replay(specs, first + later)
+    assert seeded == {k: v for k, v in one_pass.items() if k.endswith("2")}
+    assert seeded == {"c2": (False, True)}
 
 
 # ---------------------------------------------------------------------------
 # batch/stream parity over random event sequences and micro-batch cuts
 # ---------------------------------------------------------------------------
-
-
-class _FakeGroupState:
-    """The slice of pyspark's GroupState the stage-A replay uses."""
-
-    hasTimedOut = False
-
-    def __init__(self):
-        self.get = None
-
-    @property
-    def exists(self):
-        return self.get is not None
-
-    def update(self, value):
-        self.get = value
-
-    def setTimeoutTimestamp(self, ms):
-        pass
-
-    def remove(self):
-        self.get = None
 
 
 _counts = st.integers(0, 3)
@@ -130,10 +127,12 @@ def _cut(items, data):
 def test_after_threshold_adapters_agree(rules, events, data):
     """Events arrive in a random event-time order; each micro-batch is
     replayed in canonical (ts, event_key) order, so events in a later
-    batch can be older than earlier ones.  The one-pass batch replay fed
-    that same arrival order, the GroupState replay and the seeded
-    snapshot replay (state carried across the cuts) and the oracle's
-    machines all agree."""
+    batch can be older than earlier ones.  The one replay body run as
+    one pass over that same arrival order, and run per micro-batch with
+    each cut's snapshot seeding the next, agree with the oracle's
+    machines.  Each cut's floor is the oldest event any later cut
+    holds — the most a watermark could allow — so the snapshots evict
+    every key no later event can tell from a fresh one."""
     by_sid = {r.sid: r for r in rules}
     specs = _corr_spec_map(rules)
     rows = []
@@ -142,61 +141,30 @@ def test_after_threshold_adapters_agree(rules, events, data):
         ext = {"src_ip": src, "dst_ip": dst, "username": "", "src_port": 0, "dst_port": 0}
         a_key = Oracle._track_key(r.after.track, ext) if r.after else ""
         t_key = Oracle._track_key(r.threshold.track, ext) if r.threshold else ""
-        spec = specs[sid]
-        mixed = spec["after"] and spec["threshold"] and spec["after_track"] != spec["thr_track"]
-        group = "" if mixed else (a_key if spec["after"] else t_key)
-        rows.append((f"e{i:03d}", sid, ts, a_key, t_key, group, ext))
-    cuts = [sorted(c, key=lambda r: (r[2], r[0])) for c in _cut(rows, data)]
+        rows.append((sid, f"e{i:03d}", ts, a_key, t_key, ext))
+    cuts = [sorted(c, key=lambda r: (r[2], r[1])) for c in _cut(rows, data)]
     one_pass = [r for c in cuts for r in c]
 
     oracle = Oracle(rules)
     want = {}
-    for ek, sid, ts, _, _, _, ext in one_pass:
+    for sid, ek, ts, _, _, ext in one_pass:
         r = by_sid[sid]
         sup_a = oracle._after(r, ext, ts) if r.after else False
         sup_t = oracle._threshold(r, ext, ts) if r.threshold and not sup_a else False
-        want[ek] = (sup_a, sup_t)
+        if sup_a or sup_t:
+            want[ek] = (sup_a, sup_t)
 
     # batch: one pass, split across arbitrary Arrow batches
-    frame = pd.DataFrame(
-        [(sid, ek, ts, ak, tk, g) for ek, sid, ts, ak, tk, g, _ in one_pass],
-        columns=["sid", "event_key", "ts_epoch", "track_after", "track_threshold", "corr_group"],
-    )
-    batch = {ek: (False, False) for ek in want}
-    for out in _make_replay(specs)(iter(_cut(frame, data))):
-        for ek, sa, sth in zip(out["event_key"], out["suppressed_after"], out["suppressed_threshold"]):
-            batch[ek] = (bool(sa), bool(sth))
+    batch, _ = _replay(specs, [r[:5] for r in one_pass], cut=lambda f: _cut(f, data))
     assert batch == want
 
     # streaming: state snapshotted and seeded at every cut
-    group_replay = _make_group_replay(
-        specs, corr_window_secs(specs), ["event_key", "suppressed_after", "suppressed_threshold"]
-    )
-    seeded_replay = _make_seeded_replay(specs, corr_window_secs(specs))
-    states: dict = {}
-    snaps: dict = {}
-    grouped, seeded = {}, {}
-    for cut in cuts:
-        by_group: dict = {}
-        for ek, sid, ts, ak, tk, g, _ in cut:
-            by_group.setdefault((sid, g), []).append((ek, ts, ak, tk))
-        for key in sorted(set(by_group) | set(snaps)):
-            evs = by_group.get(key, [])
-            if evs:
-                pdf = pd.DataFrame(
-                    [(key[0], key[1], pd.Timestamp(ts, unit="s"), ek, ak, tk) for ek, ts, ak, tk in evs],
-                    columns=["sid", "corr_group", "ts", "event_key", "track_after", "track_threshold"],
-                )
-                state = states.setdefault(key, _FakeGroupState())
-                for out in group_replay(key, iter([pdf]), state):
-                    for ek, sa, sth in out.itertuples(index=False):
-                        grouped[ek] = (bool(sa), bool(sth))
-            out = seeded_replay(_seeded_input(key[0], key[1], evs, snaps.get(key, pd.DataFrame())))
-            for r in out[out["kind"] == "e"].itertuples():
-                seeded[r.event_key] = (bool(r.suppressed_after), bool(r.suppressed_threshold))
-            snaps[key] = out[out["kind"] == "s"]
-    assert grouped == want
-    assert seeded == want
+    streamed, snap = {}, None
+    for i, cut in enumerate(cuts):
+        floor = min((r[2] for c in cuts[i + 1:] for r in c), default=float("inf"))
+        flags, snap = _replay(specs, [r[:5] for r in cut], snap, floor)
+        streamed |= flags
+    assert streamed == want
 
 
 # sid -> (ruleset position, xbit ops); an op is (action, bit, key, shape)

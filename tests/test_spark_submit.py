@@ -77,7 +77,8 @@ def test_spark_submit_py_files_batch_job(tmp_path):
 def test_spark_submit_py_files_stream_job(tmp_path):
     """Same deployment contract for the streaming entry point:
     availableNow drain over a file-source directory, imports from the
-    shipped zip, EVE sink rows out."""
+    shipped zip, EVE sink rows out, and the threshold rule's state
+    snapshot written through Hadoop FS."""
     from sagan_spark.data.pages import generate_pages
 
     (tmp_path / "input").mkdir()
@@ -91,6 +92,9 @@ def test_spark_submit_py_files_stream_job(tmp_path):
     rules.write_text(
         'alert any any any -> any any (msg:"ssh fail"; content:"Failed password"; '
         "parse_src_ip: 1; classtype: unsuccessful-user; sid:9800001; rev:1;)\n"
+        'alert any any any -> any any (msg:"ssh fail burst"; content:"Failed password"; '
+        "parse_src_ip: 1; threshold: type limit, track by_src, count 2, seconds 300; "
+        "classtype: unsuccessful-user; sid:9800002; rev:1;)\n"
     )
 
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -118,6 +122,8 @@ def test_spark_submit_py_files_stream_job(tmp_path):
     eve = pq.read_table(str(tmp_path / "sinks" / "alerts_eve"))
     assert eve.num_rows > 0
     assert "alert_signature_id" in eve.column_names
+    assert 9800002 in eve.column("alert_signature_id").to_pylist()
+    assert (tmp_path / "sinks" / "corr_state_a" / "batch_id=s_0").is_dir()
 
 
 def test_vars_conf_matches_vars_py():
