@@ -322,13 +322,9 @@ def parse_ip_batch(
     )
 
 
-def make_parse_ip_udf(sagan_port: int = DEFAULT_SAGAN_PORT, barrier: bool = True):
-    """pandas UDF: text -> struct<ips: array<struct>, proto: int>.
-
-    ``barrier=False`` for STREAMING plans: stateful streaming operators
-    reject nondeterministic expressions, so the inlining barrier (see
-    below) is batch-only; a micro-batch is small enough that the
-    collapse-induced re-evaluation costs little there."""
+def make_parse_ip_udf(sagan_port: int = DEFAULT_SAGAN_PORT):
+    """pandas UDF: text -> struct<ips: array<struct>, proto: int>;
+    ``sagan_port`` is the port of an address the text gives none for."""
 
     @F.pandas_udf(PARSE_IP_RESULT_TYPE)
     def parse_ip_udf(texts: pd.Series) -> pd.DataFrame:
@@ -340,40 +336,29 @@ def make_parse_ip_udf(sagan_port: int = DEFAULT_SAGAN_PORT, barrier: bool = True
     # candidate filter and the plan evaluates Parse_IP TWICE — once
     # over ALL rows below the filter, once over candidates above it
     # (seen in the physical plan as two ArrowEvalPython nodes).
-    return parse_ip_udf.asNondeterministic() if barrier else parse_ip_udf
+    return parse_ip_udf.asNondeterministic()
 
 
-def make_json_flatten_udf(barrier: bool = True):
-    """pandas UDF factory: text -> map<string,string> of dotted keys
-    (reference src/parsers/json.c:40-134).
+# the def name surfaces in the ArrowEvalPython plan node — keep the
+# json_flatten prefix the plan-shape regression tests key on
+def json_flatten_map(texts: pd.Series) -> pd.Series:
+    """text -> map<string,string> of dotted keys (reference
+    src/parsers/json.c:40-134).
 
     The '{ in first 3 chars' detection gate
     (reference src/processors/engine.c:250-263) runs vectorized so
     non-JSON rows (the vast majority of any log corpus) never enter
-    per-row Python.
-
-    A FACTORY, not two module aliases: ``asNondeterministic()`` mutates
-    the underlying UserDefinedFunction in place, so flagging a shared
-    object would silently make the 'deterministic streaming variant'
-    nondeterministic too.  Each call builds a fresh UDF."""
-
-    # the def name surfaces in the ArrowEvalPython plan node — keep the
-    # json_flatten prefix the plan-shape regression tests key on
-    @F.pandas_udf(T.MapType(T.StringType(), T.StringType()))
-    def json_flatten_map(texts: pd.Series) -> pd.Series:
-        out = pd.Series([{}] * len(texts), index=texts.index, dtype=object)
-        mask = texts.str.slice(0, 3).str.contains("{", regex=False, na=False)
-        if mask.any():
-            out[mask] = texts[mask].map(json_flatten)
-        return out
-
-    # deterministic in fact; the flag is an optimizer barrier so the
-    # flatten column is computed once and carried, not inlined and
-    # re-evaluated above the candidate filter (see make_parse_ip_udf).
-    # Streaming plans take barrier=False (stateful ops reject
-    # nondeterminism).
-    return json_flatten_map.asNondeterministic() if barrier else json_flatten_map
+    per-row Python."""
+    out = pd.Series([{}] * len(texts), index=texts.index, dtype=object)
+    mask = texts.str.slice(0, 3).str.contains("{", regex=False, na=False)
+    if mask.any():
+        out[mask] = texts[mask].map(json_flatten)
+    return out
 
 
-json_flatten_udf = make_json_flatten_udf(barrier=True)
-json_flatten_udf_stream = make_json_flatten_udf(barrier=False)
+# deterministic in fact; the flag is an optimizer barrier so the flatten
+# column is computed once and carried, not inlined and re-evaluated above
+# the candidate filter (see make_parse_ip_udf)
+json_flatten_udf = F.pandas_udf(
+    json_flatten_map, T.MapType(T.StringType(), T.StringType())
+).asNondeterministic()

@@ -26,16 +26,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sagan_spark.functions.udfs import (
-    json_flatten_udf,
-    json_flatten_udf_stream,
-    make_parse_ip_udf,
-)
+from sagan_spark.functions.udfs import json_flatten_udf, make_parse_ip_udf
 from sagan_spark.pipeline.correlate import (
     apply_after_threshold,
     apply_xbits,
     chain_components,
 )
+from sagan_spark.pipeline.enrich import v4_hilo_cols
 from sagan_spark.rules.compiler import EngineConfig, EventCols, RuleCompiler
 from sagan_spark.rules.ir import RuleIR
 
@@ -163,14 +160,14 @@ class SaganSparkEngine:
     def match_hits(
         self,
         frame: DataFrame,
-        repartition: bool = True,
         passthrough: list[str] | None = None,
     ) -> DataFrame:
         """The stateless half of the pipeline: scan -> extract-once ->
         columnar rule fan-out -> pass-rule filter.  Returns one row per
         (event, matched rule) with extracted fields and track keys — no
-        correlation flags yet.  Works on batch AND streaming frames
-        (no persist, no shuffle besides the optional local repartition).
+        correlation flags yet.  Batch and streaming frames get the same
+        plan (no persist, no shuffle besides the local repartition, which
+        a stream skips).
 
         ``passthrough``: event columns to carry on each hit row (default
         the narrow PASSTHROUGH; streaming passes EVENT_COLS because it
@@ -187,10 +184,11 @@ class SaganSparkEngine:
         # few — with files.maxPartitionBytes sized so splits >= cores
         # (session.py) this repartition is normally SKIPPED, saving a
         # corpus-wide exchange of the message strings.  On a real cluster
-        # the Iceberg scan already yields >= parallelism splits.
+        # the Iceberg scan already yields >= parallelism splits.  A stream
+        # has no .rdd to count.
         spark = frame.sparkSession
         target = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        if repartition and not frame.isStreaming and spark.conf.get(
+        if not frame.isStreaming and spark.conf.get(
             "spark.master", ""
         ).startswith("local"):
             if df.rdd.getNumPartitions() < max(2, target // 2):
@@ -205,26 +203,17 @@ class SaganSparkEngine:
         df = df.filter(~ig)
 
         # input-stage JSON detect+flatten (reference engine.c:250-263 runs
-        # this once per event before the rule loop).  Batch uses the
-        # nondeterministic-flagged variant as an inlining barrier
-        # (evaluate-once); streaming must stay deterministic.
-        # BATCH ONLY: the '{ in first 3 bytes' JSON-detect gate runs
-        # JVM-SIDE — rows that cannot be JSON ship a NULL into the UDF
-        # instead of the full message string, so the Arrow boundary
-        # carries only the JSON-looking sliver of the corpus.  In
-        # streaming the gate expressions would be INLINED (no barrier)
-        # into every consumer and the optimizer blows up exponentially,
-        # so the stream ships plain messages (micro-batches are small).
-        gate_args = not frame.isStreaming
-        flatten = json_flatten_udf_stream if frame.isStreaming else json_flatten_udf
+        # this once per event before the rule loop).  The '{ in first 3
+        # bytes' gate runs JVM-SIDE: rows that cannot be JSON ship a NULL
+        # into the UDF instead of the full message string, so the Arrow
+        # boundary carries only the JSON-looking sliver of the corpus.
+        # The UDF's nondeterministic flag is an inlining barrier: the
+        # gate and the flatten evaluate once, not once per consumer.
         if comp.needs_json:
-            if gate_args:
-                json_gate = F.substring(F.col("message"), 1, 3).contains("{")
-                df = df.withColumn(
-                    "_json", flatten(F.when(json_gate, F.col("message")))
-                )
-            else:
-                df = df.withColumn("_json", flatten(F.col("message")))
+            json_gate = F.substring(F.col("message"), 1, 3).contains("{")
+            df = df.withColumn(
+                "_json", json_flatten_udf(F.when(json_gate, F.col("message")))
+            )
 
         # ---- phase 1: cheap predicates for every rule (pure Catalyst) ----
         cheap_cols_ctx = self._event_cols(df, with_extraction=False)
@@ -254,11 +243,7 @@ class SaganSparkEngine:
 
             payload = offload_payload()
             for i, r in offload_rules:
-                off_udf = make_offload_udf(
-                    r.offload,
-                    self.config.offload_poster,
-                    barrier=not frame.isStreaming,
-                )
+                off_udf = make_offload_udf(r.offload, self.config.offload_poster)
                 cand = cand.withColumn(
                     f"_c{i}",
                     F.col(f"_c{i}")
@@ -269,24 +254,18 @@ class SaganSparkEngine:
 
         # ---- phase 2: extraction on candidates only ----
         if comp.needs_parse_ip:
-            parse_ip_udf = make_parse_ip_udf(
-                self.config.sagan_port, barrier=not frame.isStreaming
+            parse_ip_udf = make_parse_ip_udf(self.config.sagan_port)
+            # second-level gate: only rows where a parse_ip-NEEDING rule's
+            # cheap predicate passed ship their message across the Arrow
+            # boundary; everyone else ships NULL (their alert structs
+            # never read _ips)
+            ip_needed = F.lit(False)
+            for i, r in enumerate(self.rules):
+                if r.uses_ip_cache:
+                    ip_needed = ip_needed | F.col(f"_c{i}")
+            cand = cand.withColumn(
+                "_pi", parse_ip_udf(F.when(ip_needed, F.col("message")))
             )
-            # second-level gate (batch only, see gate_args note): only
-            # rows where a parse_ip-NEEDING rule's cheap predicate
-            # passed ship their message across the Arrow boundary;
-            # everyone else ships NULL (their alert structs never read
-            # _ips)
-            if gate_args:
-                ip_needed = F.lit(False)
-                for i, r in enumerate(self.rules):
-                    if r.uses_ip_cache:
-                        ip_needed = ip_needed | F.col(f"_c{i}")
-                cand = cand.withColumn(
-                    "_pi", parse_ip_udf(F.when(ip_needed, F.col("message")))
-                )
-            else:
-                cand = cand.withColumn("_pi", parse_ip_udf(F.col("message")))
             cand = cand.withColumn("_ips", F.col("_pi.ips")).withColumn(
                 "_ip_proto", F.col("_pi.proto")
             ).drop("_pi")
@@ -300,25 +279,15 @@ class SaganSparkEngine:
         # distinct ip source (host fallback + each json_map ip key);
         # every rule's flow/blacklist/geoip bits branch over these plain
         # column refs (compiler._ip_bits) instead of re-parsing inline.
-        # BATCH ONLY: streaming plans have no inlining barrier, and the
-        # extra withColumn substitution LEVEL makes CollapseProject's
-        # per-consumer copies explode — the micro-batch planner burned
-        # minutes of CPU in transformDown and OOM'd.  Streaming falls
-        # back to _ip_bits' inline v4_hilo_cols (one regex + split per
-        # rule side — small, and micro-batches are small).
-        if not frame.isStreaming:
-            from sagan_spark.pipeline.enrich import v4_hilo_cols
-
-            hv_hi, hv_lo = v4_hilo_cols(F.col("host"))
+        hv_hi, hv_lo = v4_hilo_cols(F.col("host"))
+        cand = cand.withColumn(
+            "_hostv4", F.struct(hv_hi.alias("hi"), hv_lo.alias("lo"))
+        )
+        for i, k in enumerate(comp.ip_json_map_keys):  # json_map keys imply _json
+            jh, jl = v4_hilo_cols(F.try_element_at(F.col("_json"), F.lit(k)))
             cand = cand.withColumn(
-                "_hostv4", F.struct(hv_hi.alias("hi"), hv_lo.alias("lo"))
+                f"_jmv4_{i}", F.struct(jh.alias("hi"), jl.alias("lo"))
             )
-            if comp.needs_json:
-                for i, k in enumerate(comp.ip_json_map_keys):
-                    jh, jl = v4_hilo_cols(F.try_element_at(F.col("_json"), F.lit(k)))
-                    cand = cand.withColumn(
-                        f"_jmv4_{i}", F.struct(jh.alias("hi"), jl.alias("lo"))
-                    )
 
         full_ctx = self._event_cols(cand, with_extraction=True)
 

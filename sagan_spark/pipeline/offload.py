@@ -26,8 +26,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: per-executor-process verdict cache: location -> {payload: verdict}.
-#: Guarantees one POST per payload per process and consistent verdicts
-#: across all plan consumers of the gate column (see make_offload_udf).
+#: Guarantees one POST per distinct payload per process (see
+#: make_offload_udf).
 _verdict_cache: dict = {}
 
 
@@ -73,19 +73,16 @@ def urllib_poster(location: str, payloads: list[str]) -> list[bool]:
     return out
 
 
-def make_offload_udf(location: str, poster=None, barrier: bool = True):
+def make_offload_udf(location: str, poster=None):
     """boolean pandas UDF: payload string -> remote verdict (NULL
     payload -> False, never posted).
 
-    ``barrier=True`` (batch) flags the UDF nondeterministic — which it
-    genuinely is (a remote classifier) — so CollapseProject cannot
-    inline it into every consumer and POST the same event repeatedly.
-    Streaming passes False (stateful operators reject the flag), so a
-    micro-batch plan MAY inline the gate column into several consumers;
-    the per-process verdict cache below keeps that safe: each payload
-    is POSTed at most once per executor process and every consumer sees
-    the SAME verdict (no flapping between the routing filter and the
-    assembled alert).  The cache is a documented divergence from the
+    Flagged nondeterministic — which a remote classifier genuinely is —
+    so CollapseProject cannot inline the gate column into every consumer
+    and POST the same event once per consumer.  The per-process verdict
+    cache below deduplicates payloads: each distinct payload is POSTed
+    at most once per executor process, and a repeated payload reuses its
+    first verdict.  The cache is a documented divergence from the
     reference, which POSTs once per event occurrence."""
     post = poster if poster is not None else urllib_poster
     cache_max = 65536
@@ -112,4 +109,4 @@ def make_offload_udf(location: str, poster=None, barrier: bool = True):
             out.at[i] = local[p] if p in local else cache.get(p, False)
         return out
 
-    return offload_udf.asNondeterministic() if barrier else offload_udf
+    return offload_udf.asNondeterministic()

@@ -408,16 +408,27 @@ def sink_suppressions(rules: list[RuleIR]) -> dict[str, list[int]]:
     return out
 
 
-def apply_sink_suppression(view: DataFrame, sink: str,
-                           suppress: dict[str, list[int]] | None) -> DataFrame:
-    sids = (suppress or {}).get(sink)
-    return view.filter(~F.col("sid").isin(sids)) if sids else view
+def sink_views(assembled: DataFrame, rules: list[RuleIR] | None,
+               sinks: list[str] | None = None):
+    """Yield ``(sink, view)`` for each enabled sink (default: every
+    SINK_BUILDERS entry) — the one fan-out batch and streaming share.
+
+    ``rules``: when given, per-sink noalert/noeve suppression applies
+    (reference output.c:88-99 via :func:`sink_suppressions`).  The sink
+    VIEW projects after the suppression filter so the dropped sids never
+    serialize."""
+    suppress = sink_suppressions(rules) if rules else {}
+    for sink in sinks or list(SINK_BUILDERS):
+        sids = suppress.get(sink)
+        kept = assembled.filter(~F.col("sid").isin(sids)) if sids else assembled
+        yield sink, SINK_BUILDERS[sink](kept)
 
 
 def write_sinks(assembled: DataFrame, base_path: str,
                 sinks: list[str] | None = None, fmt: str = "parquet",
                 rules: list[RuleIR] | None = None) -> dict[str, str]:
-    """K7: fan one assembled alert set out to all enabled sink tables.
+    """K7: fan one assembled alert set out to all enabled sink tables
+    (:func:`sink_views`; ``rules`` turns on per-sink suppression).
 
     Each sink is an independent parallel write (vs the reference's
     single-writer mutex, src/output.c:83-108) in OVERWRITE mode — a
@@ -427,23 +438,14 @@ def write_sinks(assembled: DataFrame, base_path: str,
     path-based writer; this sandbox carries no Iceberg jars, so only
     the parquet path is exercised here.
 
-    ``rules``: when given, per-sink noalert/noeve suppression applies
-    (reference output.c:88-99 via :func:`sink_suppressions`).  The
-    sink VIEW projects after the suppression filter so the dropped
-    sids never serialize.
-
     The assembled alert set is materialized once (persist) so the
     parse -> match -> correlate DAG runs a single time regardless of
     sink count — the fan-out itself is cheap projections.
     """
-    suppress = sink_suppressions(rules) if rules else {}
     assembled = assembled.persist()
     try:
         paths = {}
-        for sink in sinks or list(SINK_BUILDERS):
-            view = SINK_BUILDERS[sink](
-                apply_sink_suppression(assembled, sink, suppress)
-            )
+        for sink, view in sink_views(assembled, rules, sinks):
             path = f"{base_path}/{sink}"
             view.write.mode("overwrite").format(fmt).save(path)
             paths[sink] = path

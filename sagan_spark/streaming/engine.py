@@ -6,9 +6,10 @@ mmap'd correlation state that survives restarts because it is a file
 src/ipc.c).  The Spark form:
 
 - source: ``readStream`` over the pages table directory (Iceberg/parquet);
-- stateless match: the exact same compiled plan as batch
-  (:meth:`SaganSparkEngine.match_hits` — pandas UDFs and the columnar
-  rule fan-out are streaming-safe because they are narrow);
+- stateless match: the one plan batch builds too
+  (:meth:`SaganSparkEngine.match_hits` has no streaming branch; the
+  extraction UDFs keep their evaluate-once barrier because no stateful
+  operator sits in the stream plan — correlation runs in foreachBatch);
 - correlation: each ``foreachBatch`` micro-batch runs the batch
   after/threshold step (``correlate.apply_after_threshold``) seeded from
   the previous micro-batch's snapshot store, and writes its own.  A key
@@ -347,6 +348,20 @@ def _replay_micro_batch(
     return flagged.filter(~F.col("suppressed_after") & ~F.col("suppressed_threshold"))
 
 
+def _start_foreach_batch(hits: DataFrame, checkpoint: str, write_batch, available_now: bool):
+    """Start an append-mode ``foreachBatch`` query over ``hits``,
+    checkpointed at ``checkpoint``; ``available_now`` drains what is
+    there and stops."""
+    writer = (
+        hits.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(write_batch)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 class StreamingSaganEngine:
     """Streaming wrapper around the batch-compiled ruleset."""
 
@@ -414,17 +429,9 @@ class StreamingSaganEngine:
         OVERWRITE, so a batch replayed after a mid-write failure
         rewrites its own partition instead of appending duplicates
         (foreachBatch alone is only at-least-once)."""
-        from sagan_spark.pipeline.route import (
-            SINK_BUILDERS,
-            apply_sink_suppression,
-            assemble_alerts,
-            rule_metadata_df,
-            sink_suppressions,
-        )
+        from sagan_spark.pipeline.route import assemble_alerts, rule_metadata_df, sink_views
 
         rules = self.rules
-        sink_names = sinks or list(SINK_BUILDERS)
-        suppress = sink_suppressions(rules)
         bucket_secs = self._bucket_secs()
         # carry the full event columns: a stream cannot re-join its own
         # source at sink time (late materialization is batch-only)
@@ -452,15 +459,8 @@ class StreamingSaganEngine:
                 meta = rule_metadata_df(spark, rules)
                 assembled = assemble_alerts(routed, meta).persist()
                 persisted.append(assembled)
-                for sink in sink_names:
-                    _idempotent_write(
-                        SINK_BUILDERS[sink](
-                            apply_sink_suppression(assembled, sink, suppress)
-                        ),
-                        f"{base_path}/{sink}",
-                        batch_id,
-                        writer_id="a",
-                    )
+                for sink, view in sink_views(assembled, rules, sinks):
+                    _idempotent_write(view, f"{base_path}/{sink}", batch_id, writer_id="a")
                 # setter rules' surviving alerts stage their set/unset
                 # walk events for the chained xbit query (engine.c:
                 # 1415-1427: sets happen only after after/threshold)
@@ -471,14 +471,7 @@ class StreamingSaganEngine:
                 for df in persisted:
                     df.unpersist()
 
-        writer = (
-            hits.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(write_batch)
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return _start_foreach_batch(hits, checkpoint, write_batch, trigger_available_now)
 
     def start_xbit_query(
         self,
@@ -518,18 +511,10 @@ class StreamingSaganEngine:
         check (partition pruning) and sweeps dead buckets afterwards, so
         the store stays bounded by (max expire window + bucket width) of
         live data instead of growing with stream lifetime."""
-        from sagan_spark.pipeline.route import (
-            SINK_BUILDERS,
-            apply_sink_suppression,
-            assemble_alerts,
-            rule_metadata_df,
-            sink_suppressions,
-        )
+        from sagan_spark.pipeline.route import assemble_alerts, rule_metadata_df, sink_views
 
         rules = self.rules
         cond_rules = [r for r in rules if r.sid in self.cond_sids]
-        sink_names = sinks or list(SINK_BUILDERS)
-        suppress = sink_suppressions(rules)
         bucket_secs = self._bucket_secs()
         max_expire = self._max_expire()
         sets_path = f"{base_path}/xbit_sets"
@@ -614,15 +599,8 @@ class StreamingSaganEngine:
                     routed, meta, xbit_condition_sids=self.cond_sids
                 ).persist()
                 persisted.append(assembled)
-                for sink in sink_names:
-                    _idempotent_write(
-                        SINK_BUILDERS[sink](
-                            apply_sink_suppression(assembled, sink, suppress)
-                        ),
-                        f"{base_path}/{sink}",
-                        batch_id,
-                        writer_id="b",
-                    )
+                for sink, view in sink_views(assembled, rules, sinks):
+                    _idempotent_write(view, f"{base_path}/{sink}", batch_id, writer_id="b")
             finally:
                 for df in persisted:
                     df.unpersist()
@@ -641,14 +619,7 @@ class StreamingSaganEngine:
                     min_chk - self._watermark_secs(),
                 )
 
-        writer = (
-            hits.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(write_batch)
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return _start_foreach_batch(hits, checkpoint, write_batch, trigger_available_now)
 
     def run_pipeline_with_xbits(
         self,

@@ -105,11 +105,11 @@ def test_json_flatten_udf_body_raises_no_future_warning():
 
     import pandas as pd
 
-    from sagan_spark.functions.udfs import make_json_flatten_udf
+    from sagan_spark.functions.udfs import json_flatten_udf
 
     texts = pd.Series(['{"a": {"b": 1}}', "plain", None], dtype=object)
     with warnings.catch_warnings():
         warnings.simplefilter("error", FutureWarning)
-        out = make_json_flatten_udf(barrier=False).func(texts)
+        out = json_flatten_udf.func(texts)
     assert out[0][".a.b"] == "1"
     assert list(out[1:]) == [{}, {}]

@@ -6,16 +6,20 @@ Catalyst's CollapseProject inlines deterministic expression columns, so
 without the asNondeterministic barrier on the extraction UDFs the plan
 evaluates Parse_IP over ALL rows below the candidate filter AND again
 over candidates above it — two ArrowEvalPython nodes per UDF instead
-of one."""
+of one.  Batch and streaming build the same match plan, so the barrier
+holds in both modes: the extraction tests check the batch plan and the
+plan of a stage-A micro-batch."""
 
 from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from sagan_spark.pipeline.engine import SaganSparkEngine
 from sagan_spark.rules.parser import parse_rules
+from sagan_spark.streaming import StreamingSaganEngine
 
 RULES = """\
 alert any any any -> any any (msg:"r1"; content:"alpha"; parse_src_ip: 1; sid:9600001;)
@@ -37,20 +41,38 @@ def _frame(spark):
     )
 
 
-def test_each_extraction_udf_evaluates_once(spark):
-    hits = SaganSparkEngine(parse_rules(RULES)).match_hits(_frame(spark))
-    plan = hits._jdf.queryExecution().executedPlan().toString()
+def _match_plan(spark, tmp_path, mode: str) -> str:
+    """Executed plan of RULES' match over ``_frame``: the batch plan, or
+    the last micro-batch plan of a stage-A query reading the same rows
+    back as a stream."""
+    rules = parse_rules(RULES)
+    if mode == "batch":
+        hits = SaganSparkEngine(rules).match_hits(_frame(spark))
+        return hits._jdf.queryExecution().executedPlan().toString()
+    src = str(tmp_path / "events")
+    _frame(spark).write.parquet(src)
+    frame = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    q = StreamingSaganEngine(rules).start_sink_query(
+        frame, str(tmp_path / "sinks"), str(tmp_path / "ckpt"), sinks=["alerts_eve"]
+    )
+    q.awaitTermination(120)
+    return q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("mode", ["batch", "stream"])
+def test_each_extraction_udf_evaluates_once(spark, tmp_path, mode):
+    plan = _match_plan(spark, tmp_path, mode)
     n_parse_ip_nodes = len(re.findall(r"ArrowEvalPython \[[^\]]*parse_ip", plan))
     n_flatten_nodes = len(re.findall(r"ArrowEvalPython \[[^\]]*json_flatten", plan))
     assert n_parse_ip_nodes == 1, f"parse_ip evaluated in {n_parse_ip_nodes} nodes:\n{plan[:2000]}"
     assert n_flatten_nodes == 1, f"json_flatten evaluated in {n_flatten_nodes} nodes"
 
 
-def test_parse_ip_sits_above_cheap_filter(spark):
+@pytest.mark.parametrize("mode", ["batch", "stream"])
+def test_parse_ip_sits_above_cheap_filter(spark, tmp_path, mode):
     """Parse_IP must only see candidate rows: in the plan tree its node
     appears ABOVE (before, in toString order) the literal prefilter."""
-    hits = SaganSparkEngine(parse_rules(RULES)).match_hits(_frame(spark))
-    plan = hits._jdf.queryExecution().executedPlan().toString()
+    plan = _match_plan(spark, tmp_path, mode)
     # toString prints top-down: a node higher in the plan appears
     # earlier.  The CHEAP prefilter is the lowest Contains() in the
     # tree (the alert-struct filter above parse_ip also mentions
