@@ -8,8 +8,8 @@ pages corpus, and prints ONE JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Extra keys report the north-rule metric (end-to-end routed rows/sec)
-and corpus sizes.  Scaling evidence (local[8] vs local[32]) comes from
-tools/bench_scaling.py and is recorded in BASELINE.md.
+and corpus sizes.  Scaling evidence comes from tools/bench_scaling.py:
+the local[1]->local[4] pairs recorded in BASELINE.md.
 """
 
 from __future__ import annotations

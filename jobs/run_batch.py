@@ -128,9 +128,7 @@ def main() -> None:
 
     result = engine.run(frame)
     alerts = result.alerts()
-    cond_sids = [
-        r.sid for r in rules if any(x.action in ("isset", "isnotset") for x in r.xbits)
-    ]
+    cond_sids = [r.sid for r in rules if r.is_condition]
     assembled = assemble_alerts(
         alerts, rule_metadata_df(spark, rules), events=frame,
         xbit_condition_sids=cond_sids,

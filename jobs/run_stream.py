@@ -65,9 +65,7 @@ def main() -> None:
                 variables[k.strip()] = v.strip()
 
     rules = parse_rules(open(args.rules).read(), variables)
-    has_cond = any(
-        x.action in ("isset", "isnotset") for r in rules for x in r.xbits
-    )
+    has_cond = any(r.is_condition for r in rules)
     seng = StreamingSaganEngine(
         rules, watermark=args.watermark, enable_xbits=has_cond
     )

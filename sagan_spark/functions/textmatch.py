@@ -36,6 +36,21 @@ from sagan_spark.rules.ir import (
 _MAXLEN = 1 << 30
 
 
+def any_of(terms) -> Column:
+    """OR of the ``terms`` Columns (False when there are none), built
+    pairwise as a balanced tree of depth ceil(log2 n).  A left-deep
+    ``x = x | term`` chain of ~1,000 terms (one per rule, per ignore-list
+    entry, per intel entry) overflows the JVM stack when Spark builds the
+    plan.  OR is associative, so the grouping changes no result."""
+    terms = list(terms)
+    if not terms:
+        return F.lit(False)
+    while len(terms) > 1:
+        paired = [a | b for a, b in zip(terms[::2], terms[1::2])]
+        terms = paired + terms[len(paired) * 2:]
+    return terms[0]
+
+
 def _slice_like_c(
     msg: Column,
     offset: int,
@@ -96,12 +111,8 @@ def meta_content_predicate(msg: Column, specs: list[MetaContentSpec]) -> Column:
             msg, mspec.offset, mspec.depth, mspec.distance, mspec.within, prev_depth
         )
         hay = F.lower(sliced) if mspec.nocase else sliced
-        if not mspec.literals:
-            any_hit = F.lit(False)
-        elif len(mspec.literals) <= 8:
-            any_hit = F.lit(False)
-            for lit in mspec.literals:
-                any_hit = any_hit | hay.contains(F.lit(lit))
+        if len(mspec.literals) <= 8:
+            any_hit = any_of(hay.contains(F.lit(lit)) for lit in mspec.literals)
         else:
             # one alternation regex: still contains-semantics (rlike = find())
             alt = "|".join(_java_quote(x) for x in mspec.literals)
@@ -161,9 +172,7 @@ def event_id_predicate(
     if not ids:
         return F.lit(True)
     head = F.substring(msg, 1, 9)
-    traditional = F.lit(False)
-    for i in ids:
-        traditional = traditional | head.contains(F.lit(f" {i}: "))
+    traditional = any_of(head.contains(F.lit(f" {i}: ")) for i in ids)
     has_decoded = decoded_event_id.isNotNull() & (decoded_event_id != "")
     return F.when(has_decoded, decoded_event_id.isin(ids)).otherwise(traditional)
 

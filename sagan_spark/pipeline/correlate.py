@@ -180,7 +180,6 @@ def _make_replay(specs: dict[int, dict], floor: float = float("-inf")):
 def apply_after_threshold(
     hits: DataFrame,
     rules: list[RuleIR],
-    exclude_sids: list[int] | None = None,
     materialize_suppressed: bool = False,
     isolate_hot: bool = False,
     seed: DataFrame | None = None,
@@ -200,10 +199,9 @@ def apply_after_threshold(
     never enter Python.  NOTE: `hits` is consumed twice (narrow branch +
     join left side) — the caller persists it.
 
-    ``exclude_sids``: rules whose state must NOT be updated here (xbit
-    condition rules — their after/threshold runs after the condition
-    gate, reference engine.c:999-1024 vs 1373-1389); their rows pass
-    through with false flags.
+    Only ``rules`` correlate: hits of any other sid pass through with
+    false flags (condition rules advance their machines after the
+    condition gate, :func:`gate_after_threshold`).
 
     ``seed``: an earlier pass's snapshot rows (:data:`CORR_STATE_COLS`)
     that this pass continues — a streaming micro-batch passes the
@@ -213,8 +211,6 @@ def apply_after_threshold(
     Returns ``(hits + flags, replay output)``; the output's ``s`` rows
     are this pass's snapshot (None when no rule correlates)."""
     specs = _corr_spec_map(rules)
-    for s in exclude_sids or []:
-        specs.pop(s, None)
     if not specs:
         return hits.withColumn("suppressed_after", F.lit(False)).withColumn(
             "suppressed_threshold", F.lit(False)
@@ -361,11 +357,9 @@ def chain_components(rules: list[RuleIR]) -> tuple[list[RuleIR], dict[str, str]]
     only for condition-passing events (engine.c:1370-1389) and the same
     machine verdict gates both the alert and the set
     (engine.c:1402-1427)."""
-    cond_rules = [
-        r for r in rules if any(x.action in ("isset", "isnotset") for x in r.xbits)
-    ]
     chain_rules = [
-        r for r in cond_rules if any(x.action in ("set", "unset") for x in r.xbits)
+        r for r in rules
+        if r.is_condition and any(x.action in ("set", "unset") for x in r.xbits)
     ]
     parent: dict[str, str] = {}
 
@@ -612,8 +606,10 @@ def resolve_xbits(
 ) -> tuple[DataFrame, DataFrame]:
     """The verdict step: replay ``events`` through the walk and join each
     hit's verdict onto ``hits``.  Returns ``(hits + xbit_ok, walk
-    output)``; ``hits`` gains ``chain_sup_after``/``chain_sup_thr`` when a
-    chain rule carries after/threshold.  ``floor`` bounds the walk's
+    output)``; ``hits`` also gains ``chain_sup_after``/``chain_sup_thr``
+    when a chain rule carries after/threshold, which
+    :func:`gate_after_threshold` consumes — batch ``run()`` and stream
+    stage B pass this output straight to it.  ``floor`` bounds the walk's
     ``cstate`` snapshot (``CorrMachines.snapshot``).
 
     Events shuffle ONCE: every bit of a chain component colocates (the
@@ -621,7 +617,7 @@ def resolve_xbits(
     the reference serializes the whole store, one component per task is
     still strictly more parallel), other bits spread per (bit, key);
     funnel flexbits carry an empty key, so they colocate per bit name."""
-    cond_rules = [r for r in rules if any(x.action in ("isset", "isnotset") for x in r.xbits)]
+    cond_rules = [r for r in rules if r.is_condition]
     chain_rules, chain_members = chain_components(rules)
     chain_corr_specs = _corr_spec_map(chain_rules)
     if chain_members:
@@ -680,26 +676,48 @@ def resolve_xbits(
     return joined.drop("hit_id"), walk_out
 
 
-def apply_xbits(
-    hits: DataFrame,
+def gate_after_threshold(
+    gated: DataFrame,
     rules: list[RuleIR],
-    survived: DataFrame | None = None,
-) -> DataFrame:
-    """Evaluate isset/isnotset conditions for rules that carry them.
+    seed: DataFrame | None = None,
+    floor: float = float("-inf"),
+) -> tuple[DataFrame, DataFrame | None]:
+    """The condition gate's after/threshold step: every condition hit of
+    ``gated`` (:func:`resolve_xbits` output) gets its final
+    suppressed_after / suppressed_threshold.
 
-    ``hits``: candidate hits of condition rules (pre-routing).
-    ``survived``: alerts (post after/threshold) of setter rules — the only
-    events allowed to set/unset bits (reference engine.c:1415-1427).
+    - a non-chain condition rule advances its machines over
+      condition-PASSING hits only (engine.c:999-1024 vs 1373-1389):
+      :func:`apply_after_threshold`, continuing ``seed`` up to ``floor``;
+    - a chain rule takes its flags from the walk's ``chain_sup_*``
+      columns, which this step consumes: one machine verdict gates both
+      the alert and the set (engine.c:1402-1427);
+    - a failing hit is never suppressed.
 
-    Returns hits with an ``xbit_ok`` boolean (plus the chain flags, see
-    :func:`resolve_xbits`).  Exact event-time replay (machines.XbitWalk):
-    set/unset/check events sorted on (ts, event_key, rule position,
-    check-before-set).
-    """
-    events = hit_events(hits, rules)
-    if events is None:
-        return hits.withColumn("xbit_ok", F.lit(True))
-    sets = setter_events(survived if survived is not None else hits, rules)
-    if sets is not None:
-        events = events.unionByName(sets)
-    return resolve_xbits(hits, events, rules)[0]
+    Returns ``(gated + flags, replay output)``, as apply_after_threshold."""
+    chain_rules, _ = chain_components(rules)
+    chain_corr_sids = [r.sid for r in chain_rules if r.after or r.threshold]
+    passing, replayed = apply_after_threshold(
+        gated.filter(F.col("xbit_ok")),
+        [r for r in rules if r.is_condition and r.sid not in chain_corr_sids],
+        seed=seed,
+        floor=floor,
+    )
+    failing = gated.filter(~F.col("xbit_ok"))
+    failing = failing.withColumn("suppressed_after", F.lit(False)).withColumn(
+        "suppressed_threshold", F.lit(False)
+    )
+    if chain_corr_sids:
+        in_chain = F.col("sid").isin(chain_corr_sids)
+        passing = passing.withColumn(
+            "suppressed_after",
+            F.when(in_chain, F.col("chain_sup_after")).otherwise(F.col("suppressed_after")),
+        ).withColumn(
+            "suppressed_threshold",
+            F.when(in_chain, F.col("chain_sup_thr")).otherwise(
+                F.col("suppressed_threshold")
+            ),
+        )
+        passing = passing.drop("chain_sup_after", "chain_sup_thr")
+        failing = failing.drop("chain_sup_after", "chain_sup_thr")
+    return passing.unionByName(failing), replayed

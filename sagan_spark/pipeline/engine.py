@@ -26,11 +26,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sagan_spark.functions.textmatch import any_of
 from sagan_spark.functions.udfs import json_flatten_udf, make_parse_ip_udf
 from sagan_spark.pipeline.correlate import (
     apply_after_threshold,
-    apply_xbits,
-    chain_components,
+    gate_after_threshold,
+    hit_events,
+    resolve_xbits,
+    setter_events,
 )
 from sagan_spark.pipeline.enrich import v4_hilo_cols
 from sagan_spark.rules.compiler import EngineConfig, EventCols, RuleCompiler
@@ -225,10 +228,7 @@ class SaganSparkEngine:
             cheap_names.append(name)
         df = df.select(*proj)
 
-        any_cheap = F.lit(False)
-        for name in cheap_names:
-            any_cheap = any_cheap | F.col(name)
-        cand = df.filter(any_cheap)
+        cand = df.filter(any_of(F.col(name) for name in cheap_names))
 
         # ---- offload gate (reference src/offload.c, engine.c:772-786):
         # for rules carrying `offload:`, POST the event to the remote
@@ -259,10 +259,9 @@ class SaganSparkEngine:
             # cheap predicate passed ship their message across the Arrow
             # boundary; everyone else ships NULL (their alert structs
             # never read _ips)
-            ip_needed = F.lit(False)
-            for i, r in enumerate(self.rules):
-                if r.uses_ip_cache:
-                    ip_needed = ip_needed | F.col(f"_c{i}")
+            ip_needed = any_of(
+                F.col(f"_c{i}") for i, r in enumerate(self.rules) if r.uses_ip_cache
+            )
             cand = cand.withColumn(
                 "_pi", parse_ip_udf(F.when(ip_needed, F.col("message")))
             )
@@ -350,19 +349,17 @@ class SaganSparkEngine:
         # memory and materialized EAGERLY — persist alone is not enough
         # because Spark submits downstream shuffle stages concurrently
         # and they race to compute an uncached parent.
-        # xbit condition rules are excluded from the first pass: their
+        # xbit condition rules sit out the first pass: their
         # after/threshold state only advances after the condition gate
         # (engine.c:999-1024 vs 1373-1389).
-        cond_sids = [
-            r.sid for r in self.rules if any(x.action in ("isset", "isnotset") for x in r.xbits)
-        ]
+        cond_sids = [r.sid for r in self.rules if r.is_condition]
         has_corr = any(r.after or r.threshold for r in self.rules)
         if has_corr or cond_sids:
             hits = hits.persist()
             hits.count()
 
         flagged, _ = apply_after_threshold(
-            hits, self.rules, exclude_sids=cond_sids,
+            hits, [r for r in self.rules if not r.is_condition],
             materialize_suppressed=bool(cond_sids),
             isolate_hot=self.config.hot_key_isolation,
         )
@@ -372,57 +369,30 @@ class SaganSparkEngine:
                 hits=self._with_noalert(flagged.withColumn("xbit_ok", F.lit(True)))
             )
 
+        # ---- condition gate: the walk, then after/threshold ----
         stage_a = flagged.filter(~F.col("sid").isin(cond_sids)).withColumn(
             "xbit_ok", F.lit(True)
-        )
-        survived_a = stage_a.filter(
-            ~F.col("suppressed_after") & ~F.col("suppressed_threshold")
         )
         stage_b = flagged.filter(F.col("sid").isin(cond_sids)).drop(
             "suppressed_after", "suppressed_threshold"
         )
-        stage_b = apply_xbits(stage_b, self.rules, survived=survived_a)
-        # stage B fans into ok/no branches and the second correlation pass
-        # reads it twice — pin the (small) post-condition set eagerly
-        stage_b = stage_b.persist()
-        stage_b.count()
-        stage_b_ok = stage_b.filter(F.col("xbit_ok"))
-        # chain rules (condition + set) with after/threshold: their
-        # counters already ran inside the walk — one machine instance
-        # gates both the alert and the set (engine.c:1370-1427) — so
-        # they are excluded here and their flags read from the walk
-        chain_rules, _ = chain_components(self.rules)
-        chain_corr_sids = [r.sid for r in chain_rules if r.after or r.threshold]
-        stage_b_ok, _ = apply_after_threshold(
-            stage_b_ok,
-            [r for r in self.rules if r.sid in cond_sids],
-            exclude_sids=chain_corr_sids,
+        # only setter hits that survived after/threshold set or unset
+        # bits (engine.c:1415-1427)
+        survived_a = stage_a.filter(
+            ~F.col("suppressed_after") & ~F.col("suppressed_threshold")
         )
-        stage_b_no = (
-            stage_b.filter(~F.col("xbit_ok"))
-            .withColumn("suppressed_after", F.lit(False))
-            .withColumn("suppressed_threshold", F.lit(False))
-        )
-        if chain_corr_sids:
-            in_chain = F.col("sid").isin(chain_corr_sids)
-            stage_b_ok = (
-                stage_b_ok.withColumn(
-                    "suppressed_after",
-                    F.when(in_chain, F.col("chain_sup_after")).otherwise(
-                        F.col("suppressed_after")
-                    ),
-                )
-                .withColumn(
-                    "suppressed_threshold",
-                    F.when(in_chain, F.col("chain_sup_thr")).otherwise(
-                        F.col("suppressed_threshold")
-                    ),
-                )
-                .drop("chain_sup_after", "chain_sup_thr")
-            )
-            stage_b_no = stage_b_no.drop("chain_sup_after", "chain_sup_thr")
-        all_hits = stage_a.unionByName(stage_b_ok).unionByName(stage_b_no)
-        return EngineResult(hits=self._with_noalert(all_hits))
+        events = hit_events(stage_b, self.rules)
+        sets = setter_events(survived_a, self.rules)
+        if sets is not None:
+            events = events.unionByName(sets)
+        gated, _ = resolve_xbits(stage_b, events, self.rules)
+        # the post-condition set fans into passing/failing branches and
+        # the second correlation pass reads it twice — pin it (small)
+        # eagerly
+        gated = gated.persist()
+        gated.count()
+        stage_b, _ = gate_after_threshold(gated, self.rules)
+        return EngineResult(hits=self._with_noalert(stage_a.unionByName(stage_b)))
 
     def run_with_dynamic_rules(
         self, frame: DataFrame, loader=None

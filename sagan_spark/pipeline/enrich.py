@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sagan_spark.functions.extract import int_to_biased_hilo, ip_to_int
+from sagan_spark.functions.textmatch import any_of
 
 
 # ---------------------------------------------------------------------------
@@ -171,12 +172,7 @@ def in_set(value: Column, entries: list[str], nocase: bool = False) -> Column:
 def substring_set_hit(message: Column, entries: list[str]) -> Column:
     """J2 substring-type probe (DOMAIN/URL/SOFTWARE intel scan the whole
     message, reference zeek-intel.c:507-800)."""
-    if not entries:
-        return F.lit(False)
-    hit = F.lit(False)
-    for e in entries:
-        hit = hit | message.contains(F.lit(e))
-    return hit
+    return any_of(message.contains(F.lit(e)) for e in entries)
 
 
 def proto_probe_col(col: Column, keyword_to_proto: dict[str, int]) -> Column:

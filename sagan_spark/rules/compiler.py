@@ -186,13 +186,13 @@ def _json_predicates(r: RuleIR, cols: EventCols) -> Column:
         v = F.try_element_at(cols.json, F.lit(jm.key))
         val = _b64_decode(v) if r.json_decode_base64_meta else v
         hay = F.lower(val) if jm.nocase else val
-        any_hit = F.lit(False)
-        for lit in jm.literals:
-            # default strcmp EQUALITY; json_meta_contains -> substring
-            # (reference Search_Case src/search-type.c:39-67 via
-            # src/json-meta-content.c:146, flag src/rules.c:2285-2295)
-            hit = hay.contains(F.lit(lit)) if jm.strstr else (hay == F.lit(lit))
-            any_hit = any_hit | hit
+        # default strcmp EQUALITY; json_meta_contains -> substring
+        # (reference Search_Case src/search-type.c:39-67 via
+        # src/json-meta-content.c:146, flag src/rules.c:2285-2295)
+        any_hit = tm.any_of(
+            hay.contains(F.lit(lit)) if jm.strstr else (hay == F.lit(lit))
+            for lit in jm.literals
+        )
         m = ~any_hit if jm.negated else any_hit
         pred = pred & v.isNotNull() & F.coalesce(m, F.lit(False))
     return pred
@@ -215,10 +215,7 @@ def _cidr_group_predicate(hi: Column, lo: Column, groups: list[CidrGroup]) -> Co
     pred = F.lit(True)
     positives = [g for g in groups if not g.negated]
     if positives:
-        any_pos = F.lit(False)
-        for g in positives:
-            any_pos = any_pos | in_range(g)
-        pred = pred & any_pos
+        pred = pred & tm.any_of(in_range(g) for g in positives)
     for g in groups:
         if g.negated:
             pred = pred & ~F.coalesce(in_range(g), F.lit(False))
@@ -229,10 +226,7 @@ def _port_group_predicate(port: Column, groups: list[PortGroup]) -> Column:
     pred = F.lit(True)
     positives = [g for g in groups if not g.negated]
     if positives:
-        any_pos = F.lit(False)
-        for g in positives:
-            any_pos = any_pos | port.between(g.lo, g.hi)
-        pred = pred & any_pos
+        pred = pred & tm.any_of(port.between(g.lo, g.hi) for g in positives)
     for g in groups:
         if g.negated:
             pred = pred & ~F.coalesce(port.between(g.lo, g.hi), F.lit(False))
@@ -585,15 +579,15 @@ class RuleCompiler:
         pred = F.lit(True)
         if r.blacklist:
             ranges = self._compiled_blacklist()
-            hit = F.lit(False)
+            hits = []
             for mode in r.blacklist:
                 if mode == "by_src":
-                    hit = hit | in_ranges(ext["src_hi"], ext["src_lo"], ranges)
+                    hits.append(in_ranges(ext["src_hi"], ext["src_lo"], ranges))
                 elif mode == "by_dst":
-                    hit = hit | in_ranges(ext["dst_hi"], ext["dst_lo"], ranges)
+                    hits.append(in_ranges(ext["dst_hi"], ext["dst_lo"], ranges))
                 elif mode == "all" and cols.ips is not None:
-                    hit = hit | any_parsed_ip_in_ranges(cols.ips, ranges)
-            pred = pred & hit
+                    hits.append(any_parsed_ip_in_ranges(cols.ips, ranges))
+            pred = pred & tm.any_of(hits)
         for itype in r.zeek_intel:
             entries = self.config.intel_sets.get(itype, [])
             if itype == "src_ipaddr":
@@ -609,10 +603,9 @@ class RuleCompiler:
                     F.lit(False),
                 )
             elif itype == "file_hash":
-                hset = F.lit(False)
-                for h in ("md5", "sha1", "sha256"):
-                    hset = hset | in_set(ext[h], entries, nocase=True)
-                pred = pred & hset
+                pred = pred & tm.any_of(
+                    in_set(ext[h], entries, nocase=True) for h in ("md5", "sha1", "sha256")
+                )
             else:  # domain / url / user_name / software / ... substring scan
                 pred = pred & substring_set_hit(cols.message, entries)
         if r.bluedot is not None:
@@ -646,24 +639,23 @@ class RuleCompiler:
         if not wanted:
             return F.lit(False)
         if bd.btype == "ip_reputation":
-            hit = F.lit(False)
+            hits = []
             if bd.track in ("by_src", "both"):
-                hit = hit | in_set(ext["src_ip"], wanted)
+                hits.append(in_set(ext["src_ip"], wanted))
             if bd.track in ("by_dst", "both"):
-                hit = hit | in_set(ext["dst_ip"], wanted)
+                hits.append(in_set(ext["dst_ip"], wanted))
             if bd.track == "all" and cols.ips is not None:
-                hit = hit | F.coalesce(
+                hits.append(F.coalesce(
                     F.exists(cols.ips, lambda h: h.getField("ip").isin(wanted)),
                     F.lit(False),
-                )
+                ))
             elif bd.track == "all":
-                hit = hit | in_set(ext["src_ip"], wanted) | in_set(ext["dst_ip"], wanted)
-            return hit
+                hits += [in_set(ext["src_ip"], wanted), in_set(ext["dst_ip"], wanted)]
+            return tm.any_of(hits)
         if bd.btype == "file_hash":
-            hit = F.lit(False)
-            for h in ("md5", "sha1", "sha256"):
-                hit = hit | in_set(ext[h], wanted, nocase=True)
-            return hit
+            return tm.any_of(
+                in_set(ext[h], wanted, nocase=True) for h in ("md5", "sha1", "sha256")
+            )
         # url / filename / ja3: the canonical frame carries no dedicated
         # column — substring scan of the message, like the J2 fallback
         return substring_set_hit(cols.message, wanted)
@@ -746,9 +738,4 @@ class RuleCompiler:
     def ignore_predicate(self, message: Column) -> Column:
         """F14 ignore-list pre-drop (reference src/ignore.c:31-50):
         drop the line when ANY listed substring occurs."""
-        if not self.config.ignore_list:
-            return F.lit(False)
-        hit = F.lit(False)
-        for s in self.config.ignore_list:
-            hit = hit | message.contains(F.lit(s))
-        return hit
+        return tm.any_of(message.contains(F.lit(s)) for s in self.config.ignore_list)

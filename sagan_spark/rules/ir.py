@@ -362,6 +362,12 @@ class RuleIR:
         )
 
     @property
+    def is_condition(self) -> bool:
+        """True when the rule carries an xbit/flexbit isset or isnotset:
+        a condition rule, routed only when every condition holds."""
+        return any(x.action in ("isset", "isnotset") for x in self.xbits)
+
+    @property
     def needs_json(self) -> bool:
         return bool(
             self.json_contents

@@ -33,12 +33,14 @@ into a time-bucketed store.  Stage B resolves every condition rule through
 the batch walk (``correlate.resolve_xbits``): each micro-batch replays its
 checks and chain ops together with the staged events and the chain
 machines' seeds in one ordered pass, and stages the chain sets that fired
-for later micro-batches.  after/threshold ON a non-chain condition rule
-also runs in stage B, on condition-PASSING rows only (engine.c:999-1024 vs
-1373-1389), through the same seeded step as stage A.  Each snapshot
-store keeps the ``batch_id=s_<N>`` partitions of the last two
-micro-batches, so a retry of micro-batch N re-reads N-1's.  No
-batch-only rule combinations remain.
+for later micro-batches.  Its verdicts then pass batch ``run()``'s
+condition gate (``correlate.gate_after_threshold``: after/threshold over
+condition-PASSING rows only, engine.c:999-1024 vs 1373-1389; the walk's
+flags for chain rules), seeded and snapshotted by the same micro-batch
+wrapper as stage A's step.  Each snapshot store keeps the
+``batch_id=s_<N>`` partitions of the last two micro-batches, so a retry
+of micro-batch N re-reads N-1's.  No batch-only rule combinations
+remain.
 """
 
 from __future__ import annotations
@@ -53,6 +55,7 @@ from sagan_spark.pipeline.correlate import (
     _corr_spec_map,
     apply_after_threshold,
     chain_components,
+    gate_after_threshold,
     hit_events,
     resolve_xbits,
     setter_events,
@@ -320,22 +323,18 @@ def _replay_micro_batch(
     batch_id: int,
     lateness: float,
     persisted: list,
-    exclude_sids: list[int] | None = None,
+    step,
 ) -> DataFrame:
-    """One micro-batch of after/threshold: the batch step, seeded from the
-    previous snapshot in ``state_path``, writing this batch's snapshot
-    there with the :func:`_snapshot_floor` of that seed.  Returns the rows
-    of ``hits`` that neither machine suppressed.  The replay output is
-    cached once (the snapshot write and the flags both read it) and goes
-    on ``persisted`` for the caller to release."""
+    """One micro-batch of after/threshold: the batch ``step``
+    (``correlate.apply_after_threshold``, or the condition gate
+    ``correlate.gate_after_threshold``) seeded from the previous snapshot
+    in ``state_path``, writing this batch's snapshot there with the
+    :func:`_snapshot_floor` of that seed.  Returns the rows of ``hits``
+    that neither machine suppressed.  The replay output is cached once
+    (the snapshot write and the flags both read it) and goes on
+    ``persisted`` for the caller to release."""
     seed = _read_prev_corr_state(spark, state_path, batch_id)
-    flagged, replayed = apply_after_threshold(
-        hits,
-        rules,
-        exclude_sids=exclude_sids,
-        seed=seed,
-        floor=_snapshot_floor(seed, lateness),
-    )
+    flagged, replayed = step(hits, rules, seed=seed, floor=_snapshot_floor(seed, lateness))
     if replayed is not None:
         replayed = replayed.persist()
         persisted.append(replayed)
@@ -372,9 +371,7 @@ class StreamingSaganEngine:
         watermark: str = "10 minutes",
         enable_xbits: bool = False,
     ):
-        self.cond_sids = [
-            r.sid for r in rules if any(x.action in ("isset", "isnotset") for x in r.xbits)
-        ]
+        self.cond_sids = [r.sid for r in rules if r.is_condition]
         if self.cond_sids and not enable_xbits:
             raise NotImplementedError(
                 f"sids {self.cond_sids}: xbit conditions need the chained "
@@ -432,6 +429,9 @@ class StreamingSaganEngine:
         from sagan_spark.pipeline.route import assemble_alerts, rule_metadata_df, sink_views
 
         rules = self.rules
+        # condition rules' after/threshold runs AFTER the xbit gate, in
+        # stage B (engine.c:999-1024 vs 1373-1389)
+        plain_rules = [r for r in rules if not r.is_condition]
         bucket_secs = self._bucket_secs()
         # carry the full event columns: a stream cannot re-join its own
         # source at sink time (late materialization is batch-only)
@@ -450,11 +450,9 @@ class StreamingSaganEngine:
                 # (the reference sets bits before the Send_Alert gate,
                 # engine.c:1415-1436) — the whole-alert drop happens per
                 # sink via route.sink_suppressions
-                # condition rules' after/threshold runs AFTER the xbit
-                # gate, in stage B (engine.c:999-1024 vs 1373-1389)
                 routed = _replay_micro_batch(
-                    spark, cached, rules, f"{base_path}/corr_state_a", batch_id,
-                    self._watermark_secs(), persisted, exclude_sids=self.cond_sids,
+                    spark, cached, plain_rules, f"{base_path}/corr_state_a", batch_id,
+                    self._watermark_secs(), persisted, apply_after_threshold,
                 )
                 meta = rule_metadata_df(spark, rules)
                 assembled = assemble_alerts(routed, meta).persist()
@@ -497,9 +495,10 @@ class StreamingSaganEngine:
           snapshot.
 
         The walk's fired chain ops and its ``cstate`` snapshot persist for
-        the next micro-batch.  after/threshold on a non-chain condition
-        rule then runs on condition-PASSING rows only (engine.c:999-1024
-        vs 1373-1389), through stage A's seeded step on ``corr_state_b``.
+        the next micro-batch.  The verdicts then pass the step batch
+        ``run()`` calls too, ``correlate.gate_after_threshold``, seeded from
+        and snapshotted to ``corr_state_b`` like stage A's step: a
+        condition-failing or suppressed hit is not routed.
 
         Cross-query propagation is drain-ordered: with availableNow run
         stage A to completion first (sets staged), then stage B — exact
@@ -514,7 +513,6 @@ class StreamingSaganEngine:
         from sagan_spark.pipeline.route import assemble_alerts, rule_metadata_df, sink_views
 
         rules = self.rules
-        cond_rules = [r for r in rules if r.sid in self.cond_sids]
         bucket_secs = self._bucket_secs()
         max_expire = self._max_expire()
         sets_path = f"{base_path}/xbit_sets"
@@ -578,22 +576,11 @@ class StreamingSaganEngine:
                         chain_state_path,
                         batch_id,
                     )
-                    # a suppressed chain hit neither alerts nor sets
-                    # (engine.c:1402-1427)
-                    flagged = flagged.filter(
-                        ~F.col("chain_sup_after") & ~F.col("chain_sup_thr")
-                    )
-                routed = flagged.filter(F.col("xbit_ok")).drop(
-                    "xbit_ok", "chain_sup_after", "chain_sup_thr"
-                )
-
-                # chain rules' machines ran inside the walk; this serves
-                # the other condition rules, on condition-PASSING rows
-                # only (engine.c:1373-1389)
+                # the batch condition gate, seeded from corr_state_b
                 routed = _replay_micro_batch(
-                    spark, routed, cond_rules, f"{base_path}/corr_state_b", batch_id,
-                    self._watermark_secs(), persisted, exclude_sids=list(chain_corr_specs),
-                )
+                    spark, flagged, rules, f"{base_path}/corr_state_b", batch_id,
+                    self._watermark_secs(), persisted, gate_after_threshold,
+                ).filter(F.col("xbit_ok")).drop("xbit_ok")
                 meta = rule_metadata_df(spark, rules)
                 assembled = assemble_alerts(
                     routed, meta, xbit_condition_sids=self.cond_sids

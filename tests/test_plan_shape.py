@@ -577,3 +577,29 @@ def test_web_ingest_single_codegen_projection(spark):
     assert "Exchange" not in plan, "shuffle in the ingest projection"
     assert "EvalPython" not in plan, "Python node"
     assert "*(1)" in plan, f"fell out of codegen:\n{plan[:800]}"
+
+
+def test_thousand_entry_ignore_list_builds_and_routes(spark):
+    """F14 with a 1,000-entry ignore list: the OR over the entries is a
+    balanced tree, so the match plan builds (a left-deep chain of that
+    length overflowed the JVM stack in ``df.filter``) and the pre-drop
+    still removes exactly the line carrying a listed substring."""
+    from sagan_spark.rules.compiler import EngineConfig
+
+    df = spark.createDataFrame(
+        [
+            ("keep", "2026-01-01 00:00:01", "alpha from 10.0.0.1 to 10.0.0.2"),
+            ("drop", "2026-01-01 00:00:02", "alpha noise-0999 from 10.0.0.3"),
+        ],
+        "event_key string, ts string, message string",
+    )
+    frame = df.select(
+        "event_key", F.col("ts").cast("timestamp").alias("ts"),
+        F.lit("h").alias("host"), F.lit("p").alias("program"),
+        F.lit("").alias("facility"), F.lit("").alias("level"),
+        F.lit("").alias("tag"), F.lit("").alias("priority"), "message",
+    )
+    config = EngineConfig(ignore_list=[f"noise-{i:04d}" for i in range(1000)])
+    hits = SaganSparkEngine(parse_rules(RULES), config).match_hits(frame)
+    got = {(r.event_key, r.sid, r.src_ip) for r in hits.collect()}
+    assert got == {("keep", 9600001, "10.0.0.1")}
