@@ -150,6 +150,7 @@ def main() -> None:
         # committed, making a same-run-id retry a no-op
         marker = spark.createDataFrame([(args.run_id,)], "run_id string")
         marker.write.mode("append").format(args.format).save(f"{args.metrics}/runs")
+    result.release()
 
     print({"run_id": args.run_id, "sinks": paths})
     spark.stop()

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from sagan_spark.pipeline.machines import GATED, CorrMachines, XbitWalk
 from sagan_spark.rules.ir import RuleIR
+from sagan_spark.session import materialize
 
 FLAG_FIELDS = ["suppressed_after", "suppressed_threshold"]
 
@@ -180,7 +181,7 @@ def _make_replay(specs: dict[int, dict], floor: float = float("-inf")):
 def apply_after_threshold(
     hits: DataFrame,
     rules: list[RuleIR],
-    materialize_suppressed: bool = False,
+    pins: list[DataFrame] | None = None,
     isolate_hot: bool = False,
     seed: DataFrame | None = None,
     floor: float = float("-inf"),
@@ -197,7 +198,11 @@ def apply_after_threshold(
     back onto the full hit rows (AQE broadcasts the suppressed side when
     small), besides its snapshot.  The wide hit columns
     never enter Python.  NOTE: `hits` is consumed twice (narrow branch +
-    join left side) — the caller persists it.
+    join left side) — the caller materializes it.
+
+    ``pins``: when given, the suppressed set is materialized
+    (``session.materialize``) and appended for the caller to release —
+    for callers whose result fans out.
 
     Only ``rules`` correlate: hits of any other sid pass through with
     false flags (condition rules advance their machines after the
@@ -268,12 +273,12 @@ def apply_after_threshold(
     suppressed = replayed.filter(F.col("kind") == "e").select(
         "event_key", "sid", "suppressed_after", "suppressed_threshold"
     )
-    if materialize_suppressed:
+    if pins is not None:
         # the result fans out downstream (xbit branches): pin the tiny
         # suppressed set so each branch's join reuses it instead of
         # re-running the replay shuffle
-        suppressed = suppressed.persist()
-        suppressed.count()
+        suppressed = materialize(suppressed, "suppressed")
+        pins.append(suppressed)
 
     joined = hits.join(suppressed, ["event_key", "sid"], "left")
     return joined.withColumn(

@@ -21,7 +21,7 @@ Spark-first re-expression of the reference's per-event rule loop
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,6 +38,7 @@ from sagan_spark.pipeline.correlate import (
 from sagan_spark.pipeline.enrich import v4_hilo_cols
 from sagan_spark.rules.compiler import EngineConfig, EventCols, RuleCompiler
 from sagan_spark.rules.ir import RuleIR
+from sagan_spark.session import materialize, release
 
 # event columns every hit row carries through correlation.  The rest of
 # the event (message, host, program, ...) is LATE-MATERIALIZED: sinks
@@ -73,9 +74,20 @@ ALERT_FIELDS = [
 
 @dataclass
 class EngineResult:
-    """All hit rows with suppression flags; alerts() filters to routed ones."""
+    """All hit rows with suppression flags; alerts() filters to routed ones.
+
+    ``pins``: the frames ``run()`` materialized (:func:`materialize`);
+    ``hits`` reads them until :meth:`release` frees them."""
 
     hits: DataFrame  # one row per (event, matched rule), flags attached
+    pins: list[DataFrame] = field(default_factory=list)
+
+    def release(self) -> None:
+        """Free every pin; ``hits`` and ``alerts()`` cannot be read
+        afterwards, so call it once the last sink or counter is written."""
+        for df in self.pins:
+            release(df)
+        self.pins.clear()
 
     def alerts(self) -> DataFrame:
         return self.hits.filter(
@@ -319,17 +331,24 @@ class SaganSparkEngine:
         else:
             pass_min = F.lit(None).cast("int")
 
+        # explode_outer + the null filter, not explode: Catalyst infers
+        # size(_alerts) > 0 from explode and pushes it below the
+        # projection, which then builds the alert array twice.  Only an
+        # empty array yields a null _a (array_compact drops null elements).
         hits = (
             cand.withColumn("_pass_min", pass_min)
             .withColumn("_alerts", F.array_compact(F.array(*elements)))
             .select(
                 *passthrough,
                 F.col("_pass_min"),
-                F.explode(F.col("_alerts")).alias("_a"),
+                F.explode_outer(F.col("_alerts")).alias("_a"),
             )
             .filter(
-                F.col("_pass_min").isNull()
-                | (F.col("_a.rule_idx") < F.col("_pass_min"))
+                F.col("_a").isNotNull()
+                & (
+                    F.col("_pass_min").isNull()
+                    | (F.col("_a.rule_idx") < F.col("_pass_min"))
+                )
             )
             .select(
                 *passthrough,
@@ -345,28 +364,31 @@ class SaganSparkEngine:
         # The correlation pass is narrow-boundary: only 5 small columns
         # shuffle and cross Arrow; suppressed (event_key, sid) pairs join
         # back onto the hit rows.  `hits` is read by the narrow branch
-        # and the join side (and the xbit branches), so it is pinned in
-        # memory and materialized EAGERLY — persist alone is not enough
-        # because Spark submits downstream shuffle stages concurrently
-        # and they race to compute an uncached parent.
+        # and the join side (and the xbit branches), so it is
+        # materialized EAGERLY and its lineage cut: every later plan
+        # reads the stored rows instead of re-analysing the match
+        # projection, and Spark's concurrently submitted shuffle stages
+        # cannot race to compute it.  The result owns the pins.
         # xbit condition rules sit out the first pass: their
         # after/threshold state only advances after the condition gate
         # (engine.c:999-1024 vs 1373-1389).
         cond_sids = [r.sid for r in self.rules if r.is_condition]
         has_corr = any(r.after or r.threshold for r in self.rules)
+        pins: list[DataFrame] = []
         if has_corr or cond_sids:
-            hits = hits.persist()
-            hits.count()
+            hits = materialize(hits, "hits")
+            pins.append(hits)
 
         flagged, _ = apply_after_threshold(
             hits, [r for r in self.rules if not r.is_condition],
-            materialize_suppressed=bool(cond_sids),
+            pins=pins if cond_sids else None,
             isolate_hot=self.config.hot_key_isolation,
         )
 
         if not cond_sids:
             return EngineResult(
-                hits=self._with_noalert(flagged.withColumn("xbit_ok", F.lit(True)))
+                hits=self._with_noalert(flagged.withColumn("xbit_ok", F.lit(True))),
+                pins=pins,
             )
 
         # ---- condition gate: the walk, then after/threshold ----
@@ -388,11 +410,12 @@ class SaganSparkEngine:
         gated, _ = resolve_xbits(stage_b, events, self.rules)
         # the post-condition set fans into passing/failing branches and
         # the second correlation pass reads it twice — pin it (small)
-        # eagerly
-        gated = gated.persist()
-        gated.count()
+        gated = materialize(gated, "gated")
+        pins.append(gated)
         stage_b, _ = gate_after_threshold(gated, self.rules)
-        return EngineResult(hits=self._with_noalert(stage_a.unionByName(stage_b)))
+        return EngineResult(
+            hits=self._with_noalert(stage_a.unionByName(stage_b)), pins=pins
+        )
 
     def run_with_dynamic_rules(
         self, frame: DataFrame, loader=None
@@ -404,10 +427,11 @@ class SaganSparkEngine:
         Pass 1 runs the base ruleset; every ``dynamic_load`` rule that
         produced at least one routed alert triggers loading its ruleset
         (via ``loader(path) -> list[RuleIR]``, default: parse the file);
-        pass 2 re-runs base + loaded rules over the same frame.  Returns
-        (final result, effective ruleset).  The streaming analog is a
-        query restart with the augmented ruleset between micro-batches
-        (SURVEY §3.3)."""
+        pass 2 re-runs base + loaded rules over the same frame, after
+        releasing pass 1's pins.  Returns (final result, effective
+        ruleset); the caller releases the final result.  The streaming
+        analog is a query restart with the augmented ruleset between
+        micro-batches (SURVEY §3.3)."""
         from sagan_spark.rules.parser import parse_rules
 
         def default_loader(path: str) -> list[RuleIR]:
@@ -435,6 +459,7 @@ class SaganSparkEngine:
         for r in extra:
             r.position = len(combined)
             combined.append(r)
+        first.release()
         second = SaganSparkEngine(combined, self.config)
         return second.run(frame), combined
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sagan_spark.rules.ir import RuleIR
+from sagan_spark.session import materialize, release
 
 # classtype -> (description, priority); the reference loads this from
 # classification.config (reference src/classifications.c, lookup used at
@@ -438,11 +439,13 @@ def write_sinks(assembled: DataFrame, base_path: str,
     path-based writer; this sandbox carries no Iceberg jars, so only
     the parquet path is exercised here.
 
-    The assembled alert set is materialized once (persist) so the
-    parse -> match -> correlate DAG runs a single time regardless of
-    sink count — the fan-out itself is cheap projections.
+    The assembled alert set is materialized once
+    (``session.materialize``, released on return) so the parse -> match
+    -> correlate DAG runs a single time regardless of sink count, and
+    each sink plan reads the stored rows instead of re-analysing it —
+    the fan-out itself is cheap projections.
     """
-    assembled = assembled.persist()
+    assembled = materialize(assembled, "assembled")
     try:
         paths = {}
         for sink, view in sink_views(assembled, rules, sinks):
@@ -451,4 +454,4 @@ def write_sinks(assembled: DataFrame, base_path: str,
             paths[sink] = path
         return paths
     finally:
-        assembled.unpersist()
+        release(assembled)

@@ -5,7 +5,7 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # repo root (parent of the sagan_spark package) — local-mode Python workers
 # inherit PYTHONPATH from the driver env; on a real cluster the package
@@ -85,3 +85,39 @@ def build_spark(
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def materialize(df: DataFrame, name: str) -> DataFrame:
+    """Compute ``df`` now and return a frame that reads the stored rows:
+    the one way the engine pins an intermediate result.  Its lineage is
+    cut, so later plans analyse a ``LogicalRDD`` leaf instead of the
+    whole tree below it (the match projection, the replays).
+
+    A reliable ``checkpoint`` when the SparkContext has a checkpoint dir
+    (``spark.checkpoint.dir`` or ``setCheckpointDir``): it survives
+    executor loss.  Otherwise an executor-local ``localCheckpoint``.
+    The jobs carry the call site ``materialize <name>`` in the event
+    log.  Free the pin with :func:`release` once nothing reads it."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("callSite.short")
+    sc.setLocalProperty("callSite.short", f"materialize {name}")
+    try:
+        if sc.getCheckpointDir() is not None:
+            return df.checkpoint(eager=True)
+        return df.localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty("callSite.short", prev)
+
+
+def release(df: DataFrame) -> None:
+    """Free a :func:`materialize` pin; ``df`` cannot be read afterwards.
+    ``df.unpersist()`` does not reach a checkpoint: a local one drops the
+    blocks of its RDD, a reliable one deletes its checkpoint files."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    path = rdd.getCheckpointFile()
+    if path.isDefined():
+        sc = df.sparkSession.sparkContext
+        hpath = sc._jvm.org.apache.hadoop.fs.Path(path.get())
+        hpath.getFileSystem(sc._jsc.hadoopConfiguration()).delete(hpath, True)
+    else:
+        rdd.unpersist(False)

@@ -82,6 +82,16 @@ def test_parse_ip_sits_above_cheap_filter(spark, tmp_path, mode):
     assert 0 <= ip_pos < filt_pos, "parse_ip runs below the cheap prefilter"
 
 
+@pytest.mark.parametrize("mode", ["batch", "stream"])
+def test_alert_array_built_once(spark, tmp_path, mode):
+    """The per-rule alert array is built in one node: with a plain
+    explode Catalyst infers size(_alerts) > 0 and pushes it below the
+    projection, which then builds the array a second time."""
+    plan = _match_plan(spark, tmp_path, mode)
+    n_builds = len(re.findall(r"array\(CASE WHEN _c0", plan))
+    assert n_builds == 1, f"alert array built {n_builds} times:\n{plan[:2000]}"
+
+
 def test_ip_bits_share_one_parse_no_per_octet_regex(spark):
     """The v4 ip-bits derivation must stay the shared single-regex form
     (enrich.v4_hilo_cols materialized once per ip source by the engine,
@@ -603,3 +613,19 @@ def test_thousand_entry_ignore_list_builds_and_routes(spark):
     hits = SaganSparkEngine(parse_rules(RULES), config).match_hits(frame)
     got = {(r.event_key, r.sid, r.src_ip) for r in hits.collect()}
     assert got == {("keep", 9600001, "10.0.0.1")}
+
+
+def test_batch_run_reads_materialized_rows(spark, fixture_rules, pages_path):
+    """run() cuts lineage at its barriers: the analyzed plan of the
+    fixture ruleset's alerts reads stored rows (``LogicalRDD`` leaves),
+    not the match projection, its extraction UDFs or the replays, so
+    later plans never analyse that tree again."""
+    engine = SaganSparkEngine(fixture_rules)
+    result = engine.run(engine.frame_from_pages(spark.read.parquet(pages_path)))
+    try:
+        plan = result.alerts()._jdf.queryExecution().analyzed().toString()
+    finally:
+        result.release()
+    assert "LogicalRDD" in plan
+    for node in ("parse_ip", "json_flatten", "MapInPandas"):
+        assert node not in plan, f"{node} below the barriers:\n{plan[:2000]}"
