@@ -19,11 +19,13 @@ Field parity:
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sagan_spark.rules.ir import RuleIR
-from sagan_spark.session import materialize, release
+from sagan_spark.session import materialize, release, run_concurrently
 
 # classtype -> (description, priority); the reference loads this from
 # classification.config (reference src/classifications.c, lookup used at
@@ -431,27 +433,28 @@ def write_sinks(assembled: DataFrame, base_path: str,
     """K7: fan one assembled alert set out to all enabled sink tables
     (:func:`sink_views`; ``rules`` turns on per-sink suppression).
 
-    Each sink is an independent parallel write (vs the reference's
-    single-writer mutex, src/output.c:83-108) in OVERWRITE mode — a
-    re-run of the same output path replaces, never duplicates (the
-    resume model jobs/run_batch.py documents).  ``fmt='iceberg'``
-    passes the format through to a configured Iceberg catalog's
-    path-based writer; this sandbox carries no Iceberg jars, so only
-    the parquet path is exercised here.
+    Each sink is an independent write (vs the reference's single-writer
+    mutex, src/output.c:83-108) in OVERWRITE mode — a re-run of the same
+    output path replaces, never duplicates (the resume model
+    jobs/run_batch.py documents).  ``fmt='iceberg'`` passes the format
+    through to a configured Iceberg catalog's path-based writer; this
+    sandbox carries no Iceberg jars, so only the parquet path is
+    exercised here.
 
-    The assembled alert set is materialized once
-    (``session.materialize``, released on return) so the parse -> match
-    -> correlate DAG runs a single time regardless of sink count, and
-    each sink plan reads the stored rows instead of re-analysing it —
-    the fan-out itself is cheap projections.
+    The fan-out shape every writer of the engine shares: the assembled
+    alert set is materialized once (``session.materialize``, released on
+    return), so the parse -> match -> correlate DAG runs a single time
+    regardless of sink count, then every sink write — a cheap projection
+    over the stored rows — runs at once (``session.run_concurrently``).
     """
     assembled = materialize(assembled, "assembled")
     try:
         paths = {}
+        writes = []
         for sink, view in sink_views(assembled, rules, sinks):
-            path = f"{base_path}/{sink}"
-            view.write.mode("overwrite").format(fmt).save(path)
-            paths[sink] = path
+            paths[sink] = f"{base_path}/{sink}"
+            writes.append(partial(view.write.mode("overwrite").format(fmt).save, paths[sink]))
+        run_concurrently(assembled.sparkSession, writes)
         return paths
     finally:
         release(assembled)

@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from pathlib import Path
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 # repo root (parent of the sagan_spark package) — local-mode Python workers
@@ -121,3 +123,26 @@ def release(df: DataFrame) -> None:
         hpath.getFileSystem(sc._jsc.hadoopConfiguration()).delete(hpath, True)
     else:
         rdd.unpersist(False)
+
+
+def run_concurrently(spark: SparkSession, actions) -> None:
+    """Run zero-argument Spark ``actions`` at once, one driver thread
+    each, wait for every one of them, then re-raise the failure that
+    happened first.  The engine's one write fan-out: a batch job's sink
+    writes and a micro-batch's sink, staging and snapshot writes are
+    each a few small jobs that the default FIFO scheduler runs side by
+    side, so their fixed per-job overheads overlap instead of adding up.
+
+    Each thread starts with the caller's local properties and session
+    tags (``inheritable_thread_target(spark)``): the job description,
+    ``callSite.short`` and a streaming query's ids and job group reach
+    every write's jobs."""
+    actions = list(actions)
+    if not actions:
+        return
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        finished = list(
+            as_completed(pool.submit(inheritable_thread_target(spark)(a)) for a in actions)
+        )
+    for future in finished:
+        future.result()

@@ -13,12 +13,24 @@ src/ipc.c).  The Spark form:
 - correlation: each ``foreachBatch`` micro-batch runs the batch
   after/threshold step (``correlate.apply_after_threshold``) seeded from
   the previous micro-batch's snapshot store, and writes its own.  A key
-  whose anchor is more than its window before the previous snapshot's
-  newest anchor minus ``watermark`` (the allowed lateness) leaves the
-  snapshot: any event within the lateness gap-resets it (after.c:132-137,
-  threshold.c:141-146), so dropping it is *semantics-preserving*;
-- sinks: the same micro-batch fans out to the same per-sink tables as
-  batch, with the streaming checkpoint providing exactly-once resume.
+  whose anchor is more than its window before the floor — the previous
+  snapshot's newest anchor minus ``watermark`` (the allowed lateness) —
+  leaves the snapshot: any event within the lateness gap-resets it
+  (after.c:132-137, threshold.c:141-146), so dropping it is
+  *semantics-preserving*.  The snapshot write observes its own newest
+  anchor and leaves it in a ``_newest`` marker beside the rows, so the
+  next micro-batch reads its floor without a job (a snapshot without
+  the marker gives floor -inf);
+- sinks: the same micro-batch writes the same per-sink tables as batch,
+  with the streaming checkpoint providing exactly-once resume.
+
+One fan-out per micro-batch, the shape batch ``route.write_sinks`` has
+too: the assembled alert set is materialized once
+(``session.materialize``), then every independent write of the
+micro-batch — its sink views, its staged-set write, its snapshot
+writes — runs at once (``session.run_concurrently``).  Each write keeps
+its ``batch_id`` dynamic partition overwrite, so a micro-batch retried
+after any one of them failed rewrites what it wrote.
 
 Every state machine here — after/threshold counters, the xbit/flexbit
 bit store, chain verdict gating — is the one core in
@@ -45,7 +57,9 @@ remain.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import partial
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -65,6 +79,7 @@ from sagan_spark.pipeline.engine import EVENT_COLS, SaganSparkEngine
 from sagan_spark.pipeline.machines import GATED
 from sagan_spark.rules.compiler import EngineConfig
 from sagan_spark.rules.ir import RuleIR
+from sagan_spark.session import materialize, release, run_concurrently
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -281,38 +296,85 @@ def _prune_old_corr_snapshots(spark: SparkSession, path: str, batch_id: int) -> 
             fs.delete(d, True)
 
 
-def _read_prev_corr_state(spark: SparkSession, path: str, batch_id: int):
-    """Latest correlation state snapshot written BEFORE this batch
-    (retry-safe: a replayed batch N reads N-1's snapshot even if a
-    half-written N partition exists); None when there is none or it
-    holds no rows."""
-    _, dirs = _snapshot_dirs(spark, path)
+#: name of the floor marker in a snapshot partition: the newest anchor
+#: of the snapshot's rows, as text.  Spark's file index skips names that
+#: start with ``_``, so reading the partition never sees it.
+_NEWEST = "_newest"
+
+
+def _prev_snapshot_dir(spark: SparkSession, path: str, batch_id: int) -> tuple:
+    """(Hadoop FileSystem, the latest snapshot partition written BEFORE
+    this batch, or None) — retry-safe: a replayed batch N finds N-1's
+    even if a half-written N partition exists."""
+    fs, dirs = _snapshot_dirs(spark, path)
     prev = [b for b in dirs if b < batch_id]
-    return _read_store_or_none(spark, str(dirs[max(prev)])) if prev else None
+    return fs, (dirs[max(prev)] if prev else None)
 
 
-def _write_corr_snapshot(spark: SparkSession, df: DataFrame, path: str, batch_id: int) -> None:
-    """Write this batch's snapshot partition, then prune older ones.  The
-    partition directory is made even when no key survived, so the next
-    batch seeds from this empty snapshot, not from an older one."""
-    _idempotent_write(df, path, batch_id, writer_id="s")
-    fs, part = _fs_for(spark, f"{path}/batch_id=s_{batch_id}")
-    fs.mkdirs(part)
-    _prune_old_corr_snapshots(spark, path, batch_id)
+def _read_prev_corr_state(spark: SparkSession, path: str, batch_id: int):
+    """Latest correlation state snapshot written before this batch
+    (:func:`_prev_snapshot_dir`); None when there is none or it holds no
+    rows."""
+    _, prev = _prev_snapshot_dir(spark, path, batch_id)
+    return _read_store_or_none(spark, str(prev)) if prev is not None else None
 
 
-def _snapshot_floor(seed: DataFrame | None, lateness: float, utime: str = "utime") -> float:
-    """The oldest event time a later micro-batch may still replay: the
-    newest anchor (``utime`` column) in the previous micro-batch's
-    snapshot ``seed``, minus the allowed ``lateness``; -inf without one.
+def _read_prev_floor(spark: SparkSession, path: str, batch_id: int, lateness: float) -> float:
+    """The oldest event time this micro-batch may still replay: the
+    newest anchor of the previous snapshot (its ``_newest`` marker, see
+    :func:`_write_corr_snapshot`) minus the allowed ``lateness``.
 
     Every anchor is the time of an event an earlier micro-batch held, so
     any later event within the lateness is no older.  Like Spark's own
     watermark the floor lags one micro-batch: this micro-batch's events
     do not raise it, so an event later than the lateness still replays
-    against the state the previous micro-batch kept."""
-    newest = seed.agg(F.max(utime)).first()[0] if seed is not None else None
-    return float("-inf") if newest is None else newest - lateness
+    against the state the previous micro-batch kept.
+
+    -inf without a previous snapshot, for an empty one, and for one
+    written before snapshots carried the marker: that micro-batch then
+    evicts a key only by its own latest event, as a first micro-batch
+    does."""
+    fs, prev = _prev_snapshot_dir(spark, path, batch_id)
+    if prev is None:
+        return float("-inf")
+    marker = spark._jvm.org.apache.hadoop.fs.Path(prev, _NEWEST)
+    if not fs.exists(marker):
+        return float("-inf")
+    jio = spark._jvm.java.io
+    reader = jio.BufferedReader(jio.InputStreamReader(fs.open(marker), "UTF-8"))
+    try:
+        return float(reader.readLine()) - lateness
+    finally:
+        reader.close()
+
+
+def _write_corr_snapshot(
+    spark: SparkSession, df: DataFrame, path: str, batch_id: int, anchor: str = "utime"
+) -> None:
+    """Write this batch's snapshot partition, then prune older ones.  The
+    partition directory is made even when no key survived, so the next
+    batch seeds from this empty snapshot, not from an older one.
+
+    The write observes the newest ``anchor`` of its rows (``utime``; a
+    ``cstate`` row holds its anchor in ``expire``) and leaves it in the
+    partition's ``_newest`` marker, which the next micro-batch turns into
+    its floor (:func:`_read_prev_floor`) without a job of its own.  An
+    empty snapshot gets no marker."""
+    store = path.rstrip("/").rsplit("/", 1)[-1]
+    newest = Observation(f"{store}_newest_{batch_id}")
+    _idempotent_write(
+        df.observe(newest, F.max(anchor).alias("v")), path, batch_id, writer_id="s"
+    )
+    fs, part = _fs_for(spark, f"{path}/batch_id=s_{batch_id}")
+    fs.mkdirs(part)
+    value = newest.get["v"]
+    if value is not None:
+        out = fs.create(spark._jvm.org.apache.hadoop.fs.Path(part, _NEWEST), True)
+        try:
+            out.write(str(value).encode())
+        finally:
+            out.close()
+    _prune_old_corr_snapshots(spark, path, batch_id)
 
 
 def _replay_micro_batch(
@@ -323,26 +385,34 @@ def _replay_micro_batch(
     batch_id: int,
     lateness: float,
     persisted: list,
+    writes: list,
     step,
 ) -> DataFrame:
     """One micro-batch of after/threshold: the batch ``step``
     (``correlate.apply_after_threshold``, or the condition gate
     ``correlate.gate_after_threshold``) seeded from the previous snapshot
-    in ``state_path``, writing this batch's snapshot there with the
-    :func:`_snapshot_floor` of that seed.  Returns the rows of ``hits``
-    that neither machine suppressed.  The replay output is cached once
-    (the snapshot write and the flags both read it) and goes on
-    ``persisted`` for the caller to release."""
+    in ``state_path``, up to that snapshot's floor
+    (:func:`_read_prev_floor`).  Returns the rows of ``hits`` that
+    neither machine suppressed.
+
+    The replay output stays a lazy cache on ``persisted`` for the caller
+    to release: the caller's materialized assembled frame computes it
+    once, and this batch's snapshot write — appended to ``writes`` for
+    the caller's one concurrent fan-out — reads the cached rows."""
     seed = _read_prev_corr_state(spark, state_path, batch_id)
-    flagged, replayed = step(hits, rules, seed=seed, floor=_snapshot_floor(seed, lateness))
+    floor = _read_prev_floor(spark, state_path, batch_id, lateness)
+    flagged, replayed = step(hits, rules, seed=seed, floor=floor)
     if replayed is not None:
         replayed = replayed.persist()
         persisted.append(replayed)
-        _write_corr_snapshot(
-            spark,
-            replayed.filter(F.col("kind") == "s").select(*CORR_STATE_COLS),
-            state_path,
-            batch_id,
+        writes.append(
+            partial(
+                _write_corr_snapshot,
+                spark,
+                replayed.filter(F.col("kind") == "s").select(*CORR_STATE_COLS),
+                state_path,
+                batch_id,
+            )
         )
     return flagged.filter(~F.col("suppressed_after") & ~F.col("suppressed_threshold"))
 
@@ -418,8 +488,10 @@ class StreamingSaganEngine:
 
         Each micro-batch persists its hits, runs after/threshold through
         the batch step seeded from the previous micro-batch's
-        ``corr_state_a`` snapshot (and writes its own), routes the
-        survivors to the sinks and stages its setters' walk events.
+        ``corr_state_a`` snapshot, and materializes the assembled
+        survivors.  One concurrent fan-out then writes the sink views,
+        its setters' staged walk events and its own ``corr_state_a``
+        snapshot, which reads the replay the materialization cached.
 
         Exactly-once on restart: each micro-batch's output lands in a
         ``batch_id=N`` partition written with dynamic partition
@@ -443,7 +515,7 @@ class StreamingSaganEngine:
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
             spark = batch_df.sparkSession
             cached = batch_df.persist()
-            persisted = [cached]
+            persisted, writes, assembled = [cached], [], None
             try:
                 # flexbit-noalert sids stay in `routed` on purpose: their
                 # set/unset events must still stage for chained checks
@@ -452,20 +524,32 @@ class StreamingSaganEngine:
                 # sink via route.sink_suppressions
                 routed = _replay_micro_batch(
                     spark, cached, plain_rules, f"{base_path}/corr_state_a", batch_id,
-                    self._watermark_secs(), persisted, apply_after_threshold,
+                    self._watermark_secs(), persisted, writes, apply_after_threshold,
                 )
                 meta = rule_metadata_df(spark, rules)
-                assembled = assemble_alerts(routed, meta).persist()
-                persisted.append(assembled)
+                assembled = materialize(assemble_alerts(routed, meta), "assembled")
                 for sink, view in sink_views(assembled, rules, sinks):
-                    _idempotent_write(view, f"{base_path}/{sink}", batch_id, writer_id="a")
+                    writes.append(
+                        partial(
+                            _idempotent_write, view, f"{base_path}/{sink}", batch_id,
+                            writer_id="a",
+                        )
+                    )
                 # setter rules' surviving alerts stage their set/unset
                 # walk events for the chained xbit query (engine.c:
                 # 1415-1427: sets happen only after after/threshold)
                 sets = setter_events(assembled, rules)
                 if sets is not None:
-                    _stage_sets(sets, f"{base_path}/xbit_sets", batch_id, bucket_secs, "a")
+                    writes.append(
+                        partial(
+                            _stage_sets, sets, f"{base_path}/xbit_sets", batch_id,
+                            bucket_secs, "a",
+                        )
+                    )
+                run_concurrently(spark, writes)
             finally:
+                if assembled is not None:
+                    release(assembled)
                 for df in persisted:
                     df.unpersist()
 
@@ -498,7 +582,11 @@ class StreamingSaganEngine:
         the next micro-batch.  The verdicts then pass the step batch
         ``run()`` calls too, ``correlate.gate_after_threshold``, seeded from
         and snapshotted to ``corr_state_b`` like stage A's step: a
-        condition-failing or suppressed hit is not routed.
+        condition-failing or suppressed hit is not routed.  As in stage A,
+        the assembled alerts are materialized once and one concurrent
+        fan-out writes the sink views, the fired-chain staging, the
+        ``chain_corr_state`` and the ``corr_state_b`` snapshots; the
+        staged-store sweep runs after all of them have finished.
 
         Cross-query propagation is drain-ordered: with availableNow run
         stage A to completion first (sets staged), then stage B — exact
@@ -532,7 +620,7 @@ class StreamingSaganEngine:
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
             spark = batch_df.sparkSession
             cached = batch_df.persist()
-            persisted = [cached]
+            persisted, writes, assembled = [cached], [], None
             try:
                 min_chk = cached.agg(F.min(ts_seconds_d(F.col("ts")))).first()[0]
                 events = hit_events(cached, rules)
@@ -559,36 +647,55 @@ class StreamingSaganEngine:
                             "bit_name", seed_bit
                         )
                     )
-                # a cseed row holds its anchor in `expire`
-                chain_floor = _snapshot_floor(prev, self._watermark_secs(), "expire")
+                chain_floor = (
+                    _read_prev_floor(spark, chain_state_path, batch_id, self._watermark_secs())
+                    if chain_corr_specs
+                    else float("-inf")
+                )
                 flagged, walk_out = resolve_xbits(cached, events, rules, chain_floor)
                 walk_out = walk_out.persist()
                 persisted.append(walk_out)
                 if chain_rules:
                     fired = walk_out.filter(F.col("kind").isin(*set(GATED.values())))
-                    _stage_sets(
-                        fired.select(*_XBIT_WALK_COLS), sets_path, batch_id, bucket_secs, "c"
+                    writes.append(
+                        partial(
+                            _stage_sets, fired.select(*_XBIT_WALK_COLS), sets_path,
+                            batch_id, bucket_secs, "c",
+                        )
                     )
                 if chain_corr_specs:
-                    _write_corr_snapshot(
-                        spark,
-                        walk_out.filter(F.col("kind") == "cstate").select(*_XBIT_WALK_COLS),
-                        chain_state_path,
-                        batch_id,
+                    # a cseed row holds its anchor in `expire`
+                    writes.append(
+                        partial(
+                            _write_corr_snapshot,
+                            spark,
+                            walk_out.filter(F.col("kind") == "cstate").select(*_XBIT_WALK_COLS),
+                            chain_state_path,
+                            batch_id,
+                            "expire",
+                        )
                     )
                 # the batch condition gate, seeded from corr_state_b
                 routed = _replay_micro_batch(
                     spark, flagged, rules, f"{base_path}/corr_state_b", batch_id,
-                    self._watermark_secs(), persisted, gate_after_threshold,
+                    self._watermark_secs(), persisted, writes, gate_after_threshold,
                 ).filter(F.col("xbit_ok")).drop("xbit_ok")
                 meta = rule_metadata_df(spark, rules)
-                assembled = assemble_alerts(
-                    routed, meta, xbit_condition_sids=self.cond_sids
-                ).persist()
-                persisted.append(assembled)
+                assembled = materialize(
+                    assemble_alerts(routed, meta, xbit_condition_sids=self.cond_sids),
+                    "assembled",
+                )
                 for sink, view in sink_views(assembled, rules, sinks):
-                    _idempotent_write(view, f"{base_path}/{sink}", batch_id, writer_id="b")
+                    writes.append(
+                        partial(
+                            _idempotent_write, view, f"{base_path}/{sink}", batch_id,
+                            writer_id="b",
+                        )
+                    )
+                run_concurrently(spark, writes)
             finally:
+                if assembled is not None:
+                    release(assembled)
                 for df in persisted:
                     df.unpersist()
             if min_chk is not None and max_expire > 0:

@@ -467,6 +467,94 @@ def test_empty_snapshot_is_not_replaced_by_an_older_one(spark, tmp_path):
     assert _read_prev_corr_state(spark, path, 1).count() == 1
 
 
+def test_snapshot_marker_gives_the_next_floor(spark, tmp_path):
+    """The snapshot write leaves its newest anchor in the partition's
+    ``_newest`` marker; the next micro-batch's floor is that minus the
+    lateness, read without a Spark job.  A retry of micro-batch N reads
+    N-1's marker; an empty snapshot and a snapshot written before
+    snapshots carried the marker give -inf, without an error."""
+    from sagan_spark.streaming.engine import (
+        _read_prev_corr_state,
+        _read_prev_floor,
+        _write_corr_snapshot,
+    )
+
+    path = str(tmp_path / "corr_state")
+    snap = spark.createDataFrame(
+        [(1, "k", "t", "k", 1, 100), (2, "j", "t", "j", 1, 160)],
+        "sid long, corr_group string, machine string, mkey string, cnt long, utime long",
+    )
+    _write_corr_snapshot(spark, snap, path, 0)
+    assert float((tmp_path / "corr_state/batch_id=s_0/_newest").read_text()) == 160
+    assert _read_prev_floor(spark, path, 1, 60.0) == 100.0
+
+    _write_corr_snapshot(spark, snap.limit(0), path, 1)
+    assert not (tmp_path / "corr_state/batch_id=s_1/_newest").exists()
+    assert _read_prev_floor(spark, path, 2, 60.0) == float("-inf")
+    # a retry of micro-batch 1 still reads micro-batch 0's marker
+    assert _read_prev_floor(spark, path, 1, 60.0) == 100.0
+
+    # a snapshot of the layout without markers: no floor, rows still seed
+    _write_corr_snapshot(spark, snap, path, 2)
+    (tmp_path / "corr_state/batch_id=s_2/_newest").unlink()
+    assert _read_prev_floor(spark, path, 3, 60.0) == float("-inf")
+    assert _read_prev_corr_state(spark, path, 3).count() == 2
+
+
+def test_failed_concurrent_write_resumes_exactly_once(spark, tmp_path, monkeypatch):
+    """One sink write of micro-batch 0 fails while its sibling writes
+    (the EVE sink, the corr_state_a snapshot) run beside it: the query
+    fails, and a restart on the same checkpoint routes the batch set
+    once, with one snapshot partition for the batch."""
+    import sagan_spark.streaming.engine as stream_engine
+    from sagan_spark.rules.parser import parse_rules
+
+    rules = parse_rules(
+        'alert any any any -> any any (msg:"thr"; content:"probe"; parse_src_ip: 1; '
+        "threshold: type limit, track by_src, count 2, seconds 3600; sid:9680001;)\n"
+        'alert any any any -> any any (msg:"any"; content:"probe"; sid:9680002;)'
+    )
+    table = _mini_pages([
+        (f"u://fw/{i}", f"2026-01-01 00:00:{i:02d}", f"probe from 10.0.0.{i % 2} x")
+        for i in range(6)
+    ])
+    want = _batch_want(spark, rules, table, str(tmp_path / "fw_full.parquet"))
+    assert len(want) == 10
+
+    input_dir = tmp_path / "fw_in"
+    input_dir.mkdir()
+    pq.write_table(table, str(input_dir / "c0.parquet"))
+    out, ckpt = str(tmp_path / "fw_sinks"), str(tmp_path / "fw_ckpt")
+    seng = StreamingSaganEngine(rules, watermark="0 seconds")
+    sinks = ["alerts_eve", "alerts_fast"]
+
+    real_write, failed = stream_engine._idempotent_write, []
+
+    def flaky_write(df, path, batch_id, *args, **kwargs):
+        if path.endswith("alerts_fast") and not failed:
+            failed.append(batch_id)
+            raise OSError("injected sink failure")
+        return real_write(df, path, batch_id, *args, **kwargs)
+
+    monkeypatch.setattr(stream_engine, "_idempotent_write", flaky_write)
+
+    def run():
+        frame = SaganSparkEngine.frame_from_pages(pages_stream_frame(spark, str(input_dir)))
+        seng.start_sink_query(frame, out, ckpt, sinks=sinks).awaitTermination(120)
+
+    with pytest.raises(Exception, match="injected sink failure"):
+        run()
+    assert failed == [0]
+    run()
+
+    eve = spark.read.parquet(f"{out}/alerts_eve")
+    assert eve.count() == eve.select("url", "alert_signature_id").distinct().count()
+    assert _eve_set(spark, out) == want
+    assert spark.read.parquet(f"{out}/alerts_fast").count() == len(want)
+    assert sorted(p.name for p in (tmp_path / "fw_sinks/corr_state_a").iterdir()
+                  if p.name.startswith("batch_id=")) == ["batch_id=s_0"]
+
+
 def test_read_store_or_none_empty_store_without_deprecation(spark, tmp_path):
     """An existing store directory without data files reads as None, and
     the error-class lookup raises no pyspark deprecation warning."""
