@@ -125,7 +125,7 @@ def release(df: DataFrame) -> None:
         rdd.unpersist(False)
 
 
-def run_concurrently(spark: SparkSession, actions) -> None:
+def run_concurrently(spark: SparkSession, actions: list) -> None:
     """Run zero-argument Spark ``actions`` at once, one driver thread
     each, wait for every one of them, then re-raise the failure that
     happened first.  The engine's one write fan-out: a batch job's sink
@@ -137,10 +137,7 @@ def run_concurrently(spark: SparkSession, actions) -> None:
     tags (``inheritable_thread_target(spark)``): the job description,
     ``callSite.short`` and a streaming query's ids and job group reach
     every write's jobs."""
-    actions = list(actions)
-    if not actions:
-        return
-    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+    with ThreadPoolExecutor(max_workers=max(len(actions), 1)) as pool:
         finished = list(
             as_completed(pool.submit(inheritable_thread_target(spark)(a)) for a in actions)
         )
