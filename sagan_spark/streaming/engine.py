@@ -647,10 +647,8 @@ class StreamingSaganEngine:
                             "bit_name", seed_bit
                         )
                     )
-                chain_floor = (
-                    _read_prev_floor(spark, chain_state_path, batch_id, self._watermark_secs())
-                    if chain_corr_specs
-                    else float("-inf")
+                chain_floor = _read_prev_floor(
+                    spark, chain_state_path, batch_id, self._watermark_secs()
                 )
                 flagged, walk_out = resolve_xbits(cached, events, rules, chain_floor)
                 walk_out = walk_out.persist()
