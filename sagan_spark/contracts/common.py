@@ -34,6 +34,15 @@ def _ship_package(spark: SparkSession) -> None:
     _ship_package._done = spark
 
 
+def _drain(q, timeout: int = 180) -> None:
+    """Wait for an availableNow query to finish, or stop it and raise:
+    reading a still-running query's partial output (and deleting its
+    work dir) would misreport as a correctness failure."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise TimeoutError(f"streaming drain did not finish in {timeout}s")
+
+
 def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 

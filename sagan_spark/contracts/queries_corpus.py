@@ -13,7 +13,8 @@ from collections.abc import Callable  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from sagan_spark.contracts.common import _docs, _emb, _ev, _ship_package  # noqa: E501
+from sagan_spark.contracts.common import _docs, _drain, _emb, _ev, _ship_package  # noqa: E501
+from sagan_spark.session import materialize
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sagan_spark.ops.dedup import exact_dup_groups
@@ -756,11 +757,9 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = start_session_query(
             spark, inp, f"{work}/out", f"{work}/ckpt", gap_sec=14400
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("streaming drain did not finish in 180s")
+        _drain(q)
         out = spark.read.parquet(f"{work}/out")
-        return out.localCheckpoint()
+        return materialize(out, "streaming_sessionize")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -832,11 +831,9 @@ def q_streaming_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
             bucket_sec=86400, trailing_buckets=7,
             factor_milli=2000, min_count=3,
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("streaming drain did not finish in 180s")
+        _drain(q)
         out = spark.read.parquet(f"{work}/out")
-        return out.localCheckpoint()
+        return materialize(out, "streaming_bursts")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

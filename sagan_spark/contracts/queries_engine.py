@@ -13,7 +13,8 @@ from collections.abc import Callable  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from sagan_spark.contracts.common import _docs, _ev, _events_frame, _ship_package  # noqa: E501
+from sagan_spark.contracts.common import _docs, _drain, _ev, _events_frame, _ship_package  # noqa: E501
+from sagan_spark.session import materialize
 
 def q_s5_pipe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5: '|'-delimited frame decode with per-field defaulting
@@ -1042,20 +1043,15 @@ def q_streaming_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         seng = StreamingSaganEngine(rules, watermark="0 seconds")
         frame = SaganSparkEngine.frame_from_pages(pages_stream_frame(spark, inp))
         q = seng.start_sink_query(frame, f"{work}/out", f"{work}/ckpt", sinks=["alerts_eve"])
-        # availableNow drain: a False return means the query is STILL
-        # running — reading partial output (and rmtree'ing under it in
-        # the finally) would misreport as a correctness failure
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("streaming drain did not finish in 180s")
+        _drain(q)
         eve = spark.read.parquet(f"{work}/out/alerts_eve")
         # grouped result is tiny but still returned as a plan, not via a
-        # driver collect/createDataFrame funnel; localCheckpoint detaches
-        # it from the temp dir being cleaned below
+        # driver collect/createDataFrame funnel; materialize detaches it
+        # from the temp dir being cleaned below
         out = eve.groupBy("alert_signature_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_routed")
         )
-        return out.localCheckpoint()
+        return materialize(out, "streaming_threshold")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1106,17 +1102,13 @@ def q_streaming_threshold_engine(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = seng.start_sink_query(
             frame, f"{work}/out", f"{work}/ckpt", sinks=["alerts_eve"]
         )
-        # see q_streaming_threshold: never read (or delete) the sink
-        # under a still-running drain
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming drain did not finish in 300s")
+        _drain(q, timeout=300)
         eve = spark.read.parquet(f"{work}/out/alerts_eve")
         out = eve.groupBy(
             F.col("alert_signature_id").cast("long").alias("sid"),
             F.col("src_ip"),
         ).agg(F.count(F.lit(1)).cast("long").alias("n_alerts"))
-        return out.localCheckpoint()
+        return materialize(out, "streaming_threshold_engine")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

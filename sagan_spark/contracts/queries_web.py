@@ -13,7 +13,8 @@ from collections.abc import Callable  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from sagan_spark.contracts.common import _docs, _ship_package  # noqa: E501
+from sagan_spark.contracts.common import _docs, _drain, _ship_package  # noqa: E501
+from sagan_spark.session import materialize, release
 
 def _anchor_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scaffolded pages for the anchor ops (q_link_extract
@@ -139,8 +140,8 @@ def q_domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_domain_pagerank_resumed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resume-from-checkpoint parity for iterative compute: 3 cold
-    iterations, rank table 'persisted' (localCheckpoint standing in
-    for the snapshot write), then 2 warm-started iterations — the
+    iterations, rank table 'persisted' (pagerank's returned pin standing
+    in for the snapshot write), then 2 warm-started iterations — the
     integer formulation makes warm(2, cold(3)) BIT-IDENTICAL to
     cold(5), so this gate replays the SAME 5-iteration oracle as
     domain_pagerank."""
@@ -159,9 +160,12 @@ def q_domain_pagerank_resumed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("url"),
         F.encode(html, "UTF-8").alias("html"),
     )
-    edges = domain_edges(extract_links(pages)).localCheckpoint(eager=True)
-    snapshot = pagerank(edges, iterations=3).localCheckpoint(eager=True)
-    return pagerank(edges, iterations=2, init_ranks=snapshot)
+    edges = materialize(domain_edges(extract_links(pages)), "resumed edges")
+    snapshot = pagerank(edges, iterations=3)
+    out = pagerank(edges, iterations=2, init_ranks=snapshot)
+    release(edges)
+    release(snapshot)
+    return out
 
 
 def q_link_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -794,13 +798,11 @@ def q_streaming_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, inp, f"{work}/out", f"{work}/ckpt",
             dim=_asof_dim(spark, sf_dir),
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("streaming drain did not finish in 180s")
+        _drain(q)
         out = spark.read.parquet(f"{work}/out").select(
             "event_id", "user_id", "right_ts_us", "snapshot"
         )
-        return out.localCheckpoint()
+        return materialize(out, "streaming_asof")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1514,13 +1516,11 @@ def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, inp, f"{work}/ledger", f"{work}/ckpt",
             resolutions=(60, 3600, 86400), max_files_per_trigger=1,
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("streaming drain did not finish in 180s")
+        _drain(q)
         out = rollup_from_ledger(
             spark, f"{work}/ledger", resolutions=(60, 3600, 86400)
         )
-        return out.localCheckpoint()
+        return materialize(out, "streaming_rollup")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1545,11 +1545,9 @@ def q_streaming_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, inp, f"{work}/ledger", f"{work}/ckpt",
             max_files_per_trigger=1,
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("streaming drain did not finish in 180s")
+        _drain(q)
         out = actives_from_ledger(spark, f"{work}/ledger", window_days=7)
-        return out.localCheckpoint()
+        return materialize(out, "streaming_actives")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1574,12 +1572,10 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, inp, f"{work}/ledger", f"{work}/ckpt",
             max_files_per_trigger=1,
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("streaming drain did not finish in 180s")
+        _drain(q)
         out = quantiles_from_ledger(
             spark, f"{work}/ledger", quantiles_ppm=(500000, 950000, 990000)
         )
-        return out.localCheckpoint()
+        return materialize(out, "streaming_quantiles")
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -13,7 +13,7 @@ corpus row count).  Every training round runs over that frame only:
 pair counts are a vocab-bounded explode + map-side-combining sum, the
 argmax is a single min(struct) aggregate (no sort), the merge
 application is a broadcast of the 1-row winner + three literal string
-replaces, and lineage is cut per round with localCheckpoint (the
+replaces, and lineage is cut per round with ``materialize`` (the
 pagerank discipline) so the plan never grows with R.
 
 Engine-exact greedy merge WITHOUT folds or lookahead (the part string
@@ -41,8 +41,12 @@ nowhere near that regime at practical R.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sagan_spark.session import materialize, release
 
 END_OF_WORD = "</w>"
 
@@ -90,9 +94,9 @@ def _apply_merge(seqs: DataFrame, best: DataFrame) -> DataFrame:
         F.lit(" "), F.replace(F.col("seq"), F.lit(" "), F.lit("  ")),
         F.lit(" "),
     )
-    pat = F.concat(F.lit(" "), F.col("left"), F.lit("  "), F.col("right"),
-                   F.lit(" "))
-    rep = F.concat(F.lit(" "), F.col("left"), F.col("right"), F.lit(" "))
+    left, right = F.col("merge_left"), F.col("merge_right")
+    pat = F.concat(F.lit(" "), left, F.lit("  "), right, F.lit(" "))
+    rep = F.concat(F.lit(" "), left, right, F.lit(" "))
     merged = F.trim(
         F.replace(F.replace(doubled, pat, rep), F.lit("  "), F.lit(" "))
     )
@@ -105,11 +109,12 @@ def _train_loop(docs: DataFrame, rounds: int,
                 text_col: str) -> tuple[list[DataFrame], DataFrame]:
     """THE greedy-merge loop (argmax tie-break + merge application),
     shared by the merge-table and segmentation-table views so the two
-    cannot drift: returns (per-round merge rows, final seqs frame)."""
-    seqs = _word_seqs(docs, text_col).localCheckpoint(eager=True)
+    cannot drift: returns (per-round merge-row pins, final seqs pin),
+    which the caller owns; superseded seqs pins are released."""
+    seqs = materialize(_word_seqs(docs, text_col), "bpe_train seqs")
     merges = []
     for r in range(1, int(rounds) + 1):
-        best = (
+        best = materialize(
             _pair_counts(seqs)
             .agg(
                 F.min(
@@ -121,23 +126,16 @@ def _train_loop(docs: DataFrame, rounds: int,
                 ).alias("m")
             )
             .select(
-                F.col("m.left").alias("left"),
-                F.col("m.right").alias("right"),
-                (-F.col("m.nc")).alias("pair_count"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        merges.append(
-            best.select(
                 F.lit(r).alias("merge_round"),
-                F.col("left").alias("merge_left"),
-                F.col("right").alias("merge_right"),
-                "pair_count",
-            )
+                F.col("m.left").alias("merge_left"),
+                F.col("m.right").alias("merge_right"),
+                (-F.col("m.nc")).alias("pair_count"),
+            ),
+            "bpe_train merge",
         )
-        seqs = _apply_merge(
-            seqs, best.select("left", "right")
-        ).localCheckpoint(eager=True)
+        merges.append(best)
+        prev, seqs = seqs, materialize(_apply_merge(seqs, best), "bpe_train seqs")
+        release(prev)
     return merges, seqs
 
 
@@ -145,11 +143,9 @@ def bpe_train(docs: DataFrame, rounds: int = 8,
               text_col: str = "text") -> DataFrame:
     """(merge_round, merge_left, merge_right, pair_count): the ordered
     merge-rule table after ``rounds`` of greedy BPE over the corpus."""
-    merges, _seqs = _train_loop(docs, rounds, text_col)
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.unionByName(m)
-    return out
+    merges, seqs = _train_loop(docs, rounds, text_col)
+    release(seqs)
+    return reduce(DataFrame.unionByName, merges)
 
 
 def bpe_train_seqs(docs: DataFrame, rounds: int = 8,
@@ -160,7 +156,9 @@ def bpe_train_seqs(docs: DataFrame, rounds: int = 8,
     that word, so encoding a corpus is a broadcast/shuffle join
     against this vocab-bounded table, never a per-document merge
     walk."""
-    _merges, seqs = _train_loop(docs, rounds, text_col)
+    merges, seqs = _train_loop(docs, rounds, text_col)
+    for m in merges:
+        release(m)
     # recover the surface word from its segmentation: pieces joined,
     # end-of-word marker dropped (cheaper than threading the word
     # column through the merge rounds)

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sagan_spark.session import materialize
+
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
 
@@ -128,8 +130,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 13,
 def remove_duplicated_spans(docs: DataFrame, n: int = 20,
                             text_col: str = "text",
                             id_col: str = "doc_id",
-                            keep_first: bool = False,
-                            checkpoint: bool = True) -> DataFrame:
+                            keep_first: bool = False) -> DataFrame:
     """ExactSubstr-style span REMOVAL (Lee et al. arXiv:2107.06499 §4.1):
     where :func:`duplicated_spans` measures, this edits — every token
     position covered by an n-token window whose exact span occurs in
@@ -164,6 +165,16 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 20,
       duplicated window, so AQE can demote the join to broadcast when
       duplication is rare).
     """
+    out, pos = _remove_duplicated_spans(docs, n, text_col, id_col, keep_first)
+    pos.persist()  # the op's dominant cost: read twice, computed once
+    out = materialize(out, "remove_duplicated_spans")
+    pos.unpersist()
+    return out
+
+
+def _remove_duplicated_spans(docs: DataFrame, n: int, text_col: str, id_col: str,
+                             keep_first: bool) -> tuple[DataFrame, DataFrame]:
+    """The lazy plan of :func:`remove_duplicated_spans`: (result, window positions)."""
     toks = _tokens(F.col(text_col))
     base = docs.select(F.col(id_col), toks.alias("toks"))
     win = F.when(
@@ -179,11 +190,6 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 20,
     pos = base.select(F.col(id_col), F.explode(win).alias("w")).select(
         id_col, F.col("w.i").alias("i"), F.col("w.h").alias("h")
     )
-    # cache only on the materializing path — with checkpoint=False
-    # (plan inspection) a persist would leak the corpus-windows-sized
-    # frame in executor storage with no unpersist to release it
-    if checkpoint:
-        pos = pos.persist()
     if keep_first:
         # per duplicated hash, the keeper occurrence — min(struct) is
         # the same map-side-combining first-occurrence aggregation as
@@ -237,12 +243,7 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 20,
             F.concat_ws(" ", kept).alias("cleaned_text"),
         )
     )
-    # persist-release discipline (same as duplicated_spans); plan-shape
-    # tests pass checkpoint=False to inspect the pre-checkpoint lineage
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-        pos.unpersist()
-    return out
+    return out, pos
 
 
 def duplicated_spans(docs: DataFrame, n: int = 20,
@@ -259,6 +260,16 @@ def duplicated_spans(docs: DataFrame, n: int = 20,
     document; docs with fewer than n tokens have n_windows = 0 and
     dup_frac = 0.0.
     """
+    out, pos = _duplicated_spans(docs, n, text_col, id_col)
+    pos.persist()  # the op's dominant cost: read twice, computed once
+    out = materialize(out, "duplicated_spans")
+    pos.unpersist()
+    return out
+
+
+def _duplicated_spans(docs: DataFrame, n: int, text_col: str,
+                      id_col: str) -> tuple[DataFrame, DataFrame]:
+    """The lazy plan of :func:`duplicated_spans`: (result, window positions)."""
     toks = _tokens(F.col(text_col))
     # positional windows (NOT distinct — the per-doc denominator is
     # window positions, per the paper's duplicated-token fraction)
@@ -269,13 +280,9 @@ def duplicated_spans(docs: DataFrame, n: int = 20,
             lambda i: F.concat_ws(" ", F.slice(toks, i, F.lit(n))),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    # the tokenize/explode/md5 projection is the op's dominant cost —
-    # compute it ONCE (persist) instead of re-scanning per consumer,
-    # then release via localCheckpoint (same discipline as
-    # dedup.simhash_near_dups)
     pos = docs.select(
         F.col(id_col), F.explode_outer(win).alias("span")
-    ).select(id_col, F.md5("span").alias("h")).persist()
+    ).select(id_col, F.md5("span").alias("h"))
     # corpus-wide distinct-doc count per span hash; only the >= 2
     # survivors ship to the join (the duplicated set is the small one)
     dup_h = (
@@ -305,7 +312,5 @@ def duplicated_spans(docs: DataFrame, n: int = 20,
                 6,
             ).alias("dup_frac"),
         )
-        .localCheckpoint(eager=True)
     )
-    pos.unpersist()
-    return out
+    return out, pos

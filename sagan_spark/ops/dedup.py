@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sagan_spark.session import materialize, release
+
 
 def exact_dup_groups(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
@@ -442,14 +444,9 @@ def _candidate_overlap_counts(docs: DataFrame, k: int, n_bands: int,
 
     The corpus is shingled ONCE: the distinct shingle frame feeds the
     LSH candidate generation, the per-doc sizes, and the intersection
-    join.  The result is localCheckpointed so the corpus-sized shingle
-    cache can be RELEASED before returning — without that every call
-    leaked the explode-of-all-k-grams frame into the block manager for
-    the session lifetime (localCheckpoint blocks are context-cleaned
-    when the result is garbage-collected, unlike persist()'s registry
-    pin)."""
-    # persist: three consumers (signatures, sizes, intersection) would
-    # otherwise each re-run the explode+distinct; LRU eviction reclaims it
+    join.  The result is materialized so the corpus-sized shingle cache
+    is unpersisted before returning."""
+    # persist: signatures, sizes and the intersection each read it
     sh = shingle_df(docs, k, text_col, id_col, distinct=True).persist()
     pairs = minhash_lsh_pairs(docs, k, n_bands, text_col, id_col, shingles=sh)
     # only docs that appear in a candidate pair matter downstream: on a
@@ -474,9 +471,8 @@ def _candidate_overlap_counts(docs: DataFrame, k: int, n_bands: int,
     )
     na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
     nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n").alias("n_b"))
-    out = (
-        inter_counts.join(na, "doc_a").join(nb, "doc_b")
-        .localCheckpoint(eager=True)
+    out = materialize(
+        inter_counts.join(na, "doc_a").join(nb, "doc_b"), "overlap counts"
     )
     sh.unpersist()
     return out
@@ -676,12 +672,12 @@ def simhash_near_dups(docs: DataFrame, k: int = 4, max_hamming: int = 3,
         )
         out = p if out is None else out.unionByName(p)
     hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    result = (
+    result = materialize(
         out.withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
-        .distinct()  # a pair can collide in several blocks
-        .localCheckpoint(eager=True)
+        .distinct(),  # a pair can collide in several blocks
+        "simhash pairs",
     )
     sh.unpersist()
     return result
@@ -895,38 +891,41 @@ def connected_components_star(pairs: DataFrame, a_col: str = "doc_a",
     full round (stars are fixed points of both operations; the paper
     proves the alternation reaches them).  Fixed-point detection is two
     subtract-probes (exact, not a hash heuristic); each round
-    localCheckpoints so the plan stays O(1) per round.
+    ``materialize``s its edge set so the plan stays O(1) per round.
     """
     # eagerly materialized: `nodes` is consumed by the FINAL join, and
     # a lazy frame there would re-run the (typically expensive) pairs
     # pipeline once per downstream action of the result
-    nodes = (
+    nodes = materialize(
         pairs.select(F.col(a_col).alias("node"))
         .unionByName(pairs.select(F.col(b_col).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "cc_star nodes",
     )
-    edges = (
+    edges = materialize(
         pairs.select(
             F.greatest(F.col(a_col), F.col(b_col)).alias("hi"),
             F.least(F.col(a_col), F.col(b_col)).alias("lo"),
         )
         .filter(F.col("hi") != F.col("lo"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "cc_star edges",
     )
     for _ in range(max_iter):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        new_edges = materialize(_small_star(_large_star(edges)), "cc_star edges")
         stable = (
             new_edges.subtract(edges).limit(1).count() == 0
             and edges.subtract(new_edges).limit(1).count() == 0
         )
+        release(edges)
         edges = new_edges
         if stable:
             star = edges.select(F.col("hi").alias("node"), F.col("lo").alias("comp"))
             return nodes.join(star, "node", "left").select(
                 "node", F.coalesce("comp", "node").alias("comp")
             )
+    release(nodes)
+    release(edges)
     raise RuntimeError(
         f"connected_components_star did not converge in {max_iter} rounds"
     )
@@ -944,7 +943,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     apart; chains only form across buckets); the loop checks actual
     convergence (no label changed) instead of trusting that, and
     raises if ``max_iter`` rounds don't settle.  Each round
-    localCheckpoints the label frame: the plan would otherwise double
+    ``materialize``s the label frame: the plan would otherwise double
     per iteration and overwhelm the optimizer at 10+ rounds.
 
     For adversarially deep graphs (long chains at 100TB) pass
@@ -963,11 +962,11 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
         .distinct()
         .persist()
     )
-    labels = (
+    labels = materialize(
         edges.groupBy("u")
         .agg(F.least(F.min("v"), F.first("u")).alias("comp"))
-        .select(F.col("u").alias("node"), F.least("comp", "node").alias("comp"))
-        .localCheckpoint(eager=True)
+        .select(F.col("u").alias("node"), F.least("comp", "node").alias("comp")),
+        "cc labels",
     )
     for _ in range(max_iter):
         # neighbor's current label, pulled across each edge
@@ -976,15 +975,14 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
             .groupBy("u")
             .agg(F.min("comp").alias("nbr_comp"))
         )
-        new_labels = (
-            labels.join(nbr, labels.node == nbr.u, "left")
-            .select(
+        new_labels = materialize(
+            labels.join(nbr, labels.node == nbr.u, "left").select(
                 "node",
                 F.least(
                     F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
                 ).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "cc labels",
         )
         changed = (
             new_labels.alias("n")
@@ -993,11 +991,13 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
             .limit(1)
             .count()
         )
+        release(labels)
         labels = new_labels
         if changed == 0:
             edges.unpersist()
             return labels
     edges.unpersist()
+    release(labels)
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 

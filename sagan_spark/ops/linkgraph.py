@@ -30,8 +30,8 @@ Scale shape (100 TB posture):
   shuffles per iteration, the minimum for unbucketed input (bucket
   edges by src to drop the join shuffle on a real deployment).  Hot
   dst nodes (every page links to google.com) partial-aggregate
-  map-side before the shuffle.  ``localCheckpoint`` per iteration
-  cuts the lineage chain exactly like ops/dedup.connected_components.
+  map-side before the shuffle.  ``materialize`` per iteration cuts
+  the lineage chain exactly like ops/dedup.connected_components.
 - Dangling nodes (appear only as dst) receive rank but emit none —
   the standard "lost mass" simplification; redistribute externally if
   the true eigenvector is needed.
@@ -44,6 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sagan_spark.session import materialize, release
 
 #: real-HTML href matcher (the ops/htmlstats.py attribute-alternation
 #: idiom): any attribute order, any of double-quoted / single-quoted /
@@ -130,6 +132,24 @@ def domain_edges(links: DataFrame, src_col: str = "src_url",
     return e.where(F.col("src") != F.col("dst"))
 
 
+def _edges_and_nodes(edges: DataFrame, src_col: str, dst_col: str,
+                     op: str) -> tuple[DataFrame, DataFrame]:
+    """The edge list as (_sg_src, _sg_dst) and its distinct node set,
+    both materialized: the op reads the edges more than once, and their
+    producer (link extraction, the PSL domain ladder) is expensive."""
+    e = materialize(
+        edges.select(F.col(src_col).alias("_sg_src"), F.col(dst_col).alias("_sg_dst")),
+        f"{op} edges",
+    )
+    nodes = materialize(
+        e.select(F.col("_sg_src").alias("node"))
+        .union(e.select(F.col("_sg_dst").alias("node")))
+        .distinct(),
+        f"{op} nodes",
+    )
+    return e, nodes
+
+
 def pagerank(edges: DataFrame, iterations: int = 5,
              damping_milli: int = 850, scale: int = 1_000_000,
              src_col: str = "src", dst_col: str = "dst",
@@ -153,36 +173,17 @@ def pagerank(edges: DataFrame, iterations: int = 5,
         raise ValueError(f"damping_milli must be in [0,1000], got {damping_milli}")
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
-    src, dst = F.col(src_col), F.col(dst_col)
-    # the edge frame is consumed TWICE below (outdegree build + join
-    # probe side) and its producer is often expensive (real-HTML
-    # extraction + URL resolution + the PSL domain ladder): materialize
-    # it once up front so the corpus scan runs once, not twice — the
-    # hits() discipline (r5; measured ~one extraction pass saved)
-    ed = edges.select(
-        src.alias("_sg_src"), dst.alias("_sg_dst")
-    ).localCheckpoint(eager=True)
+    ed, nodes = _edges_and_nodes(edges, src_col, dst_col, "pagerank")
     outdeg = ed.groupBy(F.col("_sg_src").alias("node")).agg(
         F.count(F.lit(1)).alias("_sg_outdeg")
     )
     # outdegree rides along with every edge from the start: the
     # per-iteration loop joins ranks only
-    e = ed.join(outdeg.withColumnRenamed("node", "_sg_src"), "_sg_src")
-    if iterations > 1:  # reused every iteration: materialize once
-        e = e.localCheckpoint(eager=True)
-    # node set from the (checkpointed) edge frame, NOT from `edges`:
-    # deriving it from the raw input would re-run the upstream corpus
-    # scan (link extraction + the PSL domain ladder) a second time —
-    # the outdegree join is inner on src-with-outdegree, which every
-    # edge has by construction, so the node multiset is identical
-    # (the `hits` op already did this; measured ~one corpus pass
-    # saved per call)
-    nodes = (
-        e.select(F.col("_sg_src").alias("node"))
-        .union(e.select(F.col("_sg_dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e = materialize(
+        ed.join(outdeg.withColumnRenamed("node", "_sg_src"), "_sg_src"),
+        "pagerank edges+outdeg",
     )
+    release(ed)
     base = (1000 - damping_milli) * scale // 1000
     if init_ranks is None:
         ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
@@ -195,7 +196,7 @@ def pagerank(edges: DataFrame, iterations: int = 5,
             "node",
             F.coalesce(F.col("_sg_r0"), F.lit(scale).cast("long")).alias("rank"),
         )
-    for _ in range(iterations):
+    for i in range(iterations):
         contribs = (
             e.join(ranks.withColumnRenamed("node", "_sg_src"), "_sg_src")
             .select(
@@ -205,14 +206,19 @@ def pagerank(edges: DataFrame, iterations: int = 5,
             .groupBy("node")
             .agg(F.sum("_sg_c").alias("_sg_s"))
         )
-        ranks = nodes.join(contribs, "node", "left").select(
+        prev, ranks = ranks, nodes.join(contribs, "node", "left").select(
             "node",
             (
                 F.lit(base).cast("long")
                 + F.expr(f"({damping_milli} * coalesce(_sg_s, 0L)) div 1000")
             ).alias("rank"),
         )
-        ranks = ranks.localCheckpoint(eager=True)
+        ranks = materialize(ranks, "pagerank ranks")
+        if i:
+            release(prev)
+    release(e)
+    if iterations:  # without an iteration the returned ranks read `nodes`
+        release(nodes)
     return ranks
 
 
@@ -245,54 +251,52 @@ def hits(edges: DataFrame, iterations: int = 3, scale: int = 1_000_000,
     the plan beyond the scalar itself.  Hot authorities (every page
     links to the same domain) partial-aggregate map-side.  Duplicate
     (src,dst) pairs act as edge weights, as in :func:`pagerank`;
-    ``localCheckpoint`` per iteration cuts lineage.
+    ``materialize`` per iteration cuts lineage.
     """
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
-    src, dst = F.col(src_col), F.col(dst_col)
-    e = edges.select(src.alias("_sg_src"), dst.alias("_sg_dst"))
-    if iterations > 1:
-        e = e.localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("_sg_src").alias("node"))
-        .union(e.select(F.col("_sg_dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, nodes = _edges_and_nodes(edges, src_col, dst_col, "hits")
 
     def _rescale(raw: DataFrame, col: str) -> DataFrame:
         # raw * scale div max(raw): the 1-row max is broadcast, never
         # collected; greatest(1) guards the all-zero edgeless corner
         mx = raw.agg(F.greatest(F.max(col), F.lit(1).cast("long")).alias("_sg_mx"))
-        return raw.crossJoin(F.broadcast(mx)).select(
+        out = raw.crossJoin(F.broadcast(mx)).select(
             "node", F.expr(f"({col} * {scale}L) div _sg_mx").alias(col)
         )
+        return materialize(out, f"hits {col}")
 
     hubs = nodes.select("node", F.lit(scale).cast("long").alias("hub"))
     auths = nodes.select("node", F.lit(0).cast("long").alias("auth"))
-    for _ in range(iterations):
+    for i in range(iterations):
         a_raw = (
             e.join(hubs.withColumnRenamed("node", "_sg_src"), "_sg_src")
             .groupBy(F.col("_sg_dst").alias("node"))
             .agg(F.sum("hub").alias("_sg_a"))
         )
-        auths = _rescale(
+        prev_auths, auths = auths, _rescale(
             nodes.join(a_raw, "node", "left").select(
                 "node", F.coalesce(F.col("_sg_a"), F.lit(0).cast("long")).alias("auth")
             ),
             "auth",
-        ).localCheckpoint(eager=True)
+        )
         h_raw = (
             e.join(auths.withColumnRenamed("node", "_sg_dst"), "_sg_dst")
             .groupBy(F.col("_sg_src").alias("node"))
             .agg(F.sum("auth").alias("_sg_h"))
         )
-        hubs = _rescale(
+        prev_hubs, hubs = hubs, _rescale(
             nodes.join(h_raw, "node", "left").select(
                 "node", F.coalesce(F.col("_sg_h"), F.lit(0).cast("long")).alias("hub")
             ),
             "hub",
-        ).localCheckpoint(eager=True)
+        )
+        if i:
+            release(prev_auths)
+            release(prev_hubs)
+    release(e)
+    if iterations:  # without an iteration the returned scores read `nodes`
+        release(nodes)
     return hubs.join(auths, "node").select("node", "hub", "auth")
 
 

@@ -91,15 +91,18 @@ def build_spark(
 
 def materialize(df: DataFrame, name: str) -> DataFrame:
     """Compute ``df`` now and return a frame that reads the stored rows:
-    the one way the engine pins an intermediate result.  Its lineage is
-    cut, so later plans analyse a ``LogicalRDD`` leaf instead of the
-    whole tree below it (the match projection, the replays).
+    the one way the package pins a frame.  Its lineage is cut, so later
+    plans analyse a ``LogicalRDD`` leaf instead of the whole tree below
+    it (the match projection, the replays, an op's earlier rounds).
 
     A reliable ``checkpoint`` when the SparkContext has a checkpoint dir
     (``spark.checkpoint.dir`` or ``setCheckpointDir``): it survives
     executor loss.  Otherwise an executor-local ``localCheckpoint``.
     The jobs carry the call site ``materialize <name>`` in the event
-    log.  Free the pin with :func:`release` once nothing reads it."""
+    log.  Free the pin with :func:`release` once nothing reads it (Spark
+    deletes no checkpoint files by itself): an op frees its own
+    intermediate pins, and those its returned frame reads belong to
+    its caller."""
     sc = df.sparkSession.sparkContext
     prev = sc.getLocalProperty("callSite.short")
     sc.setLocalProperty("callSite.short", f"materialize {name}")

@@ -230,36 +230,20 @@ def test_duplicated_spans_no_window_map_side_partials(spark):
     hot boilerplate span would funnel one task) and the distinct-doc
     count must partial-aggregate map-side before the span-hash
     shuffle."""
-    from pyspark.sql import functions as F2
-
-    from sagan_spark.ops.decontam import _tokens, duplicated_spans
+    from sagan_spark.ops.decontam import _duplicated_spans, duplicated_spans
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon")], "doc_id long, text string"
     )
-    # duplicated_spans localCheckpoints its result (the persist-release
-    # discipline), which hides the logical plan — rebuild the same
-    # pre-checkpoint lineage for the shape assertions
-    win = F2.transform(
-        F2.sequence(F2.lit(1), F2.size(_tokens(F2.col("text"))) - F2.lit(3)),
-        lambda i: F2.concat_ws(
-            " ", F2.slice(_tokens(F2.col("text")), i, F2.lit(4))
-        ),
-    )
-    pos = docs.select("doc_id", F2.explode_outer(win).alias("span")).select(
-        "doc_id", F2.md5("span").alias("h")
-    )
-    dup_h = (
-        pos.groupBy("h")
-        .agg(F2.countDistinct("doc_id").alias("n_docs"))
-        .filter(F2.col("n_docs") >= 2)
-    )
-    plan = dup_h._jdf.queryExecution().executedPlan().toString()
+    # the public op materializes its result, which hides the plan:
+    # inspect its lazy builder's
+    out, _pos = _duplicated_spans(docs, 4, "text", "doc_id")
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, "window crept into the span count"
     assert "partial_count" in plan or "partial_" in plan, (
         f"no map-side partial aggregation before the span shuffle:\n{plan[:2000]}"
     )
-    # end-to-end: the public op's physical plan (checkpointed) must
+    # end-to-end: the public op's physical plan (materialized) must
     # still have executed without any Window/SortMergeJoin on strings
     out = duplicated_spans(docs, n=4)
     assert out.count() == 1
@@ -296,17 +280,14 @@ def test_remove_duplicated_spans_no_window_no_python(spark):
     """Span REMOVAL edits inside a higher-order array filter: no
     Python node, no Window, map-side partials on both the dup-hash
     count and the start-list collect."""
-    from sagan_spark.ops.decontam import remove_duplicated_spans
+    from sagan_spark.ops.decontam import _remove_duplicated_spans
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta")],
         "doc_id long, text string",
     )
-    qe = (
-        remove_duplicated_spans(docs, n=4, checkpoint=False)
-        ._jdf.queryExecution()
-    )
-    plan = qe.executedPlan().toString()
+    out, _pos = _remove_duplicated_spans(docs, 4, "text", "doc_id", False)
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan, "Python node in span-removal plan"
     assert "Window" not in plan, "window in span-removal plan"
     assert "partial_count(distinct" in plan, (
@@ -475,7 +456,7 @@ def test_calibrate_threshold_windows_only_the_histogram(spark):
 
 def test_pagerank_lineage_is_cut_per_iteration(spark):
     """The iterative PageRank plan must not grow with iteration count:
-    localCheckpoint truncates lineage, so the FINAL plan contains the
+    materialize truncates lineage, so the FINAL plan contains the
     scan of the checkpointed ranks, not a 2^k join tower.  Pin: plan
     size at 4 iterations stays within 2x of 2 iterations (a lineage
     leak compounds per round), and contains an RDDScan (checkpoint)."""

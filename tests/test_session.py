@@ -1,14 +1,21 @@
-"""``session.run_concurrently``: the one write fan-out of batch
-``write_sinks`` and both streaming stages."""
+"""``session.run_concurrently``, the one write fan-out of batch
+``write_sinks`` and both streaming stages, and ``session.materialize``,
+the one way the package pins a frame."""
 
 from __future__ import annotations
 
+import re
 import threading
 import time
 import warnings
+from pathlib import Path
 
 import pytest
 
+from sagan_spark.ops.bpetrain import bpe_train
+from sagan_spark.ops.decontam import duplicated_spans
+from sagan_spark.ops.dedup import connected_components, simhash_near_dups
+from sagan_spark.ops.linkgraph import hits, pagerank
 from sagan_spark.session import run_concurrently
 
 
@@ -69,3 +76,90 @@ def test_workers_inherit_local_properties_without_warning(spark):
         sc.setLocalProperty("callSite.short", None)
     assert seen == [("fan-out span", "fan-out site")] * 2
     assert not [w for w in caught if "will not be inherited" in str(w.message)]
+
+
+def _edges(spark):
+    return spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("e", "a")], "src string, dst string"
+    )
+
+
+def _pairs(spark):
+    return spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (5, 6), (7, 7)], "doc_a long, doc_b long"
+    )
+
+
+def _docs(spark):
+    return spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy cat"),
+            (3, "lorem ipsum dolor sit amet consectetur"),
+        ],
+        "doc_id long, text string",
+    )
+
+
+PIN_OPS = {
+    "pagerank": lambda s: pagerank(_edges(s), iterations=3),
+    "hits": lambda s: hits(_edges(s)),
+    "cc_propagation": lambda s: connected_components(_pairs(s), method="propagation"),
+    "cc_star": lambda s: connected_components(_pairs(s), method="star"),
+    "bpe_train": lambda s: bpe_train(_docs(s), rounds=3),
+    "duplicated_spans": lambda s: duplicated_spans(_docs(s), n=4),
+    "simhash_near_dups": lambda s: simhash_near_dups(_docs(s), max_hamming=7),
+}
+
+
+def _leaf_rdds(df) -> dict:
+    """The RDDs behind the leaves of ``df``'s analyzed plan, by id; every
+    leaf must be a pin."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    rdds = {}
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        assert leaf.getClass().getSimpleName() == "LogicalRDD", leaf.toString()
+        rdds[leaf.rdd().id()] = leaf.rdd()
+    return rdds
+
+
+@pytest.mark.parametrize("op", sorted(PIN_OPS))
+def test_op_pins_follow_the_checkpoint_mode(spark, tmp_path, op):
+    """Every iterative op pins through ``materialize``: with a checkpoint
+    dir its result reads reliable checkpoints only and matches the
+    local-mode rows.  In both modes an op leaves behind only the pins
+    its result reads; the superseded and input-side ones are freed."""
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    local = PIN_OPS[op](spark)
+    new_pins = set(sc._jsc.getPersistentRDDs().keySet()) - before
+    assert new_pins <= set(_leaf_rdds(local))
+    want = sorted(local.collect())
+    assert want
+
+    ckpt = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        out = PIN_OPS[op](spark)
+        leaves = _leaf_rdds(out)
+        assert all(rdd.getCheckpointFile().isDefined() for rdd in leaves.values())
+        files = {int(p.name[len("rdd-"):]) for p in ckpt.glob("*/rdd-*")}
+        assert files and files <= set(leaves)
+        assert sorted(out.collect()) == want
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+
+def test_only_session_pins_frames():
+    """``session.materialize``/``release`` are the only code that decides
+    how a frame is pinned: no other module checkpoints on its own."""
+    pkg = Path(__file__).resolve().parent.parent / "sagan_spark"
+    found = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "session.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"localCheckpoint|\.checkpoint\(", line)
+    ]
+    assert not found, "\n".join(found)
