@@ -11,15 +11,18 @@
 (tests/test_spark_submit.py runs this, from a directory where the
 repo is not importable — imports resolve from the shipped zip.)
 
-readStream -> stateless match -> foreachBatch: after/threshold through
-the batch replay seeded from the previous micro-batch's snapshot store
-under --output, then the sink fan-out.  --watermark is the allowed event
-lateness: state older than it (plus the rule's window) leaves the
-snapshot.  Restarting with the same --checkpoint and --output resumes
-state and sink offsets exactly-once (the reference's
-mmap-survives-restart property, reference src/sagan-defs.h:185-208).
-Default trigger is availableNow (drain-and-stop); --continuous keeps
-the query running for live tailing.
+One query routes every rule: readStream -> stateless match ->
+foreachBatch: the correlation step batch runs too (after/threshold, the
+xbit/flexbit walk, the condition gate), seeded from the previous
+micro-batch's snapshot stores under --output, then the sink fan-out.
+--watermark is the allowed event lateness: state older than it (plus
+the rule's window or the bit's expire) leaves the snapshots.
+Restarting with the same --checkpoint and --output resumes state and
+sink offsets exactly-once (the reference's mmap-survives-restart
+property, reference src/sagan-defs.h:185-208).  Default trigger is
+availableNow (drain-and-stop); --continuous keeps the query running for
+live tailing.  A checkpoint written before the single query (stage_a
+and stage_b subdirectories) needs a fresh --checkpoint and --output.
 """
 
 from __future__ import annotations
@@ -65,28 +68,12 @@ def main() -> None:
                 variables[k.strip()] = v.strip()
 
     rules = parse_rules(open(args.rules).read(), variables)
-    has_cond = any(r.is_condition for r in rules)
-    seng = StreamingSaganEngine(
-        rules, watermark=args.watermark, enable_xbits=has_cond
+    seng = StreamingSaganEngine(rules, watermark=args.watermark, enable_xbits=True)
+    frame = SaganSparkEngine.frame_from_pages(pages_stream_frame(spark, args.input))
+    q = seng.start_query(
+        frame, args.output, args.checkpoint, trigger_available_now=not args.continuous
     )
-    if has_cond and not args.continuous:
-        # drain-ordered chained pipeline (stage A then xbit stage B)
-        seng.run_pipeline_with_xbits(
-            lambda: SaganSparkEngine.frame_from_pages(
-                pages_stream_frame(spark, args.input)
-            ),
-            args.output,
-            args.checkpoint,
-        )
-    else:
-        frame = SaganSparkEngine.frame_from_pages(pages_stream_frame(spark, args.input))
-        q = seng.start_sink_query(
-            frame,
-            args.output,
-            args.checkpoint,
-            trigger_available_now=not args.continuous,
-        )
-        q.awaitTermination()
+    q.awaitTermination()
     spark.stop()
 
 

@@ -383,8 +383,8 @@ def chain_components(rules: list[RuleIR]) -> tuple[list[RuleIR], dict[str, str]]
 
 
 def xbit_layout(rules: list[RuleIR]) -> tuple[dict[str, set], set[str]]:
-    """How each bit is stored, shared by the batch walk and the streaming
-    staged store: ``(shapes_by_bit, funnel_bits)``.
+    """How each bit is stored, shared by every walk event builder:
+    ``(shapes_by_bit, funnel_bits)``.
 
     ``shapes_by_bit``: flexbit name -> the direction shapes its
     conditions probe; a set writes one keyed copy per (bit, shape).
@@ -407,12 +407,17 @@ def xbit_layout(rules: list[RuleIR]) -> tuple[dict[str, set], set[str]]:
     return shapes_by_bit, funnel_bits
 
 
-#: The one walk event layout.  Every bit operation is one row: batch hits,
-#: stage A's staged set store and stage B's fired chain sets all hold it.
-#: ``hit_id`` keys checks and verdict-gated chain ops; (csid, a_key,
-#: t_key) name a chain rule's after/threshold machines on its gated ops.
-#: A ``cseed`` row restores one machine: csid the rule, shape the machine
-#: ("a"/"t"), bit_key its track key, seq the count, expire the anchor.
+#: The one walk event layout.  Every bit operation is one row; ``hit_id``
+#: keys checks and verdict-gated chain ops; (csid, a_key, t_key) name a
+#: chain rule's after/threshold machines on its gated ops.  Seed rows
+#: restore an earlier pass's state and sort first (ts_d -inf):
+#:
+#: - ``cseed``: one chain machine: csid the rule, shape the machine
+#:   ("a"/"t"), bit_key its track key, seq the count, expire the anchor;
+#: - ``bseed``/``fseed``: one plain bit / flexbit tuple: bit_name and
+#:   bit_key its slot (bit_key "" for a flexbit, as its events carry),
+#:   e_src/e_dst/e_user the flexbit tuple, seq the set time in
+#:   microseconds, expire its expire.
 _XBIT_WALK_COLS = (
     "kind", "bit_name", "bit_key", "ts_d", "event_key", "seq", "expire",
     "shape", "e_src", "e_dst", "e_user", "hit_id", "want_set",
@@ -445,18 +450,18 @@ def _walk_frame(rows: list[tuple]) -> pd.DataFrame:
 def _make_xbit_walk(chain_corr_specs: dict[int, dict], floor: float = float("-inf")):
     """``mapInPandas`` body: one ordered pass of walk events through the
     core's :class:`~sagan_spark.pipeline.machines.XbitWalk`, state
-    carried across Arrow batches.  ``cseed`` rows seed the chain
-    machines.  Output rows by ``kind``:
+    carried across Arrow batches; seed rows restore an earlier pass's
+    state.  Output rows by ``kind``:
 
     - ``verdict``: one check's verdict (``ok``) for its ``hit_id``;
     - ``cflags``: a chain hit's after/threshold flags;
-    - ``set``/``unset``/``fset``/``funset``: a gated chain op that fired,
-      as the ungated walk event a later micro-batch replays;
-    - ``cstate``: the chain machines' surviving snapshot
-      (``CorrMachines.snapshot(floor)``) at the end of the partition:
-      ``cseed`` rows but for the kind, sorted before every event.
+    - at the end of the partition, the state a later pass continues,
+      bounded by ``floor`` (``CorrMachines.snapshot``,
+      ``BitStore.snapshot``): ``cstate`` rows, ``cseed`` rows but for the
+      kind, and the surviving bits as ``bseed``/``fseed`` rows.
 
-    Batch reads the first two kinds; stage B persists the others."""
+    Batch reads the first two kinds; a streaming micro-batch keeps the
+    others as its snapshots."""
 
     def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         w = XbitWalk(chain_corr_specs)
@@ -468,6 +473,10 @@ def _make_xbit_walk(chain_corr_specs: dict[int, dict], floor: float = float("-in
             ) in zip(*(pdf[c].to_numpy() for c in _XBIT_WALK_COLS)):
                 if kind == "cseed":
                     w.machines.seed(shape, sid, key, seq, expire)
+                    continue
+                if kind in ("bseed", "fseed"):
+                    tup = (esrc, edst, euser) if kind == "fseed" else None
+                    w.bits.seed(name, key, tup, seq / 1_000_000, expire)
                     continue
                 result, flags = w.step(
                     kind, name, key, ts_d, expire, shape, (esrc, edst, euser),
@@ -482,18 +491,22 @@ def _make_xbit_walk(chain_corr_specs: dict[int, dict], floor: float = float("-in
                     out.append(_out_row(
                         kind="verdict", hit_id=hit_id, ok=result == bool(want_set)
                     ))
-                elif result:
-                    out.append(_out_row(
-                        kind=GATED[kind], bit_name=name, bit_key=key, ts_d=ts_d,
-                        event_key=ek, seq=seq, expire=expire, shape=shape,
-                        e_src=esrc, e_dst=edst, e_user=euser,
-                    ))
             yield _walk_frame(out)
-        yield _walk_frame([
+        state = [
             _out_row(kind="cstate", ts_d=float("-inf"), event_key="", csid=sid,
                      shape=machine, bit_key=mkey, seq=cnt, expire=utime)
             for machine, sid, mkey, cnt, utime in w.machines.snapshot(floor)
-        ])
+        ]
+        for name, key, tup, set_ts, expire in w.bits.snapshot(floor):
+            plain = tup is None
+            esrc, edst, euser = (None, None, None) if plain else tup
+            state.append(_out_row(
+                kind="bseed" if plain else "fseed", bit_name=name,
+                bit_key=key if plain else "", ts_d=float("-inf"), event_key="",
+                seq=round(set_ts * 1_000_000), expire=expire,
+                e_src=esrc, e_dst=edst, e_user=euser,
+            ))
+        yield _walk_frame(state)
 
     return walk
 
@@ -613,9 +626,9 @@ def resolve_xbits(
     hit's verdict onto ``hits``.  Returns ``(hits + xbit_ok, walk
     output)``; ``hits`` also gains ``chain_sup_after``/``chain_sup_thr``
     when a chain rule carries after/threshold, which
-    :func:`gate_after_threshold` consumes — batch ``run()`` and stream
-    stage B pass this output straight to it.  ``floor`` bounds the walk's
-    ``cstate`` snapshot (``CorrMachines.snapshot``).
+    :func:`gate_after_threshold` consumes (:func:`correlate` passes this
+    output straight to it).  ``floor`` bounds the walk's snapshots
+    (``CorrMachines.snapshot``, ``BitStore.snapshot``).
 
     Events shuffle ONCE: every bit of a chain component colocates (the
     gated set and the checks observing it replay in one ordered pass —
@@ -726,3 +739,113 @@ def gate_after_threshold(
         passing = passing.drop("chain_sup_after", "chain_sup_thr")
         failing = failing.drop("chain_sup_after", "chain_sup_thr")
     return passing.unionByName(failing), replayed
+
+
+#: the snapshot stores a correlation pass continues and leaves, each
+#: with its rows' anchor as an SQL expression: a machine key's
+#: ``utime``; a ``cstate`` row holds it in ``expire``, a bit its set time
+#: in ``seq``, in microseconds
+STATE_ANCHORS = {
+    "corr_state": "utime",
+    "xbit_state": "seq / 1000000",
+    "chain_corr_state": "expire",
+}
+
+
+def _walk_seeds(state: dict[str, DataFrame], rules: list[RuleIR]) -> DataFrame | None:
+    """The walk's seed rows from an earlier pass's snapshots: the bits as
+    they are, the chain machines as ``cseed`` rows named after a bit of
+    their rule, so that each replays in its component's partition."""
+    seeds = [state["xbit_state"]] if "xbit_state" in state else []
+    if "chain_corr_state" in state:
+        bit = F.lit(None).cast("string")
+        for r in chain_components(rules)[0]:
+            bit = F.when(F.col("csid") == r.sid, F.lit(r.xbits[0].name)).otherwise(bit)
+        seeds.append(
+            state["chain_corr_state"].withColumn("kind", F.lit("cseed")).withColumn("bit_name", bit)
+        )
+    return _union(seeds)
+
+
+def correlate(
+    hits: DataFrame,
+    rules: list[RuleIR],
+    state: dict[str, DataFrame] | None = None,
+    floor: float = float("-inf"),
+    pins: list[DataFrame] | None = None,
+    cache: list[DataFrame] | None = None,
+    isolate_hot: bool = False,
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """The one correlation step: batch ``run()`` calls it on its
+    materialized hits and every streaming micro-batch on its cached ones.
+
+    1. after/threshold of every rule without a condition
+       (:func:`apply_after_threshold`); xbit condition rules sit it out,
+       their state only advances after the gate (engine.c:999-1024 vs
+       1373-1389);
+    2. the walk (:func:`resolve_xbits`) over the condition hits' checks
+       and chain ops and the set/unset events of the setters that
+       survived step 1 — only those set bits (engine.c:1415-1427);
+    3. the condition gate's after/threshold (:func:`gate_after_threshold`).
+
+    ``state``: the snapshots an earlier pass left, by store
+    (:data:`STATE_ANCHORS`) — ``corr_state`` (both after/threshold
+    replays' rows; each replay drops the other's sids), ``xbit_state``
+    (the bits) and ``chain_corr_state`` (the chain machines); ``floor``
+    bounds this pass's snapshots.
+    ``pins``: when given, the suppressed and gated sets are materialized
+    and appended for the caller to release (batch).  ``cache``: when
+    given, every replay output is persisted lazily and appended for the
+    caller to unpersist, so one action computes each replay once and the
+    snapshot writes read the cached rows (streaming).
+
+    Returns ``(hits + suppressed_after/suppressed_threshold/xbit_ok, this
+    pass's snapshots by store)``; a store no rule of ``rules`` feeds is
+    absent."""
+    state = state or {}
+    cond_sids = [r.sid for r in rules if r.is_condition]
+    flagged, replayed = apply_after_threshold(
+        hits, [r for r in rules if not r.is_condition],
+        pins=pins if cond_sids else None, isolate_hot=isolate_hot,
+        seed=state.get("corr_state"), floor=floor,
+    )
+    replays = [replayed]
+    walk_out = None
+    if cond_sids:
+        plain = flagged.filter(~F.col("sid").isin(cond_sids)).withColumn(
+            "xbit_ok", F.lit(True)
+        )
+        cond = flagged.filter(F.col("sid").isin(cond_sids)).drop(*FLAG_FIELDS)
+        survived = plain.filter(~F.col("suppressed_after") & ~F.col("suppressed_threshold"))
+        events = hit_events(cond, rules)
+        for more in (setter_events(survived, rules), _walk_seeds(state, rules)):
+            if more is not None:
+                events = events.unionByName(more)
+        gated, walk_out = resolve_xbits(cond, events, rules, floor)
+        if pins is not None:
+            # the post-condition set fans into passing/failing branches
+            # and the second correlation pass reads it twice
+            gated = materialize(gated, "gated")
+            pins.append(gated)
+        gated, gate_replayed = gate_after_threshold(
+            gated, rules, seed=state.get("corr_state"), floor=floor
+        )
+        replays.append(gate_replayed)
+        flagged = plain.unionByName(gated)
+    else:
+        flagged = flagged.withColumn("xbit_ok", F.lit(True))
+    if cache is not None:
+        cache.extend(df.persist() for df in (*replays, walk_out) if df is not None)
+
+    kind = F.col("kind")
+    corr = [df.filter(kind == "s").select(*CORR_STATE_COLS) for df in replays if df is not None]
+    snapshots = {"corr_state": _union(corr)} if corr else {}
+    if walk_out is not None:
+        snapshots["xbit_state"] = walk_out.filter(kind.isin("bseed", "fseed")).select(
+            *_XBIT_WALK_COLS
+        )
+        if _corr_spec_map(chain_components(rules)[0]):
+            snapshots["chain_corr_state"] = walk_out.filter(kind == "cstate").select(
+                *_XBIT_WALK_COLS
+            )
+    return flagged, snapshots

@@ -28,13 +28,7 @@ from pyspark.sql import functions as F
 
 from sagan_spark.functions.textmatch import any_of
 from sagan_spark.functions.udfs import json_flatten_udf, make_parse_ip_udf
-from sagan_spark.pipeline.correlate import (
-    apply_after_threshold,
-    gate_after_threshold,
-    hit_events,
-    resolve_xbits,
-    setter_events,
-)
+from sagan_spark.pipeline.correlate import correlate
 from sagan_spark.pipeline.enrich import v4_hilo_cols
 from sagan_spark.rules.compiler import EngineConfig, EventCols, RuleCompiler
 from sagan_spark.rules.ir import RuleIR
@@ -369,53 +363,14 @@ class SaganSparkEngine:
         # reads the stored rows instead of re-analysing the match
         # projection, and Spark's concurrently submitted shuffle stages
         # cannot race to compute it.  The result owns the pins.
-        # xbit condition rules sit out the first pass: their
-        # after/threshold state only advances after the condition gate
-        # (engine.c:999-1024 vs 1373-1389).
-        cond_sids = [r.sid for r in self.rules if r.is_condition]
-        has_corr = any(r.after or r.threshold for r in self.rules)
         pins: list[DataFrame] = []
-        if has_corr or cond_sids:
+        if any(r.after or r.threshold or r.is_condition for r in self.rules):
             hits = materialize(hits, "hits")
             pins.append(hits)
-
-        flagged, _ = apply_after_threshold(
-            hits, [r for r in self.rules if not r.is_condition],
-            pins=pins if cond_sids else None,
-            isolate_hot=self.config.hot_key_isolation,
+        flagged, _ = correlate(
+            hits, self.rules, pins=pins, isolate_hot=self.config.hot_key_isolation
         )
-
-        if not cond_sids:
-            return EngineResult(
-                hits=self._with_noalert(flagged.withColumn("xbit_ok", F.lit(True))),
-                pins=pins,
-            )
-
-        # ---- condition gate: the walk, then after/threshold ----
-        stage_a = flagged.filter(~F.col("sid").isin(cond_sids)).withColumn(
-            "xbit_ok", F.lit(True)
-        )
-        stage_b = flagged.filter(F.col("sid").isin(cond_sids)).drop(
-            "suppressed_after", "suppressed_threshold"
-        )
-        # only setter hits that survived after/threshold set or unset
-        # bits (engine.c:1415-1427)
-        survived_a = stage_a.filter(
-            ~F.col("suppressed_after") & ~F.col("suppressed_threshold")
-        )
-        events = hit_events(stage_b, self.rules)
-        sets = setter_events(survived_a, self.rules)
-        if sets is not None:
-            events = events.unionByName(sets)
-        gated, _ = resolve_xbits(stage_b, events, self.rules)
-        # the post-condition set fans into passing/failing branches and
-        # the second correlation pass reads it twice — pin it (small)
-        gated = materialize(gated, "gated")
-        pins.append(gated)
-        stage_b, _ = gate_after_threshold(gated, self.rules)
-        return EngineResult(
-            hits=self._with_noalert(stage_a.unionByName(stage_b)), pins=pins
-        )
+        return EngineResult(hits=self._with_noalert(flagged), pins=pins)
 
     def run_with_dynamic_rules(
         self, frame: DataFrame, loader=None

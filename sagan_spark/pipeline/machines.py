@@ -152,18 +152,26 @@ def _live(entry: tuple, ts: float) -> bool:
 
 class BitStore:
     """Plain xbits as ``(name, key) -> (set_ts, expire)`` and flexbits as
-    one flat tuple store per name, ``{(src, dst, user): (set_ts, expire)}``."""
+    one flat tuple store per name, ``{(src, dst, user): (set_ts, expire)}``.
 
-    __slots__ = ("plain", "flex")
+    ``latest`` maps a slot — ``(name, key)`` of a plain bit, the name of
+    a flexbit store — to its own latest event time in this pass; seeded
+    slots have none."""
+
+    __slots__ = ("plain", "flex", "latest")
 
     def __init__(self) -> None:
         self.plain: dict = {}
         self.flex: dict = {}
+        self.latest: dict = {}
 
     def apply(self, kind: str, name, key, ts: float, expire, shape, tup):
         """One store operation; returns bit-active for ``check`` and
         ``fcheck``, None for the mutations.  Plain kinds use ``key``,
         flexbit kinds (``f*``) use ``shape`` and the event ``tup``."""
+        slot = name if kind[0] == "f" else (name, key)
+        if ts > self.latest.get(slot, _NEVER):
+            self.latest[slot] = ts
         if kind == "set":
             self.plain[(name, key)] = (ts, expire)
         elif kind == "unset":
@@ -186,6 +194,30 @@ class BitStore:
         else:
             raise ValueError(f"unknown bit operation {kind!r}")
         return None
+
+    def seed(self, name, key, tup, set_ts: float, expire) -> None:
+        """Restore one snapshot bit: a plain bit when ``tup`` is None,
+        else a flexbit tuple."""
+        if tup is None:
+            self.plain[(name, key)] = (set_ts, int(expire))
+        else:
+            self.flex.setdefault(name, {})[tup] = (set_ts, int(expire))
+
+    def snapshot(self, floor: float = _NEVER):
+        """Yield ``(name, key, tup, set_ts, expire)`` for every bit an event
+        at ``max(latest, floor)`` of its slot still sees live (``tup`` None
+        for a plain bit, ``key`` None for a flexbit tuple).  As in
+        :meth:`CorrMachines.snapshot`, no event a later pass may replay
+        sees a dropped bit live; a bit with expire 0 stays forever, as the
+        reference keeps it (src/ipc.c:78-200)."""
+        for (name, key), entry in self.plain.items():
+            if _live(entry, max(self.latest.get((name, key), _NEVER), floor)):
+                yield name, key, None, *entry
+        for name, store in self.flex.items():
+            horizon = max(self.latest.get(name, _NEVER), floor)
+            for tup, entry in store.items():
+                if _live(entry, horizon):
+                    yield name, None, tup, *entry
 
 
 #: verdict-gated chain operation -> the store operation it performs

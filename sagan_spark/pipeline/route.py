@@ -401,9 +401,8 @@ def sink_suppressions(rules: list[RuleIR]) -> dict[str, list[int]]:
         out["alerts_eve"] = no_eve
     # flexbits:noalert kills the WHOLE alert (engine.c:1436).  Batch
     # drops those rows in EngineResult.alerts(); the streaming writer
-    # instead keeps them flowing (their set/unset events must still
-    # stage for chained checks) and relies on these per-sink lists, so
-    # the sids go on EVERY sink.
+    # instead relies on these per-sink lists, so the sids go on EVERY
+    # sink.
     whole = flexbit_noalert_sids(rules)
     if whole:
         for sink in SINK_BUILDERS:

@@ -72,10 +72,7 @@ def build_spark(
         # local[32]) the second run drops 12.9->7.2 s and steady state
         # is unchanged (6.3 vs 6.8 s); at 100 TB the warmup is amortized
         # but a long tail of short tasks still benefits from fast tier-up
-        .config(
-            "spark.sql.codegen.methodSplitThreshold",
-            os.environ.get("SAGAN_SPARK_SPLIT_THRESHOLD", "256"),
-        )
+        .config("spark.sql.codegen.methodSplitThreshold", "256")
         # per-Column-call site capture (error-message enrichment) costs two
         # extra py4j round trips + a Python stack walk on EVERY DataFrame
         # API call — at production ruleset sizes plan construction makes

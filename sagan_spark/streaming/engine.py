@@ -3,56 +3,52 @@
 The reference is a pure streaming engine — FIFO input, worker pool,
 mmap'd correlation state that survives restarts because it is a file
 (reference src/input-plugins/fifo.c:62, src/sagan-defs.h:185-208,
-src/ipc.c).  The Spark form:
+src/ipc.c).  The Spark form is one query:
 
 - source: ``readStream`` over the pages table directory (Iceberg/parquet);
 - stateless match: the one plan batch builds too
   (:meth:`SaganSparkEngine.match_hits` has no streaming branch; the
   extraction UDFs keep their evaluate-once barrier because no stateful
   operator sits in the stream plan — correlation runs in foreachBatch);
-- correlation: each ``foreachBatch`` micro-batch runs the batch
-  after/threshold step (``correlate.apply_after_threshold``) seeded from
-  the previous micro-batch's snapshot store, and writes its own.  A key
-  whose anchor is more than its window before the floor — the previous
-  snapshot's newest anchor minus ``watermark`` (the allowed lateness) —
-  leaves the snapshot: any event within the lateness gap-resets it
-  (after.c:132-137, threshold.c:141-146), so dropping it is
-  *semantics-preserving*.  The snapshot write observes its own newest
-  anchor and leaves it in a ``_newest`` marker beside the rows, so the
-  next micro-batch reads its floor without a job (a snapshot without
-  the marker gives floor -inf);
+- correlation: each ``foreachBatch`` micro-batch runs the step batch
+  ``run()`` runs, ``correlate.correlate`` — after/threshold, the
+  xbit/flexbit walk, the condition gate — seeded from the previous
+  micro-batch's snapshot stores, and writes its own: ``corr_state``
+  (after/threshold machines), ``xbit_state`` (the bits) and
+  ``chain_corr_state`` (chain machines).  All state is in these
+  snapshots; nothing else carries across micro-batches;
 - sinks: the same micro-batch writes the same per-sink tables as batch,
   with the streaming checkpoint providing exactly-once resume.
+
+State leaves a snapshot once no event the stream may still replay can
+tell it apart from no state: a machine key whose anchor is more than its
+window, or a bit that is expired, before its own latest event in the
+micro-batch or the floor.  The floor is the newest anchor of the
+previous snapshots (the ``_newest`` marker each snapshot write leaves
+beside its rows, read without a job; a snapshot without the marker
+gives -inf) minus ``watermark``, the allowed lateness.  Any event within
+the lateness gap-resets a dropped key (after.c:132-137,
+threshold.c:141-146) and sees a dropped bit expired, so dropping is
+*semantics-preserving*.  A bit with expire 0 stays, as the reference
+keeps it (src/ipc.c:78-200).  An event later than the lateness replays
+against the state the previous micro-batch kept, as every event does.
+Each store keeps the ``batch_id=s_<N>`` partitions of the last two
+micro-batches, so a retry of micro-batch N re-reads N-1's.
 
 One fan-out per micro-batch, the shape batch ``route.write_sinks`` has
 too: the assembled alert set is materialized once
 (``session.materialize``), then every independent write of the
-micro-batch — its sink views, its staged-set write, its snapshot
-writes — runs at once (``session.run_concurrently``).  Each write keeps
-its ``batch_id`` dynamic partition overwrite, so a micro-batch retried
-after any one of them failed rewrites what it wrote.
+micro-batch — its sink views and its snapshot writes — runs at once
+(``session.run_concurrently``).  Each write keeps its ``batch_id``
+dynamic partition overwrite, so a micro-batch retried after any one of
+them failed rewrites what it wrote.
 
-Every state machine here — after/threshold counters, the xbit/flexbit
-bit store, chain verdict gating — is the one core in
+Every state machine here is the one core in
 :mod:`sagan_spark.pipeline.machines` that batch runs too, through the
-same ``mapInPandas`` bodies; this module only carries their state across
-micro-batches (snapshot stores, staged set stores).
-
-xbit/flexbit **conditions** run as a chained two-query pipeline
-(``run_pipeline_with_xbits``).  Stage A routes stateless+stateful rules
-and stages its setters' set/unset walk events (``correlate.setter_events``)
-into a time-bucketed store.  Stage B resolves every condition rule through
-the batch walk (``correlate.resolve_xbits``): each micro-batch replays its
-checks and chain ops together with the staged events and the chain
-machines' seeds in one ordered pass, and stages the chain sets that fired
-for later micro-batches.  Its verdicts then pass batch ``run()``'s
-condition gate (``correlate.gate_after_threshold``: after/threshold over
-condition-PASSING rows only, engine.c:999-1024 vs 1373-1389; the walk's
-flags for chain rules), seeded and snapshotted by the same micro-batch
-wrapper as stage A's step.  Each snapshot store keeps the
-``batch_id=s_<N>`` partitions of the last two micro-batches, so a retry
-of micro-batch N re-reads N-1's.  No batch-only rule combinations
-remain.
+same ``mapInPandas`` bodies; this module only reads and writes their
+snapshots.  A stream checkpointed before the single query (stage A/B
+checkpoints, a staged set store) must restart on a fresh checkpoint
+and base path.
 """
 
 from __future__ import annotations
@@ -63,20 +59,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sagan_spark.pipeline.correlate import (
-    _XBIT_WALK_COLS,
-    CORR_STATE_COLS,
-    _corr_spec_map,
-    apply_after_threshold,
-    chain_components,
-    gate_after_threshold,
-    hit_events,
-    resolve_xbits,
-    setter_events,
-    ts_seconds_d,
-)
+from sagan_spark.pipeline.correlate import STATE_ANCHORS, correlate
 from sagan_spark.pipeline.engine import EVENT_COLS, SaganSparkEngine
-from sagan_spark.pipeline.machines import GATED
 from sagan_spark.rules.compiler import EngineConfig
 from sagan_spark.rules.ir import RuleIR
 from sagan_spark.session import materialize, release, run_concurrently
@@ -96,27 +80,18 @@ def pages_stream_frame(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(PAGES_SCHEMA).parquet(path)
 
 
-def _idempotent_write(
-    df: DataFrame,
-    path: str,
-    batch_id: int,
-    extra_partition: str | None = None,
-    writer_id: str = "a",
-) -> None:
+def _idempotent_write(df: DataFrame, path: str, batch_id: int, writer_id: str = "a") -> None:
     """Idempotent foreachBatch write: the batch's rows land in a
     ``batch_id=<writer>_<N>`` partition via dynamic partition
     overwrite, so a replayed micro-batch (restart after mid-write
     failure) rewrites its own partition instead of appending
-    duplicates.  ``writer_id`` namespaces the partition when two
-    queries (the chained pipeline's stage A and B) share one sink
-    path — without it their equal batch numbers would clobber each
-    other."""
-    parts = ["batch_id"] + ([extra_partition] if extra_partition else [])
+    duplicates.  ``writer_id`` is ``a`` for a sink, ``s`` for a
+    snapshot."""
     (
         df.withColumn("batch_id", F.lit(f"{writer_id}_{batch_id}"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*parts)
+        .partitionBy("batch_id")
         .parquet(path)
     )
 
@@ -140,7 +115,7 @@ def _interval_secs(interval: str) -> float:
     same grammar Spark's withWatermark accepts: case-insensitive
     singular/plural units, an optional leading 'interval' keyword, and
     MULTI-UNIT forms ('1 hour 30 minutes') — so a watermark Spark
-    accepts never crashes the sweep mid-stream.  Raises ValueError on
+    accepts never crashes a micro-batch.  Raises ValueError on
     anything Spark would also reject."""
     parts = interval.strip().split()
     if parts and parts[0].lower() == "interval":
@@ -173,7 +148,7 @@ def _interval_secs(interval: str) -> float:
 def _fs_for(spark: SparkSession, path_str: str):
     """Hadoop FileSystem for a path — works for file://, hdfs://, s3a://
     alike (os-level glob/rmtree would silently no-op on cluster storage,
-    letting the 'physically bounded' stores grow forever)."""
+    letting the bounded stores grow forever)."""
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(path_str)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -181,8 +156,8 @@ def _fs_for(spark: SparkSession, path_str: str):
 
 
 def _read_store_or_none(spark: SparkSession, path: str):
-    """Read a staged parquet store; None when it does not exist yet or
-    holds no data files (all partitions swept/pruned).  Any OTHER
+    """Read a parquet store; None when it does not exist yet or holds no
+    data files (an empty snapshot, all partitions pruned).  Any OTHER
     failure raises: treating a transient FS/corruption error as "no
     store" would silently reset streaming state and permanently diverge
     from batch (over-alert thresholds, re-suppress afters, missed bit
@@ -213,60 +188,6 @@ def _read_store_or_none(spark: SparkSession, path: str):
         ):
             return None
         raise
-
-
-def _sweep_dead_buckets(
-    spark: SparkSession,
-    path: str,
-    bucket_secs: int,
-    max_expire: int,
-    min_live_ts: float,
-) -> list[str]:
-    """Physically delete staged-set bucket dirs that no live check can
-    see: every set in bucket b has set_ts < (b+1)*bucket_secs, so the
-    bucket is dead once (b+1)*bucket_secs + max_expire <= min_live_ts.
-    Permanent sets (bucket -1) are never swept — the reference keeps
-    them until the IPC store wraps too (src/ipc.c:78-200)."""
-    fs, base = _fs_for(spark, path)
-    removed: list[str] = []
-    if not fs.exists(base):
-        return removed
-    for batch_dir in fs.listStatus(base):
-        if not batch_dir.isDirectory():
-            continue
-        if not batch_dir.getPath().getName().startswith("batch_id="):
-            continue
-        for bdir in fs.listStatus(batch_dir.getPath()):
-            name = bdir.getPath().getName()
-            if "=" not in name:
-                continue
-            try:
-                b = int(name.rsplit("=", 1)[1])
-            except ValueError:
-                continue
-            if b >= 0 and (b + 1) * bucket_secs + max_expire <= min_live_ts:
-                fs.delete(bdir.getPath(), True)
-                removed.append(str(bdir.getPath()))
-    return removed
-
-
-def _stage_sets(
-    events: DataFrame, path: str, batch_id: int, bucket_secs: int, writer_id: str
-) -> None:
-    """Write ungated walk events to the staged set store, one partition
-    per time bucket of their set time.  A permanent op (expire 0) lands in
-    bucket -1, which the sweep never deletes — the reference keeps it
-    until the IPC store wraps too (src/ipc.c:78-200)."""
-    bucket = F.when(F.col("expire") == 0, F.lit(-1)).otherwise(
-        F.floor(F.col("ts_d") / F.lit(bucket_secs))
-    )
-    _idempotent_write(
-        events.withColumn("set_bucket", bucket.cast("long")),
-        path,
-        batch_id,
-        extra_partition="set_bucket",
-        writer_id=writer_id,
-    )
 
 
 def _snapshot_dirs(spark: SparkSession, path: str) -> tuple:
@@ -355,15 +276,15 @@ def _write_corr_snapshot(
     partition directory is made even when no key survived, so the next
     batch seeds from this empty snapshot, not from an older one.
 
-    The write observes the newest ``anchor`` of its rows (``utime``; a
-    ``cstate`` row holds its anchor in ``expire``) and leaves it in the
-    partition's ``_newest`` marker, which the next micro-batch turns into
-    its floor (:func:`_read_prev_floor`) without a job of its own.  An
-    empty snapshot gets no marker."""
+    The write observes the newest ``anchor`` of its rows (an SQL
+    expression, ``correlate.STATE_ANCHORS``) and leaves it in the partition's
+    ``_newest`` marker, which the next micro-batch turns into its floor
+    (:func:`_read_prev_floor`) without a job of its own.  An empty
+    snapshot gets no marker."""
     store = path.rstrip("/").rsplit("/", 1)[-1]
     newest = Observation(f"{store}_newest_{batch_id}")
     _idempotent_write(
-        df.observe(newest, F.max(anchor).alias("v")), path, batch_id, writer_id="s"
+        df.observe(newest, F.max(F.expr(anchor)).alias("v")), path, batch_id, writer_id="s"
     )
     fs, part = _fs_for(spark, f"{path}/batch_id=s_{batch_id}")
     fs.mkdirs(part)
@@ -375,60 +296,6 @@ def _write_corr_snapshot(
         finally:
             out.close()
     _prune_old_corr_snapshots(spark, path, batch_id)
-
-
-def _replay_micro_batch(
-    spark: SparkSession,
-    hits: DataFrame,
-    rules: list[RuleIR],
-    state_path: str,
-    batch_id: int,
-    lateness: float,
-    persisted: list,
-    writes: list,
-    step,
-) -> DataFrame:
-    """One micro-batch of after/threshold: the batch ``step``
-    (``correlate.apply_after_threshold``, or the condition gate
-    ``correlate.gate_after_threshold``) seeded from the previous snapshot
-    in ``state_path``, up to that snapshot's floor
-    (:func:`_read_prev_floor`).  Returns the rows of ``hits`` that
-    neither machine suppressed.
-
-    The replay output stays a lazy cache on ``persisted`` for the caller
-    to release: the caller's materialized assembled frame computes it
-    once, and this batch's snapshot write — appended to ``writes`` for
-    the caller's one concurrent fan-out — reads the cached rows."""
-    seed = _read_prev_corr_state(spark, state_path, batch_id)
-    floor = _read_prev_floor(spark, state_path, batch_id, lateness)
-    flagged, replayed = step(hits, rules, seed=seed, floor=floor)
-    if replayed is not None:
-        replayed = replayed.persist()
-        persisted.append(replayed)
-        writes.append(
-            partial(
-                _write_corr_snapshot,
-                spark,
-                replayed.filter(F.col("kind") == "s").select(*CORR_STATE_COLS),
-                state_path,
-                batch_id,
-            )
-        )
-    return flagged.filter(~F.col("suppressed_after") & ~F.col("suppressed_threshold"))
-
-
-def _start_foreach_batch(hits: DataFrame, checkpoint: str, write_batch, available_now: bool):
-    """Start an append-mode ``foreachBatch`` query over ``hits``,
-    checkpointed at ``checkpoint``; ``available_now`` drains what is
-    there and stops."""
-    writer = (
-        hits.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 class StreamingSaganEngine:
@@ -444,37 +311,113 @@ class StreamingSaganEngine:
         self.cond_sids = [r.sid for r in rules if r.is_condition]
         if self.cond_sids and not enable_xbits:
             raise NotImplementedError(
-                f"sids {self.cond_sids}: xbit conditions need the chained "
-                "pipeline — use run_pipeline_with_xbits (or batch "
-                "SaganSparkEngine.run)"
+                f"sids {self.cond_sids}: xbit conditions need the bit store "
+                "snapshots — use start_query (or batch SaganSparkEngine.run)"
             )
         self.engine = SaganSparkEngine(rules, config)
         self.rules = rules
         # fail on a malformed watermark HERE, not mid-stream at the
-        # first staged-store sweep inside foreachBatch
+        # first floor inside foreachBatch
         _interval_secs(watermark)
         self.watermark = watermark
 
     def _watermark_secs(self) -> float:
-        """self.watermark in seconds — the allowed event lateness: the
-        staged-store sweep lag and the snapshot eviction lag.  Accepts
-        every interval spelling Spark's withWatermark accepts (validated
-        at construction)."""
+        """self.watermark in seconds — the allowed event lateness, the
+        snapshot eviction lag.  Accepts every interval spelling Spark's
+        withWatermark accepts (validated at construction)."""
         return _interval_secs(self.watermark)
 
-    # -- staged xbit set-store layout -----------------------------------------
+    def _start(
+        self,
+        hits: DataFrame,
+        rules: list[RuleIR],
+        base_path: str,
+        checkpoint: str,
+        sinks: list[str] | None,
+        available_now: bool,
+    ):
+        """Start the append-mode ``foreachBatch`` query that correlates
+        ``hits`` by ``rules`` and writes the sinks and snapshots under
+        ``base_path``, checkpointed at ``checkpoint``; ``available_now``
+        drains what is there and stops.
 
-    def _max_expire(self) -> int:
-        """Largest expire across setter xbits (0 when all permanent)."""
-        return max(
-            (x.expire for r in self.rules for x in r.xbits if x.action in ("set", "unset")),
-            default=0,
+        Each micro-batch persists its hits, reads the previous snapshot
+        of every store and the floor their markers give, and runs
+        ``correlate.correlate`` on them.  It materializes the assembled
+        survivors once; one concurrent fan-out then writes the sink views
+        and this micro-batch's snapshots, which read the replays the
+        materialization cached.
+
+        Exactly-once on restart: each micro-batch's output lands in a
+        ``batch_id=N`` partition written with dynamic partition
+        OVERWRITE, so a batch replayed after a mid-write failure
+        rewrites its own partition instead of appending duplicates
+        (foreachBatch alone is only at-least-once)."""
+        from sagan_spark.pipeline.route import assemble_alerts, rule_metadata_df, sink_views
+
+        cond_sids = [r.sid for r in rules if r.is_condition]
+        lateness = self._watermark_secs()
+
+        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+            spark = batch_df.sparkSession
+            cached = batch_df.persist()
+            persisted, assembled = [cached], None
+            try:
+                paths = {store: f"{base_path}/{store}" for store in STATE_ANCHORS}
+                prev = {s: _read_prev_corr_state(spark, p, batch_id) for s, p in paths.items()}
+                state = {s: rows for s, rows in prev.items() if rows is not None}
+                floor = max(
+                    _read_prev_floor(spark, path, batch_id, lateness) for path in paths.values()
+                )
+                flagged, snapshots = correlate(cached, rules, state, floor, cache=persisted)
+                # flexbit-noalert sids stay in `routed`: the whole-alert
+                # drop happens per sink via route.sink_suppressions
+                routed = flagged.filter(
+                    ~F.col("suppressed_after") & ~F.col("suppressed_threshold") & F.col("xbit_ok")
+                ).drop("xbit_ok")
+                meta = rule_metadata_df(spark, self.rules)
+                assembled = materialize(
+                    assemble_alerts(routed, meta, xbit_condition_sids=cond_sids), "assembled"
+                )
+                writes = [
+                    partial(_idempotent_write, view, f"{base_path}/{sink}", batch_id)
+                    for sink, view in sink_views(assembled, self.rules, sinks)
+                ]
+                writes += [
+                    partial(_write_corr_snapshot, spark, rows, paths[s], batch_id, STATE_ANCHORS[s])
+                    for s, rows in snapshots.items()
+                ]
+                run_concurrently(spark, writes)
+            finally:
+                if assembled is not None:
+                    release(assembled)
+                for df in persisted:
+                    df.unpersist()
+
+        writer = (
+            hits.writeStream.outputMode("append")
+            .option("checkpointLocation", checkpoint)
+            .foreachBatch(write_batch)
         )
+        return (writer.trigger(availableNow=True) if available_now else writer).start()
 
-    def _bucket_secs(self) -> int:
-        """Time-bucket width for the staged set store — buckets older
-        than (min live check ts - max expire) physically prune."""
-        return max(3600, self._max_expire())
+    def start_query(
+        self,
+        frame: DataFrame,
+        base_path: str,
+        checkpoint: str,
+        sinks: list[str] | None = None,
+        trigger_available_now: bool = True,
+    ):
+        """The streaming pipeline: every rule routes through one query
+        (:meth:`_start`).  ``trigger_available_now`` drains what the input
+        holds and stops; False keeps the query running for live tailing.
+        ``frame``: the streaming canonical frame
+        (``SaganSparkEngine.frame_from_pages(pages_stream_frame(...))``)."""
+        # carry the full event columns: a stream cannot re-join its own
+        # source at sink time (late materialization is batch-only)
+        hits = self.engine.match_hits(frame, passthrough=EVENT_COLS)
+        return self._start(hits, self.rules, base_path, checkpoint, sinks, trigger_available_now)
 
     def start_sink_query(
         self,
@@ -484,234 +427,13 @@ class StreamingSaganEngine:
         sinks: list[str] | None = None,
         trigger_available_now: bool = True,
     ):
-        """foreachBatch fan-out to the per-sink tables (K7).
-
-        Each micro-batch persists its hits, runs after/threshold through
-        the batch step seeded from the previous micro-batch's
-        ``corr_state_a`` snapshot, and materializes the assembled
-        survivors.  One concurrent fan-out then writes the sink views,
-        its setters' staged walk events and its own ``corr_state_a``
-        snapshot, which reads the replay the materialization cached.
-
-        Exactly-once on restart: each micro-batch's output lands in a
-        ``batch_id=N`` partition written with dynamic partition
-        OVERWRITE, so a batch replayed after a mid-write failure
-        rewrites its own partition instead of appending duplicates
-        (foreachBatch alone is only at-least-once)."""
-        from sagan_spark.pipeline.route import assemble_alerts, rule_metadata_df, sink_views
-
-        rules = self.rules
-        # condition rules' after/threshold runs AFTER the xbit gate, in
-        # stage B (engine.c:999-1024 vs 1373-1389)
-        plain_rules = [r for r in rules if not r.is_condition]
-        bucket_secs = self._bucket_secs()
-        # carry the full event columns: a stream cannot re-join its own
-        # source at sink time (late materialization is batch-only)
+        """:meth:`start_query` over the rules without an xbit condition
+        only: a condition rule's hits are not routed."""
         hits = self.engine.match_hits(frame, passthrough=EVENT_COLS)
         if self.cond_sids:
-            # condition rules route through the chained xbit query
             hits = hits.filter(~F.col("sid").isin(self.cond_sids))
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            spark = batch_df.sparkSession
-            cached = batch_df.persist()
-            persisted, writes, assembled = [cached], [], None
-            try:
-                # flexbit-noalert sids stay in `routed` on purpose: their
-                # set/unset events must still stage for chained checks
-                # (the reference sets bits before the Send_Alert gate,
-                # engine.c:1415-1436) — the whole-alert drop happens per
-                # sink via route.sink_suppressions
-                routed = _replay_micro_batch(
-                    spark, cached, plain_rules, f"{base_path}/corr_state_a", batch_id,
-                    self._watermark_secs(), persisted, writes, apply_after_threshold,
-                )
-                meta = rule_metadata_df(spark, rules)
-                assembled = materialize(assemble_alerts(routed, meta), "assembled")
-                for sink, view in sink_views(assembled, rules, sinks):
-                    writes.append(
-                        partial(
-                            _idempotent_write, view, f"{base_path}/{sink}", batch_id,
-                            writer_id="a",
-                        )
-                    )
-                # setter rules' surviving alerts stage their set/unset
-                # walk events for the chained xbit query (engine.c:
-                # 1415-1427: sets happen only after after/threshold)
-                sets = setter_events(assembled, rules)
-                if sets is not None:
-                    writes.append(
-                        partial(
-                            _stage_sets, sets, f"{base_path}/xbit_sets", batch_id,
-                            bucket_secs, "a",
-                        )
-                    )
-                run_concurrently(spark, writes)
-            finally:
-                if assembled is not None:
-                    release(assembled)
-                for df in persisted:
-                    df.unpersist()
-
-        return _start_foreach_batch(hits, checkpoint, write_batch, trigger_available_now)
-
-    def start_xbit_query(
-        self,
-        frame: DataFrame,
-        base_path: str,
-        checkpoint: str,
-        sinks: list[str] | None = None,
-        trigger_available_now: bool = True,
-    ):
-        """Stage B of the chained pipeline: route xbit-CONDITION rules.
-
-        Every micro-batch runs the batch walk (``correlate.resolve_xbits``)
-        over one event frame:
-
-        - this batch's checks and chain set/unsets
-          (``correlate.hit_events``);
-        - the staged set store: stage A's setter events and earlier
-          micro-batches' fired chain ops, all walk events, minus this
-          batch's own ``c_<batch_id>`` partition (a replayed batch
-          re-derives it);
-        - ``cseed`` rows restoring the chain rules' after/threshold
-          machines from the previous micro-batch's ``chain_corr_state``
-          snapshot.
-
-        The walk's fired chain ops and its ``cstate`` snapshot persist for
-        the next micro-batch.  The verdicts then pass the step batch
-        ``run()`` calls too, ``correlate.gate_after_threshold``, seeded from
-        and snapshotted to ``corr_state_b`` like stage A's step: a
-        condition-failing or suppressed hit is not routed.  As in stage A,
-        the assembled alerts are materialized once and one concurrent
-        fan-out writes the sink views, the fired-chain staging, the
-        ``chain_corr_state`` and the ``corr_state_b`` snapshots; the
-        staged-store sweep runs after all of them have finished.
-
-        Cross-query propagation is drain-ordered: with availableNow run
-        stage A to completion first (sets staged), then stage B — exact
-        parity with batch.  In continuous mode sets become visible one
-        micro-batch later (documented eventual consistency).
-
-        Scale: the staged store is partitioned by time bucket — each
-        micro-batch reads only buckets still visible to its earliest
-        check (partition pruning) and sweeps dead buckets afterwards, so
-        the store stays bounded by (max expire window + bucket width) of
-        live data instead of growing with stream lifetime."""
-        from sagan_spark.pipeline.route import assemble_alerts, rule_metadata_df, sink_views
-
-        rules = self.rules
-        bucket_secs = self._bucket_secs()
-        max_expire = self._max_expire()
-        sets_path = f"{base_path}/xbit_sets"
-        chain_state_path = f"{base_path}/chain_corr_state"
-        chain_rules, _ = chain_components(rules)
-        chain_corr_specs = _corr_spec_map(chain_rules)
-        seed_bit = F.lit(None).cast("string")
-        for r in chain_rules:
-            seed_bit = F.when(F.col("csid") == r.sid, F.lit(r.xbits[0].name)).otherwise(
-                seed_bit
-            )
-
-        hits = self.engine.match_hits(frame, passthrough=EVENT_COLS).filter(
-            F.col("sid").isin(self.cond_sids)
-        )
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            spark = batch_df.sparkSession
-            cached = batch_df.persist()
-            persisted, writes, assembled = [cached], [], None
-            try:
-                min_chk = cached.agg(F.min(ts_seconds_d(F.col("ts")))).first()[0]
-                events = hit_events(cached, rules)
-                sets = _read_store_or_none(spark, sets_path)  # None: nothing staged yet
-                if sets is not None:
-                    sets = sets.filter(F.col("batch_id") != f"c_{batch_id}")
-                    if min_chk is not None:
-                        # partition-prune buckets no check in this batch can see
-                        live_from = int((min_chk - max_expire) // bucket_secs)
-                        sets = sets.filter(
-                            (F.col("set_bucket") < 0) | (F.col("set_bucket") >= live_from)
-                        )
-                    events = events.unionByName(sets.select(*_XBIT_WALK_COLS))
-                prev = (
-                    _read_prev_corr_state(spark, chain_state_path, batch_id)
-                    if chain_corr_specs
-                    else None
-                )
-                if prev is not None:
-                    # named after a bit of the owning rule, a seed
-                    # replays in its component's walk partition
-                    events = events.unionByName(
-                        prev.withColumn("kind", F.lit("cseed")).withColumn(
-                            "bit_name", seed_bit
-                        )
-                    )
-                chain_floor = _read_prev_floor(
-                    spark, chain_state_path, batch_id, self._watermark_secs()
-                )
-                flagged, walk_out = resolve_xbits(cached, events, rules, chain_floor)
-                walk_out = walk_out.persist()
-                persisted.append(walk_out)
-                if chain_rules:
-                    fired = walk_out.filter(F.col("kind").isin(*set(GATED.values())))
-                    writes.append(
-                        partial(
-                            _stage_sets, fired.select(*_XBIT_WALK_COLS), sets_path,
-                            batch_id, bucket_secs, "c",
-                        )
-                    )
-                if chain_corr_specs:
-                    # a cseed row holds its anchor in `expire`
-                    writes.append(
-                        partial(
-                            _write_corr_snapshot,
-                            spark,
-                            walk_out.filter(F.col("kind") == "cstate").select(*_XBIT_WALK_COLS),
-                            chain_state_path,
-                            batch_id,
-                            "expire",
-                        )
-                    )
-                # the batch condition gate, seeded from corr_state_b
-                routed = _replay_micro_batch(
-                    spark, flagged, rules, f"{base_path}/corr_state_b", batch_id,
-                    self._watermark_secs(), persisted, writes, gate_after_threshold,
-                ).filter(F.col("xbit_ok")).drop("xbit_ok")
-                meta = rule_metadata_df(spark, rules)
-                assembled = materialize(
-                    assemble_alerts(routed, meta, xbit_condition_sids=self.cond_sids),
-                    "assembled",
-                )
-                for sink, view in sink_views(assembled, rules, sinks):
-                    writes.append(
-                        partial(
-                            _idempotent_write, view, f"{base_path}/{sink}", batch_id,
-                            writer_id="b",
-                        )
-                    )
-                run_concurrently(spark, writes)
-            finally:
-                if assembled is not None:
-                    release(assembled)
-                for df in persisted:
-                    df.unpersist()
-            if min_chk is not None and max_expire > 0:
-                # sweep against a watermark-lagged floor, not this
-                # batch's own min: stage B applies no watermark to its
-                # checks, so a later batch may legitimately carry an
-                # event up to `watermark` older than anything seen here
-                # — deleting buckets it still probes would flip its
-                # isset verdicts vs the batch walk
-                _sweep_dead_buckets(
-                    spark,
-                    sets_path,
-                    bucket_secs,
-                    max_expire,
-                    min_chk - self._watermark_secs(),
-                )
-
-        return _start_foreach_batch(hits, checkpoint, write_batch, trigger_available_now)
+        plain = [r for r in self.rules if not r.is_condition]
+        return self._start(hits, plain, base_path, checkpoint, sinks, trigger_available_now)
 
     def run_pipeline_with_xbits(
         self,
@@ -721,26 +443,10 @@ class StreamingSaganEngine:
         sinks: list[str] | None = None,
         timeout: int = 300,
     ) -> None:
-        """Drain-ordered chained pipeline: stage A (stateless+stateful
-        rules, sinks + set staging) runs to completion, then stage B
-        (xbit condition rules) — batch-exact for availableNow drains.
-
-        ``frame_factory``: () -> fresh streaming canonical frame (each
-        query needs its own source instance)."""
-        qa = self.start_sink_query(
-            frame_factory(), base_path, f"{checkpoint_base}/stage_a", sinks=sinks
-        )
-        if not qa.awaitTermination(timeout):
-            # starting stage B against a half-staged set store would
-            # silently break the documented drain-ordered batch parity
-            qa.stop()
-            raise TimeoutError(
-                f"stage A did not drain within {timeout}s; aborting before "
-                "stage B reads an incomplete staged set store"
-            )
-        qb = self.start_xbit_query(
-            frame_factory(), base_path, f"{checkpoint_base}/stage_b", sinks=sinks
-        )
-        if not qb.awaitTermination(timeout):
-            qb.stop()
-            raise TimeoutError(f"stage B did not drain within {timeout}s")
+        """Drain what the input holds through :meth:`start_query` and
+        stop; raises TimeoutError when that takes over ``timeout`` s.
+        ``frame_factory``: () -> a fresh streaming canonical frame."""
+        q = self.start_query(frame_factory(), base_path, checkpoint_base, sinks=sinks)
+        if not q.awaitTermination(timeout):
+            q.stop()
+            raise TimeoutError(f"the query did not drain within {timeout}s")

@@ -18,7 +18,6 @@ from sagan_spark.pipeline.correlate import (
     _make_replay,
     _make_xbit_walk,
 )
-from sagan_spark.pipeline.machines import GATED
 from sagan_spark.rules.ir import AfterSpec, RuleIR, ThresholdSpec
 from tests.oracle import Oracle
 
@@ -185,8 +184,62 @@ _XRULES = {
     34: (10, [("isset", "g", None, "both"), ("unset", "g", None, "by_src")]),
 }
 _CHAIN = {30, 32, 34}
-_STAGE_A = {10, 11, 20, 21}
 _ORDER = lambda r: (r[3], r[4], r[5])  # noqa: E731  (ts_d, event_key, seq)
+
+
+def _walk_rows(events, xrules, expire):
+    """Walk event rows of random hits [(sid, ts, src, dst, user)] of the
+    rules in ``xrules``, each set with ``expire``; returns (the hits in
+    event-time order as (ts, event_key, ...), the rows, the (event_key,
+    sid) of every check)."""
+    hits = sorted(
+        (ts, f"e{i:03d}", sid, src, dst, user)
+        for i, (sid, ts, src, dst, user) in enumerate(events)
+    )
+    rows, checks = [], set()
+    for ts, ek, sid, src, dst, user in hits:
+        pos, ops = xrules[sid]
+        hit_id = f"{ek}#{sid}"
+        for action, bit, key, shape in ops:
+            check = action in ("isset", "isnotset")
+            flex = key is None
+            kind = ("f" if flex else "") + ("check" if check else action)
+            if sid in _CHAIN and not check:
+                kind = "c" + kind
+            corr = (30, src, dst) if sid == 30 and not check else (None, None, None)
+            rows.append((
+                kind, bit, "" if flex else {"src": src, "dst": dst}[key], float(ts), ek,
+                pos * 2 + (0 if check else 1), 0 if check or action == "unset" else expire,
+                shape, *((src, dst, user) if flex else (None, None, None)),
+                hit_id if check or sid in _CHAIN else None, action == "isset", *corr,
+            ))
+            if check:
+                checks.add((ek, sid))
+    return hits, rows, checks
+
+
+def _walk_pass(specs, rows, data, verdicts, flags, floor=float("-inf")):
+    """One walk pass over ``rows`` in the walk's sort order, split across
+    arbitrary Arrow batches; records verdicts and chain flags by (event
+    key, sid) and returns the other output rows as walk rows."""
+    frame = pd.DataFrame(sorted(rows, key=_ORDER), columns=_XBIT_WALK_COLS)
+    rest = []
+    for out in _make_xbit_walk(specs, floor)(iter(_cut(frame, data))):
+        out = out.astype(object).where(out.notna(), None)
+        for r in out.itertuples(index=False):
+            ek, sid = (r.hit_id or "#").split("#")
+            if r.kind == "verdict":
+                verdicts[(ek, int(sid))] = r.ok
+            elif r.kind == "cflags":
+                flags[(ek, int(sid))] = (r.suppressed_after, r.suppressed_threshold)
+            else:
+                rest.append(tuple(getattr(r, c) for c in _XBIT_WALK_COLS))
+    return rest
+
+
+def _seeds(rest):
+    """A pass's snapshot rows as the next pass's seed rows."""
+    return [("cseed", *r[1:]) if r[0] == "cstate" else r for r in rest]
 
 
 @given(
@@ -207,12 +260,10 @@ _ORDER = lambda r: (r[3], r[4], r[5])  # noqa: E731  (ts_d, event_key, seq)
 def test_xbit_walk_adapters_agree(events, expire, chain_after, data):
     """Set/unset/check events for plain bits, a funnel flexbit and a chain
     component (one chain rule carrying after/threshold), in event-time
-    order, through the one walk body: a single batch pass and stage B's
-    micro-batches — each replaying the staged stage-A events, the chain
-    sets fired in earlier cuts and ``cseed`` rows from the previous cut's
-    ``cstate`` snapshot — return the same check verdicts and chain flags.
-    Stage A has drained before stage B (the drain-ordered pipeline), so
-    every stage-A set is staged."""
+    order, through the one walk body: a single batch pass and a stream's
+    micro-batches — each replaying its own events after the seed rows of
+    the previous cut's snapshot (``cstate`` as ``cseed``, the bits as
+    they are) — return the same check verdicts and chain flags."""
     specs = {
         30: {
             "after": chain_after,
@@ -221,63 +272,71 @@ def test_xbit_walk_adapters_agree(events, expire, chain_after, data):
             "thr_track": ("by_dst",),
         }
     }
-    hits = sorted(
-        (ts, f"e{i:03d}", sid, src, dst, user)
-        for i, (sid, ts, src, dst, user) in enumerate(events)
-    )
-    stage_a, stage_b, want = [], [], set()
-    for ts, ek, sid, src, dst, user in hits:
-        pos, ops = _XRULES[sid]
-        hit_id = f"{ek}#{sid}"
-        for action, bit, key, shape in ops:
-            check = action in ("isset", "isnotset")
-            flex = key is None
-            kind = ("f" if flex else "") + ("check" if check else action)
-            if sid in _CHAIN and not check:
-                kind = "c" + kind
-            corr = (30, src, dst) if sid == 30 and not check else (None, None, None)
-            row = (
-                kind, bit, "" if flex else {"src": src, "dst": dst}[key], float(ts), ek,
-                pos * 2 + (0 if check else 1), 0 if check or action == "unset" else expire,
-                shape, *((src, dst, user) if flex else (None, None, None)),
-                hit_id if check or sid in _CHAIN else None, action == "isset", *corr,
-            )
-            (stage_a if sid in _STAGE_A else stage_b).append(row)
-            if check:
-                want.add((ek, sid))
-
-    def replay(rows, verdicts, flags):
-        """One walk pass over ``rows``, split across arbitrary Arrow
-        batches; returns the other output rows as walk event tuples."""
-        frame = pd.DataFrame(sorted(rows, key=_ORDER), columns=_XBIT_WALK_COLS)
-        rest = []
-        for out in _make_xbit_walk(specs)(iter(_cut(frame, data))):
-            out = out.astype(object).where(out.notna(), None)
-            for r in out.itertuples(index=False):
-                ek, sid = (r.hit_id or "#").split("#")
-                if r.kind == "verdict":
-                    verdicts[(ek, int(sid))] = r.ok
-                elif r.kind == "cflags":
-                    flags[(ek, int(sid))] = (r.suppressed_after, r.suppressed_threshold)
-                else:
-                    rest.append(tuple(getattr(r, c) for c in _XBIT_WALK_COLS))
-        return rest
+    hits, rows, want = _walk_rows(events, _XRULES, expire)
 
     # batch: one pass over every bit
     verdicts, flags = {}, {}
-    replay(stage_a + stage_b, verdicts, flags)
+    _walk_pass(specs, rows, data, verdicts, flags)
     assert set(verdicts) == want
 
     # streaming: micro-batches cut in event-time order
-    s_verdicts, s_flags = {}, {}
-    fired, seeds = [], []
+    s_verdicts, s_flags, seeds = {}, {}, []
     for cut in _cut(hits, data):
         keys = {ek for _, ek, *_ in cut}
-        rest = replay(
-            stage_a + fired + seeds + [r for r in stage_b if r[4] in keys],
-            s_verdicts, s_flags,
-        )
-        fired += [r for r in rest if r[0] in GATED.values()]
-        seeds = [("cseed", *r[1:]) for r in rest if r[0] == "cstate"]
+        cut_rows = seeds + [r for r in rows if r[4] in keys]
+        rest = _walk_pass(specs, cut_rows, data, s_verdicts, s_flags)
+        seeds = _seeds(rest)
     assert s_verdicts == verdicts
     assert s_flags == flags
+
+
+# plain bit p keyed by src (checked by src and by dst) and funnel flexbit
+# f, without chains: the bit store alone
+_BIT_RULES = {
+    10: (0, [("set", "p", "src", "")]),
+    11: (1, [("unset", "p", "src", "")]),
+    12: (2, [("isset", "p", "src", "")]),
+    13: (3, [("isnotset", "p", "dst", "")]),
+    20: (4, [("set", "f", None, "")]),
+    21: (5, [("unset", "f", None, "by_dst")]),
+    22: (6, [("isset", "f", None, "by_src")]),
+    23: (7, [("isnotset", "f", None, "reverse")]),
+}
+
+
+@given(
+    events=st.lists(
+        st.tuples(
+            st.sampled_from([10, 10, 11, 12, 12, 13, 20, 20, 21, 22, 22, 23]),
+            # dense event times: checks often land just after a cut
+            st.integers(0, 30),
+            st.sampled_from("ab"), st.sampled_from("ab"), st.sampled_from("uv"),
+        ),
+        min_size=10, max_size=60,
+    ),
+    expire=st.sampled_from([0, 5, 20]),
+    data=st.data(),
+)
+def test_bit_store_seeded_passes_agree(events, expire, data):
+    """Plain and flexbit set/unset/check events in event-time order, cut
+    at random micro-batch boundaries: one walk pass, and one pass per cut
+    that starts from the previous cut's ``bseed``/``fseed`` rows, give
+    the same verdicts.  Each cut's floor is the oldest event any later
+    cut holds, so each snapshot drops every bit no later event sees
+    live; the last cut's floor is +inf, which keeps only expire-0 bits."""
+    hits, rows, want = _walk_rows(events, _BIT_RULES, expire)
+    verdicts = {}
+    _walk_pass({}, rows, data, verdicts, {})
+    assert set(verdicts) == want
+
+    cuts = _cut(hits, data)
+    streamed, seeds = {}, []
+    for i, cut in enumerate(cuts):
+        keys = {ek for _, ek, *_ in cut}
+        floor = min((h[0] for c in cuts[i + 1:] for h in c), default=float("inf"))
+        rest = _walk_pass({}, seeds + [r for r in rows if r[4] in keys], data, streamed, {}, floor)
+        assert {r[0] for r in rest} <= {"bseed", "fseed"}
+        if i == len(cuts) - 1:
+            assert all(r[6] == 0 for r in rest)  # column 6: expire
+        seeds = _seeds(rest)
+    assert streamed == verdicts

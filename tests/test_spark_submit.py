@@ -123,7 +123,7 @@ def test_spark_submit_py_files_stream_job(tmp_path):
     assert eve.num_rows > 0
     assert "alert_signature_id" in eve.column_names
     assert 9800002 in eve.column("alert_signature_id").to_pylist()
-    assert (tmp_path / "sinks" / "corr_state_a" / "batch_id=s_0").is_dir()
+    assert (tmp_path / "sinks" / "corr_state" / "batch_id=s_0").is_dir()
 
 
 def test_vars_conf_matches_vars_py():

@@ -113,8 +113,8 @@ def test_xbit_condition_rules_rejected(fixture_rules):
 
 
 def test_chained_xbit_pipeline_equals_batch(spark, fixture_rules, tmp_path):
-    """Full ruleset (incl. xbit set/isset) through the two-query chained
-    pipeline with a restart between chunks == batch engine."""
+    """Full ruleset (incl. xbit set/isset) through the one streaming
+    query with a restart between chunks == batch engine."""
     table = generate_pages(n_rows=2_000).sort_by("warc_ts")
     half = table.num_rows // 2
     input_dir = tmp_path / "in"
@@ -150,7 +150,7 @@ def test_chained_xbit_pipeline_equals_batch(spark, fixture_rules, tmp_path):
 
 # ---------------------------------------------------------------------------
 # VERDICT r1 #6: streaming parity for xbit unset + flexbit shapes, and
-# VERDICT r1 #4: the staged set store stays physically bounded
+# VERDICT r1 #4: the bit snapshot stays bounded
 # ---------------------------------------------------------------------------
 
 
@@ -253,17 +253,14 @@ def test_streaming_flexbit_reverse_equals_batch(spark, tmp_path):
     assert ("u://f/4", 9400002) not in got
 
 
-def test_staged_set_store_physically_pruned(spark, tmp_path):
-    """A bucket whose sets can no longer satisfy any live check is
-    DELETED from disk after stage B (bounded store, VERDICT r1 #4)."""
-    import glob
-
+def test_expired_bit_leaves_the_bit_snapshot(spark, tmp_path):
+    """A set that no later event can see live is not in the micro-batch's
+    xbit_state snapshot: the check three hours after the 60 s set is the
+    bit's own latest event (bounded store, VERDICT r1 #4)."""
     rules = """\
 alert any any any -> any any (msg:"set"; content:"setme"; parse_src_ip: 1; xbits: set, name b2, track ip_src, expire 60; sid:9500001;)
 alert any any any -> any any (msg:"check"; content:"checkme"; parse_src_ip: 1; xbits: isset, name b2, track ip_src; sid:9500002;)
 """
-    # set at t0; every check far in a later bucket (>
-    # bucket_end + expire), so the set's bucket is dead for stage B
     table = _mini_pages(
         [
             ("u://p/1", "2026-01-01 00:00:01", "setme from 10.0.0.1 ok"),
@@ -273,9 +270,12 @@ alert any any any -> any any (msg:"check"; content:"checkme"; parse_src_ip: 1; x
     want, got, out = _run_chained(spark, rules, table, tmp_path, "prune")
     assert got == want  # expired set: late check must NOT route
     assert ("u://p/2", 9500002) not in got
-    buckets = glob.glob(f"{out}/xbit_sets/batch_id=*/set_bucket=*")
-    live = [b for b in buckets if not b.endswith("=-1")]
-    assert live == [], f"dead bucket dirs not swept: {live}"
+    from sagan_spark.streaming.engine import _read_store_or_none
+
+    # the micro-batch wrote its bit snapshot, and the set is not in it
+    assert (tmp_path / "prune_sinks/xbit_state/batch_id=s_0").is_dir()
+    bits = _read_store_or_none(spark, f"{out}/xbit_state")
+    assert bits is None or not bits.filter("bit_name = 'b2'").collect()
 
 
 def test_chained_pipeline_releases_its_cache(spark, tmp_path):
@@ -325,7 +325,7 @@ alert any any any -> any any (msg:"avoff"; content:"av-off"; parse_src_ip: 1; pa
 
 
 def test_streaming_flexbit_unset_funnel_equals_batch(spark, tmp_path):
-    """Flexbit unset now runs in the chained pipeline via the per-bit
+    """Flexbit unset runs in the streaming query via the per-bit
     funnel walk: the reverse-direction allclear clears the stored
     (1->9) tuple before the check (reference flexbit-mmap.c:1071-1090)."""
     table = _mini_pages(
@@ -396,9 +396,9 @@ alert any any any -> any any (msg:"chain aft"; content:"checkme"; parse_src_ip: 
 
 def test_snapshot_stores_bounded_by_watermark(spark, tmp_path):
     """10.0.0.1 falls silent for more than watermark + window: the third
-    micro-batch's floor (the second snapshot's newest anchor) evicts it
-    from every snapshot store (stage B's corr_state_b and
-    chain_corr_state, stage A's corr_state_a), and once the fourth prunes
+    micro-batch's floor (the second snapshots' newest anchor) evicts it
+    from both machine snapshot stores (corr_state and chain_corr_state;
+    its bits in xbit_state expire only after 1h), and once the fourth prunes
     the snapshots that held it no row of it is left, while 10.0.0.2's
     live keys stay and the sink equals batch."""
     from sagan_spark.rules.parser import parse_rules
@@ -441,7 +441,7 @@ def test_snapshot_stores_bounded_by_watermark(spark, tmp_path):
         seng.run_pipeline_with_xbits(frame_factory, out, ckpt, sinks=["alerts_eve"])
     assert _eve_set(spark, out) == want
 
-    for store in ("corr_state_b", "chain_corr_state", "corr_state_a"):
+    for store in ("corr_state", "chain_corr_state"):
         rows = [" ".join(map(str, r)) for r in spark.read.parquet(f"{out}/{store}").collect()]
         assert not [r for r in rows if "10.0.0.1" in r], (store, rows)
         assert [r for r in rows if "10.0.0.2" in r], (store, rows)
@@ -503,7 +503,7 @@ def test_snapshot_marker_gives_the_next_floor(spark, tmp_path):
 
 def test_failed_concurrent_write_resumes_exactly_once(spark, tmp_path, monkeypatch):
     """One sink write of micro-batch 0 fails while its sibling writes
-    (the EVE sink, the corr_state_a snapshot) run beside it: the query
+    (the EVE sink, the corr_state snapshot) run beside it: the query
     fails, and a restart on the same checkpoint routes the batch set
     once, with one snapshot partition for the batch."""
     import sagan_spark.streaming.engine as stream_engine
@@ -551,7 +551,7 @@ def test_failed_concurrent_write_resumes_exactly_once(spark, tmp_path, monkeypat
     assert eve.count() == eve.select("url", "alert_signature_id").distinct().count()
     assert _eve_set(spark, out) == want
     assert spark.read.parquet(f"{out}/alerts_fast").count() == len(want)
-    assert sorted(p.name for p in (tmp_path / "fw_sinks/corr_state_a").iterdir()
+    assert sorted(p.name for p in (tmp_path / "fw_sinks/corr_state").iterdir()
                   if p.name.startswith("batch_id=")) == ["batch_id=s_0"]
 
 
@@ -570,10 +570,10 @@ def test_read_store_or_none_empty_store_without_deprecation(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# after/threshold ON xbit-condition rules (stage B seeded replay) — the
+# after/threshold ON xbit-condition rules (the seeded gate replay) — the
 # last streaming-parity gate from VERDICT r1 #7: counters advance only on
 # condition-PASSING rows (engine.c:999-1024 vs 1373-1389), with state
-# carried across micro-batches via the snapshotted corr_state_b store
+# carried across micro-batches via the snapshotted corr_state store
 # ---------------------------------------------------------------------------
 
 COND_CORR_RULES = """\
@@ -649,12 +649,12 @@ def test_streaming_cond_rule_threshold_after_equals_batch(spark, tmp_path):
     # partitions are physically pruned — bounded in continuous mode)
     import glob
 
-    snaps = glob.glob(f"{out}/corr_state_b/batch_id=*")
+    snaps = glob.glob(f"{out}/corr_state/batch_id=*")
     assert 1 <= len(snaps) <= 2, snaps
 
 
 # ---------------------------------------------------------------------------
-# randomized parity: batch == chained streaming over the full stateful
+# randomized parity: batch == streaming over the full stateful
 # surface (set/unset staging, isset/isnotset gates, threshold/after ON
 # condition rules, expiring bits), random event orderings + chunk splits
 # ---------------------------------------------------------------------------
@@ -690,16 +690,9 @@ _RANDOM_PARITY = {
 }
 
 
-@pytest.mark.parametrize(
-    "ruleset,seed",
-    [pytest.param("xbits", s, id=str(s)) for s in (11, 23, 47)]
-    + [pytest.param("flexbits", s, id=f"flexbits-{s}") for s in (11, 23, 47)],
-)
-def test_streaming_random_parity_with_cond_correlation(spark, tmp_path, ruleset, seed):
-    import random
-
-    rules_text, verbs = _RANDOM_PARITY[ruleset]
-    rng = random.Random(seed)
+def _random_parity_table(ruleset, seed, rng):
+    """40 time-ordered events over the verbs of ``ruleset``, drawn from
+    ``rng``."""
     t = 0
     rows = []
     for i in range(40):
@@ -710,16 +703,28 @@ def test_streaming_random_parity_with_cond_correlation(spark, tmp_path, ruleset,
         # the targeted test in test_xbit_chains.py)
         t += rng.randint(700, 900) if rng.random() < 0.1 else rng.randint(1, 12)
         ip = rng.choice(["10.0.0.1", "10.0.0.2", "10.0.0.3"])
-        verb = rng.choice(verbs)
+        verb = rng.choice(_RANDOM_PARITY[ruleset][1])
         if ruleset == "flexbits":
             ip = f"{ip} to {rng.choice(['10.0.0.1', '10.0.0.2', '10.0.0.3'])}"
         ts = pd.Timestamp("2026-01-01") + pd.Timedelta(seconds=t)
         rows.append((f"u://rp{seed}/{i}", str(ts), f"{verb} from {ip} x"))
-    table = _mini_pages(rows)
+    return _mini_pages(rows)
+
+
+@pytest.mark.parametrize(
+    "ruleset,seed",
+    [pytest.param("xbits", s, id=str(s)) for s in (11, 23, 47)]
+    + [pytest.param("flexbits", s, id=f"flexbits-{s}") for s in (11, 23, 47)],
+)
+def test_streaming_random_parity_with_cond_correlation(spark, tmp_path, ruleset, seed):
+    import random
+
+    rng = random.Random(seed)
+    table = _random_parity_table(ruleset, seed, rng)
 
     from sagan_spark.rules.parser import parse_rules
 
-    rules = parse_rules(rules_text)
+    rules = parse_rules(_RANDOM_PARITY[ruleset][0])
     input_dir = tmp_path / "rp_in"
     input_dir.mkdir()
     out = str(tmp_path / "rp_sinks")
@@ -757,6 +762,41 @@ def test_streaming_random_parity_with_cond_correlation(spark, tmp_path, ruleset,
         f"{ruleset} seed={seed} split={split} "
         f"missing={sorted(want-got)} extra={sorted(got-want)}"
     )
+
+
+@pytest.mark.parametrize("ruleset", ["xbits", "flexbits"])
+def test_continuous_query_random_parity_with_cond_correlation(spark, tmp_path, ruleset):
+    """The continuous query (``trigger_available_now=False``, as
+    ``jobs/run_stream.py --continuous`` starts it) fed three time-ordered
+    files while it runs routes the batch set, condition rules included."""
+    import os
+    import random
+
+    from sagan_spark.rules.parser import parse_rules
+
+    table = _random_parity_table(ruleset, 5, random.Random(5))
+    rules = parse_rules(_RANDOM_PARITY[ruleset][0])
+    want = _batch_want(spark, rules, table, str(tmp_path / "cq_full.parquet"))
+
+    input_dir, staging = tmp_path / "cq_in", tmp_path / "cq_staging"
+    input_dir.mkdir()
+    staging.mkdir()
+    out = str(tmp_path / "cq_sinks")
+    seng = StreamingSaganEngine(rules, watermark="0 seconds", enable_xbits=True)
+    frame = SaganSparkEngine.frame_from_pages(pages_stream_frame(spark, str(input_dir)))
+    q = seng.start_query(
+        frame, out, str(tmp_path / "cq_ckpt"), sinks=["alerts_eve"], trigger_available_now=False
+    )
+    try:
+        for i, (a, b) in enumerate([(0, 12), (12, 27), (27, 40)]):
+            # a file appears whole: written aside, then renamed in
+            pq.write_table(table.slice(a, b - a), str(staging / f"c{i}.parquet"))
+            os.replace(staging / f"c{i}.parquet", input_dir / f"c{i}.parquet")
+            q.processAllAvailable()
+        assert q.isActive
+    finally:
+        q.stop()
+    assert _eve_set(spark, out) == want
 
 
 def test_stage_b_seeded_replay_subsecond_order(spark, tmp_path):
@@ -843,7 +883,7 @@ def test_streaming_flexbit_noalert_equals_batch(spark, tmp_path):
 
 
 def test_watermark_secs_parse():
-    """The staged-store sweep lags by the allowed lateness — the parse
+    """The snapshot floor lags by the allowed lateness — the parse
     must cover every unit the watermark string accepts."""
     from sagan_spark.rules.parser import parse_rules
 
@@ -862,7 +902,7 @@ def test_watermark_secs_parse():
 
 def test_interval_secs_accepts_spark_spellings():
     """Every withWatermark spelling must parse (a valid watermark must
-    never crash the staged-store sweep mid-stream)."""
+    never crash a micro-batch)."""
     from sagan_spark.streaming.engine import _interval_secs
 
     assert _interval_secs("10 minutes") == 600

@@ -246,8 +246,8 @@ alert any any any -> any any (msg:"s3"; content:"stage3"; parse_src_ip: 1; xbits
 
 
 def test_chain_streaming_equals_batch_across_chunks(spark, tmp_path):
-    """Chained xbits through the two-query streaming pipeline: the
-    verdict-gated set fired in chunk 1 must persist in the staged store
+    """Chained xbits through the streaming query: the
+    verdict-gated set fired in chunk 1 must persist in the bit snapshot
     and satisfy a chunk-2 check after a restart."""
     import pyarrow.parquet as pq
 
@@ -304,9 +304,9 @@ def test_chain_streaming_equals_batch_across_chunks(spark, tmp_path):
 
 
 def test_flexbit_chain_streaming_equals_batch_across_chunks(spark, tmp_path):
-    """Flexbit chains through the two-query streaming pipeline: the
+    """Flexbit chains through the streaming query: the
     verdict-gated flexbit set fired in chunk 1 must persist its TUPLE
-    in the staged store and satisfy a chunk-2 by_src check after a
+    in the bit snapshot and satisfy a chunk-2 by_src check after a
     restart — batch == streaming on the same rows."""
     import pyarrow.parquet as pq
 
@@ -396,7 +396,7 @@ alert any any any -> any any (msg:"fc"; content:"avcheck"; parse_src_ip: 1; flex
 
 
 def test_chain_after_streaming_equals_batch_across_chunks(spark, tmp_path):
-    """after ON a chain rule through the two-query streaming pipeline:
+    """after ON a chain rule through the streaming query:
     the walk's counter state must SEED across micro-batches (a counter
     built in chunk 1 carries into chunk 2), and suppressed events must
     neither alert nor fire the gated set — batch == streaming."""
