@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from sagan_spark.contracts.common import _docs, _drain, _ev, _events_frame, _ship_package  # noqa: E501
-from sagan_spark.session import materialize
+from sagan_spark.session import local_frame, materialize
 
 def q_s5_pipe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5: '|'-delimited frame decode with per-field defaulting
@@ -232,7 +232,8 @@ def q_j1_cidr_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _ev(spark, sf_dir)
     # deterministic synthetic ip int: 10.0.0.0/8 space
     ip_num = F.lit(167772160) + (F.col("user_id") * 65536 + F.col("event_id") % 65536)
-    ranges = spark.createDataFrame(
+    ranges = local_frame(
+        spark,
         [
             (167772160 + 0 * 65536, 167772160 + 3 * 65536 - 1, "bad-block-a"),
             (167772160 + 10 * 65536, 167772160 + 12 * 65536 - 1, "bad-block-b"),
@@ -250,7 +251,8 @@ def q_j7_classification_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7: classtype -> priority broadcast lookup at alert assembly
     (reference src/classifications.c, Classtype_Lookup)."""
     ev = _ev(spark, sf_dir)
-    cls = spark.createDataFrame(
+    cls = local_frame(
+        spark,
         [
             ("error", "system-error", 1),
             ("purchase", "money-move", 2),
@@ -535,7 +537,7 @@ def q_j2_intel_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: Zeek intel exact-set membership as a broadcast semi-join
     (reference src/processors/zeek-intel.c:507-800)."""
     ev = _ev(spark, sf_dir)
-    intel = spark.createDataFrame([(7,), (11,), (23,), (42,), (99,)], "user_id long")
+    intel = local_frame(spark, [(7,), (11,), (23,), (42,), (99,)], "user_id long")
     return (
         ev.join(F.broadcast(intel), "user_id", "leftsemi")
         .groupBy("user_id")
@@ -548,7 +550,8 @@ def q_j4_geoip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference src/geoip.c:93+)."""
     ev = _ev(spark, sf_dir)
     ip = F.lit(167772160) + (F.col("user_id") * 65536 + F.col("event_id") % 65536)
-    geo = spark.createDataFrame(
+    geo = local_frame(
+        spark,
         [
             (167772160, 167772160 + 50 * 65536 - 1, "DE"),
             (167772160 + 50 * 65536, 167772160 + 100 * 65536 - 1, "FR"),

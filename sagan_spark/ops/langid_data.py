@@ -32,6 +32,8 @@ signals, not ground truth, same as the default cascade.
 
 from __future__ import annotations
 
+from sagan_spark.session import local_frame
+
 #: lang -> high-frequency function words, approximate rank order
 #: (public frequency-list data, see module docstring)
 LANGID_TOKENS: dict[str, list[str]] = {
@@ -133,6 +135,6 @@ def load_langid_weights(spark):
     :func:`sagan_spark.ops.textstats.lang_id` expects for
     ``marker_weights`` — the ``load_badwords`` loader idiom
     (ops/webclean.py): tiny table, broadcast at the join site."""
-    return spark.createDataFrame(
-        langid_weight_rows(), "token string, lang string, weight_milli long"
+    return local_frame(
+        spark, langid_weight_rows(), "token string, lang string, weight_milli long"
     )

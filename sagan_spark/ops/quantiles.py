@@ -37,6 +37,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sagan_spark.session import local_frame
+
 
 def value_hist(events: DataFrame, key_col: str = "event_type",
                value_col: str = "value") -> DataFrame:
@@ -94,8 +96,8 @@ def quantiles_from_hist(hist: DataFrame,
         F.sum("_sg_c").over(w_cum).alias("_sg_cum"),
         F.sum("_sg_c").over(w_all).alias("_sg_n"),
     )
-    qs = spark.createDataFrame(
-        [(int(q),) for q in quantiles_ppm], "q_ppm long"
+    qs = local_frame(
+        spark, [(int(q),) for q in quantiles_ppm], "q_ppm long"
     )
     return (
         cum.join(F.broadcast(qs))

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sagan_spark.ops.textstats import TOKEN_RE
+from sagan_spark.session import local_frame
 
 
 def tfidf_topk(docs: DataFrame, k: int = 5, max_vocab: int = 65536,
@@ -139,7 +140,7 @@ def bm25_topk(docs: DataFrame, queries: Sequence[tuple[int, str]],
     for qid, qtext in queries:
         for tok in dict.fromkeys(tok_re.findall(qtext)):
             qtok_rows.append((int(qid), tok))
-    qtoks = spark.createDataFrame(qtok_rows, "query_id int, token string")
+    qtoks = local_frame(spark, qtok_rows, "query_id int, token string")
     qtok_set = sorted({t for _, t in qtok_rows})
 
     # doc length = the token-array size, computed WITHOUT explode or

@@ -752,6 +752,20 @@ STATE_ANCHORS = {
 }
 
 
+def _ddl_of(schema: str, cols: tuple) -> str:
+    """The ``cols`` of a flat DDL ``schema``, in that order."""
+    types = dict(field.split() for field in schema.split(","))
+    return ", ".join(f"{c} {types[c]}" for c in cols)
+
+
+#: the rows of each snapshot store, as :func:`correlate` returns them
+STATE_SCHEMAS = {
+    "corr_state": _ddl_of(_REPLAY_SCHEMA, CORR_STATE_COLS),
+    "xbit_state": _ddl_of(_XBIT_OUT_SCHEMA, _XBIT_WALK_COLS),
+    "chain_corr_state": _ddl_of(_XBIT_OUT_SCHEMA, _XBIT_WALK_COLS),
+}
+
+
 def _walk_seeds(state: dict[str, DataFrame], rules: list[RuleIR]) -> DataFrame | None:
     """The walk's seed rows from an earlier pass's snapshots: the bits as
     they are, the chain machines as ``cseed`` rows named after a bit of

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from sagan_spark.functions.extract import int_to_biased_hilo, ip_to_int
 from sagan_spark.functions.textmatch import any_of
+from sagan_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +69,8 @@ def compile_cidrs(entries: list[str], labels: list[str] | None = None) -> list[I
 
 
 def ranges_df(spark, ranges: list[IpRange]) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r.lo_hi, r.lo_lo, r.hi_hi, r.hi_lo, r.label) for r in ranges],
         "lo_hi long, lo_lo long, hi_hi long, hi_lo long, label string",
     )

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sagan_spark.rules.ir import RuleIR
-from sagan_spark.session import materialize, release, run_concurrently
+from sagan_spark.session import local_frame, materialize, release, run_concurrently
 
 # classtype -> (description, priority); the reference loads this from
 # classification.config (reference src/classifications.c, lookup used at
@@ -63,7 +63,8 @@ def rule_metadata_df(spark: SparkSession, rules: list[RuleIR],
              ";".join(r.reference), r.action == "drop",
              r.raw, r.metadata or None)
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "sid long, rev int, signature string, classtype string, "
         "category string, severity int, rule_reference string, drop boolean, "

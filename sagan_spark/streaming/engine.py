@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sagan_spark.pipeline.correlate import STATE_ANCHORS, correlate
+from sagan_spark.pipeline.correlate import STATE_ANCHORS, STATE_SCHEMAS, correlate
 from sagan_spark.pipeline.engine import EVENT_COLS, SaganSparkEngine
 from sagan_spark.rules.compiler import EngineConfig
 from sagan_spark.rules.ir import RuleIR
@@ -223,50 +223,45 @@ def _prune_old_corr_snapshots(spark: SparkSession, path: str, batch_id: int) -> 
 _NEWEST = "_newest"
 
 
-def _prev_snapshot_dir(spark: SparkSession, path: str, batch_id: int) -> tuple:
-    """(Hadoop FileSystem, the latest snapshot partition written BEFORE
-    this batch, or None) — retry-safe: a replayed batch N finds N-1's
-    even if a half-written N partition exists."""
-    fs, dirs = _snapshot_dirs(spark, path)
-    prev = [b for b in dirs if b < batch_id]
-    return fs, (dirs[max(prev)] if prev else None)
+def _read_prev_snapshot(
+    spark: SparkSession, path: str, batch_id: int, schema: str, lateness: float
+) -> tuple:
+    """``(rows, floor)`` of the latest snapshot partition written BEFORE
+    this batch — retry-safe: a replayed batch N finds N-1's even if a
+    half-written N partition exists.  The store is listed once, and the
+    rows are read with their known ``schema`` (``correlate.STATE_SCHEMAS``),
+    so no job infers it.
 
-
-def _read_prev_corr_state(spark: SparkSession, path: str, batch_id: int):
-    """Latest correlation state snapshot written before this batch
-    (:func:`_prev_snapshot_dir`); None when there is none or it holds no
-    rows."""
-    _, prev = _prev_snapshot_dir(spark, path, batch_id)
-    return _read_store_or_none(spark, str(prev)) if prev is not None else None
-
-
-def _read_prev_floor(spark: SparkSession, path: str, batch_id: int, lateness: float) -> float:
-    """The oldest event time this micro-batch may still replay: the
-    newest anchor of the previous snapshot (its ``_newest`` marker, see
-    :func:`_write_corr_snapshot`) minus the allowed ``lateness``.
-
+    ``rows`` is None when there is no such partition or it holds no
+    rows.  ``floor`` is the oldest event time this micro-batch may still
+    replay: the newest anchor of the snapshot (its ``_newest`` marker,
+    see :func:`_write_corr_snapshot`) minus the allowed ``lateness``.
     Every anchor is the time of an event an earlier micro-batch held, so
     any later event within the lateness is no older.  Like Spark's own
     watermark the floor lags one micro-batch: this micro-batch's events
     do not raise it, so an event later than the lateness still replays
-    against the state the previous micro-batch kept.
-
-    -inf without a previous snapshot, for an empty one, and for one
-    written before snapshots carried the marker: that micro-batch then
-    evicts a key only by its own latest event, as a first micro-batch
-    does."""
-    fs, prev = _prev_snapshot_dir(spark, path, batch_id)
-    if prev is None:
-        return float("-inf")
-    marker = spark._jvm.org.apache.hadoop.fs.Path(prev, _NEWEST)
-    if not fs.exists(marker):
-        return float("-inf")
-    jio = spark._jvm.java.io
-    reader = jio.BufferedReader(jio.InputStreamReader(fs.open(marker), "UTF-8"))
-    try:
-        return float(reader.readLine()) - lateness
-    finally:
-        reader.close()
+    against the state the previous micro-batch kept.  The floor is -inf
+    without a previous snapshot, for an empty one, and for one written
+    before snapshots carried the marker: that micro-batch then evicts a
+    key only by its own latest event, as a first micro-batch does."""
+    fs, dirs = _snapshot_dirs(spark, path)
+    prev = [b for b in dirs if b < batch_id]
+    if not prev:
+        return None, float("-inf")
+    part = dirs[max(prev)]
+    names = {f.getPath().getName() for f in fs.listStatus(part)}
+    floor = float("-inf")
+    if _NEWEST in names:
+        jio = spark._jvm.java.io
+        marker = spark._jvm.org.apache.hadoop.fs.Path(part, _NEWEST)
+        reader = jio.BufferedReader(jio.InputStreamReader(fs.open(marker), "UTF-8"))
+        try:
+            floor = float(reader.readLine()) - lateness
+        finally:
+            reader.close()
+    if not any(name[0] not in "._" for name in names):
+        return None, floor
+    return spark.read.schema(schema).parquet(part.toString()), floor
 
 
 def _write_corr_snapshot(
@@ -279,7 +274,7 @@ def _write_corr_snapshot(
     The write observes the newest ``anchor`` of its rows (an SQL
     expression, ``correlate.STATE_ANCHORS``) and leaves it in the partition's
     ``_newest`` marker, which the next micro-batch turns into its floor
-    (:func:`_read_prev_floor`) without a job of its own.  An empty
+    (:func:`_read_prev_snapshot`) without a job of its own.  An empty
     snapshot gets no marker."""
     store = path.rstrip("/").rsplit("/", 1)[-1]
     newest = Observation(f"{store}_newest_{batch_id}")
@@ -364,11 +359,12 @@ class StreamingSaganEngine:
             persisted, assembled = [cached], None
             try:
                 paths = {store: f"{base_path}/{store}" for store in STATE_ANCHORS}
-                prev = {s: _read_prev_corr_state(spark, p, batch_id) for s, p in paths.items()}
-                state = {s: rows for s, rows in prev.items() if rows is not None}
-                floor = max(
-                    _read_prev_floor(spark, path, batch_id, lateness) for path in paths.values()
-                )
+                prev = {
+                    s: _read_prev_snapshot(spark, p, batch_id, STATE_SCHEMAS[s], lateness)
+                    for s, p in paths.items()
+                }
+                state = {s: rows for s, (rows, _) in prev.items() if rows is not None}
+                floor = max(f for _, f in prev.values())
                 flagged, snapshots = correlate(cached, rules, state, floor, cache=persisted)
                 # flexbit-noalert sids stay in `routed`: the whole-alert
                 # drop happens per sink via route.sink_suppressions

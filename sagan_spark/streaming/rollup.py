@@ -43,6 +43,7 @@ from sagan_spark.ops.rollup import (
     fine_rollup,
     merge_fine,
 )
+from sagan_spark.session import local_frame
 from sagan_spark.streaming.engine import _read_store_or_none
 
 
@@ -53,7 +54,7 @@ def _read_ledger(spark: SparkSession, ledger_dir: str, empty_schema: str) -> Dat
     error)."""
     ledger = _read_store_or_none(spark, ledger_dir)
     if ledger is None:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     return ledger.drop("batch_id")
 
 

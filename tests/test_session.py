@@ -10,6 +10,7 @@ import time
 import warnings
 from pathlib import Path
 
+import pandas as pd
 import pytest
 
 from sagan_spark.ops.bpetrain import bpe_train
@@ -151,15 +152,109 @@ def test_op_pins_follow_the_checkpoint_mode(spark, tmp_path, op):
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
 
 
-def test_only_session_pins_frames():
-    """``session.materialize``/``release`` are the only code that decides
-    how a frame is pinned: no other module checkpoints on its own."""
+def _package_lines(pattern: str) -> list[str]:
+    """Lines of ``sagan_spark/**/*.py`` outside ``session.py`` that match
+    ``pattern``."""
     pkg = Path(__file__).resolve().parent.parent / "sagan_spark"
-    found = [
+    return [
         f"{path.relative_to(pkg)}:{n}: {line.strip()}"
         for path in sorted(pkg.rglob("*.py"))
         if path != pkg / "session.py"
         for n, line in enumerate(path.read_text().splitlines(), 1)
-        if re.search(r"localCheckpoint|\.checkpoint\(", line)
+        if re.search(pattern, line)
     ]
+
+
+def test_only_session_pins_frames():
+    """``session.materialize``/``release`` are the only code that decides
+    how a frame is pinned: no other module checkpoints on its own."""
+    found = _package_lines(r"localCheckpoint|\.checkpoint\(")
     assert not found, "\n".join(found)
+
+
+def test_only_session_builds_driver_tables():
+    """``session.local_frame`` is the package's one way to make a small
+    driver-built table: no other module calls ``createDataFrame``, whose
+    list form costs every read of the table a Python stage."""
+    found = _package_lines(r"createDataFrame\(")
+    assert not found, "\n".join(found)
+
+
+def test_python_workers_keep_zip_directories(spark):
+    """A ``build_spark`` session's Python workers keep the directory of
+    every zip archive on their ``sys.path`` through
+    ``importlib.invalidate_caches()``, which PySpark calls before every
+    task: each task finds at least one zipimporter (``pyspark.zip``),
+    and the call replaces none of their directories."""
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        def directories():
+            return {
+                path: id(importer._files)
+                for path, importer in sys.path_importer_cache.items()
+                if isinstance(importer, zipimport.zipimporter)
+            }
+
+        for _ in batches:
+            before = directories()
+            importlib.invalidate_caches()
+            yield pd.DataFrame({"importers": [len(before)], "kept": [directories() == before]})
+
+    rows = (
+        spark.range(0, 400, numPartitions=4)
+        .mapInPandas(probe, "importers long, kept boolean")
+        .collect()
+    )
+    assert len(rows) == 4
+    assert all(r.importers > 0 for r in rows), rows
+    assert all(r.kept for r in rows), rows
+
+
+def test_rule_metadata_is_a_local_relation(spark, fixture_rules):
+    """``rule_metadata_df`` is planned as a ``LocalRelation`` (no Python
+    stage reads it), with the rows and types the list-built table had:
+    null ``rule_metadata`` for a rule without one, ``drop`` from the
+    action, and ``severity`` from the classification when the rule sets
+    no priority."""
+    from sagan_spark.pipeline.route import DEFAULT_CLASSIFICATIONS, rule_metadata_df
+    from sagan_spark.rules.parser import parse_rules
+
+    rules = fixture_rules + parse_rules(
+        'drop any any any -> any any (msg:"dropped"; content:"x"; classtype: misc-activity; '
+        "priority: 1; metadata: created 2026; reference: url,example.com; sid:9990001; rev:3;)"
+    )
+    meta = rule_metadata_df(spark, rules)
+    leaves = meta._jdf.queryExecution().analyzed().collectLeaves()
+    assert [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())] == [
+        "LocalRelation"
+    ]
+
+    schema = (
+        "sid long, rev int, signature string, classtype string, category string, severity int,"
+        " rule_reference string, drop boolean, rule_text string, rule_metadata string"
+    )
+    want = []
+    for r in rules:
+        category, severity = DEFAULT_CLASSIFICATIONS.get(r.classtype, (r.classtype or "unknown", 3))
+        want.append((
+            r.sid, r.rev, r.msg, r.classtype, category, r.priority or severity,
+            ";".join(r.reference), r.action == "drop", r.raw, r.metadata or None,
+        ))
+    listed = spark.createDataFrame(want, schema)
+    assert meta.schema == listed.schema
+    got = {r.sid: r for r in meta.collect()}
+    assert sorted(got.values()) == sorted(listed.collect())
+
+    assert got[5000012].category == "A Network Trojan was detected"
+    assert got[5000012].severity == 1
+    assert (got[5000019].category, got[5000019].severity) == ("unknown", 3)
+    assert got[5000019].rule_metadata is None
+    assert not got[5000019].drop
+    dropped = got[9990001]
+    assert (dropped.drop, dropped.severity, dropped.rev) == (True, 1, 3)
+    assert dropped.rule_metadata is not None
+    assert dropped.rule_reference == "url,example.com"

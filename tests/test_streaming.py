@@ -447,12 +447,19 @@ def test_snapshot_stores_bounded_by_watermark(spark, tmp_path):
         assert [r for r in rows if "10.0.0.2" in r], (store, rows)
 
 
+def _prev_corr_state(spark, path, batch_id, lateness=0.0):
+    from sagan_spark.pipeline.correlate import STATE_SCHEMAS
+    from sagan_spark.streaming.engine import _read_prev_snapshot
+
+    return _read_prev_snapshot(spark, path, batch_id, STATE_SCHEMAS["corr_state"], lateness)
+
+
 def test_empty_snapshot_is_not_replaced_by_an_older_one(spark, tmp_path):
     """A micro-batch whose snapshot kept no key still marks its batch: the
     next micro-batch seeds from nothing, not from the one before, whose
     keys may have moved since."""
     from sagan_spark.pipeline.correlate import CORR_STATE_COLS
-    from sagan_spark.streaming.engine import _read_prev_corr_state, _write_corr_snapshot
+    from sagan_spark.streaming.engine import _write_corr_snapshot
 
     path = str(tmp_path / "corr_state")
     snap = spark.createDataFrame(
@@ -460,11 +467,12 @@ def test_empty_snapshot_is_not_replaced_by_an_older_one(spark, tmp_path):
         " mkey string, cnt long, utime long",
     )
     _write_corr_snapshot(spark, snap, path, 0)
-    assert _read_prev_corr_state(spark, path, 1).select(*CORR_STATE_COLS).collect() == snap.collect()
+    rows, _ = _prev_corr_state(spark, path, 1)
+    assert rows.select(*CORR_STATE_COLS).collect() == snap.collect()
     _write_corr_snapshot(spark, snap.limit(0), path, 1)
-    assert _read_prev_corr_state(spark, path, 2) is None
+    assert _prev_corr_state(spark, path, 2)[0] is None
     # a retry of micro-batch 1 still seeds from micro-batch 0
-    assert _read_prev_corr_state(spark, path, 1).count() == 1
+    assert _prev_corr_state(spark, path, 1)[0].count() == 1
 
 
 def test_snapshot_marker_gives_the_next_floor(spark, tmp_path):
@@ -473,11 +481,7 @@ def test_snapshot_marker_gives_the_next_floor(spark, tmp_path):
     lateness, read without a Spark job.  A retry of micro-batch N reads
     N-1's marker; an empty snapshot and a snapshot written before
     snapshots carried the marker give -inf, without an error."""
-    from sagan_spark.streaming.engine import (
-        _read_prev_corr_state,
-        _read_prev_floor,
-        _write_corr_snapshot,
-    )
+    from sagan_spark.streaming.engine import _write_corr_snapshot
 
     path = str(tmp_path / "corr_state")
     snap = spark.createDataFrame(
@@ -486,19 +490,58 @@ def test_snapshot_marker_gives_the_next_floor(spark, tmp_path):
     )
     _write_corr_snapshot(spark, snap, path, 0)
     assert float((tmp_path / "corr_state/batch_id=s_0/_newest").read_text()) == 160
-    assert _read_prev_floor(spark, path, 1, 60.0) == 100.0
+    assert _prev_corr_state(spark, path, 1, 60.0)[1] == 100.0
 
     _write_corr_snapshot(spark, snap.limit(0), path, 1)
     assert not (tmp_path / "corr_state/batch_id=s_1/_newest").exists()
-    assert _read_prev_floor(spark, path, 2, 60.0) == float("-inf")
+    assert _prev_corr_state(spark, path, 2, 60.0)[1] == float("-inf")
     # a retry of micro-batch 1 still reads micro-batch 0's marker
-    assert _read_prev_floor(spark, path, 1, 60.0) == 100.0
+    assert _prev_corr_state(spark, path, 1, 60.0)[1] == 100.0
 
     # a snapshot of the layout without markers: no floor, rows still seed
     _write_corr_snapshot(spark, snap, path, 2)
     (tmp_path / "corr_state/batch_id=s_2/_newest").unlink()
-    assert _read_prev_floor(spark, path, 3, 60.0) == float("-inf")
-    assert _read_prev_corr_state(spark, path, 3).count() == 2
+    rows, floor = _prev_corr_state(spark, path, 3, 60.0)
+    assert floor == float("-inf")
+    assert rows.count() == 2
+
+
+def test_previous_snapshot_is_read_without_a_job(spark, tmp_path):
+    """Reading a micro-batch's previous snapshot submits no Spark job: the
+    store is listed once and its rows are read with the store's known
+    schema, not one Parquet schema inference job per store.  The rows
+    are those a schema-inferring read of the partition returns, and the
+    floor is the marker's, -inf for a first, an empty and a marker-less
+    snapshot."""
+    from sagan_spark.streaming.engine import _write_corr_snapshot
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "corr_state")
+    snap = spark.createDataFrame(
+        [(1, "k", "t", "k", 1, 100), (2, "j", None, "j", None, 160)],
+        "sid long, corr_group string, machine string, mkey string, cnt long, utime long",
+    )
+
+    def check(batch_id, part, floor):
+        before = set(sc.statusTracker().getJobIdsForGroup())
+        rows, got_floor = _prev_corr_state(spark, path, batch_id, 60.0)
+        assert set(sc.statusTracker().getJobIdsForGroup()) == before, batch_id
+        assert got_floor == floor, batch_id
+        if part is None:
+            assert rows is None, batch_id
+            return
+        inferred = spark.read.parquet(str(tmp_path / f"corr_state/batch_id=s_{part}"))
+        assert rows.schema == inferred.schema
+        assert sorted(rows.collect()) == sorted(inferred.collect()) == sorted(snap.collect())
+
+    check(0, None, float("-inf"))
+    _write_corr_snapshot(spark, snap, path, 0)
+    check(1, 0, 100.0)
+    _write_corr_snapshot(spark, snap.limit(0), path, 1)
+    check(2, None, float("-inf"))
+    _write_corr_snapshot(spark, snap, path, 2)
+    (tmp_path / "corr_state/batch_id=s_2/_newest").unlink()
+    check(3, 2, float("-inf"))
 
 
 def test_failed_concurrent_write_resumes_exactly_once(spark, tmp_path, monkeypatch):

@@ -35,6 +35,36 @@ def table_hash(pdf) -> tuple[int, list[str], str]:
     return len(pdf), cols, h
 
 
+def _pins(sc) -> tuple[set, set]:
+    """The ids of the persistent RDDs (local pins, caches) and the paths
+    of the ``rdd-*`` dirs under the checkpoint dir (reliable pins)."""
+    rdds = set(sc._jsc.getPersistentRDDs().keySet())
+    files = set()
+    if sc.getCheckpointDir() is not None:
+        path = sc._jvm.org.apache.hadoop.fs.Path(sc.getCheckpointDir())
+        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+        if fs.exists(path):
+            files = {
+                st.getPath().toString()
+                for st in fs.listStatus(path)
+                if st.getPath().getName().startswith("rdd-")
+            }
+    return rdds, files
+
+
+def _free_pins_since(sc, before: tuple[set, set]) -> None:
+    """Free the pins made since ``_pins`` returned ``before``: a query's
+    returned frame may read pins its caller frees, and Spark deletes no
+    checkpoint files by itself."""
+    rdds, files = _pins(sc)
+    persistent = sc._jsc.getPersistentRDDs()
+    for rdd_id in rdds - before[0]:
+        persistent.get(rdd_id).unpersist(False)
+    for name in files - before[1]:
+        path = sc._jvm.org.apache.hadoop.fs.Path(name)
+        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
+
+
 def main(sf_dir: str, only: list[str] | None = None) -> int:
     import duckdb
 
@@ -56,12 +86,15 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        pins = _pins(spark.sparkContext)
         try:
             got_pdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             print(f"FAIL {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
             failures += 1
             continue
+        finally:
+            _free_pins_since(spark.sparkContext, pins)
         if name not in oracles:
             print(f"rows-only {name}: {len(got_pdf)} rows")
             continue
