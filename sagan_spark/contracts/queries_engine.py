@@ -40,11 +40,11 @@ def q_s5_pipe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_f1_program_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1: glob program prefilter (engine.c:492-509; Wildcard util.c:970)."""
-    from sagan_spark.functions.textmatch import program_predicate
+    from sagan_spark.functions.textmatch import ident, program_predicate
 
     ev = _ev(spark, sf_dir)
     return (
-        ev.filter(program_predicate(F.col("event_type"), ["p*", "s?gnup"]))
+        ev.filter(F.expr(program_predicate(ident("event_type"), ["p*", "s?gnup"])))
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -52,11 +52,11 @@ def q_f1_program_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_f2_isin_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2: '|'-alternative exact match (engine.c:511-581)."""
-    from sagan_spark.functions.textmatch import isin_predicate
+    from sagan_spark.functions.textmatch import ident, isin_predicate
 
     ev = _ev(spark, sf_dir)
     return (
-        ev.filter(isin_predicate(F.col("event_type"), ["error", "signup"]))
+        ev.filter(F.expr(isin_predicate(ident("event_type"), ["error", "signup"])))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -103,7 +103,7 @@ def q_f2_syslog_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_f3_content_modifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3: content with offset/depth slicing + negation, exact C
     arithmetic (reference src/content.c:42-179)."""
-    from sagan_spark.functions.textmatch import content_predicate
+    from sagan_spark.functions.textmatch import content_predicate, ident
     from sagan_spark.rules.ir import ContentSpec
 
     docs = _docs(spark, sf_dir)
@@ -112,7 +112,7 @@ def q_f3_content_modifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
         ContentSpec("slow", negated=True),
     ]
     return (
-        docs.filter(content_predicate(F.col("text"), specs))
+        docs.filter(F.expr(content_predicate(ident("text"), specs)))
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -131,7 +131,7 @@ def q_f4_pcre(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_f5_meta_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5: meta_content OR-list within container, AND across
     (reference src/meta-content.c:51-224)."""
-    from sagan_spark.functions.textmatch import meta_content_predicate
+    from sagan_spark.functions.textmatch import ident, meta_content_predicate
     from sagan_spark.rules.ir import MetaContentSpec
 
     docs = _docs(spark, sf_dir)
@@ -140,7 +140,7 @@ def q_f5_meta_content(spark: SparkSession, sf_dir: str) -> DataFrame:
         MetaContentSpec(literals=["slow"], negated=True),
     ]
     return (
-        docs.filter(meta_content_predicate(F.col("text"), specs))
+        docs.filter(F.expr(meta_content_predicate(ident("text"), specs)))
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -26,10 +26,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sagan_spark.functions.textmatch import any_of
+from sagan_spark.functions.textmatch import all_of, any_of, ident, lit, when
 from sagan_spark.functions.udfs import json_flatten_udf, make_parse_ip_udf
 from sagan_spark.pipeline.correlate import correlate
-from sagan_spark.pipeline.enrich import v4_hilo_cols
 from sagan_spark.rules.compiler import EngineConfig, EventCols, RuleCompiler
 from sagan_spark.rules.ir import RuleIR
 from sagan_spark.session import materialize, release
@@ -64,6 +63,14 @@ ALERT_FIELDS = [
     "track_threshold",
     "track_after",
 ]
+
+
+def _project(df: DataFrame, items: list[str]) -> DataFrame:
+    """``df.selectExpr(*items)`` as one SQL statement over ``df``: a
+    constant number of py4j round trips, where ``selectExpr`` converts
+    its list with one round trip per item."""
+    body = ", ".join(items).replace("{", "{{").replace("}", "}}")
+    return df.sparkSession.sql(f"SELECT {body} FROM {{frame}}", frame=df)
 
 
 @dataclass
@@ -136,31 +143,26 @@ class SaganSparkEngine:
             msg.alias("message"),
         )
 
-    def _event_cols(self, df: DataFrame, with_extraction: bool) -> EventCols:
-        cols = EventCols(
-            event_key=F.col("event_key"),
-            ts=F.col("ts"),
-            host=F.col("host"),
-            program=F.col("program"),
-            facility=F.col("facility"),
-            level=F.col("level"),
-            tag=F.col("tag"),
-            priority=F.col("priority"),
-            message=F.col("message"),
-        )
-        if self.compiler.needs_json:
-            cols.json = F.col("_json")
+    def _event_cols(self, with_extraction: bool) -> EventCols:
+        """The column names the compiler's text binds to: the canonical
+        frame (phase 1), plus the extraction columns ``match_hits``
+        projects on the candidate rows (phase 2)."""
+        comp = self.compiler
+        cols = EventCols()
+        if comp.needs_json:
+            cols.json = ident("_json")
         if with_extraction:
-            if self.compiler.needs_parse_ip:
-                cols.ips = F.col("_ips")
-                cols.ip_proto = F.col("_ip_proto")
-            cols.hash_cols = {h: F.col(f"_hash_{h}") for h in self.compiler.needed_hashes}
-            if "_hostv4" in df.columns:
-                cols.host_v4 = (F.col("_hostv4.hi"), F.col("_hostv4.lo"))
+            if comp.needs_parse_ip:
+                cols.ips, cols.ip_proto = ident("_ips"), ident("_ip_proto")
+            cols.hash_cols = {h: ident(f"_hash_{h}") for h in comp.needed_hashes}
+            cols.host_v4 = (ident("_hostv4_hi"), ident("_hostv4_lo"))
             cols.jm_v4 = {
-                k: (F.col(f"_jmv4_{i}.hi"), F.col(f"_jmv4_{i}.lo"))
-                for i, k in enumerate(self.compiler.ip_json_map_keys)
-                if f"_jmv4_{i}" in df.columns
+                k: (ident(f"_jmv4_{i}_hi"), ident(f"_jmv4_{i}_lo"))
+                for i, k in enumerate(comp.ip_json_map_keys)
+            }
+            cols.ip_cols = {
+                src: tuple(ident(f"_ipsrc{i}{part}") for part in ("", "_hi", "_lo"))
+                for i, src in enumerate(comp.ip_sources)
             }
         return cols
 
@@ -177,6 +179,12 @@ class SaganSparkEngine:
         correlation flags yet.  Batch and streaming frames get the same
         plan (no persist, no shuffle besides the local repartition, which
         a stream skips).
+
+        The compiler emits every rule's expressions as SQL text, and
+        each projection becomes Columns in one call (``_project``), so
+        the build costs a constant number of py4j round trips whatever
+        the rule count; only the offload gate adds one UDF per rule
+        carrying ``offload:``.
 
         ``passthrough``: event columns to carry on each hit row (default
         the narrow PASSTHROUGH; streaming passes EVENT_COLS because it
@@ -207,9 +215,12 @@ class SaganSparkEngine:
         # pushes it into the parquet/Iceberg scan (the per-rule copies in
         # cheap_predicate sit above the non-inlinable flatten UDF and
         # can't reach the scan); F14 ignore-list pre-drop likewise
-        df = df.filter(F.col("message").isNotNull() & (F.length("message") > 0))
-        ig = comp.ignore_predicate(F.col("message"))
-        df = df.filter(~ig)
+        msg = ident("message")
+        df = df.filter(F.expr(all_of([
+            f"{msg} IS NOT NULL",
+            f"length({msg}) > 0",
+            f"NOT {comp.ignore_predicate(msg)}",
+        ])))
 
         # input-stage JSON detect+flatten (reference engine.c:250-263 runs
         # this once per event before the rule loop).  The '{ in first 3
@@ -225,16 +236,13 @@ class SaganSparkEngine:
             )
 
         # ---- phase 1: cheap predicates for every rule (pure Catalyst) ----
-        cheap_cols_ctx = self._event_cols(df, with_extraction=False)
-        cheap_names = []
-        proj = [F.col(c) for c in df.columns]
-        for i, r in enumerate(self.rules):
-            name = f"_c{i}"
-            proj.append(comp.cheap_predicate(r, cheap_cols_ctx).alias(name))
-            cheap_names.append(name)
-        df = df.select(*proj)
-
-        cand = df.filter(any_of(F.col(name) for name in cheap_names))
+        cheap_ctx = self._event_cols(with_extraction=False)
+        cheap = [ident(f"_c{i}") for i in range(len(self.rules))]
+        df = _project(df, ["*"] + [
+            f"{comp.cheap_predicate(r, cheap_ctx)} AS {name}"
+            for r, name in zip(self.rules, cheap)
+        ])
+        cand = df.filter(F.expr(any_of(cheap)))
 
         # ---- offload gate (reference src/offload.c, engine.c:772-786):
         # for rules carrying `offload:`, POST the event to the remote
@@ -265,91 +273,72 @@ class SaganSparkEngine:
             # cheap predicate passed ship their message across the Arrow
             # boundary; everyone else ships NULL (their alert structs
             # never read _ips)
-            ip_needed = any_of(
-                F.col(f"_c{i}") for i, r in enumerate(self.rules) if r.uses_ip_cache
-            )
+            ip_needed = any_of(c for c, r in zip(cheap, self.rules) if r.uses_ip_cache)
             cand = cand.withColumn(
-                "_pi", parse_ip_udf(F.when(ip_needed, F.col("message")))
+                "_pi", parse_ip_udf(F.when(F.expr(ip_needed), F.col("message")))
             )
             cand = cand.withColumn("_ips", F.col("_pi.ips")).withColumn(
                 "_ip_proto", F.col("_pi.proto")
             ).drop("_pi")
-        for h in comp.needed_hashes:
-            cand = cand.withColumn(
-                f"_hash_{h}",
-                comp.hash_extraction_cols(F.col("message"))[h],
-            )
 
-        # shared v4 (hi, lo) halves, ONE string parse per row per
-        # distinct ip source (host fallback + each json_map ip key);
-        # every rule's flow/blacklist/geoip bits branch over these plain
-        # column refs (compiler._ip_bits) instead of re-parsing inline.
-        hv_hi, hv_lo = v4_hilo_cols(F.col("host"))
-        cand = cand.withColumn(
-            "_hostv4", F.struct(hv_hi.alias("hi"), hv_lo.alias("lo"))
-        )
-        for i, k in enumerate(comp.ip_json_map_keys):  # json_map keys imply _json
-            jh, jl = v4_hilo_cols(F.try_element_at(F.col("_json"), F.lit(k)))
-            cand = cand.withColumn(
-                f"_jmv4_{i}", F.struct(jh.alias("hi"), jl.alias("lo"))
-            )
-
-        full_ctx = self._event_cols(cand, with_extraction=True)
+        # shared values, each projected ONCE per row: the hash columns,
+        # the v4 (hi, lo) halves of every distinct ip string (host
+        # fallback + each json_map ip key), then every ip source's final
+        # string and halves.  Rules read them by column name
+        # (compiler.extraction_exprs), so no rule repeats a string parse
+        # or a long resolved-ip expression.
+        ctx = self._event_cols(with_extraction=True)
+        cand = _project(cand, ["*"] + [
+            f"{expr} AS {ctx.hash_cols[h]}"
+            for h, expr in comp.hash_extraction_cols(msg).items()
+        ] + comp.v4_projection(ctx))
+        if ctx.ip_cols:
+            cand = _project(cand, ["*"] + comp.ip_source_projection(ctx))
 
         # one WHEN(match, struct) per rule: extraction fields materialize
         # only for the (typically ~1 of N) rules that actually match —
         # building all N structs per row was memory-bandwidth-bound.
-        # ext_memo: rules sharing an extraction signature share ONE Column
-        # tree (valid for this full_ctx binding only) — at production
-        # ruleset sizes the per-rule tree build is the driver-side
-        # plan-construction bottleneck (py4j round trips)
-        ext_memo: dict = {}
         elements = [
-            comp.alert_element(r, full_ctx, F.col(f"_c{i}"), ext_memo=ext_memo)
-            for i, r in enumerate(self.rules)
+            comp.alert_element(r, ctx, c)
+            for c, r in zip(cheap, self.rules)
             if r.action != "pass"
         ]
-
         # pass-rule short circuit (F15, engine.c:1448-1453): a hit survives
         # iff no pass rule at a SMALLER ruleset position matched the event
-        pass_idx_exprs = [
-            F.when(
-                comp.match_expr(r, full_ctx, F.col(f"_c{i}"), ext_memo=ext_memo),
-                F.lit(r.position),
-            )
-            for i, r in enumerate(self.rules)
+        pass_idx = [
+            when(comp.match_expr(r, ctx, c), lit(r.position))
+            for c, r in zip(cheap, self.rules)
             if r.action == "pass"
         ]
-        if pass_idx_exprs:
-            pass_min = F.least(*pass_idx_exprs) if len(pass_idx_exprs) > 1 else pass_idx_exprs[0]
+        if len(pass_idx) > 1:
+            pass_min = f"least({', '.join(pass_idx)})"
         else:
-            pass_min = F.lit(None).cast("int")
+            pass_min = pass_idx[0] if pass_idx else "CAST(NULL AS INT)"
+        cand = _project(cand, [ident(c) for c in passthrough] + [
+            f"{pass_min} AS {ident('_pass_min')}",
+            f"array_compact(array({', '.join(elements)})) AS {ident('_alerts')}",
+        ])
 
         # explode_outer + the null filter, not explode: Catalyst infers
         # size(_alerts) > 0 from explode and pushes it below the
         # projection, which then builds the alert array twice.  Only an
         # empty array yields a null _a (array_compact drops null elements).
-        hits = (
-            cand.withColumn("_pass_min", pass_min)
-            .withColumn("_alerts", F.array_compact(F.array(*elements)))
-            .select(
+        a = ident("_a")
+        return (
+            cand.select(
                 *passthrough,
                 F.col("_pass_min"),
                 F.explode_outer(F.col("_alerts")).alias("_a"),
             )
-            .filter(
-                F.col("_a").isNotNull()
-                & (
-                    F.col("_pass_min").isNull()
-                    | (F.col("_a.rule_idx") < F.col("_pass_min"))
-                )
-            )
-            .select(
-                *passthrough,
-                *[F.col(f"_a.{f}").alias(f) for f in ALERT_FIELDS],
+            .filter(F.expr(
+                f"{a} IS NOT NULL AND "
+                f"({ident('_pass_min')} IS NULL OR {ident('_a', 'rule_idx')} < {ident('_pass_min')})"
+            ))
+            .selectExpr(
+                *[ident(c) for c in passthrough],
+                *[f"{ident('_a', f)} AS {ident(f)}" for f in ALERT_FIELDS],
             )
         )
-        return hits
 
     def run(self, frame: DataFrame) -> EngineResult:
         hits = self.match_hits(frame)

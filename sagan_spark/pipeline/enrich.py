@@ -10,7 +10,7 @@ classification map (src/classifications.c).
 Two physical strategies, chosen by build-side size:
 
 - **literal-array exists** (default for <= a few thousand entries): the
-  lookup becomes a Column expression over a literal array of structs —
+  lookup becomes a SQL expression over a literal array of structs —
   stays inside whole-stage codegen, no join, no row duplication, no
   shuffle.  This is the exact analog of the reference's per-thread
   in-memory array probe.
@@ -30,11 +30,11 @@ from __future__ import annotations
 import ipaddress
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sagan_spark.functions.extract import int_to_biased_hilo, ip_to_int
-from sagan_spark.functions.textmatch import any_of
+from sagan_spark.functions.textmatch import any_of, ident, isin, lit, when
 from sagan_spark.session import local_frame
 
 
@@ -81,18 +81,12 @@ def ranges_df(spark, ranges: list[IpRange]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _range_struct_array(ranges: list[IpRange]) -> Column:
-    return F.array(
-        *[
-            F.struct(
-                F.lit(r.lo_hi).alias("lo_hi"),
-                F.lit(r.lo_lo).alias("lo_lo"),
-                F.lit(r.hi_hi).alias("hi_hi"),
-                F.lit(r.hi_lo).alias("hi_lo"),
-            )
-            for r in ranges
-        ]
-    )
+def _range_struct_array(ranges: list[IpRange]) -> str:
+    return "array(" + ", ".join(
+        f"named_struct('lo_hi', {lit(r.lo_hi)}, 'lo_lo', {lit(r.lo_lo)}, "
+        f"'hi_hi', {lit(r.hi_hi)}, 'hi_lo', {lit(r.hi_lo)})"
+        for r in ranges
+    ) + ")"
 
 
 # inet_pton's dotted-quad accept set: 0-255 per octet, no leading
@@ -104,8 +98,8 @@ V4_OCTET_RE = "(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9][0-9]|[0-9])"
 V4_RE = f"^{V4_OCTET_RE}(\\.{V4_OCTET_RE}){{3}}$"
 
 
-def v4_hilo_cols(ip: Column) -> tuple[Column, Column]:
-    """JVM-side biased (hi, lo) of a dotted-quad IPv4 STRING column —
+def v4_hilo_cols(ip: str) -> tuple[str, str]:
+    """JVM-side biased (hi, lo) of a dotted-quad IPv4 STRING expression —
     null/null when the string is not a valid IPv4 (hostname, IPv6,
     empty).  Mirrors extract.ip_to_int + int_to_biased_hilo for the v4
     case (v4-mapped base 0xFFFF00000000, bias 2^63): lets flow /
@@ -115,80 +109,84 @@ def v4_hilo_cols(ip: Column) -> tuple[Column, Column]:
     engine.c:852 IP2Bit).  Accept set matches extract._v4_int: exactly
     four parts, 0-255, no leading-zero octets.
 
-    ONE anchored regex + ONE split/aggregate per input — this runs once
-    per row per DISTINCT ip source (host fallback, each json_map key),
-    materialized as shared columns by the engine; it must NOT appear in
-    per-rule expression trees (23 rules x 8 regexp_extract blew the
+    ONE anchored regex + ONE split per input — this runs once per row
+    per DISTINCT ip source (host fallback, each json_map key), projected
+    as shared columns by the engine; it must NOT appear in per-rule
+    expressions (23 rules x 8 regexp_extract blew the
     whole-stage-codegen budget and cost 4x end-to-end)."""
-    valid = ip.rlike(V4_RE)
-    # flat GetArrayItem arithmetic, NOT F.aggregate: higher-order
+    valid = f"rlike({ip}, {lit(V4_RE)})"
+    # flat GetArrayItem arithmetic, NOT aggregate(): higher-order
     # lambdas are codegen-fallback and the streaming planner inlines
     # this expression into every consumer — an aggregate() here wedged
     # the streaming restart test (interpreted eval per inlined copy)
-    parts = F.split(ip, r"\.")
-    v4 = (
-        parts[0].cast("long") * F.lit(16777216)
-        + parts[1].cast("long") * F.lit(65536)
-        + parts[2].cast("long") * F.lit(256)
-        + parts[3].cast("long")
-    )
-    v = F.lit(0xFFFF00000000) + v4
-    null_l = F.lit(None).cast("long")
+    parts = f"split({ip}, {lit(chr(92) + '.')})"
+    v4 = " + ".join(
+        f"CAST({parts}[{k}] AS BIGINT) * {1 << (8 * (3 - k))}" for k in range(3)
+    ) + f" + CAST({parts}[3] AS BIGINT)"
     # 2^63 itself overflows a Java long literal — add the (valid) MIN
-    hi = F.when(valid, F.lit(-(1 << 63))).otherwise(null_l)
-    lo = F.when(valid, v + F.lit(-(1 << 63))).otherwise(null_l)
+    hi = when(valid, lit(-(1 << 63)), "CAST(NULL AS BIGINT)")
+    lo = when(valid, f"{lit(0xFFFF00000000)} + ({v4}) + {lit(-(1 << 63))}",
+              "CAST(NULL AS BIGINT)")
     return hi, lo
 
 
-def in_ranges(hi: Column, lo: Column, ranges: list[IpRange]) -> Column:
-    """J1/J4 probe: biased-128-bit ip within ANY range — pure codegen
-    (reference probe Sagan_Blacklist_IPADDR, engine.c:1147-1174)."""
-    if not ranges:
-        return F.lit(False)
-    arr = _range_struct_array(ranges)
-    ge = lambda r: (hi > r.lo_hi) | ((hi == r.lo_hi) & (lo >= r.lo_lo))  # noqa: E731
-    le = lambda r: (hi < r.hi_hi) | ((hi == r.hi_hi) & (lo <= r.hi_lo))  # noqa: E731
-    return F.coalesce(F.exists(arr, lambda r: ge(r) & le(r)), F.lit(False))
-
-
-def any_parsed_ip_in_ranges(ips: Column, ranges: list[IpRange]) -> Column:
-    """J1 'all' variant: probe every Parse_IP cache entry
-    (reference Sagan_Blacklist_IPADDR_All, engine.c:1164)."""
-    if not ranges:
-        return F.lit(False)
-    return F.coalesce(
-        F.exists(ips, lambda h: in_ranges(h.getField("hi"), h.getField("lo"), ranges)),
-        F.lit(False),
+def range_test(hi: str, lo: str, lo_hi: str, lo_lo: str, hi_hi: str, hi_lo: str) -> str:
+    """``(hi, lo)`` within the inclusive biased range ``[(lo_hi, lo_lo),
+    (hi_hi, hi_lo)]`` — the one range comparison behind the flow CIDR
+    groups and the literal-array probes."""
+    return (
+        f"({hi} > {lo_hi} OR {hi} = {lo_hi} AND {lo} >= {lo_lo}) "
+        f"AND ({hi} < {hi_hi} OR {hi} = {hi_hi} AND {lo} <= {hi_lo})"
     )
 
 
-def in_set(value: Column, entries: list[str], nocase: bool = False) -> Column:
+def in_ranges(hi: str, lo: str, ranges: list[IpRange]) -> str:
+    """J1/J4 probe: biased-128-bit ip within ANY range — pure codegen
+    (reference probe Sagan_Blacklist_IPADDR, engine.c:1147-1174)."""
+    if not ranges:
+        return "false"
+    fields = (ident("_r", f) for f in ("lo_hi", "lo_lo", "hi_hi", "hi_lo"))
+    return (
+        f"coalesce(exists({_range_struct_array(ranges)}, "
+        f"{ident('_r')} -> {range_test(hi, lo, *fields)}), false)"
+    )
+
+
+def any_parsed_ip_in_ranges(ips: str, ranges: list[IpRange]) -> str:
+    """J1 'all' variant: probe every Parse_IP cache entry
+    (reference Sagan_Blacklist_IPADDR_All, engine.c:1164)."""
+    if not ranges:
+        return "false"
+    probe = in_ranges(ident("_h", "hi"), ident("_h", "lo"), ranges)
+    return f"coalesce(exists({ips}, {ident('_h')} -> {probe}), false)"
+
+
+def in_set(value: str, entries: list[str], nocase: bool = False) -> str:
     """J2 exact-set probe (ADDR/FILE_HASH/USER_NAME/... intel types)."""
-    if not entries:
-        return F.lit(False)
     if nocase:
-        return F.lower(value).isin([e.lower() for e in entries])
-    return value.isin(entries)
+        return isin(f"lower({value})", [e.lower() for e in entries])
+    return isin(value, entries)
 
 
-def substring_set_hit(message: Column, entries: list[str]) -> Column:
+def substring_set_hit(message: str, entries: list[str]) -> str:
     """J2 substring-type probe (DOMAIN/URL/SOFTWARE intel scan the whole
     message, reference zeek-intel.c:507-800)."""
-    return any_of(message.contains(F.lit(e)) for e in entries)
+    return any_of(f"contains({message}, {lit(e)})" for e in entries)
 
 
-def proto_probe_col(col: Column, keyword_to_proto: dict[str, int]) -> Column:
+def proto_probe_col(col: str, keyword_to_proto: dict[str, int]) -> str:
     """First protocol-map keyword found in `col` wins, 0 on miss —
     case-insensitive like the reference's strcasestr scan
     (reference Parse_Proto src/parsers/proto.c:51-107).  The single
     shared implementation behind J5/P5 and the compiler's
     parse_proto/parse_proto_program options."""
-    low = F.lower(col)
-    expr = F.lit(0)
-    # later entries must not override earlier hits: build reversed
-    for kw, proto in reversed(list(keyword_to_proto.items())):
-        expr = F.when(low.contains(F.lit(kw.lower())), F.lit(proto)).otherwise(expr)
-    return expr
+    if not keyword_to_proto:
+        return "0"
+    branches = " ".join(
+        f"WHEN contains(lower({col}), {lit(kw.lower())}) THEN {lit(proto)}"
+        for kw, proto in keyword_to_proto.items()
+    )
+    return f"CASE {branches} ELSE 0 END"
 
 
 # ---------------------------------------------------------------------------

@@ -154,6 +154,27 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     return spark.createDataFrame(table, schema)
 
 
+def py4j_calls(spark: SparkSession, build) -> tuple[object, int]:
+    """``build()``'s result and the py4j round trips the driver made
+    while it ran: the gateway client's ``send_command`` is wrapped with
+    a counter for the call and restored afterwards, also when ``build``
+    raises."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, 0
+
+    def counting(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        result = build()
+    finally:
+        del client.send_command  # back to the class's method
+    return result, calls
+
+
 def run_concurrently(spark: SparkSession, actions: list) -> None:
     """Run zero-argument Spark ``actions`` at once, one driver thread
     each, wait for every one of them, then re-raise the failure that

@@ -96,12 +96,13 @@ def test_null_username_track_key_is_empty(spark, json_frame):
 
 def test_v4_hilo_cols_matches_python_twin(spark):
     from sagan_spark.functions.extract import int_to_biased_hilo, ip_to_int
+    from sagan_spark.functions.textmatch import ident
     from sagan_spark.pipeline.enrich import v4_hilo_cols
 
     cases = ["10.1.2.3", "255.255.255.255", "0.0.0.0", "1.2.3.4"]
     bad = ["host.example", "10.1.2", "10.1.2.3.4", "10.01.2.3", "300.1.2.3", "", "::1"]
     df = spark.createDataFrame([(c,) for c in cases + bad], "ip string")
-    hi, lo = v4_hilo_cols(F.col("ip"))
+    hi, lo = (F.expr(e) for e in v4_hilo_cols(ident("ip")))
     got = {r.ip: (r.hi, r.lo) for r in df.select("ip", hi.alias("hi"), lo.alias("lo")).collect()}
     for c in cases:
         assert got[c] == int_to_biased_hilo(ip_to_int(c)), c

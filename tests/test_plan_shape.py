@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from sagan_spark.pipeline.engine import SaganSparkEngine
 from sagan_spark.rules.parser import parse_rules
+from sagan_spark.session import py4j_calls
 from sagan_spark.streaming import StreamingSaganEngine
 
 RULES = """\
@@ -119,6 +120,66 @@ def test_ip_bits_share_one_parse_no_per_octet_regex(spark):
     assert r"\d{1,3}" not in plan, "per-octet regexp_extract ip parse is back"
     # the single-regex form must actually be present (host is non-constant)
     assert "25[0-5]" in plan, "shared v4 parse missing from plan"
+
+
+def test_shared_ip_values_projected_once(spark):
+    """Every ip value that comparisons read is projected once per row
+    per ip source: the localhost fix of the resolved src ip (its only
+    ``StartsWith``) appears in the one projection that defines
+    ``_ipsrc0``, and both flow rules compare the named halves instead of
+    repeating the expression (it was inlined five times per rule)."""
+    rules = (
+        'alert any [10.0.0.0/8] any -> any any (msg:"f1"; content:"alpha"; '
+        "parse_src_ip: 1; sid:9600011;)\n"
+        'alert any [10.0.0.0/8,192.168.0.0/16] any -> any any (msg:"f2"; '
+        'content:"from"; parse_src_ip: 1; sid:9600012;)\n'
+    )
+    hits = SaganSparkEngine(parse_rules(rules)).match_hits(_frame(spark))
+    plan = hits._jdf.queryExecution().executedPlan().toString()
+    for name in ("_ipsrc0", "_ipsrc0_hi", "_ipsrc0_lo"):
+        assert len(re.findall(rf"AS {name}#", plan)) == 1, f"{name}:\n{plan[:3000]}"
+    local_fix = [line for line in plan.splitlines() if "StartsWith" in line]
+    assert local_fix and all("AS _ipsrc0#" in line for line in local_fix), plan[:3000]
+    assert len(re.findall(r"CASE WHEN \(_c\d+#\d+ AND coalesce\(\(+_ipsrc0_hi#", plan)) == 2
+    assert {(r.sid, r.src_ip) for r in hits.collect()} == {
+        (9600011, "10.0.0.1"), (9600012, "10.0.0.1"),
+    }
+
+
+def test_match_build_costs_constant_py4j_calls_per_rule(spark):
+    """The match projection is built from SQL text, one call per
+    projection: growing the ruleset from 30 to 300 generated rules adds
+    at most 2 py4j round trips per rule (a Column tree cost ~290)."""
+    from benchmark.inputs import wide_rules_text
+
+    frame = _frame(spark)
+    engines = {n: SaganSparkEngine(parse_rules(wide_rules_text(n))) for n in (30, 300)}
+    engines[30].match_hits(frame)  # warm the session's lazy py4j lookups
+    calls = {n: py4j_calls(spark, lambda e=e: e.match_hits(frame))[1] for n, e in engines.items()}
+    assert (calls[300] - calls[30]) / 270 <= 2, calls
+
+
+def test_three_thousand_rule_plan_builds_on_a_fresh_session(spark):
+    """3,000 generated rules: ``match_hits`` builds and analyses on a new
+    SparkSession without executing, with no StackOverflowError (a
+    left-deep OR over the rules' columns) and no
+    FAILED_TO_PARSE_TOO_COMPLEX (a deeply parenthesized text)."""
+    from benchmark.inputs import wide_rules_text
+
+    from sagan_spark.pipeline.engine import ALERT_FIELDS
+
+    fresh = spark.newSession()
+    frame = fresh.createDataFrame(
+        [("e1", "2026-01-01 00:00:01", "alpha from 10.0.0.1 to 10.0.0.2")],
+        "event_key string, ts string, message string",
+    ).selectExpr(
+        "event_key", "CAST(ts AS TIMESTAMP) AS ts", "'h' AS host", "'p' AS program",
+        "'' AS facility", "'' AS level", "'' AS tag", "'' AS priority", "message",
+    )
+    hits = SaganSparkEngine(parse_rules(wide_rules_text(3000))).match_hits(frame)
+    analyzed = hits._jdf.queryExecution().analyzed()
+    assert analyzed.resolved()
+    assert hits.columns == ["event_key", "ts", *ALERT_FIELDS]
 
 
 def test_scan_prunes_and_pushes(spark, tmp_path):

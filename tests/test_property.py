@@ -27,7 +27,7 @@ def batch_eval(spark):
     job (per-example Spark jobs would be prohibitively slow)."""
     from pyspark.sql import functions as F
 
-    from sagan_spark.functions.textmatch import content_predicate
+    from sagan_spark.functions.textmatch import content_predicate, ident
 
     def run(cases):
         # cases: list of (msg, specs) with identical spec shape per call
@@ -42,7 +42,7 @@ def batch_eval(spark):
         for key, idxs in by_spec.items():
             specs = [ContentSpec(*k) for k in key]
             sub = df.filter(F.col("i").isin(idxs))
-            got = sub.select("i", content_predicate(F.col("msg"), specs).alias("ok")).collect()
+            got = sub.select("i", F.expr(content_predicate(ident("msg"), specs)).alias("ok")).collect()
             for r in got:
                 out[r.i] = bool(r.ok)
         return out

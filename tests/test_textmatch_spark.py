@@ -11,8 +11,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from sagan_spark.functions.textmatch import content_predicate
-from sagan_spark.rules.ir import ContentSpec
+from sagan_spark.functions.textmatch import alert_time_predicate, content_predicate, ident
+from sagan_spark.rules.ir import ContentSpec, TimeSpec
 from tests.oracle import _content_ok
 
 MSG = "Failed password for admin from 10.1.2.3 port 2222 ssh2"
@@ -41,7 +41,7 @@ CASES = [
 def run_both(spark):
     def _run(msg: str, specs):
         df = spark.createDataFrame([(msg,)], "message string")
-        got = df.select(content_predicate(F.col("message"), specs).alias("m")).first().m
+        got = df.select(F.expr(content_predicate(ident("message"), specs)).alias("m")).first().m
         want = _content_ok(msg, specs)
         return got, want
 
@@ -85,7 +85,7 @@ def test_content_random_property(spark):
         [(i, m) for i, (m, _) in enumerate(spec_sets)], "id int, message string"
     )
     proj = [F.col("id")] + [
-        content_predicate(F.col("message"), specs).alias(f"c{i}")
+        F.expr(content_predicate(ident("message"), specs)).alias(f"c{i}")
         for i, (_, specs) in enumerate(spec_sets)
     ]
     rows = {r["id"]: r for r in df.select(*proj).collect()}
@@ -93,3 +93,22 @@ def test_content_random_property(spark):
         got = rows[i][f"c{i}"]
         want = _content_ok(msg, specs)
         assert got == want, f"msg={msg!r} specs={[s.__dict__ for s in specs]}"
+
+
+# 2026-01-05 is a Monday (tm_wday 1)
+@pytest.mark.parametrize(
+    "days,start,end,want",
+    [
+        ({1}, 800, 1700, True),
+        ({0, 2}, 800, 1700, False),
+        ({1}, 930, 1700, True),
+        ({1}, 931, 1700, False),
+        ({1}, 2200, 600, False),  # rollover past midnight
+        ({1}, 2200, 930, True),
+        (set(), 800, 1700, False),  # `alert_time: days , hours ...` parses to no days
+    ],
+)
+def test_alert_time_predicate(spark, days, start, end, want):
+    df = spark.createDataFrame([("2026-01-05 09:30:00",)], "ts string")
+    pred = alert_time_predicate("CAST(`ts` AS TIMESTAMP)", TimeSpec(days=days, start=start, end=end))
+    assert df.select(F.expr(pred).alias("m")).first().m is want

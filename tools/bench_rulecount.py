@@ -10,10 +10,17 @@ analysis/codegen time and any whole-stage-codegen fallback, not data
 throughput.
 
 Each rule count runs in its own subprocess (fresh JVM — janino/JIT
-state cannot leak between sizes).  Generated rules mimic a production
+state cannot leak between sizes).  The rules are the benchmark's
+generated ruleset (``benchmark.inputs.wide_rules_text``), a production
 mix: ~10% fire against the corpus (real rulesets mostly don't fire),
 shapes rotate over plain content / content+nocase / pcre / threshold /
 after so the correlation stages see load too.
+
+Per size it reports the driver's graph build (``plan_build_sec``) with
+the py4j round trips made during it (``plan_build_py4j_calls``), the
+physical planning of that graph (``optimize_sec``: optimizer, codegen
+planning, no execution), the first execution and a steady re-execution.
+The session takes its core count from ``SPARK_GRAFT_CPUS``.
 
 Usage:  python tools/bench_rulecount.py [--rows 200000] [--sizes 23,100,300]
         python tools/bench_rulecount.py --single <n_rules> --rows N  (internal)
@@ -31,54 +38,11 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-# tokens that occur in the synthetic corpus (sagan_spark/data/pages.py
-# templates) -> the ~10% of generated rules that actually fire
-FIRING = [
-    'content:"Failed password"; parse_src_ip: 1',
-    'content:"connection from"',
-    'content:"port"; nocase',
-    'pcre:"/Failed password for \\w+/"',
-    'content:"Failed password"; threshold: type limit, track by_src, count 3, seconds 120',
-]
-
-
-def gen_rules(n: int) -> str:
-    lines = []
-    for i in range(n):
-        sid = 6_000_000 + i
-        if i % 10 == 0:
-            body = FIRING[(i // 10) % len(FIRING)]
-        else:
-            # unique non-firing literal per rule; shape rotates
-            tok = f"zq{i:06x}tok"
-            shape = i % 5
-            if shape == 0:
-                body = f'content:"{tok}"'
-            elif shape == 1:
-                body = f'content:"{tok.upper()}"; nocase'
-            elif shape == 2:
-                body = f'pcre:"/{tok}\\d+/"'
-            elif shape == 3:
-                body = (
-                    f'content:"{tok}"; parse_src_ip: 1; '
-                    "threshold: type suppress, track by_src, count 5, seconds 300"
-                )
-            else:
-                body = (
-                    f'content:"{tok}"; parse_src_ip: 1; '
-                    "after: track by_src, count 5, seconds 300"
-                )
-        lines.append(
-            f'alert any any any -> any any (msg:"gen {i}"; {body}; '
-            f"classtype: misc-activity; sid:{sid}; rev:1;)"
-        )
-    return "\n".join(lines)
-
-
 def run_single(n_rules: int, rows: int) -> None:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from benchmark.inputs import wide_rules_text
     from fixtures.vars import VARIABLES
     from sagan_spark.data.pages import write_pages
     from sagan_spark.pipeline.engine import SaganSparkEngine
@@ -88,18 +52,18 @@ def run_single(n_rules: int, rows: int) -> None:
         rule_metadata_df,
     )
     from sagan_spark.rules.parser import parse_rules
-    from sagan_spark.session import build_spark
+    from sagan_spark.session import build_spark, py4j_calls
 
     pages_path = f"/tmp/sagan_spark_bench/pages_{rows}.parquet"
     if not Path(pages_path).exists():
         Path(pages_path).parent.mkdir(parents=True, exist_ok=True)
         write_pages(pages_path, n_rows=rows)
 
-    spark = build_spark(app=f"rules{n_rules}", cores=32, driver_memory="32g")
+    spark = build_spark(app=f"rules{n_rules}", driver_memory="8g")
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = time.monotonic()
-    rules = parse_rules(gen_rules(n_rules), VARIABLES)
+    rules = parse_rules(wide_rules_text(n_rules), VARIABLES)
     t_parse = time.monotonic() - t0
 
     pages = spark.read.parquet(pages_path)
@@ -108,12 +72,20 @@ def run_single(n_rules: int, rows: int) -> None:
     # driver-side DataFrame graph construction only: run() executes its
     # barriers eagerly, so the plan timed here is the match graph and
     # the route graph over it
+    def build():
+        meta = rule_metadata_df(spark, rules)
+        engine = SaganSparkEngine(rules)
+        frame = engine.frame_from_pages(pages)
+        graph = eve_view(assemble_alerts(engine.match_hits(frame), meta, events=frame))
+        return meta, engine, frame, graph
+
     t1 = time.monotonic()
-    meta = rule_metadata_df(spark, rules)
-    engine = SaganSparkEngine(rules)
-    frame = engine.frame_from_pages(pages)
-    eve_view(assemble_alerts(engine.match_hits(frame), meta, events=frame))
+    (meta, engine, frame, graph), calls = py4j_calls(spark, build)
     t_plan = time.monotonic() - t1
+
+    t_opt = time.monotonic()
+    graph._jdf.queryExecution().executedPlan()
+    t_opt = time.monotonic() - t_opt
 
     def execute(routed) -> int:
         # a noop write of the EVE view materializes every routed column
@@ -147,6 +119,8 @@ def run_single(n_rules: int, rows: int) -> None:
                 "routed_rows": n_routed,
                 "parse_sec": round(t_parse, 3),
                 "plan_build_sec": round(t_plan, 3),
+                "plan_build_py4j_calls": calls,
+                "optimize_sec": round(t_opt, 3),
                 "first_exec_sec": round(t_exec, 3),
                 "steady_exec_sec": round(t_steady, 3),
             }
